@@ -50,58 +50,14 @@ object EngineSession {
       // so it only engages at the scale it pays for. ScaleOpsSpec lowers
       // them to prove the injection fires.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    // Join-strategy probe knobs (round-16 A/B; guide §3.1): sort-merge is
-    // Spark's robust default, but a shuffled-hash join skips both sorts
-    // when one side's per-partition build fits in memory. Env-overridable
-    // so the experiment is a same-binary A/B (the PqK/MinEstJaccard
-    // precedent) — strategy choice never changes results, only plans.
-    // Defaults are Spark's own unless the measured A/B justifies a flip.
-    // Round-17 verdict on maxShuffledHashJoinLocalMapThreshold as a
-    // DEFAULT: REFUTED (OPTIMIZATION_r17.md #2). Controlled-pressure A/B
-    // (-Xmx14g at sf10): the default SMJ path completes the join-heavy
-    // list by spilling; the 256m-threshold arm heap-OOMs the session at
-    // text_dedup_token_spans — the rewrite trades graceful spill for a
-    // dead executor exactly when memory is tight, and buys nothing
-    // reproducible quiet. The knob stays for right-sized deployments.
-    // ADVICE r16 #2: a knob left in the ambient environment would silently
-    // change plans for ANY entrypoint, so a set knob (a) is validated at
-    // read — a typo must fail at session build with a message naming the
-    // env var, not surface as a Spark conf error — and (b) WARNs loudly,
-    // so an A/B arm can never be mistaken for a default run. Bench also
-    // records set knobs in its JSON summary (see [[Bench]]).
-    joinProbeKnobs.foreach { case (env, conf, v) =>
-      System.err.println(s"[engine] WARN: $env=$v is set — overriding $conf "
-        + "(join-strategy probe knob; NOT a default run)")
-      b.config(conf, v)
-    }
+    // Join strategy stays at Spark's defaults (sort-merge preferred, no
+    // shuffled-hash local-map threshold). Both alternatives were measured
+    // and refuted: preferring shuffled-hash join cost +3.3% over the
+    // catalog (OPTIMIZATION_r16.md), and a 256m local-map threshold
+    // heap-OOMs under memory pressure where sort-merge spills
+    // (OPTIMIZATION_r17.md #2).
     requiredConfs.foreach { case (k, v) => b.config(k, v) }
     b
-  }
-
-  /** The join-strategy probe knobs that are SET in this environment, as
-    * (env var, spark conf, validated value) — empty on a default run.
-    * Validation happens here (once per read) so a typo fails at session
-    * build, loudly, naming the env var: `SPARK_GRAFT_PREFER_SMJ` must be
-    * a boolean literal, `SPARK_GRAFT_SHJ_THRESHOLD` a Spark byte string
-    * (digits + optional k/m/g[b] suffix).
-    */
-  def joinProbeKnobs: Seq[(String, String, String)] = joinProbeKnobsFrom(sys.env)
-
-  /** [[joinProbeKnobs]] over a caller-supplied environment (unit-testable:
-    * `sys.env` cannot be set in-process). */
-  private[graft] def joinProbeKnobsFrom(env: Map[String, String]): Seq[(String, String, String)] = {
-    val smj = env.get("SPARK_GRAFT_PREFER_SMJ").map { v =>
-      require(v == "true" || v == "false",
-        s"SPARK_GRAFT_PREFER_SMJ must be 'true' or 'false', got '$v'")
-      ("SPARK_GRAFT_PREFER_SMJ", "spark.sql.join.preferSortMergeJoin", v)
-    }
-    val shj = env.get("SPARK_GRAFT_SHJ_THRESHOLD").map { v =>
-      require(v.matches("(?i)[0-9]+[kmgt]?b?"),
-        s"SPARK_GRAFT_SHJ_THRESHOLD must be a byte size like '64m' or '268435456', got '$v'")
-      ("SPARK_GRAFT_SHJ_THRESHOLD",
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", v)
-    }
-    smj.toSeq ++ shj.toSeq
   }
 
   /** Local-mode builder with the engine's standard tuning: shuffle

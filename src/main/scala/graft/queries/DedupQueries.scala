@@ -67,17 +67,12 @@ object DedupQueries {
   private[graft] val MaxBucket = 100
   // minhash LSH emission gate: fraction of agreeing signature components.
   // private[graft] like K/MaxBucket — graft.LshStats applies the REAL gate.
-  // Env-overridable for the post-canon threshold-ladder probe (the PqK
-  // precedent): r15 attributed the canon tier's 0.572 marker-regime
-  // recall to THIS constant sitting at 0.5 against the 0.2 truth bar —
-  // the ladder turns that attribution into a measured recall-vs-n_cand
-  // curve. Every derived relation and every oracle string is built from
-  // THIS value, so an override can never desynchronize engine and
-  // mirror; the catalog default stays 0.5.
-  private[graft] val MinEstJaccard =
-    sys.env.get("SPARK_GRAFT_MIN_EST_JACCARD").map(_.toDouble).getOrElse(0.5)
-  require(MinEstJaccard >= 0.0 && MinEstJaccard <= 1.0,
-    s"MinEstJaccard=$MinEstJaccard outside [0, 1]")
+  // 0.5: at least half the components agree. Lowering it to the 0.2
+  // truth bar buys +0.1pp recall for +5% candidates and -3.6pp precision
+  // (SCALE.md, the r16 threshold ladder): missed pairs never collide in a
+  // band, so the gate is not the recall ceiling. Every derived relation
+  // and every oracle string is built from this value.
+  private[graft] val MinEstJaccard = 0.5
   // dedup_containment emission gate: fraction of the CONTAINED doc's rare
   // shingles that appear in the container.
   private[graft] val MinContainment = 0.8
@@ -513,8 +508,6 @@ object DedupQueries {
       require(nextSum <= prevSum,
         s"label certificate rose across a hook round: $prevSum -> $nextSum")
       converged = nextSum == prevSum
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"[dedup_clusters] round=$rounds sum=$nextSum delta=${prevSum - nextSum}")
       prevSum = nextSum
       // the superseded frame's blocks are dead — free them now instead
       // of pinning every round's map for the session's life. Sum-equal ⇒
@@ -526,8 +519,6 @@ object DedupQueries {
       rounds += 1
     }
     require(converged, s"cluster labeling failed to converge in $rounds rounds")
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"[dedup_clusters] converged in $rounds rounds")
     // converged: the result below reads only the FINAL labels — the edge
     // frame is dead (free now); the final labels back the lazy result the
     // caller will execute later, so they are retired to the next harness

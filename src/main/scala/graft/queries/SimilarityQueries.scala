@@ -464,18 +464,15 @@ object SimilarityQueries {
   // d2-then-cid tie-break, fixed-point exact centroid sums), so the
   // whole chain — codebooks, codes, ADC ranks — mirrors exactly in the
   // DuckDB oracle. PqM/PqDsub are pinned to the 64-dim embedding layout
-  // (the multiprobe slice precedent); PqK = 16 keeps the demo honest at
-  // driver scale (16 codewords train meaningfully on thousands of
-  // vectors; production would raise it to 256 — one constant).
+  // (the multiprobe slice precedent).
   private[graft] val PqM = 8
   private[graft] val PqDsub = 8
-  // Env-overridable for the production-constants probe (PQSTATS/RECALL
-  // at PqK=256): the catalog default stays 16 so the driver's sf0.01
-  // oracle trains meaningfully; every derived relation (codebook rows,
+  // 16 codewords per subspace: they train meaningfully on the 500
+  // vectors of the sf0.01 oracle scale, where 256 would give each
+  // codeword about two vectors. Every derived relation (codebook rows,
   // LUT slots, packed-code width) and every oracle string is built from
-  // THIS value, so an override can never desynchronize engine and mirror.
-  private[graft] val PqK = sys.env.get("SPARK_GRAFT_PQ_K").map(_.toInt).getOrElse(16)
-  require(PqK >= 2 && PqK <= 256, s"PqK=$PqK outside [2, 256]")
+  // this value.
+  private[graft] val PqK = 16
   // Bits per code in the packed-BIGINT code word (embedding_pq_codes
   // emits ONE integer, not an array — the driver's pandas gate cannot
   // sort array cells; TextQueries' inverted_index rule). ceil(log2(PqK));
@@ -691,9 +688,8 @@ object SimilarityQueries {
     // requires PqM·PqBits ≤ 63 because a negative packed BIGINT would
     // have to hash-match DuckDB's arithmetic. THIS pack never crosses
     // engines — it round-trips Spark→parquet→Spark only — so the ==64
-    // case (PqK=256: the j=7 field occupies the sign bit, exercised by
-    // the RecallProbe production-constants run) is admitted and is
-    // exact by construction: the per-group SUM adds PqM contributions
+    // case (PqK=256: the j=7 field occupies the sign bit) is admitted and
+    // is exact by construction: the per-group SUM adds PqM contributions
     // with DISJOINT bit ranges (no carries, so the 64-bit pattern is
     // the bitwise OR even when the j=7 addend wraps negative), parquet
     // stores the INT64 pattern verbatim, and the decode's arithmetic
@@ -1210,11 +1206,10 @@ object SimilarityQueries {
     }),
 
     // ---- PQ codebook occupancy: vectors per (subspace, codeword) ----
-    // The index-health relation (graft.PqStats prints its committed
-    // JSON snapshot): a subspace whose live codeword count collapses
-    // carries fewer than its log2(PqK) bits, which is how quantization
-    // quality degrades — so occupancy is a first-class, oracle-checked
-    // output, not just a probe. PqM·PqK rows, partial-agg'd count.
+    // The index-health relation: a subspace whose live codeword count
+    // collapses carries fewer than its log2(PqK) bits, which is how
+    // quantization quality degrades — so occupancy is a first-class,
+    // oracle-checked output. PqM·PqK rows, partial-agg'd count.
     "pq_occupancy" -> ((s, dir) =>
       pqCodes(s, dir)
         .groupBy("j", "code")
@@ -1551,9 +1546,9 @@ object SimilarityQueries {
     })
   )
 
-  /** The tiers ann_recall scores — ONE list consumed by the Spark query,
-    * the spliced oracle, and graft.RecallProbe, so adding a tier (as
-    * ann_ivfpq did) updates all three in lockstep.
+  /** The tiers ann_recall scores — ONE list consumed by the Spark query
+    * and the spliced oracle, so adding a tier (as ann_ivfpq did) updates
+    * both in lockstep.
     */
   private[graft] val recallTiers: Seq[String] = Seq("ann_topk_agg", "ann_ivf",
     "ann_ivf_nprobe", "ann_pq", "ann_pq_rerank", "ann_ivfpq",
