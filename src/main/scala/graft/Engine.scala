@@ -204,12 +204,21 @@ object Engine {
     * parquet table [[runStreamIncremental]] maintains (detected by its
     * `_graft_log` manifest directory; the read resolves ONE manifest, so
     * it sees one whole generation even while a merge publishes).
+    *
+    * The JSON artifact is read with the schema its `_graft_schema`
+    * sidecar records, so the read costs no Spark job until it is
+    * consumed. An artifact without the sidecar — published before the
+    * sink wrote one, or holding a type the sidecar does not cover — falls
+    * back to `spark.read.json`'s schema inference, one job over the file.
     */
-  def fetchResult(spark: SparkSession, resultPath: String): DataFrame = {
+  def fetchResult(spark: SparkSession, resultPath: String): DataFrame =
+    fetchResult(spark, Sinks.fileSystem(spark, resultPath), resultPath)
+
+  private def fetchResult(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      resultPath: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(resultPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(new org.apache.hadoop.fs.Path(p, "_graft_log")))
-      Sinks.readKeyedParquet(spark, resultPath)
+      Sinks.readKeyedParquet(spark, fs, resultPath)
     else {
       val legacyDirs =
         if (fs.exists(p))
@@ -225,24 +234,30 @@ object Engine {
         spark.read.option("basePath", resultPath)
           .parquet(legacyDirs.sorted.map(d => s"$resultPath/$d").toIndexedSeq: _*)
           .drop("_bkt")
-      else spark.read.json(resultPath)
+      else Sinks.readJsonSchema(fs, resultPath) match {
+        case Some(schema) => spark.read.schema(schema).json(resultPath)
+        case None => spark.read.json(resultPath)
+      }
     }
   }
 
   /** PDF Part-2 "Streaming Search" (P7): point lookup of one key in a
-    * stored result. The key column resolves, in order: explicit `keyCol`
-    * argument → the `_graft_key` sidecar the sink records (authoritative
-    * for any registered operation) → the first STRING-typed column
-    * (`spark.read.json` orders inferred columns alphabetically, so the
-    * positional first column of the read-back result is NOT the sink's
-    * key — for wordcount it would be `count`).
+    * stored result, read as [[fetchResult]] reads it (the `_graft_schema`
+    * sidecar first, inference only without one), so a lookup on a
+    * published JSON result is one Spark job. The key column resolves, in
+    * order: explicit `keyCol` argument → the `_graft_key` sidecar the sink
+    * records (authoritative for any registered operation) → the first
+    * STRING-typed column (`spark.read.json` orders columns alphabetically,
+    * so the positional first column of the read-back result is NOT the
+    * sink's key — for wordcount it would be `count`).
     */
   def lookup(spark: SparkSession, resultPath: String, term: String,
       keyCol: String = ""): DataFrame = {
-    val df = fetchResult(spark, resultPath)
+    val fs = Sinks.fileSystem(spark, resultPath)
+    val df = fetchResult(spark, fs, resultPath)
     val key =
       if (keyCol.nonEmpty) keyCol
-      else Sinks.readKeyColumn(spark, resultPath)
+      else Sinks.readKeyColumn(fs, resultPath)
         .orElse(df.schema.fields.find(_.dataType == org.apache.spark.sql.types.StringType).map(_.name))
         .getOrElse(df.columns.head)
     df.filter(col(key) === term)

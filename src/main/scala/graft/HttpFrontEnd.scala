@@ -123,7 +123,8 @@ object HttpFrontEnd {
   private def resultObject(spark: SparkSession, outputPath: String): String = {
     import graft.sources.Sinks
     val df = Engine.fetchResult(spark, outputPath)
-    val key = Sinks.readKeyColumn(spark, outputPath).getOrElse(df.columns.head)
+    val key = Sinks.readKeyColumn(Sinks.fileSystem(spark, outputPath), outputPath)
+      .getOrElse(df.columns.head)
     val valueCols = df.columns.filterNot(_ == key)
     if (valueCols.length != 1) {
       df.toJSON.collect().mkString("[", ",", "]")

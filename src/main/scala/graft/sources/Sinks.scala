@@ -42,25 +42,35 @@ object Sinks {
     if (f != null) f(ms)
   }
 
-  /** Reference-parity sink: global sort on `sortCol`, merged to ONE json
-    * file. `coalesce(1)` after a range-partitioned sort preserves global
-    * order (partitions are concatenated in range order). Small results only.
+  /** Reference-parity sink: the rows sorted by `sortCol` in ONE json file.
+    * Small results only.
+    *
+    * One exchange into a single partition, then a sort inside it: the
+    * same single writing task a global sort merged to one file ends in,
+    * without the sampling job a global sort runs to pick range bounds
+    * (it executes the plan below the sort once more, for partitions that
+    * are merged again anyway). The output bytes are the same.
     *
     * The result is staged to a sibling `.inprogress` directory and swapped
     * in with delete+rename, so concurrent readers (`Engine.fetchResult`/
     * `lookup`, e.g. while `Engine.runStream` republishes per trigger) race
-    * only against a millisecond-scale rename, not the whole rewrite. A
-    * `_graft_key` sidecar records the sort/key column for
-    * [[graft.Engine.lookup]] — `spark.read.json` reorders columns
-    * alphabetically, so the key is not recoverable from position.
+    * only against a millisecond-scale rename, not the whole rewrite. Two
+    * sidecars ride along (the leading underscore hides them from scans):
+    *  - `_graft_key`: the sort/key column, for [[graft.Engine.lookup]] —
+    *    `spark.read.json` reorders columns alphabetically, so the key is
+    *    not recoverable from position;
+    *  - `_graft_schema`: the schema `spark.read.json` would infer from the
+    *    file ([[jsonReadSchema]]), so readers skip the inference job. It
+    *    is written only when every column's type maps; otherwise readers
+    *    infer as before.
     */
   def sortedSingleFileJson(df: DataFrame, sortCol: String, path: String): Unit = {
     val tmp = path + ".inprogress"
-    df.orderBy(sortCol).coalesce(1).write.mode(SaveMode.Overwrite).json(tmp)
+    df.repartition(1).sortWithinPartitions(sortCol)
+      .write.mode(SaveMode.Overwrite).json(tmp)
     val fs = fileSystem(df.sparkSession, path)
-    val keyFile = fs.create(
-      new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(tmp), "_graft_key"), true)
-    try keyFile.write(sortCol.getBytes("UTF-8")) finally keyFile.close()
+    writeSidecar(fs, tmp, KeySidecar, sortCol)
+    jsonReadSchema(df.schema).foreach(s => writeSidecar(fs, tmp, SchemaSidecar, s.json))
     swapInto(fs, tmp, path)
   }
 
@@ -100,7 +110,7 @@ object Sinks {
     swapInto(fs, tmp, path)
   }
 
-  private[sources] def fileSystem(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def fileSystem(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -129,16 +139,65 @@ object Sinks {
     fs.delete(old, true)
   }
 
-  /** Read back the `_graft_key` sidecar written by [[sortedSingleFileJson]]. */
-  def readKeyColumn(spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_key")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
+  private val KeySidecar = "_graft_key"
+  private val SchemaSidecar = "_graft_schema"
+
+  private def writeSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      name: String, text: String): Unit = {
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The sidecar's text, or None if `dir` has none (one open, no probe). */
+  private def readSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      name: String): Option[String] =
+    try {
+      val in = fs.open(new org.apache.hadoop.fs.Path(dir, name))
       try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim)
       finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The key column a sink recorded in its `_graft_key` sidecar. */
+  def readKeyColumn(fs: org.apache.hadoop.fs.FileSystem, path: String): Option[String] =
+    readSidecar(fs, path, KeySidecar)
+
+  /** The read schema [[sortedSingleFileJson]] recorded in its
+    * `_graft_schema` sidecar; None for results published without one.
+    */
+  private[graft] def readJsonSchema(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Option[org.apache.spark.sql.types.StructType] =
+    readSidecar(fs, path, SchemaSidecar).map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  /** The schema `spark.read.json` infers from what the JSON writer makes of
+    * rows of `schema`, derived without reading them — or None when that
+    * is not provable from the types alone. Inference's rules: fields
+    * sorted by name at every struct level, every field nullable, arrays
+    * may hold nulls, integral numbers read as `bigint` and fractional ones
+    * as `double`. Types outside this set (maps, dates, timestamps,
+    * decimals, binary, empty structs, …) infer data-dependently, so any
+    * of them anywhere in the schema gives None. Where inference cannot see
+    * a type at all — a column null in every row, an array empty in every
+    * row — this keeps the writer's column and element type.
+    */
+  private def jsonReadSchema(
+      schema: org.apache.spark.sql.types.StructType): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types._
+    def read(t: DataType): Option[DataType] = t match {
+      case _: StringType => Some(StringType)
+      case BooleanType => Some(BooleanType)
+      case ByteType | ShortType | IntegerType | LongType => Some(LongType)
+      case FloatType | DoubleType => Some(DoubleType)
+      case ArrayType(e, _) => read(e).map(ArrayType(_, containsNull = true))
+      case s: StructType => struct(s)
+      case _ => None
     }
+    def struct(s: StructType): Option[StructType] = {
+      val fields = s.fields.toSeq.map(f => read(f.dataType).map(StructField(f.name, _)))
+      if (fields.isEmpty || fields.exists(_.isEmpty)) None
+      else Some(StructType(fields.flatten.sortBy(_.name)))
+    }
+    struct(schema)
   }
 
   /** The generation manifest a keyed parquet result publishes through.
@@ -254,8 +313,12 @@ object Sinks {
     * part of the contract: `spark.sql.files.ignoreMissingFiles=true` would
     * turn it into silent row loss, so this reader refuses to run under it.
     */
-  def readKeyedParquet(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val (m, df) = readKeyedLevels(spark, path)
+  def readKeyedParquet(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    readKeyedParquet(spark, fileSystem(spark, path), path)
+
+  private[graft] def readKeyedParquet(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String): DataFrame = {
+    val (m, df) = readKeyedLevels(spark, fs, path)
     if (m.dirs.values.forall(_.size <= 1)) df
     else {
       // multi-level buckets: an upserted key may appear in several
@@ -264,7 +327,7 @@ object Sinks {
       // so no schema column is needed and pre-level tables read
       // unchanged through the single-level fast path above.
       import org.apache.spark.sql.functions._
-      val key = readKeyColumn(spark, path).getOrElse(throw new IllegalStateException(
+      val key = readKeyColumn(fs, path).getOrElse(throw new IllegalStateException(
         s"multi-level keyed table $path has no _graft_key sidecar — cannot " +
           "resolve upserted keys without the key column"))
       // the generation is PROJECTED before the aggregate: input_file_name()
@@ -297,10 +360,10 @@ object Sinks {
     */
   def readKeyedParquetKeySet(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    readKeyedLevels(spark, path)._2
+    readKeyedLevels(spark, fileSystem(spark, path), path)._2
 
   private def readKeyedLevels(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Manifest, DataFrame) = {
+      fs: org.apache.hadoop.fs.FileSystem, path: String): (Manifest, DataFrame) = {
     // read the boolean Spark itself parsed (trim + case handling included)
     // instead of re-implementing string parsing on the raw conf value —
     // any variant that enables the conf must also trip the guard
@@ -308,7 +371,6 @@ object Sinks {
       "readKeyedParquet requires spark.sql.files.ignoreMissingFiles=false: a " +
         "snapshot outliving its retained generations must fail loudly, not " +
         "silently drop the rows of garbage-collected buckets")
-    val fs = fileSystem(spark, path)
     val m = Manifest.latest(fs, path).getOrElse(
       throw new java.io.FileNotFoundException(s"no manifest under $path"))
     val dirs = m.dirs.values.flatten.toSeq.sorted
@@ -542,8 +604,7 @@ object Sinks {
     if (current.isEmpty) {
       // same sidecar the JSON sink writes, so Engine.lookup resolves the
       // key column of a parquet result too (underscore = invisible to scans)
-      val keyFile = fs.create(new org.apache.hadoop.fs.Path(root, "_graft_key"), true)
-      try keyFile.write(keyCol.getBytes("UTF-8")) finally keyFile.close()
+      writeSidecar(fs, path, KeySidecar, keyCol)
     }
     // Migration also reclaims the PREVIOUS layout's external crash
     // leftovers (the old code staged in sibling dirs: .delta, .oldbkt,

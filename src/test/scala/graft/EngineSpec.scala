@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,53 @@ class EngineSpec extends AnyFunSuite {
     Files.writeString(dir.resolve("a.txt"), "Hello, world!\nhello AGAIN.\n\n")
     Files.writeString(dir.resolve("b.txt"), "the World spins\n")
     dir.toString
+  }
+
+  /** `f`'s result and the number of Spark jobs it ran from this thread.
+    * Jobs are told apart by a local property; a marker job submitted
+    * afterwards flushes the listener bus (events arrive in order), so once
+    * the marker is seen every job of `f` has been counted.
+    */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val prop = "graft.spec.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(prop)).foreach { t =>
+          if (t == tag) jobs.incrementAndGet()
+          else if (t == tag + ".flush") flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      val r = f
+      sc.setLocalProperty(prop, tag + ".flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def partFile(dir: String): Path = {
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(", "))
+    parts.head.toPath
+  }
+
+  /** The sidecar read must see exactly what schema inference sees. */
+  private def assertReadsAsInferred(out: String): Unit = {
+    val inferred = spark.read.json(out)
+    val fetched = Engine.fetchResult(spark, out)
+    assert(fetched.schema == inferred.schema,
+      s"${fetched.schema.simpleString} vs inferred ${inferred.schema.simpleString}")
+    assert(fetched.collect().toSeq == inferred.collect().toSeq)
   }
 
   test("gzip-compressed corpus files read transparently (crawl-dump format)") {
@@ -71,6 +119,90 @@ class EngineSpec extends AnyFunSuite {
     val keys = spark.read.text(parts.head.getPath)
       .collect().map(_.getString(0)).toSeq
     assert(keys == keys.sorted, "single-file JSON must be written key-sorted")
+  }
+
+  test("a result with zero rows reads back: lookup finds nothing, the pretty artifact is {}") {
+    // inference of the empty part file yields struct<>, where the key
+    // column does not resolve; the recorded read schema still has it
+    val dir = Files.createTempDirectory("graft-empty")
+    Files.writeString(dir.resolve("a.txt"), "!!! ... ,,,\n\n   \n?!\n")
+    Files.writeString(dir.resolve("b.txt"), "\n")
+    for (op <- Seq("wordcount", "invertedindex")) {
+      val out = Files.createTempDirectory("graft-out").toString + s"/$op"
+      Engine.run(spark, JobConfig(op, dir.toString, out, pretty = true))
+      assert(Engine.lookup(spark, out, "hello").collect().isEmpty)
+      val back = Engine.fetchResult(spark, out)
+      assert(back.count() == 0 && back.columns.contains("word"))
+      assert(Files.readString(Path.of(out, "_final_output.json")) == "{}")
+    }
+  }
+
+  test("read schema: wordcount and inverted index read back as inference reads them") {
+    val corpus = tmpCorpus()
+    for (op <- Seq("wordcount", "invertedindex")) {
+      val out = Files.createTempDirectory("graft-out").toString + s"/$op"
+      Engine.run(spark, JobConfig(op, corpus, out))
+      assert(Files.exists(Path.of(out, "_graft_schema")))
+      assertReadsAsInferred(out)
+    }
+  }
+
+  test("read schema: int, float, boolean, nested struct and array-of-struct columns") {
+    // mixed-case and underscore names: inference orders fields by
+    // String.compareTo at every level, the sidecar must too
+    OperationRegistry.register("typed_lines", (corpus, _) =>
+      corpus.groupBy("doc").agg(
+        count(lit(1)).cast("int").as("lines"),
+        (sum(length(col("line"))) / 3).cast("float").as("Ratio"),
+        (count(lit(1)) > 1).as("multi"),
+        struct(max(length(col("line"))).cast("short").as("longest"),
+          min(col("line")).as("First")).as("stats"),
+        sort_array(collect_list(struct(col("line").as("text"),
+          length(col("line")).cast("byte").as("_len")))).as("items"))
+        .orderBy("doc"))
+    val out = Files.createTempDirectory("graft-out").toString + "/typed"
+    Engine.run(spark, JobConfig("typed_lines", tmpCorpus(), out))
+    assert(Files.exists(Path.of(out, "_graft_schema")))
+    assertReadsAsInferred(out)
+    val hit = Engine.lookup(spark, out, "b.txt").collect()
+    assert(hit.length == 1 && hit.head.getAs[Long]("lines") == 1L)
+  }
+
+  test("read schema: a result type outside the mapping writes no sidecar and reads by inference") {
+    OperationRegistry.register("mapped_lines", (corpus, _) =>
+      corpus.groupBy("doc")
+        .agg(map(lit("lines"), count(lit(1)).cast("int")).as("m"),
+          max(to_date(lit("2024-01-02"))).as("day"))
+        .orderBy("doc"))
+    val out = Files.createTempDirectory("graft-out").toString + "/mapped"
+    Engine.run(spark, JobConfig("mapped_lines", tmpCorpus(), out))
+    assert(!Files.exists(Path.of(out, "_graft_schema")))
+    assertReadsAsInferred(out)
+    assert(Engine.lookup(spark, out, "a.txt").count() == 1)
+  }
+
+  test("read schema: a result published without the sidecar still reads and looks up") {
+    val out = Files.createTempDirectory("graft-out").toString + "/old"
+    Engine.run(spark, JobConfig("wordcount", tmpCorpus(), out))
+    val withSidecar = Engine.fetchResult(spark, out).collect().toSeq
+    Files.delete(Path.of(out, "_graft_schema"))
+    assert(Engine.fetchResult(spark, out).collect().toSeq == withSidecar)
+    assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 2L)
+  }
+
+  test("a JSON lookup runs one Spark job; publishing wordcount at most three") {
+    val out = Files.createTempDirectory("graft-out").toString + "/jobs"
+    val (result, runJobs) = jobsOf(Engine.run(spark, JobConfig("wordcount", tmpCorpus(), out)))
+    assert(runJobs <= 3, s"Engine.run ran $runJobs jobs")
+    val (hit, lookupJobs) = jobsOf(Engine.lookup(spark, out, "hello").collect())
+    assert(hit.length == 1)
+    assert(lookupJobs == 1, s"Engine.lookup ran $lookupJobs jobs")
+
+    // byte-identical to the global-sort-then-one-file write of the same result
+    val ref = Files.createTempDirectory("graft-out").toString + "/ref"
+    result.orderBy("word").coalesce(1).write.json(ref)
+    assert(java.util.Arrays.equals(Files.readAllBytes(partFile(out)),
+      Files.readAllBytes(partFile(ref))))
   }
 
   test("Engine.lookup finds a single term (P7)") {
@@ -175,10 +307,12 @@ class EngineSpec extends AnyFunSuite {
     val q = Engine.runStream(spark, JobConfig("wordcount", corpusDir.toString, out))
     try {
       q.processAllAvailable()
+      assert(Files.exists(Path.of(out, "_graft_schema")))
       assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 1L)
 
       Files.writeString(corpusDir.resolve("b.txt"), "hello again\n")
       q.processAllAvailable()
+      assert(Files.exists(Path.of(out, "_graft_schema")))
       assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 2L)
       assert(Engine.fetchResult(spark, out).count() == 3)
     } finally q.stop()
