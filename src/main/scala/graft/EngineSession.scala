@@ -53,9 +53,9 @@ object EngineSession {
     // Join strategy stays at Spark's defaults (sort-merge preferred, no
     // shuffled-hash local-map threshold). Both alternatives were measured
     // and refuted: preferring shuffled-hash join cost +3.3% over the
-    // catalog (OPTIMIZATION_r16.md), and a 256m local-map threshold
-    // heap-OOMs under memory pressure where sort-merge spills
-    // (OPTIMIZATION_r17.md #2).
+    // catalog (`git show e9e7a22:OPTIMIZATION_r16.md`), and a 256m
+    // local-map threshold heap-OOMs under memory pressure where
+    // sort-merge spills (`git show e9e7a22:OPTIMIZATION_r17.md` #2).
     requiredConfs.foreach { case (k, v) => b.config(k, v) }
     b
   }

@@ -1414,7 +1414,8 @@ object DedupQueries {
     // divisions per row are the repo float rule (NULL-guarded so an
     // empty tier emits NULL, never NaN).
     // The r13 verdict's open question — is the measured sf10 LSH recall
-    // collapse (0.157, DEDUPRECALL_sf10_r13) really covered by the
+    // collapse (0.157, `git show e9e7a22:DEDUPRECALL_sf10_r13.json`)
+    // really covered by the
     // signature grouping the MaxBucket cap's defense points at? — is the
     // fourth row: the UNION of full-signature groups (every pair of docs
     // sharing the complete k-min shingle signature — dedup_minhash's
@@ -1484,7 +1485,8 @@ object DedupQueries {
 
     // ---- post-canon recall: the pipeline-order claim, measured ----
     // Round 14's union tier refuted "signature grouping covers the LSH
-    // cap's recall loss" at replica density (DEDUPRECALL_sf10_r14 union
+    // cap's recall loss" at replica density
+    // (`git show e9e7a22:DEDUPRECALL_sf10_r14.json`: union
     // 0.193 vs LSH 0.157; the exact-replica regime still only 0.203),
     // and the replacement claim (SCALE.md round-14 note #1) became
     // pipeline ORDER: exact/near-exact dedup FIRST, LSH on the

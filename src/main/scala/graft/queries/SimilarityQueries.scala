@@ -160,7 +160,8 @@ object SimilarityQueries {
   }
 
   /** The ≤ [[MaxCells]] cell-representative frame with the loud overflow
-    * check (shared by ann_ivf_nprobe and ann_ivfpq): the limit makes the
+    * check (shared by ann_ivf_nprobe, ann_filtered and [[ivfpqScan]],
+    * i.e. ann_ivfpq and ann_ivfpq_rerank): the limit makes the
     * rep side's bound STATIC (maxRows) for the structural join audit, but
     * limit() past MaxCells rows would TRUNCATE nondeterministically and
     * silently diverge from the oracle — so overflow fails loudly first
@@ -322,10 +323,11 @@ object SimilarityQueries {
 
   // ===== two-level coarse quantizer (the kNN graph's cell structure) =====
   // The r15 sf30 probe measured the graph's cold build ×9.8 for 3× data
-  // (402.8 s vs 41.3 s — BENCH_sf30_new_r15.json): the corpus crossed the
-  // flat quantizer's KmMaxK=4096 ceiling, K stopped growing, mean cell
-  // size grew ∝ n, and the cell-equi ADC join reopened the
-  // quadratic-within-cell door the derived-K rule exists to close. But
+  // (402.8 s vs 41.3 s — `git show e9e7a22:BENCH_sf30_new_r15.json`):
+  // the corpus crossed the flat quantizer's KmMaxK=4096 ceiling, K
+  // stopped growing, mean cell size grew ∝ n, and the cell-equi ADC
+  // join reopened the quadratic-within-cell door the derived-K rule
+  // exists to close. But
   // simply UNCAPPING the flat K moves the quadratic to the OTHER side:
   // each Lloyd assignment pass is K·dim work per row, and with
   // K = n/KmCell that is n²·dim/KmCell per pass — the two terms meet and
@@ -620,10 +622,9 @@ object SimilarityQueries {
       pqSub(vecs(s, dir).filter(col("v").isNotNull).select("vec_id", "v")),
       pqCodebook(s, dir))
 
-  /** Per-query keyed ADC table (qid, lut: MAP slot→lfp) over codebook
-    * `cb` — the stage ann_pq, ann_pq_rerank and ann_pq_indexed share
-    * (one spelling; slot = j·PqK + cid, keyed not positional because a
-    * codeword can die in training).
+  /** Per-query dense ADC table (qid, lut: ARRAY of PqM·PqK lfp slots)
+    * over codebook `cb` for the NQueries point queries — the stage
+    * ann_pq, ann_pq_rerank and ann_pq_indexed share ([[pqLutOf]]).
     */
   private def pqLut(e: DataFrame, cb: DataFrame): DataFrame =
     pqLutOf(
@@ -631,21 +632,26 @@ object SimilarityQueries {
         .select(col("vec_id").as("qid"), col("v").as("qv")),
       cb)
 
-  /** [[pqLut]] over an ARBITRARY (qid, qv) query frame — knn_join's
-    * corpus-side serving makes every vector a query, so the ADC-table
-    * stage is factored on the query frame, not the NQueries filter.
-    * Linear: ×(PqM·PqK) expansion of the query set, grouped straight
-    * back to one MAP row per query.
+  /** The ONE ADC-table stage: (keys…, qv) → (keys…, lut) over codebook
+    * `cb`. Keys are `qid` for the flat scans (knn_join's corpus-side
+    * serving makes every vector a query, hence an arbitrary query
+    * frame) and `(qid, pcell)` for IVFADC, whose `qv` is the query's
+    * residual against the probed cell. Linear: ×(PqM·PqK) expansion of
+    * the query frame, grouped straight back to one row per key. Slots
+    * are keyed j·PqK + cid, not positional, because a codeword can die
+    * in training.
     */
-  private def pqLutOf(q: DataFrame, cb: DataFrame): DataFrame =
+  private def pqLutOf(q: DataFrame, cb: DataFrame,
+      keys: Seq[String] = Seq("qid")): DataFrame = {
+    val k = keys.map(col)
     q
-      .select(col("qid"), explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("qv"))
-      .select(col("qid"), col("j"),
-        slice(col("qv"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("qs"))
+      .select(k ++ Seq(explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("qv")): _*)
+      .select(k ++ Seq(col("j"),
+        slice(col("qv"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("qs")): _*)
       .join(cb, Seq("j"))
-      .select(col("qid"), (col("j") * PqK + col("cid")).as("slot"),
-        floor(dist2(col("qs"), col("c")) * KmScale).cast("long").as("lfp"))
-      .groupBy("qid")
+      .select(k ++ Seq((col("j") * PqK + col("cid")).as("slot"),
+        floor(dist2(col("qs"), col("c")) * KmScale).cast("long").as("lfp")): _*)
+      .groupBy(k: _*)
       .agg(map_from_arrays(collect_list(col("slot")),
         collect_list(col("lfp"))).as("m"))
       // DENSE slot array (PqM·PqK entries, NULL at dead-codeword slots —
@@ -654,9 +660,9 @@ object SimilarityQueries {
       // map lookup inside an interpreted lambda. One 128-probe transform
       // per QUERY row buys PqM O(1) probes per CANDIDATE row — the side
       // of the trade that scales ([[adcSum]]).
-      .select(col("qid"),
-        transform(sequence(lit(0), lit(PqM * PqK - 1)),
-          s0 => element_at(col("m"), s0)).as("lut"))
+      .select(k :+ transform(sequence(lit(0), lit(PqM * PqK - 1)),
+        s0 => element_at(col("m"), s0)).as("lut"): _*)
+  }
 
   /** Fully codegen'd ADC sum Σⱼ lut[j·PqK + codes[j]] over [[pqLutOf]]'s
     * DENSE slot array: PqM statically-unrolled element_at probes (both
@@ -670,6 +676,97 @@ object SimilarityQueries {
     (0 until PqM).map(j =>
       element_at(lut, element_at(codes, j + 1) + lit(j * PqK + 1)))
       .reduce(_ + _)
+
+  /** (vec_id, j, code) → (vec_id, codes): each vector's PqM codes as one
+    * j-ordered array, the shape [[adcSum]] reads.
+    */
+  private def codeArrays(assigned: DataFrame): DataFrame =
+    assigned
+      .groupBy("vec_id")
+      .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
+      .select(col("vec_id"), transform(col("jc"), x => x.getField("code")).as("codes"))
+
+  /** The persisted index's (vec_id, codes): each packed BIGINT code word
+    * unpacked by shift/mask (exact integer ops) into [[codeArrays]]' shape.
+    */
+  private def packedCodes(s: SparkSession, idx: String): DataFrame = {
+    val mask = (1L << PqBits) - 1
+    s.read.parquet(s"$idx/codes")
+      .select(col("vec_id"),
+        expr(s"transform(sequence(0, ${PqM - 1}), " +
+          s"j -> CAST(shiftright(codes_packed, j * $PqBits) & ${mask}L AS INT))")
+          .as("codes"))
+  }
+
+  /** The ADC scan every PQ entry runs: `codes` ⋈ `lut` on `on` minus
+    * self-matches, scored (qid, nn_id, adc_fp) by [[adcSum]].
+    */
+  private def adcScan(codes: DataFrame, lut: DataFrame, on: Column = lit(true)): DataFrame =
+    codes.join(lut, on && col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("nn_id"),
+        adcSum(col("codes"), col("lut")).as("adc_fp"))
+
+  /** Rank-1 per query: the (score, nn_id)-least candidate via min(struct)
+    * — partial-aggregable, ties to the smaller nn_id.
+    */
+  private def nearest(scored: DataFrame, score: String): DataFrame =
+    scored
+      .groupBy("qid")
+      .agg(min(struct(col(score), col("nn_id"))).as("b"))
+      .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
+        col("b").getField(score).as(score))
+      .orderBy("qid")
+
+  /** Two-stage PQ retrieval's tail: the PqRerank best ADC candidates of
+    * `scored` per query (TopK ranks score DESC, id ASC, so the negated
+    * integer ADC ranks adc ASC; a ≤ 2³⁰ long negates into an exactly
+    * representable double), re-ranked by exact distance against the full
+    * vectors of `e`. Shortlist membership is deterministic (integer
+    * scores, nn_id ties), so both engines shortlist the SAME set.
+    */
+  private def pqRerank(scored: DataFrame, e: DataFrame): DataFrame = {
+    val topk = udaf(new graft.functions.TopK(PqRerank))
+    val q = e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv"))
+    val shortlist = scored
+      .groupBy("qid")
+      .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
+      .select(col("qid"), explode(col("top")).as("t"))
+      .select(col("qid"), col("t.nn_id").as("nn_id"))
+    nearest(
+      shortlist
+        .join(e.select(col("vec_id").as("nn_id"), col("v")), Seq("nn_id"))
+        .join(broadcast(q), Seq("qid"))
+        .select(col("qid"), col("nn_id"), dist2(col("qv"), col("v")).as("d2")),
+      "d2")
+  }
+
+  /** The IVFADC scan (qid, nn_id, adc_fp) shared by ann_ivfpq and
+    * ann_ivfpq_rerank: probed cells per query ([[probedCells]]), one LUT
+    * per (query, probed cell) over the query's residual AGAINST THAT
+    * CELL, and the residual codes of the probed cells only — the
+    * cell-equi broadcast join IS the "scan only probed cells" step, so
+    * everything outside the nprobe cells is filtered before any ADC
+    * arithmetic.
+    */
+  private def ivfpqScan(s: SparkSession, dir: String, name: String): DataFrame = {
+    val e = vecs(s, dir).filter(col("label").isNotNull)
+    val q = e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("qid"), col("label").as("qcell"), col("v").as("qv"))
+    val reps = boundedReps(name, e)
+    val cb = ivfpqCodebook(s, dir)
+    val pres = probedCells(q, reps)
+      .join(q.select(col("qid"), col("qv")), Seq("qid"))
+      .join(broadcast(reps), col("pcell") === col("cell"))
+      .select(col("qid"), col("pcell"), vsub(col("qv"), col("rv")).as("qv"))
+    // residual codes + owning cell: the label join-back is 1:1 on the
+    // aggregation key, so the groupBy's vec_id partitioning is reused
+    // on the left and the right moves only (vec_id, label) pairs
+    val codes = codeArrays(pqAssign(pqSub(ivfResiduals(s, dir).select("vec_id", "v")), cb))
+      .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
+    adcScan(codes, broadcast(pqLutOf(pres, cb, Seq("qid", "pcell"))),
+      col("label") === col("pcell"))
+  }
 
   // ===== persisted PQ index: the production build/serve split =====
   // The BUILD job is the expensive offline pass (train codebooks, encode
@@ -794,12 +891,7 @@ object SimilarityQueries {
       val probes = pr2.union(q.select(col("qid"), col("qcell").as("pcell")))
       val idx = pqIndexDir(s, dir)
       val cb = s.read.parquet(s"$idx/codebook")
-      val mask = (1L << PqBits) - 1
-      val codes = s.read.parquet(s"$idx/codes")
-        .select(col("vec_id"),
-          expr(s"transform(sequence(0, ${PqM - 1}), " +
-            s"j -> CAST(shiftright(codes_packed, j * $PqBits) & ${mask}L AS INT))")
-            .as("codes"))
+      val codes = packedCodes(s, idx)
         .join(asg.select(col("vec_id"), col("cluster")), Seq("vec_id"))
       val plut = probes.join(pqLutOf(q.select(col("qid"), col("qv")), cb),
         Seq("qid"))
@@ -811,10 +903,7 @@ object SimilarityQueries {
       // mode at sf10+. It is re-scanned a handful of times per session;
       // serialized re-scan cost is noise next to the build.
       val graph = graft.operators.Checkpoints.corpusScaled(
-        codes.join(plut,
-            col("cluster") === col("pcell") && col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id").as("nn_id"),
-            adcSum(col("codes"), col("lut")).as("adc_fp"))
+        adcScan(codes, plut, col("cluster") === col("pcell"))
           .groupBy("qid")
           .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
           .select(col("qid"), posexplode(col("top")))
@@ -1027,10 +1116,10 @@ object SimilarityQueries {
     // query's OWN assignment cell ∪ the top-(nprobe−1) rep-ranked OTHER
     // cells: with trained centroids the own cell is the top-ranked cell
     // by definition, but the medoid surrogate can misrank it — the
-    // committed RECALL_sf{1,10} probes measured 0.75 vs single-cell
-    // IVF's 1.0 on the duplicated replica geometry before this pin, a
-    // structural violation of ivf ⊆ nprobe that the own-cell union
-    // restores for ANY representative. Cell ranking and the final rank
+    // RECALL_sf{1,10}_r12 probes (`git show e9e7a22:RECALL_sf1_r12.json`)
+    // measured 0.75 vs single-cell IVF's 1.0 on the duplicated replica
+    // geometry before this pin, a structural violation of ivf ⊆ nprobe
+    // that the own-cell union restores for ANY representative. Cell ranking and the final rank
     // both run through the TopK aggregator (partial-aggregable map-side
     // pruning, no window funnel); the rep-scoring join is a broadcast
     // nested-loop over |queries| × nlist rows, both factors design
@@ -1179,31 +1268,18 @@ object SimilarityQueries {
 
     // ---- PQ ADC search: rank-1 by asymmetric distance ----
     // Per query: ONE exact-distance table (query slice → every codeword,
-    // PqM·PqK entries, fixed-point BIGINT) keyed slot = j·PqK + cid in a
-    // MAP — keyed, not positional, because a codeword can die during
-    // training and positional indexing would silently shift. The corpus
-    // scan is then codes-only: PqM map probes + an integer sum per
+    // PqM·PqK entries, fixed-point BIGINT) laid out as a dense slot
+    // array at slot = j·PqK + cid — keyed, not positional, because a
+    // codeword can die during training (its slot stays NULL). The corpus
+    // scan is then codes-only: PqM dense-LUT probes + an integer sum per
     // (query, vector) — no float math touches the corpus, which is the
     // whole point of ADC at 100 TB (the index is 64× smaller than the
     // vectors and the scan is integer lookups). Rank-1 via min(struct)
     // is partial-aggregable (the ann_lsh posture); the broadcast side is
     // NQueries rows.
-    "ann_pq" -> ((s, dir) => {
-      val lut = pqLut(vecs(s, dir), pqCodebook(s, dir))
-      val codes = pqCodes(s, dir)
-        .groupBy("vec_id")
-        .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
-        .select(col("vec_id"),
-          transform(col("jc"), x => x.getField("code")).as("codes"))
-      codes.join(broadcast(lut), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nn_id"),
-          adcSum(col("codes"), col("lut")).as("adc_fp"))
-        .groupBy("qid")
-        .agg(min(struct(col("adc_fp"), col("nn_id"))).as("b"))
-        .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
-          col("b").getField("adc_fp").as("adc_fp"))
-        .orderBy("qid")
-    }),
+    "ann_pq" -> ((s, dir) =>
+      nearest(adcScan(codeArrays(pqCodes(s, dir)),
+        broadcast(pqLut(vecs(s, dir), pqCodebook(s, dir)))), "adc_fp")),
 
     // ---- PQ codebook occupancy: vectors per (subspace, codeword) ----
     // The index-health relation: a subspace whose live codeword count
@@ -1222,38 +1298,11 @@ object SimilarityQueries {
     // it NOMINATES — the map-side-pruning TopK aggregator keeps the
     // PqRerank best ADC candidates per query — and exact float distance
     // re-ranks only the shortlist: PqRerank full-vector reads per query
-    // instead of a corpus scan. Shortlist membership is deterministic
-    // (integer scores, nn_id ties) so both engines shortlist the SAME
-    // set, and the re-ranked winner hash-matches.
+    // instead of a corpus scan ([[pqRerank]]).
     "ann_pq_rerank" -> ((s, dir) => {
       val e = vecs(s, dir)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val lut = pqLut(e, pqCodebook(s, dir))
-      val codes = pqCodes(s, dir)
-        .groupBy("vec_id")
-        .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
-        .select(col("vec_id"),
-          transform(col("jc"), x => x.getField("code")).as("codes"))
-      val topk = udaf(new graft.functions.TopK(PqRerank))
-      // TopK ranks (score DESC, id ASC); negated integer ADC = adc ASC.
-      // A ≤ 2³⁰ long negates into an exactly-representable double.
-      val shortlist = codes.join(broadcast(lut), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nn_id"),
-          adcSum(col("codes"), col("lut")).as("adc_fp"))
-        .groupBy("qid")
-        .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.nn_id").as("nn_id"))
-      shortlist
-        .join(e.select(col("vec_id").as("nn_id"), col("v")), Seq("nn_id"))
-        .join(broadcast(q), Seq("qid"))
-        .select(col("qid"), col("nn_id"), dist2(col("qv"), col("v")).as("d2"))
-        .groupBy("qid")
-        .agg(min(struct(col("d2"), col("nn_id"))).as("b"))
-        .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
-          col("b").getField("d2").as("d2"))
-        .orderBy("qid")
+      pqRerank(adcScan(codeArrays(pqCodes(s, dir)),
+        broadcast(pqLut(e, pqCodebook(s, dir)))), e)
     }),
 
     // ---- PQ serving from the PERSISTED index (the build/serve split) ----
@@ -1269,22 +1318,8 @@ object SimilarityQueries {
     // ann_pq's string.
     "ann_pq_indexed" -> ((s, dir) => {
       val idx = pqIndexDir(s, dir)
-      val cb = s.read.parquet(s"$idx/codebook")
-      val mask = (1L << PqBits) - 1
-      val codes = s.read.parquet(s"$idx/codes")
-        .select(col("vec_id"),
-          expr(s"transform(sequence(0, ${PqM - 1}), " +
-            s"j -> CAST(shiftright(codes_packed, j * $PqBits) & ${mask}L AS INT))")
-            .as("codes"))
-      val lut = pqLut(vecs(s, dir), cb)
-      codes.join(broadcast(lut), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nn_id"),
-          adcSum(col("codes"), col("lut")).as("adc_fp"))
-        .groupBy("qid")
-        .agg(min(struct(col("adc_fp"), col("nn_id"))).as("b"))
-        .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
-          col("b").getField("adc_fp").as("adc_fp"))
-        .orderBy("qid")
+      val lut = pqLut(vecs(s, dir), s.read.parquet(s"$idx/codebook"))
+      nearest(adcScan(packedCodes(s, idx), broadcast(lut)), "adc_fp")
     }),
 
     // ---- corpus-side kNN join: EVERY vector's top-k, index-served ----
@@ -1332,7 +1367,8 @@ object SimilarityQueries {
 
     // ---- exact re-rank over the graph's edge set: the production recipe ----
     // Small-K PQ (the graph's serving constant) has measured rank errors —
-    // recall@3 0.667 at sf10 (RECALL_sf10_r14) — and the corpus side
+    // recall@3 0.667 at sf10 (`git show e9e7a22:RECALL_sf10_r14.json`) —
+    // and the corpus side
     // CANNOT buy resolution with PqK=256 (the per-query dense ADC table
     // would be 2048 slots ≈ 16 KB/row against every corpus row: the
     // abandoned r14 probe, SCALE.md note #2). The production fix is the
@@ -1388,61 +1424,15 @@ object SimilarityQueries {
     // subtlety: distances must be computed in the PROBED cell's residual
     // frame, so the LUT keys on (qid, pcell), not qid — and (c) scans
     // ONLY the probed cells' codes: nprobe/nlist of the corpus touched,
-    // integer map probes per row, no float math. That is the scale
+    // PqM dense-LUT probes per row (adcSum), no float math. The scale
     // argument over ann_pq (which scans every code) and over
     // ann_ivf_nprobe (which reads full vectors in probed cells); the
     // cost is approximation on both axes, which ann_recall measures.
     // All arithmetic inherits the PQ determinism contract (md5 seed,
     // d2-then-cid tie-break, fixed-point sums; residual subtraction is
     // elementwise IEEE — exactly rounded).
-    "ann_ivfpq" -> ((s, dir) => {
-      val e = vecs(s, dir).filter(col("label").isNotNull)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("label").as("qcell"),
-          col("v").as("qv"))
-      val reps = boundedReps("ann_ivfpq", e)
-      val cb = ivfpqCodebook(s, dir)
-      // per (query, probed cell): the query's residual AGAINST THAT CELL
-      val pres = probedCells(q, reps)
-        .join(q.select(col("qid"), col("qv")), Seq("qid"))
-        .join(broadcast(reps), col("pcell") === col("cell"))
-        .select(col("qid"), col("pcell"), vsub(col("qv"), col("rv")).as("qres"))
-      val qsub = pres
-        .select(col("qid"), col("pcell"),
-          explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("qres"))
-        .select(col("qid"), col("pcell"), col("j"),
-          slice(col("qres"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("qs"))
-      val lut = qsub.join(cb, Seq("j"))
-        .select(col("qid"), col("pcell"), (col("j") * PqK + col("cid")).as("slot"),
-          floor(dist2(col("qs"), col("c")) * KmScale).cast("long").as("lfp"))
-        .groupBy("qid", "pcell")
-        .agg(map_from_arrays(collect_list(col("slot")),
-          collect_list(col("lfp"))).as("lut"))
-      // residual codes + owning cell: the label join-back is 1:1 on the
-      // aggregation key, so the groupBy's vec_id partitioning is reused
-      // on the left and the right moves only (vec_id, label) pairs
-      val codes = pqAssign(pqSub(ivfResiduals(s, dir).select("vec_id", "v")), cb)
-        .groupBy("vec_id")
-        .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
-        .select(col("vec_id"),
-          transform(col("jc"), x => x.getField("code")).as("codes"))
-        .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
-      // the cell-equi broadcast join IS the "scan only probed cells"
-      // step: everything outside the nprobe cells is filtered at the
-      // join, before any ADC arithmetic
-      codes.join(broadcast(lut),
-          col("label") === col("pcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nn_id"),
-          aggregate(
-            zip_with(col("codes"), sequence(lit(0), lit(PqM - 1)),
-              (cd, j) => element_at(col("lut"), j * lit(PqK) + cd)),
-            lit(0L), (acc, x) => acc + x).as("adc_fp"))
-        .groupBy("qid")
-        .agg(min(struct(col("adc_fp"), col("nn_id"))).as("b"))
-        .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
-          col("b").getField("adc_fp").as("adc_fp"))
-        .orderBy("qid")
-    }),
+    "ann_ivfpq" -> ((s, dir) =>
+      nearest(ivfpqScan(s, dir, "ann_ivfpq"), "adc_fp")),
 
     // ---- IVFADC+R: the IVF-PQ scan nominates, exact distance re-ranks ----
     // ann_pq_rerank's two-stage shape composed over ann_ivfpq's probed
@@ -1453,60 +1443,9 @@ object SimilarityQueries {
     // index and the re-rank reads PqRerank vectors per query — the
     // measured RECALL ladder shows the re-rank recovering the raw
     // 4-bit tier's misses (0.875 → 1.0 on the replica geometry).
-    // Shortlist membership is deterministic (integer scores, nn_id
-    // ties), so both engines shortlist the SAME set.
-    "ann_ivfpq_rerank" -> ((s, dir) => {
-      val e = vecs(s, dir).filter(col("label").isNotNull)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("label").as("qcell"),
-          col("v").as("qv"))
-      val reps = boundedReps("ann_ivfpq_rerank", e)
-      val cb = ivfpqCodebook(s, dir)
-      val pres = probedCells(q, reps)
-        .join(q.select(col("qid"), col("qv")), Seq("qid"))
-        .join(broadcast(reps), col("pcell") === col("cell"))
-        .select(col("qid"), col("pcell"), vsub(col("qv"), col("rv")).as("qres"))
-      val qsub = pres
-        .select(col("qid"), col("pcell"),
-          explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("qres"))
-        .select(col("qid"), col("pcell"), col("j"),
-          slice(col("qres"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("qs"))
-      val lut = qsub.join(cb, Seq("j"))
-        .select(col("qid"), col("pcell"), (col("j") * PqK + col("cid")).as("slot"),
-          floor(dist2(col("qs"), col("c")) * KmScale).cast("long").as("lfp"))
-        .groupBy("qid", "pcell")
-        .agg(map_from_arrays(collect_list(col("slot")),
-          collect_list(col("lfp"))).as("lut"))
-      val codes = pqAssign(pqSub(ivfResiduals(s, dir).select("vec_id", "v")), cb)
-        .groupBy("vec_id")
-        .agg(array_sort(collect_list(struct(col("j"), col("code")))).as("jc"))
-        .select(col("vec_id"),
-          transform(col("jc"), x => x.getField("code")).as("codes"))
-        .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
-      val topk = udaf(new graft.functions.TopK(PqRerank))
-      // TopK ranks (score DESC, id ASC); negated integer ADC = adc ASC
-      // (≤ 2³⁰ longs negate into exactly-representable doubles)
-      val shortlist = codes.join(broadcast(lut),
-          col("label") === col("pcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("nn_id"),
-          aggregate(
-            zip_with(col("codes"), sequence(lit(0), lit(PqM - 1)),
-              (cd, j) => element_at(col("lut"), j * lit(PqK) + cd)),
-            lit(0L), (acc, x) => acc + x).as("adc_fp"))
-        .groupBy("qid")
-        .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.nn_id").as("nn_id"))
-      shortlist
-        .join(e.select(col("vec_id").as("nn_id"), col("v")), Seq("nn_id"))
-        .join(broadcast(q.select(col("qid"), col("qv"))), Seq("qid"))
-        .select(col("qid"), col("nn_id"), dist2(col("qv"), col("v")).as("d2"))
-        .groupBy("qid")
-        .agg(min(struct(col("d2"), col("nn_id"))).as("b"))
-        .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
-          col("b").getField("d2").as("d2"))
-        .orderBy("qid")
-    }),
+    "ann_ivfpq_rerank" -> ((s, dir) =>
+      pqRerank(ivfpqScan(s, dir, "ann_ivfpq_rerank"),
+        vecs(s, dir).filter(col("label").isNotNull))),
 
     // ---- measured recall: every approximate tier vs the exact answer ----
     // The evaluation harness a production ANN deployment runs before
@@ -1735,6 +1674,67 @@ object SimilarityQueries {
     sb.toString
   }
 
+  // ===== PQ serving oracle fragments: one string per shared CTE run =====
+  // The flat ADC chain (qs/lut/adc over pqCtes) of ann_pq and
+  // ann_pq_rerank — a join + SUM over (j, cid) rows, the relational
+  // mirror of the engine's dense-LUT adcSum.
+  private lazy val pqAdcSql: String =
+    s"""qs AS (SELECT vec_id AS qid, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
+       |       FROM e CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)
+       |       WHERE vec_id < $NQueries),
+       |lut AS (SELECT q.qid, c.j, c.cid,
+       |               CAST(floor(${dist2Sql("q.qsv", "c.c")} * $KmScale.0) AS BIGINT) AS lfp
+       |        FROM qs q JOIN $pqFinalBook c ON q.j = c.j),
+       |adc AS (SELECT l.qid, cd.vec_id AS nn_id, CAST(SUM(l.lfp) AS BIGINT) AS adc_fp
+       |        FROM $pqFinalAsg cd
+       |        JOIN lut l ON l.j = cd.j AND l.cid = cd.code AND cd.vec_id <> l.qid
+       |        GROUP BY 1, 2)""".stripMargin
+
+  // The IVFADC prefix of ann_ivfpq and ann_ivfpq_rerank, WITH through
+  // adc. Probe ranking mirrors probedCells (cosine DESC, cell — the TopK
+  // aggregator's ordering); the ADC join pins each corpus code row to
+  // its OWN cell's LUT via l.pcell = r.label, the (query, probed cell)
+  // keying the IVFADC recipe requires. Both SUM casts are the
+  // HUGEINT→BIGINT convention.
+  private lazy val ivfpqAdcSql: String =
+    s"""WITH $ivfpqCtes,
+       |q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
+       |ranked AS (SELECT qid, cell,
+       |    ROW_NUMBER() OVER (PARTITION BY qid
+       |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
+       |  FROM q CROSS JOIN reps WHERE cell <> qcell),
+       |probes AS (SELECT qid, cell AS pcell FROM ranked WHERE crk <= ${NProbe - 1}
+       |           UNION ALL SELECT qid, qcell AS pcell FROM q),
+       |pres AS (SELECT p.qid, p.pcell, ${vsubSql("q.qv", "reps.rv")} AS qres
+       |         FROM probes p JOIN q ON q.qid = p.qid
+       |                       JOIN reps ON reps.cell = p.pcell),
+       |qs AS (SELECT qid, pcell, j, qres[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
+       |       FROM pres CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
+       |lut AS (SELECT x.qid, x.pcell, c.j, c.cid,
+       |               CAST(floor(${dist2Sql("x.qsv", "c.c")} * $KmScale.0) AS BIGINT) AS lfp
+       |        FROM qs x JOIN $pqFinalBook c ON x.j = c.j),
+       |adc AS (SELECT l.qid, cd.vec_id AS nn_id, CAST(SUM(l.lfp) AS BIGINT) AS adc_fp
+       |        FROM $pqFinalAsg cd
+       |        JOIN r ON r.vec_id = cd.vec_id
+       |        JOIN lut l ON l.j = cd.j AND l.cid = cd.code
+       |                  AND l.pcell = r.label AND cd.vec_id <> l.qid
+       |        GROUP BY 1, 2)""".stripMargin
+
+  // The two-stage entries' shortlist: the PqRerank (adc_fp, nn_id)-least
+  // candidates per query.
+  private lazy val shortSql: String =
+    s"""short AS (SELECT qid, nn_id FROM (
+       |  SELECT qid, nn_id,
+       |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
+       |  FROM adc) WHERE rn <= $PqRerank)""".stripMargin
+
+  // The rank-1 tail: per qid the (score, nn_id)-least row of `rel`.
+  private def rank1Sql(score: String, rel: String): String =
+    s"""SELECT qid, nn_id, $score FROM (
+       |  SELECT qid, nn_id, $score,
+       |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY $score, nn_id) AS rn
+       |  FROM $rel) WHERE rn = 1 ORDER BY qid""".stripMargin
+
   /** The per-method oracle strings; [[oracles]] adds ann_recall, which
     * SPLICES these as sub-selects (nested WITH — DuckDB-legal inside a
     * parenthesized subquery) so the recall harness and the tiers it
@@ -1817,20 +1817,8 @@ object SimilarityQueries {
 
     "ann_pq" ->
       s"""WITH $pqCtes,
-         |qs AS (SELECT vec_id AS qid, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
-         |       FROM e CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)
-         |       WHERE vec_id < $NQueries),
-         |lut AS (SELECT q.qid, c.j, c.cid,
-         |               CAST(floor(${dist2Sql("q.qsv", "c.c")} * $KmScale.0) AS BIGINT) AS lfp
-         |        FROM qs q JOIN $pqFinalBook c ON q.j = c.j),
-         |adc AS (SELECT l.qid, cd.vec_id AS nn_id, CAST(SUM(l.lfp) AS BIGINT) AS adc_fp
-         |        FROM $pqFinalAsg cd
-         |        JOIN lut l ON l.j = cd.j AND l.cid = cd.code AND cd.vec_id <> l.qid
-         |        GROUP BY 1, 2)
-         |SELECT qid, nn_id, adc_fp FROM (
-         |  SELECT qid, nn_id, adc_fp,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
-         |  FROM adc) WHERE rn = 1 ORDER BY qid""".stripMargin,
+         |$pqAdcSql
+         |${rank1Sql("adc_fp", "adc")}""".stripMargin,
 
     // j cast to INTEGER: DuckDB's range() yields BIGINT where Spark's
     // sequence(0, PqM-1) yields INT — numerically equal, but the strict
@@ -1842,95 +1830,24 @@ object SimilarityQueries {
 
     "ann_pq_rerank" ->
       s"""WITH $pqCtes,
-         |qs AS (SELECT vec_id AS qid, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
-         |       FROM e CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)
-         |       WHERE vec_id < $NQueries),
-         |lut AS (SELECT q.qid, c.j, c.cid,
-         |               CAST(floor(${dist2Sql("q.qsv", "c.c")} * $KmScale.0) AS BIGINT) AS lfp
-         |        FROM qs q JOIN $pqFinalBook c ON q.j = c.j),
-         |adc AS (SELECT l.qid, cd.vec_id AS nn_id, CAST(SUM(l.lfp) AS BIGINT) AS adc_fp
-         |        FROM $pqFinalAsg cd
-         |        JOIN lut l ON l.j = cd.j AND l.cid = cd.code AND cd.vec_id <> l.qid
-         |        GROUP BY 1, 2),
-         |short AS (SELECT qid, nn_id FROM (
-         |  SELECT qid, nn_id,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
-         |  FROM adc) WHERE rn <= $PqRerank),
+         |$pqAdcSql,
+         |$shortSql,
          |rer AS (SELECT s.qid, s.nn_id, ${dist2Sql("q.v", "c.v")} AS d2
          |        FROM short s JOIN e q ON q.vec_id = s.qid
          |                     JOIN e c ON c.vec_id = s.nn_id)
-         |SELECT qid, nn_id, d2 FROM (
-         |  SELECT qid, nn_id, d2,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, nn_id) AS rn
-         |  FROM rer) WHERE rn = 1 ORDER BY qid""".stripMargin,
+         |${rank1Sql("d2", "rer")}""".stripMargin,
 
-    // Probe ranking mirrors probedCells (cosine DESC, cell — the TopK
-    // aggregator's ordering); the ADC join pins each corpus code row to
-    // its OWN cell's LUT via l.pcell = r.label, the (query, probed cell)
-    // keying the IVFADC recipe requires. Both SUM casts are the
-    // HUGEINT→BIGINT convention.
     "ann_ivfpq" ->
-      s"""WITH $ivfpqCtes,
-         |q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
-         |ranked AS (SELECT qid, cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
-         |  FROM q CROSS JOIN reps WHERE cell <> qcell),
-         |probes AS (SELECT qid, cell AS pcell FROM ranked WHERE crk <= ${NProbe - 1}
-         |           UNION ALL SELECT qid, qcell AS pcell FROM q),
-         |pres AS (SELECT p.qid, p.pcell, ${vsubSql("q.qv", "reps.rv")} AS qres
-         |         FROM probes p JOIN q ON q.qid = p.qid
-         |                       JOIN reps ON reps.cell = p.pcell),
-         |qs AS (SELECT qid, pcell, j, qres[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
-         |       FROM pres CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
-         |lut AS (SELECT x.qid, x.pcell, c.j, c.cid,
-         |               CAST(floor(${dist2Sql("x.qsv", "c.c")} * $KmScale.0) AS BIGINT) AS lfp
-         |        FROM qs x JOIN $pqFinalBook c ON x.j = c.j),
-         |adc AS (SELECT l.qid, cd.vec_id AS nn_id, CAST(SUM(l.lfp) AS BIGINT) AS adc_fp
-         |        FROM $pqFinalAsg cd
-         |        JOIN r ON r.vec_id = cd.vec_id
-         |        JOIN lut l ON l.j = cd.j AND l.cid = cd.code
-         |                  AND l.pcell = r.label AND cd.vec_id <> l.qid
-         |        GROUP BY 1, 2)
-         |SELECT qid, nn_id, adc_fp FROM (
-         |  SELECT qid, nn_id, adc_fp,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
-         |  FROM adc) WHERE rn = 1 ORDER BY qid""".stripMargin,
+      s"""$ivfpqAdcSql
+         |${rank1Sql("adc_fp", "adc")}""".stripMargin,
 
     "ann_ivfpq_rerank" ->
-      s"""WITH $ivfpqCtes,
-         |q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
-         |ranked AS (SELECT qid, cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
-         |  FROM q CROSS JOIN reps WHERE cell <> qcell),
-         |probes AS (SELECT qid, cell AS pcell FROM ranked WHERE crk <= ${NProbe - 1}
-         |           UNION ALL SELECT qid, qcell AS pcell FROM q),
-         |pres AS (SELECT p.qid, p.pcell, ${vsubSql("q.qv", "reps.rv")} AS qres
-         |         FROM probes p JOIN q ON q.qid = p.qid
-         |                       JOIN reps ON reps.cell = p.pcell),
-         |qs AS (SELECT qid, pcell, j, qres[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
-         |       FROM pres CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
-         |lut AS (SELECT x.qid, x.pcell, c.j, c.cid,
-         |               CAST(floor(${dist2Sql("x.qsv", "c.c")} * $KmScale.0) AS BIGINT) AS lfp
-         |        FROM qs x JOIN $pqFinalBook c ON x.j = c.j),
-         |adc AS (SELECT l.qid, cd.vec_id AS nn_id, CAST(SUM(l.lfp) AS BIGINT) AS adc_fp
-         |        FROM $pqFinalAsg cd
-         |        JOIN r ON r.vec_id = cd.vec_id
-         |        JOIN lut l ON l.j = cd.j AND l.cid = cd.code
-         |                  AND l.pcell = r.label AND cd.vec_id <> l.qid
-         |        GROUP BY 1, 2),
-         |short AS (SELECT qid, nn_id FROM (
-         |  SELECT qid, nn_id,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
-         |  FROM adc) WHERE rn <= $PqRerank),
+      s"""$ivfpqAdcSql,
+         |$shortSql,
          |rer AS (SELECT s.qid, s.nn_id, ${dist2Sql("x.v", "c.v")} AS d2
          |        FROM short s JOIN e x ON x.vec_id = s.qid
          |                     JOIN e c ON c.vec_id = s.nn_id)
-         |SELECT qid, nn_id, d2 FROM (
-         |  SELECT qid, nn_id, d2,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, nn_id) AS rn
-         |  FROM rer) WHERE rn = 1 ORDER BY qid""".stripMargin,
+         |${rank1Sql("d2", "rer")}""".stripMargin,
 
     // pqCtes is the OUTER chain (its e/codebook/codes feed the ADC); the
     // k-means cell machinery nests twice as parenthesized sub-WITHs (the

@@ -247,6 +247,18 @@ class PqSpec extends AnyFunSuite {
       s"index codes ($codesBytes B) must undercut the embeddings ($embBytes B)")
   }
 
+  test("every ADC serving plan sums codes with adcSum, never an ArrayAggregate fold") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    // knn_join's plan reads the checkpointed graph, so for it the check
+    // covers only what is composed above the checkpoint
+    val folding = Seq("ann_pq", "ann_pq_rerank", "ann_pq_indexed", "ann_ivfpq",
+        "ann_ivfpq_rerank", "knn_join").filter { name =>
+      SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+        .exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayAggregate])))
+    }
+    assert(folding.isEmpty, s"ArrayAggregate in the optimized plan of: ${folding.mkString(", ")}")
+  }
+
   test("recon_err_fp equals the per-subspace quantization error sum") {
     val cb = graft.queries.SimilarityQueries.pqCodebook(spark, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap

@@ -1808,7 +1808,8 @@ class QueriesSpec extends AnyFunSuite {
       "re-ranked IVFPQ must not score below its raw ADC scan")
     // nprobe probes the query's own cell unconditionally plus nprobe-1
     // others, so its searched set is a SUPERSET of single-cell IVF's —
-    // the structural guarantee the RECALL_sf1/sf10 probes showed the
+    // the structural guarantee the RECALL_sf1/sf10 probes
+    // (`git show e9e7a22:RECALL_sf1_r12.json`) showed the
     // rank-only spelling violating (0.75 vs 1.0 on replica geometry)
     assert(out("ann_ivf_nprobe")._4 >= out("ann_ivf")._4,
       "nprobe searches a superset of single-cell IVF and cannot score below it")
