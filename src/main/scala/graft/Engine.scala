@@ -139,7 +139,7 @@ object Engine {
     * hands the full recomputed result to the same sink `run` uses, so
     * batch and streaming outputs are byte-compatible.
     *
-    * The checkpoint lives beside the output (`outputPath + ".checkpoint"`):
+    * The checkpoint lives beside the output (`<outputPath>.checkpoint`):
     * a restarted stream resumes from the last committed file offsets
     * instead of re-reading the whole corpus. For the 100-TB-stream path
     * whose publish cost scales with the delta instead of the result, see
@@ -150,7 +150,7 @@ object Engine {
       spark, config.inputPath, config.operation, config.faithful)
     result.writeStream
       .outputMode("complete")
-      .option("checkpointLocation", config.outputPath + ".checkpoint")
+      .option("checkpointLocation", Sinks.sibling(config.outputPath, ".checkpoint"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Sinks.sortedSingleFileJson(batch, batch.columns.head, config.outputPath)
       }
@@ -160,8 +160,8 @@ object Engine {
   /** Scale-path streaming: the same registered operation in UPDATE mode,
     * merged incrementally into a bucket-partitioned parquet result
     * ([[Sinks.mergeIntoKeyedParquet]]). Each trigger emits only the keys
-    * whose aggregate changed and rewrites only the bucket directories
-    * those keys hash into — publish cost scales with the delta, while
+    * whose aggregate changed and appends them as a new level of the
+    * buckets those keys hash into — publish cost scales with the delta, while
     * complete-mode [[runStream]] re-sorts and rewrites the entire result
     * every trigger (reference-faithful, kept as the default).
     *
@@ -192,7 +192,7 @@ object Engine {
     val key = unsorted.columns.head
     unsorted.writeStream
       .outputMode("update")
-      .option("checkpointLocation", config.outputPath + ".checkpoint")
+      .option("checkpointLocation", Sinks.sibling(config.outputPath, ".checkpoint"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Sinks.mergeIntoKeyedParquet(batch, key, config.outputPath)
       }
@@ -203,7 +203,8 @@ object Engine {
     * JSON artifact [[run]] publishes, or the manifest-published keyed
     * parquet table [[runStreamIncremental]] maintains (detected by its
     * `_graft_log` manifest directory; the read resolves ONE manifest, so
-    * it sees one whole generation even while a merge publishes).
+    * it sees one whole generation even while a merge publishes). One
+    * existence probe picks between the two; neither lists the directory.
     *
     * The JSON artifact is read with the schema its `_graft_schema`
     * sidecar records, so the read costs no Spark job until it is
@@ -216,28 +217,11 @@ object Engine {
 
   private def fetchResult(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       resultPath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(resultPath)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_graft_log")))
+    if (fs.exists(new org.apache.hadoop.fs.Path(resultPath, "_graft_log")))
       Sinks.readKeyedParquet(spark, fs, resultPath)
-    else {
-      val legacyDirs =
-        if (fs.exists(p))
-          fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("_bkt="))
-        else Array.empty[String]
-      if (legacyDirs.nonEmpty)
-        // pre-manifest layout (upgraded in place by the next merge): the
-        // bucket id is a partition column here, not data. The _bkt= dirs
-        // are read EXPLICITLY — a whole-root scan would fail with
-        // 'conflicting directory structures' in the window where a
-        // crashed migration already renamed some b<k>-g1 dirs in but
-        // never committed a manifest.
-        spark.read.option("basePath", resultPath)
-          .parquet(legacyDirs.sorted.map(d => s"$resultPath/$d").toIndexedSeq: _*)
-          .drop("_bkt")
-      else Sinks.readJsonSchema(fs, resultPath) match {
-        case Some(schema) => spark.read.schema(schema).json(resultPath)
-        case None => spark.read.json(resultPath)
-      }
+    else Sinks.readJsonSchema(fs, resultPath) match {
+      case Some(schema) => spark.read.schema(schema).json(resultPath)
+      case None => spark.read.json(resultPath)
     }
   }
 

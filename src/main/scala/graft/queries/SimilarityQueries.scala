@@ -827,92 +827,103 @@ object SimilarityQueries {
     */
   private def knnGraph(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "knn-graph") {
-      // Two-level coarse quantizer (see the km2 block): the super FINAL
-      // assignment is checkpointed for the KmIter+1 sub-training scans
-      // (lazy, each sub pass re-ran the super argmin corpus pass), the
-      // final assignment for its four consumers (query frame, probe
-      // rule, member-cell join side, spec access); both freed/retired
-      // once the graph frame is materialized.
-      val e = kmCorpus(s, dir)
-      val (ks, kb) = km2K(e.count())
-      val sc = km2SuperCentroids(s, dir, e, ks)
-      val sa = graft.operators.Checkpoints.corpusScaled(
-        kmAssign(e, sc).select(col("vec_id"), col("v"), col("cluster").as("scell")))
-      val bc = km2SubCentroids(s, dir, sa, kb)
-      val asg = graft.operators.Checkpoints.corpusScaled(
-        km2SubAssign(sa, bc)
-          .select(col("vec_id"), col("v"), col("scell"),
-            (col("scell") * kb + col("sid")).cast("int").as("cluster")))
-      graft.operators.Checkpoints.free(sa)
-      val q = asg.select(col("vec_id").as("qid"), col("scell").as("qscell"),
-        col("cluster").as("qcell"), col("v").as("qv"))
-      // NProbe = 2 ⇒ the probe set is own cell + the nearest OTHER
-      // cell — found HIERARCHICALLY, like the assignment: one argmin
-      // over the (member-bearing) super-centroids for the nearest other
-      // super, then one argmin over own super's subs ∪ that super's
-      // subs with the own cell filtered out. (Ks + 2·Ksub)·dim per
-      // query instead of K·dim — the same √K collapse the assignment
-      // pays, and the candidate set always contains at least the
-      // runner-up super's subs, so a boundary vector still sees its
-      // across-the-border cell. ArgMinDist2 ties (d2, cid)
-      // lexicographically = the oracle's ORDER BY d2, cid; the oracle
-      // mirrors member-bearing ("has subs") supers with the same
-      // semi-filter. A corpus whose surviving supers collapse to ONE
-      // member-bearing cell has no s2 (argmin over an empty filtered
-      // list is NULL, filtered here; the oracle's rn=1 row just does
-      // not exist) — the probe set degrades to own-cell, identically
-      // in both engines.
-      require(NProbe == 2,
-        s"NProbe=$NProbe: knn_join probes own cell + ONE argmin other; " +
-          "an n-best probe rule needs a k-register ArgMinDist2 variant")
-      val scm = sc.join(
-        bc.select(col("scell").as("cid")).distinct(), Seq("cid"), "left_semi")
-      val scmRow = scm.agg(collect_list(struct(col("cid"), col("c"))).as("cents"))
-      val s2f = q.crossJoin(broadcast(scmRow))
-        .select(col("qid"), col("qscell"), col("qcell"), col("qv"),
-          graft.functions.VectorFunctions.argMinDist2(col("qv"),
-            filter(col("cents"), ct => ct.getField("cid") =!= col("qscell")))
-            .getField("cid").cast("int").as("s2"))
-        .filter(col("s2").isNotNull)
-      val bg = bc.groupBy("scell")
-        .agg(collect_list(struct((col("scell") * kb + col("sid")).cast("int").as("cid"),
-          col("c"))).as("subs"))
-      val pr2 = s2f
-        .join(broadcast(bg.select(col("scell").as("qscell"), col("subs").as("subs1"))),
-          Seq("qscell"))
-        .join(broadcast(bg.select(col("scell").as("s2"), col("subs").as("subs2"))),
-          Seq("s2"))
-        .select(col("qid"),
-          graft.functions.VectorFunctions.argMinDist2(col("qv"),
-            filter(concat(col("subs1"), col("subs2")),
-              ct => ct.getField("cid") =!= col("qcell")))
-            .getField("cid").cast("int").as("pcell"))
-        .filter(col("pcell").isNotNull)
-      val probes = pr2.union(q.select(col("qid"), col("qcell").as("pcell")))
-      val idx = pqIndexDir(s, dir)
-      val cb = s.read.parquet(s"$idx/codebook")
-      val codes = packedCodes(s, idx)
-        .join(asg.select(col("vec_id"), col("cluster")), Seq("vec_id"))
-      val plut = probes.join(pqLutOf(q.select(col("qid"), col("qv")), cb),
-        Seq("qid"))
-      val topk = udaf(new graft.functions.TopK(KnnK))
       // corpusScaled, not fresh: the graph is k·n rows held for the WHOLE
       // session (SessionCache), and the Checkpoints policy stores
       // corpus-proportional residents serialized + disk-spilling — the
       // deserialized on-heap form is the measured r9/r10 heap-poisoning
       // mode at sf10+. It is re-scanned a handful of times per session;
       // serialized re-scan cost is noise next to the build.
-      val graph = graft.operators.Checkpoints.corpusScaled(
-        adcScan(codes, plut, col("cluster") === col("pcell"))
-          .groupBy("qid")
-          .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
-          .select(col("qid"), posexplode(col("top")))
-          .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-            col("col.nn_id").as("nn_id"),
-            (-col("col.sim")).cast("long").as("adc_fp")))
-      graft.operators.Checkpoints.free(asg)
-      graph
+      withKnnScan(s, dir)(graft.operators.Checkpoints.corpusScaled)
     }
+
+  /** `use` applied to the graph's frame before its checkpoint (the
+    * top-k over the probed-cell ADC scan); the checkpointed cell
+    * assignment under it is freed once `use` returns, so `use` must
+    * materialize what it keeps. [[knnGraph]] checkpoints the frame;
+    * PqSpec reads its optimized plan, which knn_join's plan (rooted at
+    * the checkpoint) cannot show.
+    */
+  private[graft] def withKnnScan[T](s: SparkSession, dir: String)(use: DataFrame => T): T = {
+    // Two-level coarse quantizer (see the km2 block): the super FINAL
+    // assignment is checkpointed for the KmIter+1 sub-training scans
+    // (lazy, each sub pass re-ran the super argmin corpus pass), the
+    // final assignment for its four consumers (query frame, probe
+    // rule, member-cell join side, spec access); both freed/retired
+    // once the graph frame is materialized.
+    val e = kmCorpus(s, dir)
+    val (ks, kb) = km2K(e.count())
+    val sc = km2SuperCentroids(s, dir, e, ks)
+    val sa = graft.operators.Checkpoints.corpusScaled(
+      kmAssign(e, sc).select(col("vec_id"), col("v"), col("cluster").as("scell")))
+    val bc = km2SubCentroids(s, dir, sa, kb)
+    val asg = graft.operators.Checkpoints.corpusScaled(
+      km2SubAssign(sa, bc)
+        .select(col("vec_id"), col("v"), col("scell"),
+          (col("scell") * kb + col("sid")).cast("int").as("cluster")))
+    graft.operators.Checkpoints.free(sa)
+    val q = asg.select(col("vec_id").as("qid"), col("scell").as("qscell"),
+      col("cluster").as("qcell"), col("v").as("qv"))
+    // NProbe = 2 ⇒ the probe set is own cell + the nearest OTHER
+    // cell — found HIERARCHICALLY, like the assignment: one argmin
+    // over the (member-bearing) super-centroids for the nearest other
+    // super, then one argmin over own super's subs ∪ that super's
+    // subs with the own cell filtered out. (Ks + 2·Ksub)·dim per
+    // query instead of K·dim — the same √K collapse the assignment
+    // pays, and the candidate set always contains at least the
+    // runner-up super's subs, so a boundary vector still sees its
+    // across-the-border cell. ArgMinDist2 ties (d2, cid)
+    // lexicographically = the oracle's ORDER BY d2, cid; the oracle
+    // mirrors member-bearing ("has subs") supers with the same
+    // semi-filter. A corpus whose surviving supers collapse to ONE
+    // member-bearing cell has no s2 (argmin over an empty filtered
+    // list is NULL, filtered here; the oracle's rn=1 row just does
+    // not exist) — the probe set degrades to own-cell, identically
+    // in both engines.
+    require(NProbe == 2,
+      s"NProbe=$NProbe: knn_join probes own cell + ONE argmin other; " +
+        "an n-best probe rule needs a k-register ArgMinDist2 variant")
+    val scm = sc.join(
+      bc.select(col("scell").as("cid")).distinct(), Seq("cid"), "left_semi")
+    val scmRow = scm.agg(collect_list(struct(col("cid"), col("c"))).as("cents"))
+    val s2f = q.crossJoin(broadcast(scmRow))
+      .select(col("qid"), col("qscell"), col("qcell"), col("qv"),
+        graft.functions.VectorFunctions.argMinDist2(col("qv"),
+          filter(col("cents"), ct => ct.getField("cid") =!= col("qscell")))
+          .getField("cid").cast("int").as("s2"))
+      .filter(col("s2").isNotNull)
+    val bg = bc.groupBy("scell")
+      .agg(collect_list(struct((col("scell") * kb + col("sid")).cast("int").as("cid"),
+        col("c"))).as("subs"))
+    val pr2 = s2f
+      .join(broadcast(bg.select(col("scell").as("qscell"), col("subs").as("subs1"))),
+        Seq("qscell"))
+      .join(broadcast(bg.select(col("scell").as("s2"), col("subs").as("subs2"))),
+        Seq("s2"))
+      .select(col("qid"),
+        graft.functions.VectorFunctions.argMinDist2(col("qv"),
+          filter(concat(col("subs1"), col("subs2")),
+            ct => ct.getField("cid") =!= col("qcell")))
+          .getField("cid").cast("int").as("pcell"))
+      .filter(col("pcell").isNotNull)
+    val probes = pr2.union(q.select(col("qid"), col("qcell").as("pcell")))
+    val idx = pqIndexDir(s, dir)
+    val cb = s.read.parquet(s"$idx/codebook")
+    val codes = packedCodes(s, idx)
+      .join(asg.select(col("vec_id"), col("cluster")), Seq("vec_id"))
+    val plut = probes.join(pqLutOf(q.select(col("qid"), col("qv")), cb),
+      Seq("qid"))
+    val topk = udaf(new graft.functions.TopK(KnnK))
+    val out = use(
+      adcScan(codes, plut, col("cluster") === col("pcell"))
+        .groupBy("qid")
+        .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
+        .select(col("qid"), posexplode(col("top")))
+        .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
+          col("col.nn_id").as("nn_id"),
+          (-col("col.sim")).cast("long").as("adc_fp")))
+    graft.operators.Checkpoints.free(asg)
+    out
+  }
 
   /** The mutual-kNN candidate pair frame (d1 < d2, adc_fp) — the body of
     * `knn_mutual_pairs`, factored so DedupQueries' `dedup_semantic_graph`

@@ -69,12 +69,9 @@ object CorpusReader {
     * existing export never sees a half-written directory.
     */
   def toJsonl(df: DataFrame, path: String): Unit = {
-    // normalize before appending the stage suffix: a trailing slash would
-    // otherwise put the stage INSIDE the target and the swap would eat it
-    val target = new org.apache.hadoop.fs.Path(path).toString
-    val tmp = target + ".inprogress"
+    val tmp = Sinks.sibling(path, ".inprogress")
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "gzip").json(tmp)
-    Sinks.swapInto(Sinks.fileSystem(df.sparkSession, target), tmp, target)
+    Sinks.swapInto(Sinks.fileSystem(df.sparkSession, path), tmp, path)
   }
 }

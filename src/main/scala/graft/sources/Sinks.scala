@@ -51,9 +51,10 @@ object Sinks {
     * (it executes the plan below the sort once more, for partitions that
     * are merged again anyway). The output bytes are the same.
     *
-    * The result is staged to a sibling `.inprogress` directory and swapped
-    * in with delete+rename, so concurrent readers (`Engine.fetchResult`/
-    * `lookup`, e.g. while `Engine.runStream` republishes per trigger) race
+    * The result is staged to a sibling `.inprogress` directory
+    * ([[sibling]]) and swapped in with delete+rename, so concurrent
+    * readers (`Engine.fetchResult`/`lookup`, e.g. while
+    * `Engine.runStream` republishes per trigger) race
     * only against a millisecond-scale rename, not the whole rewrite. Two
     * sidecars ride along (the leading underscore hides them from scans):
     *  - `_graft_key`: the sort/key column, for [[graft.Engine.lookup]] —
@@ -65,7 +66,7 @@ object Sinks {
     *    infer as before.
     */
   def sortedSingleFileJson(df: DataFrame, sortCol: String, path: String): Unit = {
-    val tmp = path + ".inprogress"
+    val tmp = sibling(path, ".inprogress")
     df.repartition(1).sortWithinPartitions(sortCol)
       .write.mode(SaveMode.Overwrite).json(tmp)
     val fs = fileSystem(df.sparkSession, path)
@@ -86,29 +87,30 @@ object Sinks {
     val fs = fileSystem(spark, path)
     // a keyed table is NOT a plain parquet directory: a whole-root read of
     // a manifest table would see every retained generation (duplicate
-    // keys), and flattening either layout destroys the structure the
-    // keyed reader/merger depends on — refuse loudly; merging compacts
-    // those tables bucket-by-bucket as part of the next generation
+    // keys), and flattening it destroys the structure the keyed
+    // reader/merger depends on — refuse loudly; merging compacts those
+    // tables bucket-by-bucket as part of the next generation
     require(!fs.exists(Manifest.logDir(path)),
       s"$path is a manifest-published keyed table; compactParquet would read " +
         "duplicate generations and break the manifest layout — its buckets " +
         "are rewritten per-generation by mergeIntoKeyedParquet instead")
-    // the PRE-manifest legacy layout (_bkt= partition dirs, no log yet):
-    // flattening it would strand every accumulated key — the next merge
-    // would find neither manifest nor _bkt= dirs and publish only its delta
-    require(!(fs.exists(new org.apache.hadoop.fs.Path(path)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(path))
-          .exists(_.getPath.getName.startsWith("_bkt="))),
-      s"$path is a legacy keyed table (_bkt= layout); compacting it would " +
-        "orphan its accumulated keys — run a merge first (which migrates it " +
-        "to the manifest layout) instead")
     val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / (targetMB * 1024L * 1024L)).toInt)
-    val tmp = path + ".inprogress"
+    val tmp = sibling(path, ".inprogress")
     spark.read.parquet(path).repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
     swapInto(fs, tmp, path)
   }
+
+  /** `path` + `suffix` as a SIBLING of the directory `path` names. The
+    * path is normalized first (`new Path(path).toString`): appended to
+    * `out/`, the suffix would name `out/.inprogress`, a stage INSIDE the
+    * target that the swap then cannot move aside. Every staging
+    * (`.inprogress`), swap-aside (`.old`) and stream checkpoint
+    * (`.checkpoint`) path is derived here.
+    */
+  private[graft] def sibling(path: String, suffix: String): String =
+    new org.apache.hadoop.fs.Path(path).toString + suffix
 
   private[graft] def fileSystem(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.hadoop.fs.FileSystem =
@@ -127,7 +129,7 @@ object Sinks {
   private[sources] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
       staged: String, target: String): Unit = {
     val t = new org.apache.hadoop.fs.Path(target)
-    val old = new org.apache.hadoop.fs.Path(target + ".old")
+    val old = new org.apache.hadoop.fs.Path(sibling(target, ".old"))
     fs.delete(old, true)
     val hadTarget = fs.exists(t)
     if (hadTarget && !fs.rename(t, old))
@@ -305,11 +307,10 @@ object Sinks {
     *
     * STALENESS BOUND: the manifest is resolved eagerly but the files are
     * read lazily, and the writer garbage-collects directories no longer
-    * referenced by the newest `retainGenerations + 1` manifests (default:
-    * this one and the previous). A DataFrame held across MORE merges than
-    * that scans deleted directories — a loud FileNotFoundException. Readers
-    * that hold results across many triggers should either re-call this per
-    * use or have the writer raise `retainGenerations`. The loud failure is
+    * referenced by the newest two manifests (this one and the previous).
+    * A DataFrame held across MORE than one later merge scans deleted
+    * directories — a loud FileNotFoundException. Readers that hold results
+    * across many triggers should re-call this per use. The loud failure is
     * part of the contract: `spark.sql.files.ignoreMissingFiles=true` would
     * turn it into silent row loss, so this reader refuses to run under it.
     */
@@ -377,8 +378,16 @@ object Sinks {
     (m, spark.read.parquet(dirs.map(d => s"$path/$d"): _*))
   }
 
+  // The keyed sink's one configuration: the hash-bucket count of a NEW
+  // table (an existing table keeps the count its manifest records), the
+  // generations a superseded directory outlives the manifest that dropped
+  // it (the reader grace window), and the tier rule's absorb factor.
+  private val KeyedBuckets = 64
+  private val RetainGenerations = 1
+  private val TierFactor = 2.0
+
   /** Upsert `batch` (≤ one row per `keyCol` value) into a keyed parquet
-    * result split over `buckets` hash buckets — the merge-into-parquet
+    * result split over 64 hash buckets — the merge-into-parquet
     * sink for UPDATE-mode streaming: a trigger's delta is APPENDED as a
     * new immutable level of each bucket it hashes into (existing data is
     * neither read nor rewritten), so publish cost scales with the delta,
@@ -393,38 +402,24 @@ object Sinks {
     * ([[readKeyedParquet]]) resolves ONE manifest and therefore sees ONE
     * whole generation, never bucket 3 new + bucket 7 old (the flaw of
     * per-directory swaps). Directories are garbage-collected only once
-    * they fall out of the newest `retainGenerations + 1` manifests, so a
-    * reader holding an older manifest has `retainGenerations` full
-    * trigger intervals to finish — the documented staleness bound (raise
-    * it for slow external readers; the retained cost is only superseded
+    * they fall out of the newest two manifests, so a reader holding the
+    * previous manifest has one full trigger interval to finish — the
+    * documented staleness bound (the retained cost is only superseded
     * levels, never whole-table copies).
     *
     * Merge cost (LSM tiering): a pure append is metadata-only — O(delta)
     * write + renames. A bucket is COMPACTED when its newest levels have
     * grown comparable to the accumulated delta: the tier rule absorbs the
-    * maximal suffix of levels each smaller than `tierFactor` × the bytes
+    * maximal suffix of levels each smaller than twice the bytes
     * accumulated behind it (delta included), the classic logarithmic
     * method — level lists stay logarithmic in the bucket's size and each
     * row is rewritten O(log table/delta) times over the table's life.
     * Compaction resolves upserted keys newest-generation-wins (level
     * recency recovered from the `b<k>-g<gen>[c]` path). Replay after a
     * crash is idempotent (an uncommitted generation's directories are
-    * simply overwritten). `tierFactor` trades read amplification (more
-    * levels per read) against write amplification (more frequent
-    * rewrites); `Double.PositiveInfinity` forces full compaction every
-    * merge — deterministic single-level buckets, used by the corruption
-    * and retention specs, and the right setting for small always-read
-    * tables.
+    * simply overwritten).
     */
-  def mergeIntoKeyedParquet(batch: DataFrame, keyCol: String, path: String,
-      buckets: Int = 64, retainGenerations: Int = 1,
-      tierFactor: Double = 2.0): Unit = {
-    require(tierFactor >= 1.0,
-      s"tierFactor must be >= 1 (got $tierFactor): below 1 a fresh delta " +
-        "never absorbs even an empty level and level lists grow without bound")
-    require(retainGenerations >= 1,
-      s"retainGenerations must be >= 1 (got $retainGenerations): with no grace " +
-        "generation, a reader that resolved the previous manifest races the GC")
+  def mergeIntoKeyedParquet(batch: DataFrame, keyCol: String, path: String): Unit = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
     val fs = fileSystem(spark, path)
@@ -442,29 +437,23 @@ object Sinks {
     // as the merge's scan source.
     val root = new org.apache.hadoop.fs.Path(path)
     val current = Manifest.latest(fs, path)
-    val nBkt = current.map(_.buckets).getOrElse(buckets)
-    // one-time migration: a table written by the pre-manifest layout
-    // (_bkt= partition dirs, no _graft_log) is folded whole into
-    // generation 1 — without this, its accumulated keys would silently
-    // vanish behind a fresh manifest that never references them
-    val legacyDirs: Seq[String] =
-      if (current.isEmpty && fs.exists(root))
-        fs.listStatus(root).map(_.getPath.getName)
-          .filter(_.startsWith("_bkt=")).toSeq
-      else Nil
+    val nBkt = current.map(_.buckets).getOrElse(KeyedBuckets)
     // the delta and stage live INSIDE the root as dot-dirs (hidden from
     // parquet directory readers): a crash leaks nothing outside the table,
     // and the scan-based GC below reclaims them
     val delta = s"$path/.delta"
     batch.withColumn("_bkt", pmod(hash(col(keyCol)), lit(nBkt)))
       .write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(delta)
+    // the bucket ids a partitionBy("_bkt") write produced under `dir`
+    val StagedBucket = "^_bkt=(\\d+)$".r
+    def stagedBuckets(dir: String): Seq[Int] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+        .collect { case StagedBucket(k) => k.toInt }.toSeq.sorted
     // the staged partition listing IS the affected-bucket probe (the old
     // distinct+collect re-scanned the delta for values the writer already
     // materialized as directory names)
-    val deltaBuckets = fs.listStatus(new org.apache.hadoop.fs.Path(delta))
-      .map(_.getPath.getName).filter(_.startsWith("_bkt="))
-      .map(_.stripPrefix("_bkt=").toInt).toSeq.sorted
-    if (deltaBuckets.isEmpty && legacyDirs.isEmpty) {
+    val deltaBuckets = stagedBuckets(delta)
+    if (deltaBuckets.isEmpty) {
       // empty trigger: publishing a row-less table would poison every
       // later read ('unable to infer schema') — leave no trace, including
       // the root the in-root delta just created on a fresh table
@@ -482,154 +471,96 @@ object Sinks {
     }
     var newDirs = current.map(_.dirs).getOrElse(Map.empty[Int, Seq[String]])
     var retiredNow = Seq.empty[String]
-    if (legacyDirs.nonEmpty) {
-      // One-time migration, the only remaining whole-table job: legacy
-      // rows + delta, anti-joined and rewritten as the SINGLE level of
-      // generation 1. The legacy data is read from its _bkt= dirs
-      // EXPLICITLY (basePath keeps partition discovery rooted): scanning
-      // the whole root would hit 'conflicting directory structures' on
-      // replay after a crash that already renamed some b<k>-g1 dirs in.
-      // The dir-name bucket values are DROPPED and recomputed under this
-      // table's modulus — the legacy layout's bucket count was never
-      // recorded, and trusting it with a different `buckets` argument
-      // would strand stale copies of migrated keys in buckets later
-      // merges never anti-join. The rename set is what the write
-      // ACTUALLY produced (the recomputed modulus can land legacy rows
-      // in any bucket and leave others empty — the stage listing is the
-      // ground truth).
-      // an empty trigger still has to drive the migration forward, but a
-      // partitionBy write of zero rows leaves no readable schema — fall
-      // back to an empty frame of the batch's own shape
-      val b =
-        if (deltaBuckets.nonEmpty) spark.read.parquet(delta)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batch.schema.add(org.apache.spark.sql.types.StructField("_bkt",
-            org.apache.spark.sql.types.IntegerType, nullable = true)))
-      val legacy = spark.read.option("basePath", path)
-        .parquet(legacyDirs.map(d => s"$path/$d"): _*)
-        .drop("_bkt")
-        .withColumn("_bkt", pmod(hash(col(keyCol)), lit(nBkt)))
-      val merged = legacy
-        .join(b.select(keyCol), Seq(keyCol), "left_anti")
-        .unionByName(b.select(legacy.columns.map(col): _*))
+    // LSM append: the delta becomes a NEW LEVEL of each affected
+    // bucket — existing data is neither read nor rewritten, so publish
+    // cost per trigger is O(delta), not O(table). When every trigger's
+    // keys spread over every bucket (any delta larger than the bucket
+    // count — the steady state of a crawl stream), the old
+    // rewrite-affected-buckets scheme degraded to rewriting the WHOLE
+    // table per trigger; measured on the sf1 stream replay, per-batch
+    // publish cost grew ~60% across 8 batches on exactly that term.
+    // Level lists are kept logarithmic by the classic logarithmic-
+    // method tier rule: absorb the maximal suffix of levels each
+    // smaller than TWICE the bytes accumulated behind it (delta
+    // included), so surviving levels decrease geometrically and every
+    // row is rewritten O(log table/delta) times over the table's life.
+    def dirBytes(rel: String): Long =
+      fs.getContentSummary(new org.apache.hadoop.fs.Path(s"$path/$rel")).getLength
+    val plans = deltaBuckets.map { k =>
+      val levels = newDirs.getOrElse(k, Nil) // oldest → newest
+      var sum = fs.getContentSummary(
+        new org.apache.hadoop.fs.Path(s"$delta/_bkt=$k")).getLength
+      statDeltaBytes += sum
+      var i = levels.length
+      while (i > 0 && dirBytes(levels(i - 1)) < TierFactor * sum) {
+        sum += dirBytes(levels(i - 1)); i -= 1
+      }
+      (k, levels.take(i), levels.drop(i))
+    }
+    // pure appends: the staged delta partition IS the level — rename,
+    // zero data movement
+    plans.withFilter(_._3.isEmpty).foreach { case (k, keep, _) =>
+      place(s"$delta/_bkt=$k", s"b$k-g$gen")
+      newDirs += k -> (keep :+ s"b$k-g$gen")
+      statAppendBuckets += 1
+    }
+    // compactions: ONE job over every absorbing bucket — absorbed
+    // levels plus their delta partitions, newest generation wins per
+    // key (level recency recovered from the b<k>-g<gen>[c] file path;
+    // the delta is this generation, strictly newest). The compacted
+    // dir takes a 'c' suffix so it can never collide with a same-gen
+    // delta level name.
+    val compact = plans.filter(_._3.nonEmpty)
+    if (compact.nonEmpty) {
+      val tCompact0 = System.nanoTime()
+      statCompactBuckets = compact.length
+      statAbsorbedBytes = compact.flatMap(_._3).map(dirBytes).sum
+      val oldRows = spark.read
+        .parquet(compact.flatMap(_._3).map(d => s"$path/$d"): _*)
+        .withColumn("_graft_gen",
+          // anchored to the parent dir (readKeyedParquet's rationale)
+          regexp_extract(input_file_name(), "b\\d+-g(\\d+)c?/[^/]+$", 1).cast("long"))
+      val deltaRows = spark.read.option("basePath", delta)
+        .parquet(compact.map(p => s"$delta/_bkt=${p._1}"): _*)
+        .drop("_bkt").withColumn("_graft_gen", lit(gen))
+      val all = oldRows.unionByName(deltaRows)
+      val others = all.columns.filterNot(c => c == keyCol || c == "_graft_gen")
+      val resolved = all.groupBy(col(keyCol))
+        .agg(max(struct(col("_graft_gen") +: others.map(col): _*)).as("_r"))
+        .select((col(keyCol) +: others.map(c => col(s"_r.$c").as(c))) :+
+          pmod(hash(col(keyCol)), lit(nBkt)).as("_bkt"): _*)
       val stage = s"$path/.stage-g$gen"
-      merged.write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(stage)
-      val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-        .map(_.getPath.getName).filter(_.startsWith("_bkt="))
-        .map(_.stripPrefix("_bkt=").toInt).sorted
-      staged.foreach(k => place(s"$stage/_bkt=$k", s"b$k-g$gen"))
-      newDirs = staged.map(k => k -> Seq(s"b$k-g$gen")).toMap
-    } else {
-      // LSM append: the delta becomes a NEW LEVEL of each affected
-      // bucket — existing data is neither read nor rewritten, so publish
-      // cost per trigger is O(delta), not O(table). When every trigger's
-      // keys spread over every bucket (any delta larger than the bucket
-      // count — the steady state of a crawl stream), the old
-      // rewrite-affected-buckets scheme degraded to rewriting the WHOLE
-      // table per trigger; measured on the sf1 stream replay, per-batch
-      // publish cost grew ~60% across 8 batches on exactly that term.
-      // Level lists are kept logarithmic by the classic logarithmic-
-      // method tier rule: absorb the maximal suffix of levels each
-      // smaller than TWICE the bytes accumulated behind it (delta
-      // included), so surviving levels decrease geometrically and every
-      // row is rewritten O(log table/delta) times over the table's life.
-      def dirBytes(rel: String): Long =
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(s"$path/$rel")).getLength
-      val plans = deltaBuckets.map { k =>
-        val levels = newDirs.getOrElse(k, Nil) // oldest → newest
-        var sum = fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(s"$delta/_bkt=$k")).getLength
-        statDeltaBytes += sum
-        var i = levels.length
-        while (i > 0 && dirBytes(levels(i - 1)) < tierFactor * sum) {
-          sum += dirBytes(levels(i - 1)); i -= 1
-        }
-        (k, levels.take(i), levels.drop(i))
+      resolved.write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(stage)
+      val staged = stagedBuckets(stage).toSet
+      // a stage bucket outside the compaction set means some level dir
+      // held rows whose key hash does not match its bucket — committing
+      // it would repoint that bucket to a strays-only dir and silently
+      // drop its other keys, so fail loudly instead
+      require(staged == compact.map(_._1).toSet,
+        s"bucket invariant violated: compaction covers " +
+          s"${compact.map(_._1).mkString(",")} but produced " +
+          s"${staged.toSeq.sorted.mkString(",")} — level dirs hold rows whose " +
+          "key hash does not match their bucket; repair the table before merging")
+      compact.foreach { case (k, keep, absorb) =>
+        place(s"$stage/_bkt=$k", s"b$k-g${gen}c")
+        newDirs += k -> (keep :+ s"b$k-g${gen}c")
+        retiredNow ++= absorb
       }
-      // pure appends: the staged delta partition IS the level — rename,
-      // zero data movement
-      plans.withFilter(_._3.isEmpty).foreach { case (k, keep, _) =>
-        place(s"$delta/_bkt=$k", s"b$k-g$gen")
-        newDirs += k -> (keep :+ s"b$k-g$gen")
-        statAppendBuckets += 1
-      }
-      // compactions: ONE job over every absorbing bucket — absorbed
-      // levels plus their delta partitions, newest generation wins per
-      // key (level recency recovered from the b<k>-g<gen>[c] file path;
-      // the delta is this generation, strictly newest). The compacted
-      // dir takes a 'c' suffix so it can never collide with a same-gen
-      // delta level name.
-      val compact = plans.filter(_._3.nonEmpty)
-      if (compact.nonEmpty) {
-        val tCompact0 = System.nanoTime()
-        statCompactBuckets = compact.length
-        statAbsorbedBytes = compact.flatMap(_._3).map(dirBytes).sum
-        val oldRows = spark.read
-          .parquet(compact.flatMap(_._3).map(d => s"$path/$d"): _*)
-          .withColumn("_graft_gen",
-            // anchored to the parent dir (readKeyedParquet's rationale)
-            regexp_extract(input_file_name(), "b\\d+-g(\\d+)c?/[^/]+$", 1).cast("long"))
-        val deltaRows = spark.read.option("basePath", delta)
-          .parquet(compact.map(p => s"$delta/_bkt=${p._1}"): _*)
-          .drop("_bkt").withColumn("_graft_gen", lit(gen))
-        val all = oldRows.unionByName(deltaRows)
-        val others = all.columns.filterNot(c => c == keyCol || c == "_graft_gen")
-        val resolved = all.groupBy(col(keyCol))
-          .agg(max(struct(col("_graft_gen") +: others.map(col): _*)).as("_r"))
-          .select((col(keyCol) +: others.map(c => col(s"_r.$c").as(c))) :+
-            pmod(hash(col(keyCol)), lit(nBkt)).as("_bkt"): _*)
-        val stage = s"$path/.stage-g$gen"
-        resolved.write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(stage)
-        val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-          .map(_.getPath.getName).filter(_.startsWith("_bkt="))
-          .map(_.stripPrefix("_bkt=").toInt).toSet
-        // a stage bucket outside the compaction set means some level dir
-        // held rows whose key hash does not match its bucket — committing
-        // it would repoint that bucket to a strays-only dir and silently
-        // drop its other keys, so fail loudly instead
-        require(staged == compact.map(_._1).toSet,
-          s"bucket invariant violated: compaction covers " +
-            s"${compact.map(_._1).mkString(",")} but produced " +
-            s"${staged.toSeq.sorted.mkString(",")} — level dirs hold rows whose " +
-            "key hash does not match their bucket; repair the table before merging")
-        compact.foreach { case (k, keep, absorb) =>
-          place(s"$stage/_bkt=$k", s"b$k-g${gen}c")
-          newDirs += k -> (keep :+ s"b$k-g${gen}c")
-          retiredNow ++= absorb
-        }
-        statCompactionSec = (System.nanoTime() - tCompact0) / 1e9
-      }
+      statCompactionSec = (System.nanoTime() - tCompact0) / 1e9
     }
     if (current.isEmpty) {
       // same sidecar the JSON sink writes, so Engine.lookup resolves the
       // key column of a parquet result too (underscore = invisible to scans)
       writeSidecar(fs, path, KeySidecar, keyCol)
     }
-    // Migration also reclaims the PREVIOUS layout's external crash
-    // leftovers (the old code staged in sibling dirs: .delta, .oldbkt,
-    // .stage-gN next to the root) — nothing else ever deletes them. Runs
-    // BEFORE the manifest commit: a crash after commit would clear
-    // legacyDirs on replay and skip this block forever, while a crash
-    // before it replays the whole migration (the _bkt= dirs still exist,
-    // so legacyDirs is still non-empty).
-    if (legacyDirs.nonEmpty && root.getParent != null && fs.exists(root.getParent)) {
-      val base = root.getName
-      fs.listStatus(root.getParent).foreach { st =>
-        val n = st.getPath.getName
-        if (n == s"$base.delta" || n == s"$base.oldbkt" || n == s"$base.inprogress" ||
-            n.startsWith(s"$base.stage-g"))
-          fs.delete(st.getPath, true)
-      }
-    }
     Manifest.commit(fs, path, Manifest(gen, nBkt, newDirs, retiredNow))
     // Scan-based GC, not a retired-list walk: everything in the root that
-    // none of the newest `retainGenerations + 1` manifests references is
+    // none of the newest `RetainGenerations + 1` manifests references is
     // garbage — including directories a crashed run left behind at ANY
     // earlier generation, which a one-step-back cleanup would orphan
     // forever. One listStatus of the table root per trigger.
     val DataDir = "^b\\d+-g\\d+c?$".r
-    val keep = Manifest.newest(fs, path, retainGenerations + 1)
+    val keep = Manifest.newest(fs, path, RetainGenerations + 1)
       .flatMap(_.dirs.values.flatten).toSet
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
@@ -637,18 +568,13 @@ object Sinks {
         (DataDir.findFirstIn(n).isDefined && !keep.contains(n)) ||
           (n.startsWith(".stage-g") &&
             n.stripPrefix(".stage-g").toLongOption.exists(_ <= gen)) ||
-          n == ".delta" ||
-          // the migrated legacy layout's _bkt= dirs: once ANY manifest
-          // exists they are unreferenced by definition (this GC branch is
-          // their only deletion path, covering both the normal migration
-          // run and a replay after a crash mid-rename)
-          n.startsWith("_bkt=")
+          n == ".delta"
       if (stale) fs.delete(st.getPath, true)
     }
     fs.listStatus(Manifest.logDir(path)).foreach { st =>
       val n = st.getPath.getName
       val staleManifest = n.startsWith("manifest-") &&
-        n.stripPrefix("manifest-").toLongOption.exists(_ < gen - retainGenerations)
+        n.stripPrefix("manifest-").toLongOption.exists(_ < gen - RetainGenerations)
       // a crash between creating .tmp-<g> and its rename abandons the temp
       // file; nothing else deletes non-manifest names, so reclaim any temp
       // at or below the committed generation (a racing writer of gen+1 is
@@ -741,13 +667,10 @@ object Sinks {
       case Some(n) => df.repartitionByRange(n, cols.map(col): _*)
       case None => df.repartitionByRange(cols.map(col): _*)
     }
-    // normalize before appending the stage suffix: a trailing slash would
-    // otherwise put the stage INSIDE the target and the swap would eat it
-    val target = new org.apache.hadoop.fs.Path(path).toString
-    val tmp = target + ".inprogress"
+    val tmp = sibling(path, ".inprogress")
     ranged.sortWithinPartitions(cols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(fileSystem(df.sparkSession, target), tmp, target)
+    swapInto(fileSystem(df.sparkSession, path), tmp, path)
   }
 
   /** Bucketed catalog table: pre-hash-partitioned (and per-bucket sorted)

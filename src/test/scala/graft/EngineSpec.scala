@@ -327,12 +327,32 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("partition count is config-driven and does not change results") {
+    // compared on the PUBLISHED bytes, not on a re-execution of the
+    // returned frame: the artifact is what readers see
     val corpus = tmpCorpus()
-    val o1 = Files.createTempDirectory("graft-out").toString + "/p1"
-    val o2 = Files.createTempDirectory("graft-out").toString + "/p2"
-    val r1 = Engine.run(spark, JobConfig("wordcount", corpus, o1, partitions = 1))
-    val r2 = Engine.run(spark, JobConfig("wordcount", corpus, o2, partitions = 7))
-    assert(r1.collect().toSeq == r2.collect().toSeq)
+    def published(op: String, partitions: Int): Array[Byte] = {
+      val out = Files.createTempDirectory("graft-out").toString + s"/p$partitions"
+      Engine.run(spark, JobConfig(op, corpus, out, partitions = partitions))
+      val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, s"$op: expected one part file, got ${parts.length}")
+      Files.readAllBytes(parts.head.toPath)
+    }
+    for (op <- Seq("wordcount", "invertedindex")) {
+      val (b1, b7) = (published(op, 1), published(op, 7))
+      assert(b1.nonEmpty && java.util.Arrays.equals(b1, b7),
+        s"$op: the part file published with 1 and with 7 partitions differs")
+    }
+  }
+
+  test("an output path with a trailing slash publishes, reads back and leaves no stage") {
+    val parent = Files.createTempDirectory("graft-out")
+    val out = parent.toString + "/wc/"
+    Engine.run(spark, JobConfig("wordcount", tmpCorpus(), out))
+    assert(Engine.fetchResult(spark, out).count() == 5)
+    assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 2L)
+    val left = parent.toFile.list().toSeq.sorted
+    assert(left == Seq("wc"), s"staging directories left behind: $left")
+    assert(!new java.io.File(out, ".inprogress").exists())
   }
 
   test("Engine.run drains retired checkpoints at job completion") {

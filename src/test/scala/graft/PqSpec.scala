@@ -249,13 +249,16 @@ class PqSpec extends AnyFunSuite {
 
   test("every ADC serving plan sums codes with adcSum, never an ArrayAggregate fold") {
     import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
-    // knn_join's plan reads the checkpointed graph, so for it the check
-    // covers only what is composed above the checkpoint
-    val folding = Seq("ann_pq", "ann_pq_rerank", "ann_pq_indexed", "ann_ivfpq",
-        "ann_ivfpq_rerank", "knn_join").filter { name =>
-      SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+    def folds(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan
         .exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayAggregate])))
-    }
+    val entries = Seq("ann_pq", "ann_pq_rerank", "ann_pq_indexed", "ann_ivfpq",
+        "ann_ivfpq_rerank", "knn_join").filter(name => folds(SparkEntry.queries(name)(spark, dir)))
+    // knn_join's plan starts at the checkpointed graph; the graph's own
+    // ADC scan is checked on the frame it checkpoints
+    val graph = if (graft.queries.SimilarityQueries.withKnnScan(spark, dir)(folds))
+      Seq("knnGraph") else Nil
+    val folding = entries ++ graph
     assert(folding.isEmpty, s"ArrayAggregate in the optimized plan of: ${folding.mkString(", ")}")
   }
 

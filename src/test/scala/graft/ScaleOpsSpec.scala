@@ -126,10 +126,11 @@ class ScaleOpsSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-merge").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // 20k keys / 8 buckets: each bucket's level is FAR larger than 2× a
+    // 160k keys / 64 buckets: each bucket's level is FAR larger than 2× a
     // one-row delta, so the tier rule must append, never compact
-    val initial = (0 until 20000).map(i => (s"key$i", i.toLong)).toDF("k", "n")
-    Sinks.mergeIntoKeyedParquet(initial, "k", path, buckets = 8)
+    val initial = spark.range(160000)
+      .select(concat(lit("key"), col("id")).as("k"), col("id").as("n"))
+    Sinks.mergeIntoKeyedParquet(initial, "k", path)
 
     val before = Manifest.latest(fs, path).get
     assert(before.dirs.size > 1, "expected several bucket directories")
@@ -137,7 +138,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       ds.forall(d => new java.io.File(path, d).isDirectory)))
 
     val delta = Seq(("key7", 999L)).toDF("k", "n")
-    Sinks.mergeIntoKeyedParquet(delta, "k", path, buckets = 8)
+    Sinks.mergeIntoKeyedParquet(delta, "k", path)
     val after = Manifest.latest(fs, path).get
 
     // the manifest is the publish ledger: exactly one bucket gained a
@@ -154,7 +155,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // read-time resolution: the NEWEST level's row wins for the upserted
     // key, untouched keys are intact, and no duplicate rows leak out
     val rows = Sinks.readKeyedParquet(spark, path).collect()
-    assert(rows.length == 20000, s"resolved read must dedup upserted keys, got ${rows.length}")
+    assert(rows.length == 160000, s"resolved read must dedup upserted keys, got ${rows.length}")
     val merged = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(merged("key7") == 999L, "updated key must carry the new value")
     assert(merged("key8") == 8L, "untouched keys intact")
@@ -170,7 +171,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-lsm").toString + "/b1-g9/t"
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // 24 similar-sized deltas with overlapping keys: the binary-counter
+    // 24 similar-sized deltas with overlapping keys (960 of 4800 keys
+    // each, ~15 rows per bucket per delta): the binary-counter
     // tiering must keep every bucket's level list ~log₂(24), retire the
     // absorbed levels, and the resolved read must surface each key's
     // LAST write however the levels interleave. Rows carry a ~200-byte
@@ -179,6 +181,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the tier rule degenerates to absorb-everything (single-level
     // buckets would leave the multi-level read path unexercised)
     val rounds = 24
+    val (nKeys, perRound, stride) = (4800, 960, 592)
+    def key(r: Int, i: Int) = s"key${(r * stride + i) % nKeys}"
     // INCOMPRESSIBLE per-row pad (md5 chain) — a constant pad snappy-
     // compresses to nothing and the footer dominates again
     def pad(seed: String): String = {
@@ -188,14 +192,14 @@ class ScaleOpsSpec extends AnyFunSuite {
       }.mkString
     }
     (0 until rounds).foreach { r =>
-      val delta = (0 until 60)
-        .map(i => (s"key${(r * 37 + i) % 300}", r.toLong * 1000 + i, pad(s"$r-$i")))
+      val delta = (0 until perRound)
+        .map(i => (key(r, i), r.toLong * 1000 + i, pad(s"$r-$i")))
         .toDF("k", "n", "pad")
         // same-trigger contract: ≤ one row per key
         .groupBy("k").agg(
           org.apache.spark.sql.functions.max("n").as("n"),
           org.apache.spark.sql.functions.first("pad").as("pad"))
-      Sinks.mergeIntoKeyedParquet(delta, "k", path, buckets = 4)
+      Sinks.mergeIntoKeyedParquet(delta, "k", path)
     }
     val m = Manifest.latest(fs, path).get
     val maxLevels = m.dirs.values.map(_.size).max
@@ -210,8 +214,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     val expect = scala.collection.mutable.Map[String, Long]()
     (0 until rounds).foreach { r =>
       val kv = scala.collection.mutable.Map[String, Long]()
-      (0 until 60).foreach { i =>
-        val k = s"key${(r * 37 + i) % 300}"
+      (0 until perRound).foreach { i =>
+        val k = key(r, i)
         kv(k) = math.max(kv.getOrElse(k, Long.MinValue), r.toLong * 1000 + i)
       }
       expect ++= kv
@@ -223,114 +227,37 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"stale values after resolution: ${bad.take(5)}")
   }
 
-  test("a pre-manifest (_bkt= partitioned) table is migrated whole into generation 1") {
-    import graft.sources.Sinks.Manifest
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{pmod, hash => sqlHash}
-    // build the OLD layout by hand: _bkt= partition dirs + _graft_key
-    val path = java.nio.file.Files.createTempDirectory("graft-legacy").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    (0 until 100).map(i => (s"key$i", i.toLong)).toDF("k", "n")
-      .withColumn("_bkt", pmod(sqlHash(col("k")), lit(8)))
-      .write.partitionBy("_bkt").parquet(path)
-    val keyFile = fs.create(new org.apache.hadoop.fs.Path(path, "_graft_key"), true)
-    try keyFile.write("k".getBytes("UTF-8")) finally keyFile.close()
-
-    // the legacy table must still read through fetchResult (pre-upgrade path)
-    assert(Engine.fetchResult(spark, path).count() == 100)
-
-    // first manifest-era merge folds the whole legacy table into
-    // generation 1 — under a DIFFERENT bucket count than the legacy
-    // layout's 8: the migration must recompute bucket assignment rather
-    // than trust the _bkt= dir names, or later merges would anti-join the
-    // wrong bucket and strand stale copies of migrated keys
-    Sinks.mergeIntoKeyedParquet(Seq(("key7", 999L), ("newkey", 1L)).toDF("k", "n"),
-      "k", path, buckets = 16)
-    val m = Manifest.latest(fs, path).get
-    assert(m.gen == 1L && m.buckets == 16)
-    val merged = Sinks.readKeyedParquet(spark, path)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(merged.size == 101, "all accumulated legacy keys must survive the upgrade")
-    assert(merged("key7") == 999L && merged("key3") == 3L && merged("newkey") == 1L)
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .exists(_.getPath.getName.startsWith("_bkt=")),
-      "legacy partition dirs must be dropped once the manifest references generation 1")
-    assert(Engine.fetchResult(spark, path).count() == 101)
-
-    // a later merge updating a migrated key must leave exactly ONE copy
-    // (the modulus recompute put it where the anti-join will look)
-    Sinks.mergeIntoKeyedParquet(Seq(("key3", 333L)).toDF("k", "n"), "k", path)
-    val after = Sinks.readKeyedParquet(spark, path)
-      .filter(col("k") === "key3").collect()
-    assert(after.length == 1 && after.head.getLong(1) == 333L,
-      s"migrated key must not be duplicated by a post-migration update; got ${after.toSeq}")
-  }
-
-  test("migration replay succeeds after a crash that left half-renamed gen-1 dirs") {
-    import graft.sources.Sinks.Manifest
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{pmod, hash => sqlHash}
-    // legacy table + the debris of a migration that died between renaming
-    // b<k>-g1 dirs in and committing the manifest: a whole-root parquet
-    // scan would fail with 'conflicting directory structures' here, so
-    // replay must read the _bkt= dirs explicitly and overwrite the debris
-    val path = java.nio.file.Files.createTempDirectory("graft-crash").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    (0 until 50).map(i => (s"key$i", i.toLong)).toDF("k", "n")
-      .withColumn("_bkt", pmod(sqlHash(col("k")), lit(8)))
-      .write.partitionBy("_bkt").parquet(path)
-    // fake half-migrated debris: an unpartitioned gen-1 dir with STALE data
-    Seq(("key0", -1L)).toDF("k", "n")
-      .write.parquet(path + "/b3-g1")
-
-    // the READER must also survive the crashed state (no manifest yet):
-    // fetchResult reads the _bkt= dirs explicitly and ignores the debris
-    val inCrash = Engine.fetchResult(spark, path)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(inCrash.size == 50 && inCrash("key0") == 0L,
-      s"reads must serve the legacy data during the crash window; got ${inCrash.size}")
-
-    Sinks.mergeIntoKeyedParquet(Seq(("key7", 777L)).toDF("k", "n"), "k", path, buckets = 8)
-    assert(Manifest.latest(fs, path).get.gen == 1L)
-    val merged = Sinks.readKeyedParquet(spark, path)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(merged.size == 50 && merged("key7") == 777L && merged("key0") == 0L,
-      s"replay must rebuild from the legacy dirs, not the debris; got ${merged.size} keys")
-  }
-
   test("a bucket dir holding mis-hashed rows fails the merge loudly instead of dropping keys") {
     import graft.sources.Sinks.Manifest
     import spark.implicits._
     // handcraft a CORRUPT table: the manifest says bucket 0, but the dir
-    // holds a key whose hash lands elsewhere (what the old dir-name-
-    // trusting migration could produce). A merge touching bucket 0 must
+    // holds a key whose hash lands elsewhere. A merge touching bucket 0 must
     // refuse to commit — the silent alternative repointed the stray's
     // true bucket at a strays-only dir, dropping that bucket's other keys.
     val path = java.nio.file.Files.createTempDirectory("graft-corrupt").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     import org.apache.spark.sql.functions.{pmod, hash => sqlHash}
-    val all = (0 until 40).map(i => (s"key$i", i.toLong)).toDF("k", "n")
-    Sinks.mergeIntoKeyedParquet(all, "k", path, buckets = 8)
+    val all = (0 until 320).map(i => (s"key$i", i.toLong)).toDF("k", "n")
+    Sinks.mergeIntoKeyedParquet(all, "k", path)
     val m = Manifest.latest(fs, path).get
     // plant a stray: copy one row of bucket B into a DIFFERENT bucket's dir
     val (b0, bOther) = (m.dirs.keys.min, m.dirs.keys.max)
     spark.read.parquet(s"$path/${m.dirs(bOther).head}").limit(1)
       .write.mode("append").parquet(s"$path/${m.dirs(b0).head}")
 
-    // the delta must COMPACT bucket b0 (tierFactor=∞ forces absorption —
-    // byte-threshold tiering is nondeterministic at toy sizes), so the
-    // merge reads the corrupted dir and the stray's recomputed bucket
-    // shows up in the stage — pure appends never read old levels, so a
-    // stray waits for its bucket's next compaction to be detected, but
-    // is always caught before any directory is dropped
-    val delta = all.withColumn("b", pmod(sqlHash(col("k")), lit(8)))
-      .filter(col("b") === b0).limit(1).select(col("k"), lit(9999L).as("n"))
+    // the delta must COMPACT bucket b0, so the merge reads the corrupted
+    // dir and the stray's recomputed bucket shows up in the stage — pure
+    // appends never read old levels, so a stray waits for its bucket's
+    // next compaction to be detected, but is always caught before any
+    // directory is dropped. The delta rewrites EVERY key of b0, split
+    // over the same input partitions as the first write: the level then
+    // holds the delta's files plus the one-row stray file, less than
+    // twice the delta's bytes, so the tier rule absorbs it
+    val delta = all.withColumn("b", pmod(sqlHash(col("k")), lit(64)))
+      .filter(col("b") === b0).select(col("k"), lit(9999L).as("n"))
     val e = intercept[IllegalArgumentException] {
-      Sinks.mergeIntoKeyedParquet(delta, "k", path,
-        tierFactor = Double.PositiveInfinity)
+      Sinks.mergeIntoKeyedParquet(delta, "k", path)
     }
     assert(e.getMessage.contains("bucket invariant violated"), e.getMessage)
   }
@@ -341,21 +268,21 @@ class ScaleOpsSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-genread").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val initial = (0 until 200).map(i => (s"key$i", 1L)).toDF("k", "n")
-    Sinks.mergeIntoKeyedParquet(initial, "k", path, buckets = 8)
+    val initial = (0 until 1600).map(i => (s"key$i", 1L)).toDF("k", "n")
+    Sinks.mergeIntoKeyedParquet(initial, "k", path)
 
     // a reader resolves generation 1 (manifest + directory list) NOW...
     val g1Reader = Sinks.readKeyedParquet(spark, path)
 
-    // ...then a merge updates EVERY key (all 8 buckets swap generations).
+    // ...then a merge updates EVERY key (all 64 buckets swap generations).
     // The per-directory-swap design failed exactly here: the reader could
     // see bucket 3 new + bucket 7 old. With manifest publish the g1
     // directories are immutable and still on disk (deferred deletion), so
     // the in-flight reader materializes the complete OLD generation.
     Sinks.mergeIntoKeyedParquet(
-      (0 until 200).map(i => (s"key$i", 2L)).toDF("k", "n"), "k", path)
+      (0 until 1600).map(i => (s"key$i", 2L)).toDF("k", "n"), "k", path)
     val seen = g1Reader.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(seen.size == 200 && seen.values.forall(_ == 1L),
+    assert(seen.size == 1600 && seen.values.forall(_ == 1L),
       s"mid-flight reader must see one whole generation, got ${seen.values.toSet}")
 
     // a NEW reader resolves generation 2 and sees only new values
@@ -372,6 +299,14 @@ class ScaleOpsSpec extends AnyFunSuite {
       assert(!new java.io.File(path, d).exists(), s"$d must be deleted at gen 3"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path, "_graft_log/manifest-1")),
       "superseded manifests beyond the grace window must be pruned")
+
+    // the gen-1 snapshot is now older than the retained window: it fails
+    // LOUDLY (the reader refuses ignoreMissingFiles=true, so this can never
+    // be silent row loss), while current-generation reads are intact
+    intercept[Exception] { g1Reader.count() }
+    val now = Sinks.readKeyedParquet(spark, path)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(now.size == 1600 && now("key7") == 3L && now("key8") == 2L)
   }
 
   test("a racing manifest commit fails loudly instead of silently losing the update") {
@@ -390,56 +325,15 @@ class ScaleOpsSpec extends AnyFunSuite {
       "the winning manifest must survive a racing commit attempt")
   }
 
-  test("retainGenerations widens the reader grace window; expiry fails loudly") {
-    import graft.sources.Sinks.Manifest
-    import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-retain").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // tierFactor=∞: every touch ABSORBS the hot bucket's previous level
-    // (deterministic retirement cadence — byte-threshold tiering is
-    // nondeterministic at toy sizes, and this test is about RETIREMENT)
-    val initial = (0 until 40).map(i => (s"key$i", 1L)).toDF("k", "n")
-    Sinks.mergeIntoKeyedParquet(initial, "k", path, buckets = 4, retainGenerations = 2)
-    val g1 = Manifest.latest(fs, path).get
-    val snapshot = Sinks.readKeyedParquet(spark, path) // resolved at gen 1
-
-    def touch(n: Long): Unit = Sinks.mergeIntoKeyedParquet(
-      Seq(("key7", n)).toDF("k", "n"), "k", path, buckets = 4,
-      retainGenerations = 2, tierFactor = Double.PositiveInfinity)
-
-    // with retainGenerations=2 the gen-1 snapshot survives TWO later merges
-    // (the default one-generation grace would already have deleted its
-    // replaced directory after the second)
-    touch(2L); touch(3L)
-    assert(snapshot.count() == 40,
-      "a reader two generations behind must still see its whole snapshot")
-
-    // the third merge pushes gen 1 out of the retained window: the replaced
-    // directory is GC'd and the stale snapshot fails LOUDLY (the reader
-    // refuses ignoreMissingFiles=true, so this can never be silent row loss)
-    touch(4L)
-    val g4 = Manifest.latest(fs, path).get
-    val hotBucket = g4.dirs.collectFirst {
-      case (k, ds) if ds.exists(_.contains("-g4")) => k }.get
-    assert(g1.dirs(hotBucket).forall(d => !new java.io.File(path, d).exists()),
-      "beyond the retained window the old bucket directory must be GC'd")
-    intercept[Exception] { snapshot.count() }
-
-    // current-generation reads are unaffected
-    val now = Sinks.readKeyedParquet(spark, path)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(now.size == 40 && now("key7") == 4L && now("key8") == 1L)
-  }
-
   test("readKeyedParquet refuses to run under ignoreMissingFiles=true") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("graft-imf").toString + "/t"
-    Sinks.mergeIntoKeyedParquet(Seq(("a", 1L)).toDF("k", "n"), "k", path, buckets = 2)
+    Sinks.mergeIntoKeyedParquet(
+      (0 until 32).map(i => (s"key$i", 1L)).toDF("k", "n"), "k", path)
     spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
     try intercept[IllegalArgumentException] { Sinks.readKeyedParquet(spark, path) }
     finally spark.conf.set("spark.sql.files.ignoreMissingFiles", "false")
-    assert(Sinks.readKeyedParquet(spark, path).count() == 1)
+    assert(Sinks.readKeyedParquet(spark, path).count() == 32)
   }
 
   test("an abandoned manifest temp file is reclaimed by the next merge's prune") {
@@ -448,13 +342,13 @@ class ScaleOpsSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     Sinks.mergeIntoKeyedParquet(
-      (0 until 10).map(i => (s"key$i", 1L)).toDF("k", "n"), "k", path, buckets = 2)
+      (0 until 320).map(i => (s"key$i", 1L)).toDF("k", "n"), "k", path)
     // simulate a crash between fs.create(.tmp-<gen>) and the rename: the
     // orphan sits in _graft_log where only this prune can ever delete it
     val orphan = new org.apache.hadoop.fs.Path(path, "_graft_log/.tmp-1")
     val out = fs.create(orphan, true)
     try out.write("gen=1\n".getBytes("UTF-8")) finally out.close()
-    Sinks.mergeIntoKeyedParquet(Seq(("key3", 2L)).toDF("k", "n"), "k", path, buckets = 2)
+    Sinks.mergeIntoKeyedParquet(Seq(("key3", 2L)).toDF("k", "n"), "k", path)
     assert(!fs.exists(orphan), "stale .tmp-* files must be pruned, not accumulate")
   }
 
@@ -581,19 +475,12 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("compactParquet refuses a manifest-published keyed table") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("graft-nocompact").toString + "/t"
-    Sinks.mergeIntoKeyedParquet(Seq(("a", 1L)).toDF("k", "n"), "k", path, buckets = 2)
+    Sinks.mergeIntoKeyedParquet(
+      (0 until 32).map(i => (s"key$i", 1L)).toDF("k", "n"), "k", path)
     // a whole-root compaction would read every retained generation and
     // destroy the b<k>-g<gen> layout the manifest references
     intercept[IllegalArgumentException] { Sinks.compactParquet(spark, path) }
-    assert(Sinks.readKeyedParquet(spark, path).count() == 1, "table untouched")
-
-    // the PRE-manifest legacy layout must be refused too: flattening its
-    // _bkt= dirs would orphan every accumulated key at the next merge
-    val legacy = java.nio.file.Files.createTempDirectory("graft-nocompact2").toString + "/t"
-    Seq(("a", 1L)).toDF("k", "n")
-      .withColumn("_bkt", lit(0))
-      .write.partitionBy("_bkt").parquet(legacy)
-    intercept[IllegalArgumentException] { Sinks.compactParquet(spark, legacy) }
+    assert(Sinks.readKeyedParquet(spark, path).count() == 32, "table untouched")
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {
