@@ -299,14 +299,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       assert(!new java.io.File(path, d).exists(), s"$d must be deleted at gen 3"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path, "_graft_log/manifest-1")),
       "superseded manifests beyond the grace window must be pruned")
-
-    // the gen-1 snapshot is now older than the retained window: it fails
-    // LOUDLY (the reader refuses ignoreMissingFiles=true, so this can never
-    // be silent row loss), while current-generation reads are intact
-    intercept[Exception] { g1Reader.count() }
-    val now = Sinks.readKeyedParquet(spark, path)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(now.size == 1600 && now("key7") == 3L && now("key8") == 2L)
   }
 
   test("a racing manifest commit fails loudly instead of silently losing the update") {
@@ -323,6 +315,56 @@ class ScaleOpsSpec extends AnyFunSuite {
     intercept[java.io.IOException] { Manifest.commit(fs, path, racing) }
     assert(Manifest.latest(fs, path).get == first,
       "the winning manifest must survive a racing commit attempt")
+  }
+
+  test("retainGenerations widens the reader grace window; expiry fails loudly") {
+    import graft.sources.Sinks.Manifest
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{pmod, hash => sqlHash}
+    val path = java.nio.file.Files.createTempDirectory("graft-retain").toString + "/t"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val initial = (0 until 320).map(i => (s"key$i", 1L)).toDF("k", "n")
+    Sinks.mergeIntoKeyedParquet(initial, "k", path)
+    val g1 = Manifest.latest(fs, path).get
+    val snapshot = Sinks.readKeyedParquet(spark, path) // resolved at gen 1
+
+    // each touch rewrites EVERY key of one bucket, split over the same
+    // input partitions as the first write, so the bucket's level is under
+    // twice the delta's bytes and the tier rule absorbs (retires) it — a
+    // deterministic retirement cadence, which is what this case is about
+    val hot = g1.dirs.keys.min
+    def touch(n: Long): Unit = Sinks.mergeIntoKeyedParquet(
+      initial.withColumn("b", pmod(sqlHash(col("k")), lit(64)))
+        .filter(col("b") === hot).select(col("k"), lit(n).as("n")), "k", path)
+
+    // the one retained generation keeps the replaced gen-1 directory on
+    // disk through the merge that retires it: the gen-1 snapshot, one
+    // generation behind, still reads whole
+    touch(2L)
+    val g2 = Manifest.latest(fs, path).get
+    assert(g1.dirs(hot).forall(g2.retired.contains),
+      s"gen 2 must retire the hot bucket's gen-1 level, retired ${g2.retired}")
+    assert(g1.dirs(hot).forall(d => new java.io.File(path, d).exists()),
+      "within the retained window the replaced directory must stay on disk")
+    assert(snapshot.count() == 320,
+      "a reader one generation behind must still see its whole snapshot")
+
+    // the next merge pushes gen 1 out of the retained window: the replaced
+    // directory is GC'd and the stale snapshot fails LOUDLY (the reader
+    // refuses ignoreMissingFiles=true, so this can never be silent row loss)
+    touch(3L)
+    assert(g1.dirs(hot).forall(d => !new java.io.File(path, d).exists()),
+      "beyond the retained window the old bucket directory must be GC'd")
+    intercept[Exception] { snapshot.count() }
+
+    // current-generation reads are unaffected
+    val hotKeys = initial.withColumn("b", pmod(sqlHash(col("k")), lit(64)))
+      .filter(col("b") === hot).select("k").as[String].collect().toSet
+    val now = Sinks.readKeyedParquet(spark, path)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(now.size == 320 && hotKeys.nonEmpty &&
+      now.forall { case (k, v) => v == (if (hotKeys(k)) 3L else 1L) })
   }
 
   test("readKeyedParquet refuses to run under ignoreMissingFiles=true") {
