@@ -211,39 +211,84 @@ object Engine {
     * consumed. An artifact without the sidecar — published before the
     * sink wrote one, or holding a type the sidecar does not cover — falls
     * back to `spark.read.json`'s schema inference, one job over the file.
+    * Point reads go through [[lookup]], which on a JSON result runs no
+    * Spark job at all.
     */
-  def fetchResult(spark: SparkSession, resultPath: String): DataFrame =
-    fetchResult(spark, Sinks.fileSystem(spark, resultPath), resultPath)
+  def fetchResult(spark: SparkSession, resultPath: String): DataFrame = {
+    val fs = Sinks.fileSystem(spark, resultPath)
+    fetchResult(spark, fs, resultPath, Sinks.isKeyedTable(fs, resultPath))
+  }
 
   private def fetchResult(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      resultPath: String): DataFrame = {
-    if (fs.exists(new org.apache.hadoop.fs.Path(resultPath, "_graft_log")))
-      Sinks.readKeyedParquet(spark, fs, resultPath)
+      resultPath: String, keyed: Boolean): DataFrame =
+    if (keyed) Sinks.readKeyedParquet(spark, fs, resultPath)
     else Sinks.readJsonSchema(fs, resultPath) match {
       case Some(schema) => spark.read.schema(schema).json(resultPath)
       case None => spark.read.json(resultPath)
     }
-  }
 
   /** PDF Part-2 "Streaming Search" (P7): point lookup of one key in a
-    * stored result, read as [[fetchResult]] reads it (the `_graft_schema`
-    * sidecar first, inference only without one), so a lookup on a
-    * published JSON result is one Spark job. The key column resolves, in
-    * order: explicit `keyCol` argument → the `_graft_key` sidecar the sink
-    * records (authoritative for any registered operation) → the first
-    * STRING-typed column (`spark.read.json` orders columns alphabetically,
-    * so the positional first column of the read-back result is NOT the
-    * sink's key — for wordcount it would be `count`).
+    * stored result. The key column resolves, in order: explicit `keyCol`
+    * argument → the `_graft_key` sidecar the sink records (authoritative
+    * for any registered operation) → the first STRING-typed column
+    * (`spark.read.json` orders columns alphabetically, so the positional
+    * first column of the read-back result is NOT the sink's key — for
+    * wordcount it would be `count`).
+    *
+    * On the sink's key the lookup reads only what the term can be in:
+    *  - a JSON result is binary-searched on the driver
+    *    ([[graft.sources.SortedJsonSearch]]) and every matching line is
+    *    parsed with `from_json` and the sidecar schema over a local
+    *    relation, so the lookup and a `collect()` of it run no Spark job;
+    *  - a keyed parquet result reads the levels of the one bucket the term
+    *    hashes into ([[graft.sources.Sinks.readKeyedTerm]]).
+    *
+    * Otherwise the lookup filters the [[fetchResult]] read, with the same
+    * rows: when there is no `_graft_schema` sidecar, when the key is not a
+    * UTF8_BINARY string (no `_graft_key_order` marker; a collated key is
+    * sorted in collation order), when an explicit `keyCol` is not the sort
+    * key, when the directory holds other than exactly one part file, and
+    * when the file is swapped away mid-search (a [[runStream]] republish).
     */
   def lookup(spark: SparkSession, resultPath: String, term: String,
       keyCol: String = ""): DataFrame = {
     val fs = Sinks.fileSystem(spark, resultPath)
-    val df = fetchResult(spark, fs, resultPath)
-    val key =
-      if (keyCol.nonEmpty) keyCol
-      else Sinks.readKeyColumn(fs, resultPath)
-        .orElse(df.schema.fields.find(_.dataType == org.apache.spark.sql.types.StringType).map(_.name))
-        .getOrElse(df.columns.head)
-    df.filter(col(key) === term)
+    val keyed = Sinks.isKeyedTable(fs, resultPath)
+    val sortKey = Sinks.readKeyColumn(fs, resultPath)
+    val searched = sortKey.filter(k => term != null && (keyCol.isEmpty || keyCol == k))
+      .flatMap { k =>
+        if (keyed) Sinks.readKeyedTerm(spark, fs, resultPath, k, term)
+        else searchJson(spark, fs, resultPath, k, term)
+      }
+    searched.getOrElse {
+      val df = fetchResult(spark, fs, resultPath, keyed)
+      val key =
+        if (keyCol.nonEmpty) keyCol
+        else sortKey
+          .orElse(df.schema.fields.find(_.dataType == org.apache.spark.sql.types.StringType).map(_.name))
+          .getOrElse(df.columns.head)
+      df.filter(col(key) === term)
+    }
   }
+
+  private def searchJson(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, key: String, term: String): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    for {
+      schema <- Sinks.readJsonSchema(fs, dir) if Sinks.keySortedBinary(fs, dir)
+      lines <- graft.sources.SortedJsonSearch.matchingLines(fs, dir, key, term)
+    } yield spark.createDataFrame(lines.map(Row(_)).asJava,
+        StructType(Seq(StructField("line", StringType))))
+      .select(from_json(col("line"), schema).as("r")).select("r.*")
+  }
+
+  /** `df`'s rows as JSON lines, byte for byte what `df.toJSON` renders.
+    * A projection, not `toJSON`'s `mapPartitions`: over a local relation
+    * (a JSON [[lookup]]) the optimizer evaluates it in place, so the
+    * rendering runs no Spark job.
+    */
+  def jsonLines(df: DataFrame): Array[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0))
 }

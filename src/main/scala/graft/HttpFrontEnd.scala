@@ -85,7 +85,7 @@ object HttpFrontEnd {
             case kv if kv.startsWith("term=") =>
               java.net.URLDecoder.decode(kv.drop(5), "UTF-8")
           }.getOrElse(throw new IllegalArgumentException("missing ?term="))
-        val rows = Engine.lookup(spark, cfg.outputPath, term).toJSON.collect()
+        val rows = Engine.jsonLines(Engine.lookup(spark, cfg.outputPath, term))
         (200, rows.mkString("[", ",", "]"))
       })
 
@@ -105,8 +105,8 @@ object HttpFrontEnd {
           params.get("k").map(_.toInt).getOrElse(20)))
         // small result (top-k rows) — the same deliberate collect()
         // serving boundary as every handler here
-        val rows = graft.queries.CurationQueries
-          .bm25TopkFor(spark, dir, terms, k).toJSON.collect()
+        val rows = Engine.jsonLines(graft.queries.CurationQueries
+          .bm25TopkFor(spark, dir, terms, k))
         (200, rows.mkString("[", ",", "]"))
       })
 
@@ -127,7 +127,7 @@ object HttpFrontEnd {
       .getOrElse(df.columns.head)
     val valueCols = df.columns.filterNot(_ == key)
     if (valueCols.length != 1) {
-      df.toJSON.collect().mkString("[", ",", "]")
+      Engine.jsonLines(df).mkString("[", ",", "]")
     } else {
       val v = valueCols.head
       // orderBy: the JSON artifact happens to be pre-sorted, but the

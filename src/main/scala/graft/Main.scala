@@ -18,6 +18,8 @@ import org.apache.spark.sql.SparkSession
   * `fetch`/`lookup` collect to the driver deliberately: they serve a final,
   * already-aggregated result (the reference's final-output JSON), not a data
   * path — SURVEY §2.1 S7 declares this a thin app layer over the engine.
+  * Both render rows with [[Engine.jsonLines]], so a `lookup` on a JSON
+  * result runs no Spark job.
   */
 object Main {
 
@@ -30,10 +32,10 @@ object Main {
     case "run" :: op :: in :: out :: Nil =>
       runJob(spark, JobConfig(op, in, out))
     case "fetch" :: out :: Nil =>
-      Engine.fetchResult(spark, out).toJSON.collect().foreach(println)
+      Engine.jsonLines(Engine.fetchResult(spark, out)).foreach(println)
       0
     case "lookup" :: out :: term :: Nil =>
-      Engine.lookup(spark, out, term).toJSON.collect().foreach(println)
+      Engine.jsonLines(Engine.lookup(spark, out, term)).foreach(println)
       0
     case "serve" :: portStr :: rest if rest.length <= 1 && portStr.forall(_.isDigit) =>
       val boot = rest.headOption.map(p => JobConfig.fromJsonFile(spark, p))

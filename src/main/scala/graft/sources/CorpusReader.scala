@@ -1,13 +1,13 @@
 package graft.sources
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Directory text-corpus source (reference `master.py:63-71`,
   * `generate_dataset`): every file under `dir` becomes rows of
-  * `(doc: STRING, line: STRING)` — `doc` is the file's base name, matching
-  * the reference's dict-of-docs keying.
+  * `(doc: STRING, line: STRING)` — `doc` is the file's base name
+  * ([[docName]]), matching the reference's dict-of-docs keying.
   *
   * Unlike the reference (whole corpus into driver memory, then re-uploaded
   * to the KV store), this is a distributed scan: Spark's split planning
@@ -17,11 +17,47 @@ import org.apache.spark.sql.functions._
 object CorpusReader {
 
   /** Raw (doc, line) rows. */
-  def raw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.text(dir)
-      .select(
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("doc"),
-        col("value").as("line"))
+  def raw(spark: SparkSession, dir: String): DataFrame = {
+    requireListable(spark, dir)
+    spark.read.text(dir).select(docName.as("doc"), col("value").as("line"))
+  }
+
+  /** The base name of the file a row was read from, as the file system
+    * spells it. `input_file_name()` is the file's URI, whose path
+    * percent-encodes (`my doc.txt` → `my%20doc.txt`, `a%41b.txt` →
+    * `a%2541b.txt`); `url_decode` reverses that, but also reads `+` as a
+    * space, so `+` is escaped first. The batch and the streaming corpus
+    * readers name documents here.
+    */
+  private[graft] def docName: Column =
+    url_decode(regexp_replace(regexp_extract(input_file_name(), "([^/]+)$", 1),
+      "\\+", "%2B"))
+
+  /** Fail, naming the file, when a local corpus directory lists a name
+    * that does not stat. Hadoop's local listing decodes names with the
+    * JVM's file-name encoding (`sun.jnu.encoding`, set from the locale at
+    * start-up); under a non-UTF-8 locale a UTF-8 name such as `café.txt`
+    * decodes to a string that no longer names the file, and the listing
+    * skips it without a word — the corpus would lose a document. Hidden
+    * names (`.`/`_`), which Spark skips anyway, are not checked.
+    */
+  private def requireListable(spark: SparkSession, dir: String): Unit =
+    if (Sinks.fileSystem(spark, dir).getScheme == "file") {
+      def check(d: java.io.File): Unit =
+        Option(d.list()).getOrElse(Array.empty[String])
+          .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+          .foreach { name =>
+            val f = new java.io.File(d, name)
+            if (!f.exists())
+              throw new java.io.IOException(
+                s"corpus file '$name' in $d is listed but cannot be read: its name " +
+                  "does not decode under the JVM's file-name encoding " +
+                  s"(sun.jnu.encoding=${System.getProperty("sun.jnu.encoding")}); " +
+                  "run under a UTF-8 locale, e.g. LANG=C.UTF-8")
+            if (f.isDirectory) check(f)
+          }
+      check(new java.io.File(new org.apache.hadoop.fs.Path(dir).toUri.getPath))
+    }
 
   /** Cleaned corpus (reference `master.py:44-61`): punctuation-strip → trim
     * → lowercase → ASCII-fold, blank lines dropped.

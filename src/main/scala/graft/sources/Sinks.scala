@@ -55,7 +55,7 @@ object Sinks {
     * ([[sibling]]) and swapped in with delete+rename, so concurrent
     * readers (`Engine.fetchResult`/`lookup`, e.g. while
     * `Engine.runStream` republishes per trigger) race
-    * only against a millisecond-scale rename, not the whole rewrite. Two
+    * only against a millisecond-scale rename, not the whole rewrite. Three
     * sidecars ride along (the leading underscore hides them from scans):
     *  - `_graft_key`: the sort/key column, for [[graft.Engine.lookup]] —
     *    `spark.read.json` reorders columns alphabetically, so the key is
@@ -63,7 +63,12 @@ object Sinks {
     *  - `_graft_schema`: the schema `spark.read.json` would infer from the
     *    file ([[jsonReadSchema]]), so readers skip the inference job. It
     *    is written only when every column's type maps; otherwise readers
-    *    infer as before.
+    *    infer as before;
+    *  - `_graft_key_order`: written only when the key is a UTF8_BINARY
+    *    string, so the file is in `UTF8String` binary order with nulls
+    *    first and a lookup may binary-search it ([[SortedJsonSearch]]). A
+    *    collated key sorts in its collation's order, which the read
+    *    schema (plain `string`) cannot show.
     */
   def sortedSingleFileJson(df: DataFrame, sortCol: String, path: String): Unit = {
     val tmp = sibling(path, ".inprogress")
@@ -72,6 +77,10 @@ object Sinks {
     val fs = fileSystem(df.sparkSession, path)
     writeSidecar(fs, tmp, KeySidecar, sortCol)
     jsonReadSchema(df.schema).foreach(s => writeSidecar(fs, tmp, SchemaSidecar, s.json))
+    // StringType equals only the UTF8_BINARY string, not a collated one
+    if (df.schema.exists(f => f.name == sortCol &&
+        f.dataType == org.apache.spark.sql.types.StringType))
+      writeSidecar(fs, tmp, KeyOrderSidecar, BinaryKeyOrder)
     swapInto(fs, tmp, path)
   }
 
@@ -90,7 +99,7 @@ object Sinks {
     // keys), and flattening it destroys the structure the keyed
     // reader/merger depends on — refuse loudly; merging compacts those
     // tables bucket-by-bucket as part of the next generation
-    require(!fs.exists(Manifest.logDir(path)),
+    require(!isKeyedTable(fs, path),
       s"$path is a manifest-published keyed table; compactParquet would read " +
         "duplicate generations and break the manifest layout — its buckets " +
         "are rewritten per-generation by mergeIntoKeyedParquet instead")
@@ -143,6 +152,8 @@ object Sinks {
 
   private val KeySidecar = "_graft_key"
   private val SchemaSidecar = "_graft_schema"
+  private val KeyOrderSidecar = "_graft_key_order"
+  private val BinaryKeyOrder = "utf8_binary"
 
   private def writeSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       name: String, text: String): Unit = {
@@ -162,6 +173,13 @@ object Sinks {
   /** The key column a sink recorded in its `_graft_key` sidecar. */
   def readKeyColumn(fs: org.apache.hadoop.fs.FileSystem, path: String): Option[String] =
     readSidecar(fs, path, KeySidecar)
+
+  /** Whether [[sortedSingleFileJson]] recorded that it sorted `path` by a
+    * UTF8_BINARY string key (`_graft_key_order`).
+    */
+  private[graft] def keySortedBinary(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Boolean =
+    readSidecar(fs, path, KeyOrderSidecar).contains(BinaryKeyOrder)
 
   /** The read schema [[sortedSingleFileJson]] recorded in its
     * `_graft_schema` sidecar; None for results published without one.
@@ -319,8 +337,44 @@ object Sinks {
 
   private[graft] def readKeyedParquet(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String): DataFrame = {
-    val (m, df) = readKeyedLevels(spark, fs, path)
-    if (m.dirs.values.forall(_.size <= 1)) df
+    val m = keyedManifest(spark, fs, path)
+    newestWins(fs, path, readLevels(spark, path, m.dirs.values.flatten.toSeq),
+      m.dirs.values.exists(_.size > 1))
+  }
+
+  /** The rows of a keyed table whose `key` equals `term`, read from the
+    * levels of the ONE bucket the current manifest gives for the term
+    * instead of all of them: the bucket is the writer's [[keyBucket]]
+    * evaluated on the term over a one-row local relation (no Spark job),
+    * and newest-wins resolution runs within that bucket. A bucket no key
+    * hashed into has no levels; any other bucket's newest level then
+    * supplies the schema and, by the bucket invariant the merge enforces,
+    * no row for the term. None when the key column is not a UTF8_BINARY
+    * string — a string term hashes like the key only then — so the
+    * caller reads the whole table instead.
+    */
+  private[graft] def readKeyedTerm(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, key: String,
+      term: String): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val m = keyedManifest(spark, fs, path)
+    val bucket = spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row(term)),
+        StructType(Seq(StructField(key, StringType))))
+      .select(keyBucket(col(key), m.buckets)).head().getInt(0)
+    val levels = m.dirs.getOrElse(bucket, Seq(m.dirs.values.head.last))
+    val df = readLevels(spark, path, levels)
+    if (!df.schema.exists(f => f.name == key && f.dataType == StringType)) None
+    else Some(newestWins(fs, path, df, levels.size > 1).filter(col(key) === term))
+  }
+
+  /** Newest-generation-wins resolution of `df`, the rows of some levels
+    * of a keyed table; `df` itself when every bucket read has one level.
+    */
+  private def newestWins(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      df: DataFrame, multiLevel: Boolean): DataFrame =
+    if (!multiLevel) df
     else {
       // multi-level buckets: an upserted key may appear in several
       // levels — resolve newest-generation-wins per key. The level a row
@@ -348,7 +402,6 @@ object Sinks {
         .select(df.columns.map(c =>
           if (c == key) col(key) else col(s"_r.$c").as(c)).toIndexedSeq: _*)
     }
-  }
 
   /** Key-SET read of a keyed table: every level of every bucket, with NO
     * newest-wins resolution — superseded versions of an upserted key are
@@ -360,11 +413,17 @@ object Sinks {
     * [[readKeyedParquet]] would pay per trigger is a corpus-scale no-op.
     */
   def readKeyedParquetKeySet(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    readKeyedLevels(spark, fileSystem(spark, path), path)._2
+      path: String): DataFrame = {
+    val m = keyedManifest(spark, fileSystem(spark, path), path)
+    readLevels(spark, path, m.dirs.values.flatten.toSeq)
+  }
 
-  private def readKeyedLevels(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): (Manifest, DataFrame) = {
+  /** Whether `path` is a manifest-published keyed table. */
+  private[graft] def isKeyedTable(fs: org.apache.hadoop.fs.FileSystem, path: String): Boolean =
+    fs.exists(Manifest.logDir(path))
+
+  private def keyedManifest(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Manifest = {
     // read the boolean Spark itself parsed (trim + case handling included)
     // instead of re-implementing string parsing on the raw conf value —
     // any variant that enables the conf must also trip the guard
@@ -372,10 +431,21 @@ object Sinks {
       "readKeyedParquet requires spark.sql.files.ignoreMissingFiles=false: a " +
         "snapshot outliving its retained generations must fail loudly, not " +
         "silently drop the rows of garbage-collected buckets")
-    val m = Manifest.latest(fs, path).getOrElse(
+    Manifest.latest(fs, path).getOrElse(
       throw new java.io.FileNotFoundException(s"no manifest under $path"))
-    val dirs = m.dirs.values.flatten.toSeq.sorted
-    (m, spark.read.parquet(dirs.map(d => s"$path/$d"): _*))
+  }
+
+  private def readLevels(spark: org.apache.spark.sql.SparkSession, path: String,
+      dirs: Seq[String]): DataFrame =
+    spark.read.parquet(dirs.sorted.map(d => s"$path/$d"): _*)
+
+  /** The bucket of a keyed table a row with key `key` belongs to. The
+    * merge writes by it and [[readKeyedTerm]] finds a term's bucket by it,
+    * so the two cannot drift apart.
+    */
+  private def keyBucket(key: org.apache.spark.sql.Column, nBkt: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
+    pmod(hash(key), lit(nBkt))
   }
 
   // The keyed sink's one configuration: the hash-bucket count of a NEW
@@ -442,7 +512,7 @@ object Sinks {
     // parquet directory readers): a crash leaks nothing outside the table,
     // and the scan-based GC below reclaims them
     val delta = s"$path/.delta"
-    batch.withColumn("_bkt", pmod(hash(col(keyCol)), lit(nBkt)))
+    batch.withColumn("_bkt", keyBucket(col(keyCol), nBkt))
       .write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(delta)
     // the bucket ids a partitionBy("_bkt") write produced under `dir`
     val StagedBucket = "^_bkt=(\\d+)$".r
@@ -528,7 +598,7 @@ object Sinks {
       val resolved = all.groupBy(col(keyCol))
         .agg(max(struct(col("_graft_gen") +: others.map(col): _*)).as("_r"))
         .select((col(keyCol) +: others.map(c => col(s"_r.$c").as(c))) :+
-          pmod(hash(col(keyCol)), lit(nBkt)).as("_bkt"): _*)
+          keyBucket(col(keyCol), nBkt).as("_bkt"): _*)
       val stage = s"$path/.stage-g$gen"
       resolved.write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(stage)
       val staged = stagedBuckets(stage).toSet

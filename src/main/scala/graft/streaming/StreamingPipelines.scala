@@ -42,7 +42,7 @@ object StreamingPipelines {
       .option("maxFilesPerTrigger", 16)
       .text(dir)
       .select(
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("doc"),
+        graft.sources.CorpusReader.docName.as("doc"),
         cleanLine(col("value")).as("line"))
       .filter(length(col("line")) > 0)
 

@@ -147,9 +147,11 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("read schema: int, float, boolean, nested struct and array-of-struct columns") {
-    // mixed-case and underscore names: inference orders fields by
-    // String.compareTo at every level, the sidecar must too
+  /** A registered op with int, float, boolean, nested struct and
+    * array-of-struct columns; mixed-case and underscore names: inference
+    * orders fields by String.compareTo at every level, the sidecar must too.
+    */
+  private def typedLinesOp(): String = {
     OperationRegistry.register("typed_lines", (corpus, _) =>
       corpus.groupBy("doc").agg(
         count(lit(1)).cast("int").as("lines"),
@@ -160,8 +162,24 @@ class EngineSpec extends AnyFunSuite {
         sort_array(collect_list(struct(col("line").as("text"),
           length(col("line")).cast("byte").as("_len")))).as("items"))
         .orderBy("doc"))
+    "typed_lines"
+  }
+
+  /** A registered op whose map and date columns the read schema does not
+    * cover, so its result is published without a `_graft_schema` sidecar.
+    */
+  private def mappedLinesOp(): String = {
+    OperationRegistry.register("mapped_lines", (corpus, _) =>
+      corpus.groupBy("doc")
+        .agg(map(lit("lines"), count(lit(1)).cast("int")).as("m"),
+          max(to_date(lit("2024-01-02"))).as("day"))
+        .orderBy("doc"))
+    "mapped_lines"
+  }
+
+  test("read schema: int, float, boolean, nested struct and array-of-struct columns") {
     val out = Files.createTempDirectory("graft-out").toString + "/typed"
-    Engine.run(spark, JobConfig("typed_lines", tmpCorpus(), out))
+    Engine.run(spark, JobConfig(typedLinesOp(), tmpCorpus(), out))
     assert(Files.exists(Path.of(out, "_graft_schema")))
     assertReadsAsInferred(out)
     val hit = Engine.lookup(spark, out, "b.txt").collect()
@@ -169,13 +187,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("read schema: a result type outside the mapping writes no sidecar and reads by inference") {
-    OperationRegistry.register("mapped_lines", (corpus, _) =>
-      corpus.groupBy("doc")
-        .agg(map(lit("lines"), count(lit(1)).cast("int")).as("m"),
-          max(to_date(lit("2024-01-02"))).as("day"))
-        .orderBy("doc"))
     val out = Files.createTempDirectory("graft-out").toString + "/mapped"
-    Engine.run(spark, JobConfig("mapped_lines", tmpCorpus(), out))
+    Engine.run(spark, JobConfig(mappedLinesOp(), tmpCorpus(), out))
     assert(!Files.exists(Path.of(out, "_graft_schema")))
     assertReadsAsInferred(out)
     assert(Engine.lookup(spark, out, "a.txt").count() == 1)
@@ -190,13 +203,22 @@ class EngineSpec extends AnyFunSuite {
     assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 2L)
   }
 
-  test("a JSON lookup runs one Spark job; publishing wordcount at most three") {
+  test("a JSON lookup runs no Spark job, a keyed one under three; publishing at most 3") {
     val out = Files.createTempDirectory("graft-out").toString + "/jobs"
     val (result, runJobs) = jobsOf(Engine.run(spark, JobConfig("wordcount", tmpCorpus(), out)))
     assert(runJobs <= 3, s"Engine.run ran $runJobs jobs")
     val (hit, lookupJobs) = jobsOf(Engine.lookup(spark, out, "hello").collect())
-    assert(hit.length == 1)
-    assert(lookupJobs == 1, s"Engine.lookup ran $lookupJobs jobs")
+    assert(hit.length == 1 && hit.head.getAs[Long]("count") == 2L)
+    assert(lookupJobs == 0, s"Engine.lookup ran $lookupJobs jobs")
+
+    // a keyed table with every one of its 64 buckets populated: the whole-
+    // table read lists 64 level dirs (a listing job) before inferring
+    val keyed = Files.createTempDirectory("graft-keyed").toString + "/t"
+    graft.sources.Sinks.mergeIntoKeyedParquet(spark.range(2000)
+      .select(concat(lit("key"), col("id")).as("k"), col("id").as("n")), "k", keyed)
+    val (row, keyedJobs) = jobsOf(Engine.lookup(spark, keyed, "key7").collect())
+    assert(row.map(r => r.getString(0) -> r.getLong(1)).toSeq == Seq("key7" -> 7L))
+    assert(keyedJobs < 3, s"a keyed Engine.lookup ran $keyedJobs jobs")
 
     // byte-identical to the global-sort-then-one-file write of the same result
     val ref = Files.createTempDirectory("graft-out").toString + "/ref"
@@ -388,5 +410,197 @@ class EngineSpec extends AnyFunSuite {
       "a second run accumulated blocks — the serving lifecycle leaks")
     // and the published artifacts are intact after their blocks released
     assert(Engine.fetchResult(spark, o2).count() > 0)
+  }
+
+  test("lookups render as toJSON renders them, and in no Spark job on a searched result") {
+    val corpus = tmpCorpus()
+    val cases = Seq(
+      ("wordcount", Seq("hello", "world", "absent"), true),
+      ("invertedindex", Seq("hello", "world", "absent"), true),
+      (typedLinesOp(), Seq("a.txt", "b.txt", "c.txt"), true),
+      (mappedLinesOp(), Seq("a.txt", "b.txt"), false))
+    for ((op, terms, searched) <- cases) {
+      val out = Files.createTempDirectory("graft-out").toString + s"/$op"
+      Engine.run(spark, JobConfig(op, corpus, out))
+      for (term <- terms) {
+        val want = Engine.lookup(spark, out, term).toJSON.collect().toSeq
+        val (got, jobs) = jobsOf(Engine.jsonLines(Engine.lookup(spark, out, term)).toSeq)
+        assert(got == want, s"$op '$term'")
+        if (searched) assert(jobs == 0, s"$op '$term': rendering a lookup ran $jobs jobs")
+      }
+    }
+  }
+
+  /** Publish `rows` through the JSON sink, sorted by the string column `k`. */
+  private def publishRows(rows: Seq[org.apache.spark.sql.Row]): String = {
+    val out = Files.createTempDirectory("graft-search").toString + "/r"
+    graft.sources.Sinks.sortedSingleFileJson(rowsFrame(rows), "k", out)
+    out
+  }
+
+  private def rowsFrame(rows: Seq[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("k", StringType), StructField("v", LongType), StructField("pad", StringType))))
+  }
+
+  /** What the filter over the whole file finds — the fallback path. */
+  private def filtered(out: String, term: String, keyCol: String = "k") = {
+    val fs = graft.sources.Sinks.fileSystem(spark, out)
+    val read = graft.sources.Sinks.readJsonSchema(fs, out)
+      .map(spark.read.schema(_).json(out)).getOrElse(spark.read.json(out))
+    val df = read.filter(col(keyCol) === term)
+    (df.schema, df.collect().toSeq)
+  }
+
+  /** Each term's lookup equals the fallback filter; `searched` says
+    * whether it must have been served by the search (no Spark job) or by
+    * the fallback (at least one).
+    */
+  private def assertLookups(out: String, terms: Seq[String], searched: Boolean,
+      keyCol: String = ""): Unit =
+    for (term <- terms) {
+      val ((schema, rows), jobs) = jobsOf {
+        val df = Engine.lookup(spark, out, term, keyCol)
+        (df.schema, df.collect().toSeq)
+      }
+      val want = filtered(out, term, if (keyCol.isEmpty) "k" else keyCol)
+      assert(schema == want._1, s"'$term': ${schema.simpleString} vs ${want._1.simpleString}")
+      assert(rows == want._2, s"'$term': $rows vs ${want._2}")
+      if (searched) assert(jobs == 0, s"'$term' ran $jobs jobs: not served by the search")
+      else assert(jobs > 0, s"'$term' ran no job: the search served a result it must not")
+    }
+
+  test("search matrix: a JSON lookup equals the filter over the whole file") {
+    import org.apache.spark.sql.Row
+    val Window = graft.sources.SortedJsonSearch.Window
+    val long = "x" * (3 * Window)
+    // UTF-16 puts U+1F600 (a surrogate pair) before U+FFFD; UTF-8, and so
+    // Spark's sort, puts it after
+    val keys = Seq("a", "a", "a", "a\"b", "back\\slash", "b", "é", "�", "😀", "z",
+      "long1", "long2", "long3")
+    val rows = Seq(Row(null, 1L, "n1"), Row(null, 2L, long)) ++
+      keys.zipWithIndex.map { case (k, i) =>
+        Row(k, i.toLong, if (k.startsWith("long") || i % 4 == 0) long + i else s"p$i")
+      }
+    val out = publishRows(rows)
+    assert(Files.exists(Path.of(out, "_graft_key_order")))
+    val misses = Seq("", "0", "aa", "c", "￾", "😀😀", "long", "long0")
+    assertLookups(out, keys.distinct ++ misses, searched = true)
+    // the keys hold exactly what was written, and the duplicate comes back whole
+    assert(Engine.lookup(spark, out, "a").collect().map(_.getAs[Long]("v")).toSeq == Seq(0L, 1L, 2L))
+    assert(Engine.lookup(spark, out, "a\"b").head().getAs[String]("k") == "a\"b")
+
+    assertLookups(publishRows(Nil), Seq("a", ""), searched = true)
+    assertLookups(publishRows(Seq(Row("only", 1L, long))), Seq("only", "a", "z"), searched = true)
+    assertLookups(publishRows(Seq(Row(null, 1L, "x"))), Seq("a"), searched = true)
+  }
+
+  test("search fallbacks: each answers with the filter's rows") {
+    import org.apache.spark.sql.Row
+    val rows = Seq("B", "a", "C", "b", "a").zipWithIndex.map { case (k, i) => Row(k, i.toLong, "p") }
+    val terms = Seq("a", "B", "b", "c", "zz")
+
+    // no schema sidecar
+    val noSchema = publishRows(rows)
+    Files.delete(Path.of(noSchema, "_graft_schema"))
+    assertLookups(noSchema, terms, searched = false)
+
+    // a collated key sorts in its collation's order: no key-order marker
+    val lcase = Files.createTempDirectory("graft-search").toString + "/lcase"
+    graft.sources.Sinks.sortedSingleFileJson(
+      rowsFrame(rows).withColumn("k", collate(col("k"), "UTF8_LCASE")), "k", lcase)
+    assert(Files.exists(Path.of(lcase, "_graft_schema")))
+    assert(!Files.exists(Path.of(lcase, "_graft_key_order")))
+    assertLookups(lcase, terms, searched = false)
+
+    // an explicit key column other than the sort key
+    val plain = publishRows(rows)
+    assertLookups(plain, Seq("1", "4", "9"), searched = false, keyCol = "v")
+    assertLookups(plain, terms, searched = true, keyCol = "k")
+
+    // two part files
+    val twoParts = publishRows(rows)
+    val part = partFile(twoParts)
+    Files.copy(part, part.resolveSibling("part-99999-copy.json"))
+    assertLookups(twoParts, terms, searched = false)
+
+    // the part file deleted before the read; a directory gone mid-search
+    val gone = publishRows(rows)
+    Files.delete(partFile(gone))
+    assertLookups(gone, terms, searched = false)
+    val fs = graft.sources.Sinks.fileSystem(spark, gone)
+    assert(graft.sources.SortedJsonSearch.matchingLines(fs, gone + "-swapped", "k", "a").isEmpty)
+  }
+
+  test("keyed lookup reads one bucket and equals the filter over the resolved table") {
+    import spark.implicits._
+    import graft.sources.Sinks
+    // incompressible pad: the first level of each bucket must outweigh
+    // twice a later one-row delta, or the tier rule compacts every merge
+    // and the table never holds more than one level
+    def pad(seed: String): String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      (0 until 32).map(j => md.digest(s"$seed/$j".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString).mkString
+    }
+    val path = Files.createTempDirectory("graft-keyed").toString + "/t"
+    val keys = (0 until 200).map(i => s"key$i")
+    Sinks.mergeIntoKeyedParquet(keys.map(k => (k, 0L, pad(k))).toDF("k", "n", "pad"), "k", path)
+    Sinks.mergeIntoKeyedParquet(keys.take(40).map(k => (k, 1L, "")).toDF("k", "n", "pad"), "k", path)
+    Sinks.mergeIntoKeyedParquet((keys.slice(20, 30) ++ Seq("new1", "new2"))
+      .map(k => (k, 2L, "")).toDF("k", "n", "pad"), "k", path)
+    val fs = Sinks.fileSystem(spark, path)
+    assert(Sinks.Manifest.latest(fs, path).get.dirs.values.exists(_.size > 1),
+      "the table must hold multi-level buckets")
+
+    val resolved = Sinks.readKeyedParquet(spark, path)
+    val byKey = resolved.collect().map(r => r.getString(0) -> r).toMap
+    assert(byKey.size == 202 && byKey("key25").getLong(1) == 2L && byKey("key5").getLong(1) == 1L)
+    for (k <- byKey.keys.toSeq.sorted ++ Seq("absent", "key200", "")) {
+      val got = Engine.lookup(spark, path, k)
+      assert(got.schema == resolved.schema)
+      assert(got.collect().toSeq == byKey.get(k).toSeq, k)
+    }
+    assert(Engine.lookup(spark, path, "key25").collect().toSeq ==
+      resolved.filter(col("k") === "key25").collect().toSeq)
+
+    // three keys: most buckets hold no level at all
+    val sparse = Files.createTempDirectory("graft-keyed").toString + "/s"
+    Sinks.mergeIntoKeyedParquet(Seq(("x", 1L), ("y", 2L), ("z", 3L)).toDF("k", "n"), "k", sparse)
+    for (k <- Seq("x", "y", "z") ++ (0 until 20).map(i => s"miss$i"))
+      assert(Engine.lookup(spark, sparse, k).collect().toSeq ==
+        Sinks.readKeyedParquet(spark, sparse).filter(col("k") === k).collect().toSeq, k)
+  }
+
+  test("doc names are the file names, not their URI encoding") {
+    val dir = Files.createTempDirectory("graft-names")
+    for (name <- Seq("my doc.txt", "a%41b.txt", "a+b.txt"))
+      Files.writeString(dir.resolve(name), "hello\n")
+    val out = Files.createTempDirectory("graft-out").toString + "/idx"
+    Engine.run(spark, JobConfig("invertedindex", dir.toString, out))
+    val docs = Engine.lookup(spark, out, "hello").head().getAs[scala.collection.Seq[String]]("docs")
+    assert(docs == Seq("a%41b.txt", "a+b.txt", "my doc.txt"), docs.toString)
+  }
+
+  test("a file name the locale cannot decode is read or fails the run, never dropped") {
+    // Java cannot name café.txt under a non-UTF-8 file-name encoding, so
+    // the shell writes it from its UTF-8 bytes
+    val dir = Files.createTempDirectory("graft-locale")
+    Files.writeString(dir.resolve("plain.txt"), "hello\n")
+    val sh = new ProcessBuilder("sh", "-c",
+      """printf 'hello cafe\n' > "$1/$(printf 'caf\303\251.txt')"""", "sh", dir.toString)
+      .redirectErrorStream(true).start()
+    assert(sh.waitFor() == 0, new String(sh.getInputStream.readAllBytes(), "UTF-8"))
+    val out = Files.createTempDirectory("graft-out").toString + "/wc"
+    scala.util.Try(Engine.run(spark, JobConfig("wordcount", dir.toString, out))) match {
+      case scala.util.Success(_) =>
+        assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 2L)
+        assert(Engine.lookup(spark, out, "cafe").head().getAs[Long]("count") == 1L)
+      case scala.util.Failure(e) =>
+        val msg = String.valueOf(e.getMessage)
+        assert(msg.contains("caf") && msg.contains("sun.jnu.encoding="), msg)
+        assert(System.getProperty("sun.jnu.encoding") != "UTF-8", msg)
+    }
   }
 }

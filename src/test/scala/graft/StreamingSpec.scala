@@ -137,6 +137,22 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streamed doc names are the file names, not their URI encoding") {
+    val dir = Files.createTempDirectory("graft-stream-names")
+    for (name <- Seq("my doc.txt", "a%41b.txt", "a+b.txt"))
+      Files.writeString(dir.resolve(name), "hello\n")
+    val q = StreamingPipelines.operationStream(spark, dir.toString, "invertedindex")
+      .writeStream.outputMode("complete")
+      .format("memory").queryName("names_stream")
+      .start()
+    try {
+      q.processAllAvailable()
+      val docs = spark.sql("SELECT docs FROM names_stream WHERE word = 'hello'")
+        .head().getSeq[String](0)
+      assert(docs == Seq("a%41b.txt", "a+b.txt", "my doc.txt"), docs.toString)
+    } finally q.stop()
+  }
+
   test("incremental streaming merge: delta-only emission, batch-equal result, restartable") {
     val dir = Files.createTempDirectory("graft-inc-stream")
     val out = Files.createTempDirectory("graft-inc-out").toString + "/result"
