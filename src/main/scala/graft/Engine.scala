@@ -139,6 +139,12 @@ object Engine {
     * hands the full recomputed result to the same sink `run` uses, so
     * batch and streaming outputs are byte-compatible.
     *
+    * Every trigger first runs [[CorpusReader.requireListable]]: the file
+    * source lists the directory the way `CorpusReader.raw` does, so a file
+    * whose name the locale cannot decode would be skipped without a word;
+    * instead the stream fails naming it (on the first trigger after it
+    * arrives).
+    *
     * The checkpoint lives beside the output (`<outputPath>.checkpoint`):
     * a restarted stream resumes from the last committed file offsets
     * instead of re-reading the whole corpus. For the 100-TB-stream path
@@ -152,6 +158,7 @@ object Engine {
       .outputMode("complete")
       .option("checkpointLocation", Sinks.sibling(config.outputPath, ".checkpoint"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        CorpusReader.requireListable(spark, config.inputPath)
         Sinks.sortedSingleFileJson(batch, batch.columns.head, config.outputPath)
       }
       .start()
@@ -169,6 +176,7 @@ object Engine {
     * sorted-artifact contract), which update-mode streams reject — the
     * top-level Sort is dropped from the logical plan here (a keyed
     * parquet table has no meaningful row order; readers sort on demand).
+    * Each trigger checks the corpus listing as [[runStream]]'s does.
     */
   def runStreamIncremental(spark: SparkSession, config: JobConfig) = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, SubqueryAlias}
@@ -194,6 +202,7 @@ object Engine {
       .outputMode("update")
       .option("checkpointLocation", Sinks.sibling(config.outputPath, ".checkpoint"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        CorpusReader.requireListable(spark, config.inputPath)
         Sinks.mergeIntoKeyedParquet(batch, key, config.outputPath)
       }
       .start()
@@ -222,7 +231,7 @@ object Engine {
   private def fetchResult(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       resultPath: String, keyed: Boolean): DataFrame =
     if (keyed) Sinks.readKeyedParquet(spark, fs, resultPath)
-    else Sinks.readJsonSchema(fs, resultPath) match {
+    else Sinks.readSchema(fs, resultPath) match {
       case Some(schema) => spark.read.schema(schema).json(resultPath)
       case None => spark.read.json(resultPath)
     }
@@ -237,9 +246,9 @@ object Engine {
     *
     * On the sink's key the lookup reads only what the term can be in:
     *  - a JSON result is binary-searched on the driver
-    *    ([[graft.sources.SortedJsonSearch]]) and every matching line is
-    *    parsed with `from_json` and the sidecar schema over a local
-    *    relation, so the lookup and a `collect()` of it run no Spark job;
+    *    ([[graft.sources.SortedJsonSearch]]) and the matching lines are
+    *    parsed there ([[searchJson]]), so the lookup and a `collect()` of
+    *    it run no Spark job;
     *  - a keyed parquet result reads the levels of the one bucket the term
     *    hashes into ([[graft.sources.Sinks.readKeyedTerm]]).
     *
@@ -271,17 +280,37 @@ object Engine {
     }
   }
 
+  /** The rows of the key-sorted JSON result `dir` whose `key` equals
+    * `term`: the matching lines, found by binary search, are parsed on the
+    * driver by `JsonToStructs` — `from_json`'s own expression — with the
+    * `_graft_schema` read schema, and returned as a local relation of those
+    * rows. The frame needs no analysis beyond its leaf and runs no Spark
+    * job; its schema and rows are those of filtering the [[fetchResult]]
+    * read. None when there is no schema sidecar or no binary key order.
+    */
   private def searchJson(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       dir: String, key: String, term: String): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JsonToStructs}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
     for {
-      schema <- Sinks.readJsonSchema(fs, dir) if Sinks.keySortedBinary(fs, dir)
+      schema <- Sinks.readSchema(fs, dir) if Sinks.keySortedBinary(fs, dir)
       lines <- graft.sources.SortedJsonSearch.matchingLines(fs, dir, key, term)
-    } yield spark.createDataFrame(lines.map(Row(_)).asJava,
-        StructType(Seq(StructField("line", StringType))))
-      .select(from_json(col("line"), schema).as("r")).select("r.*")
+    } yield {
+      val parse = JsonToStructs(schema, Map.empty, BoundReference(0, StringType, nullable = true),
+        Some(spark.sessionState.conf.sessionLocalTimeZone))
+      val rows = lines.map { l =>
+        // a line from_json cannot parse reads as a row of nulls, as
+        // selecting the fields of its null struct does
+        parse.eval(InternalRow(UTF8String.fromString(l))) match {
+          case r: InternalRow => r.copy()
+          case null => new GenericInternalRow(schema.length)
+        }
+      }
+      graft.bridge.SparkInternals.localRelation(spark,
+        parse.dataType.asInstanceOf[org.apache.spark.sql.types.StructType], rows)
+    }
   }
 
   /** `df`'s rows as JSON lines, byte for byte what `df.toJSON` renders.

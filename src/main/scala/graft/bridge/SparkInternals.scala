@@ -32,6 +32,8 @@ object SparkInternals {
     "org.apache.spark.sql.classic.ExpressionUtils.column(Expression): Column",
     "org.apache.spark.sql.classic.ExpressionUtils.expression(Column): Expression",
     "org.apache.spark.sql.classic.Dataset.ofRows(classic.SparkSession, LogicalPlan): DataFrame",
+    "org.apache.spark.sql.catalyst.plans.logical.LocalRelation(output, data) over DataTypeUtils.toAttributes(schema) (localRelation)",
+    "org.apache.spark.sql.catalyst.expressions.JsonToStructs(schema, options, child, timeZoneId).eval (Engine.searchJson)",
     "org.apache.spark.sql.execution.LogicalRDD(output, rdd, partitioning, ordering)(session, Some(Statistics), None)",
     "org.apache.spark.sql.classic.SparkSession (cast from sql.SparkSession for ofRows/LogicalRDD)",
     "QueryExecution.toRdd / executedPlan.outputPartitioning / outputOrdering (checkpoint reconstruction)",
@@ -51,6 +53,14 @@ object SparkInternals {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, plan)
+
+  /** `rows` (of `schema`) as a DataFrame over a local relation: no
+    * analysis beyond the leaf, and a `collect()` runs no Spark job.
+    */
+  def localRelation(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
   /** Eager local checkpoint whose new leaf carries MEASURED statistics —
     * see [[org.apache.spark.sql.graft.CheckpointBridge]] for the driver

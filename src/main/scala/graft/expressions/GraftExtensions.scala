@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions exposing graft's native expressions to SQL
-  * (`SELECT ascii_clean(text) …`). Installed by `EngineSession.local`;
-  * external users pass `spark.sql.extensions=graft.expressions.GraftExtensions`.
+  * (`SELECT ascii_clean(text) …`, `SELECT ws_tokens(line) …`). Installed
+  * by `EngineSession.local`; external users pass `spark.sql.extensions=graft.expressions.GraftExtensions`.
   *
-  * DataFrame-API callers don't need this — `TextFunctions.cleanLine` builds
-  * the expression directly — it exists so the SQL surface is complete.
+  * DataFrame-API callers don't need this — `TextFunctions.cleanLine` and
+  * `TextFunctions.tokens` build the expressions directly — it exists so the
+  * SQL surface is complete.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -21,6 +22,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case Seq(c) => AsciiClean(c)
         case _ => throw new IllegalArgumentException(
           s"ascii_clean expects exactly 1 argument, got ${children.size}")
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("ws_tokens"),
+      new ExpressionInfo(classOf[WsTokens].getName, "ws_tokens"),
+      (children: Seq[Expression]) => children match {
+        case Seq(c) => WsTokens(c)
+        case _ => throw new IllegalArgumentException(
+          s"ws_tokens expects exactly 1 argument, got ${children.size}")
       }))
     ext.injectFunction((
       new FunctionIdentifier("dot_product"),

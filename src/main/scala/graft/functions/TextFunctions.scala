@@ -82,10 +82,22 @@ object TextFunctions {
       graft.expressions.HexMsbMask(
         graft.bridge.SparkInternals.expression(c)))
 
-  /** Whitespace tokenize matching Python `str.split()`: runs of whitespace,
-    * empty tokens dropped.
+  /** Whitespace tokenize matching Python `str.split()`: runs of the six
+    * [[WsClass]] bytes split, empty tokens dropped — as ONE native
+    * code-generated byte scan ([[graft.expressions.WsTokens]]) instead of
+    * a regex split per row and an interpreted `filter`. Built directly
+    * from the Expression, like [[cleanLine]].
     */
   def tokens(c: Column): Column =
+    graft.bridge.SparkInternals.column(
+      graft.expressions.WsTokens(
+        graft.bridge.SparkInternals.expression(c)))
+
+  /** The same tokenization as composed built-ins — the reference
+    * implementation [[tokens]] is property-tested against, and the form
+    * [[tokensSql]] mirrors in the oracle.
+    */
+  def tokensRegex(c: Column): Column =
     filter(split(c, s"$WsClass+"), t => length(t) > 0)
 
   /** Faithful-mode predicate (reference quirk Q1, `reducer.py:28`): only

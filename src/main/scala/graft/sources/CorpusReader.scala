@@ -23,15 +23,15 @@ object CorpusReader {
   }
 
   /** The base name of the file a row was read from, as the file system
-    * spells it. `input_file_name()` is the file's URI, whose path
-    * percent-encodes (`my doc.txt` → `my%20doc.txt`, `a%41b.txt` →
-    * `a%2541b.txt`); `url_decode` reverses that, but also reads `+` as a
+    * spells it. The file source fills `_metadata.file_name` once per file
+    * (no per-row path parsing); it is the base name of the file's URI,
+    * which percent-encodes (`my doc.txt` → `my%20doc.txt`, `a%41b.txt` →
+    * `a%2541b.txt`). `url_decode` reverses that, but also reads `+` as a
     * space, so `+` is escaped first. The batch and the streaming corpus
     * readers name documents here.
     */
   private[graft] def docName: Column =
-    url_decode(regexp_replace(regexp_extract(input_file_name(), "([^/]+)$", 1),
-      "\\+", "%2B"))
+    url_decode(replace(col("_metadata.file_name"), lit("+"), lit("%2B")))
 
   /** Fail, naming the file, when a local corpus directory lists a name
     * that does not stat. Hadoop's local listing decodes names with the
@@ -39,9 +39,11 @@ object CorpusReader {
     * start-up); under a non-UTF-8 locale a UTF-8 name such as `café.txt`
     * decodes to a string that no longer names the file, and the listing
     * skips it without a word — the corpus would lose a document. Hidden
-    * names (`.`/`_`), which Spark skips anyway, are not checked.
+    * names (`.`/`_`), which Spark skips anyway, are not checked. The
+    * file-arrival streams of [[graft.Engine]] run it on every trigger, so
+    * a file that arrives later is caught too.
     */
-  private def requireListable(spark: SparkSession, dir: String): Unit =
+  private[graft] def requireListable(spark: SparkSession, dir: String): Unit =
     if (Sinks.fileSystem(spark, dir).getScheme == "file") {
       def check(d: java.io.File): Unit =
         Option(d.list()).getOrElse(Array.empty[String])

@@ -181,10 +181,11 @@ object Sinks {
       path: String): Boolean =
     readSidecar(fs, path, KeyOrderSidecar).contains(BinaryKeyOrder)
 
-  /** The read schema [[sortedSingleFileJson]] recorded in its
-    * `_graft_schema` sidecar; None for results published without one.
+  /** The read schema a sink recorded in its `_graft_schema` sidecar — the
+    * JSON one of [[sortedSingleFileJson]] or the parquet one of
+    * [[mergeIntoKeyedParquet]]; None for results published without one.
     */
-  private[graft] def readJsonSchema(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def readSchema(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Option[org.apache.spark.sql.types.StructType] =
     readSidecar(fs, path, SchemaSidecar).map(org.apache.spark.sql.types.DataType.fromJson(_)
       .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -338,7 +339,7 @@ object Sinks {
   private[graft] def readKeyedParquet(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String): DataFrame = {
     val m = keyedManifest(spark, fs, path)
-    newestWins(fs, path, readLevels(spark, path, m.dirs.values.flatten.toSeq),
+    newestWins(fs, path, readLevels(spark, fs, path, m.dirs.values.flatten.toSeq),
       m.dirs.values.exists(_.size > 1))
   }
 
@@ -364,7 +365,7 @@ object Sinks {
         StructType(Seq(StructField(key, StringType))))
       .select(keyBucket(col(key), m.buckets)).head().getInt(0)
     val levels = m.dirs.getOrElse(bucket, Seq(m.dirs.values.head.last))
-    val df = readLevels(spark, path, levels)
+    val df = readLevels(spark, fs, path, levels)
     if (!df.schema.exists(f => f.name == key && f.dataType == StringType)) None
     else Some(newestWins(fs, path, df, levels.size > 1).filter(col(key) === term))
   }
@@ -414,8 +415,8 @@ object Sinks {
     */
   def readKeyedParquetKeySet(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val m = keyedManifest(spark, fileSystem(spark, path), path)
-    readLevels(spark, path, m.dirs.values.flatten.toSeq)
+    val fs = fileSystem(spark, path)
+    readLevels(spark, fs, path, keyedManifest(spark, fs, path).dirs.values.flatten.toSeq)
   }
 
   /** Whether `path` is a manifest-published keyed table. */
@@ -435,9 +436,29 @@ object Sinks {
       throw new java.io.FileNotFoundException(s"no manifest under $path"))
   }
 
-  private def readLevels(spark: org.apache.spark.sql.SparkSession, path: String,
-      dirs: Seq[String]): DataFrame =
-    spark.read.parquet(dirs.sorted.map(d => s"$path/$d"): _*)
+  /** The rows of some level directories of a keyed table, read with the
+    * schema the first merge recorded in `_graft_schema`, so planning reads
+    * no parquet footer (a Spark job); a table without the sidecar is read
+    * by inference.
+    */
+  private def readLevels(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, dirs: Seq[String]): DataFrame =
+    readSchema(fs, path).fold(spark.read)(spark.read.schema)
+      .parquet(dirs.sorted.map(d => s"$path/$d"): _*)
+
+  /** The schema a parquet read of rows of type `t` has: Spark writes every
+    * field, element and value nullable (the parquet reader reads them so).
+    */
+  private def nullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case other => other
+    }
+  }
 
   /** The bucket of a keyed table a row with key `key` belongs to. The
     * merge writes by it and [[readKeyedTerm]] finds a term's bucket by it,
@@ -619,9 +640,12 @@ object Sinks {
       statCompactionSec = (System.nanoTime() - tCompact0) / 1e9
     }
     if (current.isEmpty) {
-      // same sidecar the JSON sink writes, so Engine.lookup resolves the
-      // key column of a parquet result too (underscore = invisible to scans)
+      // same sidecars the JSON sink writes, so Engine.lookup resolves the
+      // key column of a parquet result too, and readers skip the footer
+      // read of schema inference (underscore = invisible to scans); the
+      // first batch fixes the table's schema
       writeSidecar(fs, path, KeySidecar, keyCol)
+      writeSidecar(fs, path, SchemaSidecar, nullable(batch.schema).json)
     }
     Manifest.commit(fs, path, Manifest(gen, nBkt, newDirs, retiredNow))
     // Scan-based GC, not a retired-list walk: everything in the root that

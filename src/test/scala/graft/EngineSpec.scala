@@ -447,7 +447,7 @@ class EngineSpec extends AnyFunSuite {
   /** What the filter over the whole file finds — the fallback path. */
   private def filtered(out: String, term: String, keyCol: String = "k") = {
     val fs = graft.sources.Sinks.fileSystem(spark, out)
-    val read = graft.sources.Sinks.readJsonSchema(fs, out)
+    val read = graft.sources.Sinks.readSchema(fs, out)
       .map(spark.read.schema(_).json(out)).getOrElse(spark.read.json(out))
     val df = read.filter(col(keyCol) === term)
     (df.schema, df.collect().toSeq)
@@ -571,6 +571,33 @@ class EngineSpec extends AnyFunSuite {
     for (k <- Seq("x", "y", "z") ++ (0 until 20).map(i => s"miss$i"))
       assert(Engine.lookup(spark, sparse, k).collect().toSeq ==
         Sinks.readKeyedParquet(spark, sparse).filter(col("k") === k).collect().toSeq, k)
+  }
+
+  test("a keyed lookup reads with the recorded schema: one Spark job, the filter's rows") {
+    import graft.sources.Sinks
+    val path = Files.createTempDirectory("graft-keyed").toString + "/typed"
+    Sinks.mergeIntoKeyedParquet(spark.range(300).select(
+      concat(lit("key"), col("id")).as("k"), col("id").as("n"), (col("id") / 7.0).as("x"),
+      array(col("id").cast("string"), lit(null).cast("string")).as("a"),
+      struct(col("id").cast("int").as("i"), lit(null).cast("string").as("s")).as("st"),
+      map(lit("m"), col("id")).as("mp"), col("id").cast("decimal(12,2)").as("d"),
+      timestamp_seconds(col("id")).as("ts"), (col("id") % 2 === 0).as("b")), "k", path)
+    val fs = Sinks.fileSystem(spark, path)
+    val levels = Sinks.Manifest.latest(fs, path).get.dirs.values.flatten.toSeq.sorted
+    val inferred = spark.read.parquet(levels.map(d => s"$path/$d"): _*)
+    assert(Sinks.readKeyedParquet(spark, path).schema == inferred.schema)
+    for (k <- Seq("key7", "key250", "absent")) {
+      val (rows, jobs) = jobsOf(Engine.lookup(spark, path, k).collect())
+      assert(jobs == 1, s"a keyed lookup of $k ran $jobs jobs")
+      assert(rows.toSeq ==
+        Sinks.readKeyedParquet(spark, path).filter(col("k") === k).collect().toSeq, k)
+      assert(rows.toSeq == inferred.filter(col("k") === k).collect().toSeq, k)
+    }
+    // a table published without the sidecar reads by inference
+    Files.delete(Path.of(path, "_graft_schema"))
+    assert(Sinks.readKeyedParquet(spark, path).schema == inferred.schema)
+    assert(Engine.lookup(spark, path, "key7").collect().toSeq ==
+      inferred.filter(col("k") === "key7").collect().toSeq)
   }
 
   test("doc names are the file names, not their URI encoding") {

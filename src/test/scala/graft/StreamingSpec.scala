@@ -153,6 +153,38 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("a file arriving with a name the locale cannot decode is read or fails the stream, never dropped") {
+    for ((mode, start) <- Seq[(String, JobConfig => org.apache.spark.sql.streaming.StreamingQuery)](
+        "complete" -> (Engine.runStream(spark, _)),
+        "incremental" -> (Engine.runStreamIncremental(spark, _)))) {
+      val dir = Files.createTempDirectory("graft-stream-locale")
+      Files.writeString(dir.resolve("plain.txt"), "hello\n")
+      val out = Files.createTempDirectory("graft-stream-out").toString + "/wc"
+      val q = start(JobConfig("wordcount", dir.toString, out))
+      try {
+        q.processAllAvailable()
+        // Java cannot name café.txt under a non-UTF-8 file-name encoding,
+        // so the shell writes it from its UTF-8 bytes; a plain file lands
+        // after it, so a trigger runs even where the listing skips café.txt
+        val sh = new ProcessBuilder("sh", "-c",
+          """printf 'hello cafe\n' > "$1/$(printf 'caf\303\251.txt')"""", "sh", dir.toString)
+          .redirectErrorStream(true).start()
+        assert(sh.waitFor() == 0, new String(sh.getInputStream.readAllBytes(), "UTF-8"))
+        Files.writeString(dir.resolve("later.txt"), "hello\n")
+        scala.util.Try(q.processAllAvailable()) match {
+          case scala.util.Success(_) =>
+            assert(Engine.lookup(spark, out, "hello").head().getAs[Long]("count") == 3L, mode)
+            assert(Engine.lookup(spark, out, "cafe").head().getAs[Long]("count") == 1L, mode)
+          case scala.util.Failure(e) =>
+            val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+              .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+            assert(msg.contains("caf") && msg.contains("sun.jnu.encoding="), s"$mode: $msg")
+            assert(System.getProperty("sun.jnu.encoding") != "UTF-8", s"$mode: $msg")
+        }
+      } finally q.stop()
+    }
+  }
+
   test("incremental streaming merge: delta-only emission, batch-equal result, restartable") {
     val dir = Files.createTempDirectory("graft-inc-stream")
     val out = Files.createTempDirectory("graft-inc-out").toString + "/result"
