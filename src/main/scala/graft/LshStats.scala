@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * noise" (they don't).
   *
   * Every stage COMPOSES the operators' own factored machinery —
-  * `DedupQueries.{shingleTable,chunkRepShingles,minhashBands,
-  * bucketCounts,hotBuckets,dropHot,minhashCandidateJoin,estJaccard}` and
-  * `SimilarityQueries.{signTables,bucketCounts,hotBuckets,dropHot,
-  * lshCandidateJoin}` — so the probe cannot desynchronize from the
+  * `DedupQueries.{shingleTable,chunkReps,repShingles,minhashBands,
+  * minhashCandidateJoin,estJaccard}`, the one hot-bucket cap
+  * `DedupQueries.{MaxBucket,bucketCounts,hotBuckets,dropHot}`, and
+  * `SimilarityQueries.{kmeansAssign,signTables,lshCandidateJoin}` —
+  * so the probe cannot desynchronize from the
   * operator it measures: a cap-policy or gate change lands here by
   * construction. The only local additions are the localCheckpoints
   * between stages (count each stage off one materialization).
@@ -121,7 +122,7 @@ object LshStats {
         .transform(graft.operators.Checkpoints.fresh)
       val mx = sizes.agg(coalesce(max("n"), lit(0L))).head().getLong(0)
       val mn = sizes.agg(coalesce(min("n"), lit(0L))).head().getLong(0)
-      val hot = sizes.filter(col("n") > DQ.MaxBucket).count()
+      val hot = DQ.hotBuckets(sizes, Seq("cluster")).count()
       // emitted_pairs exercises the operator end-to-end: the r9 fixed-K
       // geometry emitted ZERO pairs at sf0.1 (all cells hot) — the
       // derived-K claim is only proven by a non-zero count here
@@ -141,11 +142,11 @@ object LshStats {
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))
       val tabs = SQ.signTables(e).transform(graft.operators.Checkpoints.fresh)
-      val hotFull = SQ.bucketCounts(tabs, probeKeys).transform(graft.operators.Checkpoints.fresh)
-      val hot = SQ.hotBuckets(hotFull, probeKeys)
-      val cold = SQ.dropHot(tabs, hot, probeKeys).transform(graft.operators.Checkpoints.fresh)
+      val hotFull = DQ.bucketCounts(tabs, probeKeys).transform(graft.operators.Checkpoints.fresh)
+      val hot = DQ.hotBuckets(hotFull, probeKeys)
+      val cold = DQ.dropHot(tabs, hot, probeKeys).transform(graft.operators.Checkpoints.fresh)
       val cand = SQ.lshCandidateJoin(cold, probeKeys)
-      val maxCold = hotFull.filter(col("n") <= SQ.MaxBucket)
+      val maxCold = hotFull.filter(col("n") <= DQ.MaxBucket)
         .agg(coalesce(max("n"), lit(0L))).head().getLong(0)
       println(s"""{"query":"ann_lsh_multiprobe","sf":"$sfDir"""" +
         s""","band_rows":${tabs.count()},"buckets":${hotFull.count()}""" +

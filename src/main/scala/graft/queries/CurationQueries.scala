@@ -127,10 +127,6 @@ object CurationQueries {
   // below is the bucket count.
   private val DsirHashChars = 4
   private val DsirBuckets = 1L << (4 * DsirHashChars)
-  // fuzzy decontamination's LSH band-bucket cap IS DedupQueries.MaxBucket
-  // (shared constant + shared hotBuckets/dropHot stages — a local copy
-  // could drift from the machinery it parameterizes)
-  private def MaxBucket = DedupQueries.MaxBucket
 
   /** corpus_mix per-source resampling: (sources, base copies, extra-copy
     * md5-prefix threshold). Lexicographic compare of the first 4 md5 hex
@@ -695,11 +691,12 @@ object CurationQueries {
     // docs unflagged — the query's own motivating case (the dedup
     // family's "hot = already caught by dedup_exact" recall argument
     // does not transfer: dedup_exact flags nothing as contaminated).
-    // Capping test-side membership at [[MaxBucket]] still bounds every
-    // bucket's join output to MaxBucket × its train rows — linear in
-    // the corpus, matching the flag-every-train-copy semantics — and a
-    // held-out bucket that hot means the BENCHMARK contains 100+
-    // near-identical docs, which its own dedup should have removed.
+    // Capping test-side membership at [[DedupQueries.MaxBucket]] still
+    // bounds every bucket's join output to MaxBucket × its train rows —
+    // linear in the corpus, matching the flag-every-train-copy
+    // semantics — and a held-out bucket that hot means the BENCHMARK
+    // contains 100+ near-identical docs, which its own dedup should have
+    // removed.
     // Both sides are signature-distinct per doc so each surviving
     // (train, test) pair appears at most [[FuzzyK]]/2 times before the
     // pair-dedup. The split is sample_split's deterministic md5 rule —
@@ -1417,12 +1414,12 @@ object CurationQueries {
            |  unnest(${shinglesNSql("t", 3)}) AS sh
            |FROM (SELECT doc_id, ${tokensSql(cleanLineSql("text"))} AS t FROM documents)""".stripMargin
       s"""WITH sh0 AS ($sh0),
-         |sigs AS (SELECT doc_id, bucket, ${DedupQueries.minhashMinsSql(FuzzyK)}
+         |sigs AS (SELECT doc_id, bucket, ${DedupQueries.minhashMinsSql("sh", FuzzyK)}
          |         FROM sh0 GROUP BY doc_id, bucket),
          |bands AS (SELECT *, ${DedupQueries.minhashBvalCaseSql(FuzzyK)} AS bval
          |          FROM sigs, (SELECT unnest(range(${FuzzyK / 2})) AS band)),
          |hot AS (SELECT band, bval FROM bands WHERE bucket >= 'cd'
-         |        GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
+         |        GROUP BY 1, 2 HAVING count(*) > ${DedupQueries.MaxBucket}),
          |cold AS (SELECT * FROM bands bd
          |         WHERE NOT EXISTS (SELECT 1 FROM hot h
          |                           WHERE h.band = bd.band AND h.bval = bd.bval)),

@@ -90,12 +90,13 @@ object DedupQueries {
   // duplicates at ~0.95+ — the constant is the operator's single knob.
   private[graft] val SemTau = 0.3
 
-  // ===== shared cap/candidate stages =====
-  // Every capped bucket space in this file (and decontaminate_fuzzy's,
-  // and graft.LshStats' probes) composes these three stages rather than
-  // re-spelling them: a probe or sibling operator with its own copy of
-  // the count/filter/anti-join would silently desynchronize the first
-  // time the cap policy changes.
+  // ===== the one hot-bucket cap =====
+  // [[MaxBucket]] and these stages are the only spelling of the cap in
+  // the program: every capped bucket space here, SimilarityQueries' sign
+  // buckets, CurationQueries' directional decontamination caps, the
+  // incremental-dedup stream's history probe and graft.LshStats' probes
+  // compose them. A consumer with its own count/filter/anti-join would
+  // silently desynchronize the first time the cap policy changes.
 
   /** Per-bucket membership counts of a band/bucket frame over `keys`. */
   private[graft] def bucketCounts(rows: DataFrame, keys: Seq[String]): DataFrame =
@@ -169,13 +170,18 @@ object DedupQueries {
     * the post-canon recall tier signs the canonical corpus with the SAME
     * computation ([[shinglesOf]]' rationale).
     */
-  private def shingleSigsOf(sh: DataFrame): DataFrame = {
-    val mins = (0 until K).map(i =>
-      min(md5(concat(lit(s"$i:"), col("sh")))).as(s"h$i"))
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        md5(concat_ws("|", (0 until K).map(i => col(s"h$i")): _*)).as("ssig"))
-  }
+  private def shingleSigsOf(sh: DataFrame): DataFrame =
+    minhashSigs(sh, Seq("doc_id"), "sh", K)
+      .select(col("doc_id"), signature(K).as("ssig"))
+
+  /** Same-signature pair count of a (doc_id, ssig) frame as one row,
+    * one column `as`: a group of g docs holds g(g-1)/2 pairs, summed in
+    * exact integer arithmetic, never materialized.
+    */
+  private def sigPairCount(sig: DataFrame, as: String): DataFrame =
+    sig.groupBy("ssig").agg(count(lit(1)).as("g"))
+      .agg(coalesce(sum(col("g") * (col("g") - lit(1))), lit(0L)).as("t"))
+      .select(expr("t div 2").as(as))
 
   /** Distinct (doc_id, token) pairs (isNotNull: see [[shingleTable]]). */
   private def tokenTable(s: SparkSession, dir: String): DataFrame =
@@ -261,8 +267,26 @@ object DedupQueries {
           graft.operators.Checkpoints.corpusScaled(simhashTable(s, dir)))))
     }
 
+  /** The minhash signature: one row per `keys` group of `rows` with
+    * h_i = min(md5('<i>:' || x)), i < k. Its only Spark spelling —
+    * [[minhashBands]] bands it, [[signature]] collapses it — mirrored in
+    * SQL by [[minhashMinsSql]], so a change of hash domain is one edit.
+    */
+  private[graft] def minhashSigs(rows: DataFrame, keys: Seq[String], x: String,
+      k: Int): DataFrame = {
+    val mins = (0 until k).map(i =>
+      min(md5(concat(lit(s"$i:"), col(x)))).as(s"h$i"))
+    rows.groupBy(keys.head, keys.tail: _*).agg(mins.head, mins.tail: _*)
+  }
+
+  /** The full k-min signature of a [[minhashSigs]] frame as one grouping
+    * key: md5 of h0..h{k-1} joined by '|' ([[signatureSql]] mirrors it).
+    */
+  private def signature(k: Int): Column =
+    md5(concat_ws("|", (0 until k).map(i => col(s"h$i")): _*))
+
   /** UNCAPPED MinHash-LSH band rows over a distinct (doc_id, <carry...>,
-    * sh) shingle frame: per-doc k-min signatures h0..h{k-1}, then one row
+    * sh) shingle frame: per-doc [[minhashSigs]] h0..h{k-1}, then one row
     * per (doc, band) with `bval` = md5 of the band's two signature
     * halves. Carry columns ride along (e.g. decontaminate_fuzzy's split
     * bucket). Callers apply their own hot-bucket cap — the candidate
@@ -272,9 +296,7 @@ object DedupQueries {
     * only the held-out side).
     */
   private[graft] def minhashBands(sh: DataFrame, carry: Seq[String], k: Int): DataFrame = {
-    val mins = (0 until k).map(i =>
-      min(md5(concat(lit(s"$i:"), col("sh")))).as(s"h$i"))
-    val sigs = sh.groupBy("doc_id", carry: _*).agg(mins.head, mins.tail: _*)
+    val sigs = minhashSigs(sh, "doc_id" +: carry, "sh", k)
     sigs.select(
       (col("doc_id") +: carry.map(col) ++: (0 until k).map(i => col(s"h$i"))) :+
         posexplode(array((0 until k / 2).map(b =>
@@ -286,12 +308,14 @@ object DedupQueries {
       .filter(col("bval").isNotNull)
   }
 
-  /** Oracle fragments mirroring [[minhashBands]] (shared with
-    * CurationQueries so the Spark side and its DuckDB mirror cannot
-    * drift independently).
+  /** Oracle fragments mirroring [[minhashSigs]], [[signature]] and
+    * [[minhashBands]] (shared with CurationQueries so the Spark side and
+    * its DuckDB mirror cannot drift independently).
     */
-  private[queries] def minhashMinsSql(k: Int): String =
-    (0 until k).map(i => s"min(md5('$i:' || sh)) AS h$i").mkString(", ")
+  private[queries] def minhashMinsSql(x: String, k: Int): String =
+    (0 until k).map(i => s"min(md5('$i:' || $x)) AS h$i").mkString(", ")
+  private[queries] def signatureSql(k: Int): String =
+    "md5(" + (0 until k).map(i => s"h$i").mkString(" || '|' || ") + ")"
   private[queries] def minhashBvalCaseSql(k: Int): String =
     "CASE band " + (0 until k / 2 - 1).map(b =>
       s"WHEN $b THEN md5(h${2 * b} || h${2 * b + 1})").mkString(" ") +
@@ -962,13 +986,8 @@ object DedupQueries {
 
     // ---- MinHash (k=8, md5-derived) signature-group dedup ----
     "dedup_minhash" -> ((s, dir) => {
-      val mins = (0 until K).map(i =>
-        min(md5(concat(lit(s"$i:"), col("w")))).as(s"h$i"))
-      val sig = tokenTable(s, dir)
-        .groupBy("doc_id")
-        .agg(mins.head, mins.tail: _*)
-        .select(col("doc_id"),
-          md5(concat_ws("|", (0 until K).map(i => col(s"h$i")): _*)).as("sig"))
+      val sig = minhashSigs(tokenTable(s, dir), Seq("doc_id"), "w", K)
+        .select(col("doc_id"), signature(K).as("sig"))
       val w = Window.partitionBy(col("sig"))
       sig.select(col("doc_id"), col("sig"),
           min(col("doc_id")).over(w).as("canon_id"),
@@ -1454,9 +1473,7 @@ object DedupQueries {
       }
       val sig = graft.operators.Checkpoints.retire(
         graft.operators.Checkpoints.corpusScaled(shingleSigs(s, dir)))
-      val nSig = sig.groupBy("ssig").agg(count(lit(1)).as("g"))
-        .agg(coalesce(sum(col("g") * (col("g") - lit(1))), lit(0L)).as("t"))
-        .select(expr("t div 2").as("n_sig"))
+      val nSig = sigPairCount(sig, "n_sig")
       val nLsh = lsh.agg(count(lit(1)).as("n_lsh"))
       val s1 = sig.select(col("doc_id").as("d1"), col("ssig").as("s1"))
       val s2 = sig.select(col("doc_id").as("d2"), col("ssig").as("s2"))
@@ -1529,9 +1546,7 @@ object DedupQueries {
       }
       val sig = graft.operators.Checkpoints.retire(
         graft.operators.Checkpoints.corpusScaled(shingleSigsOf(sh0)))
-      val nSig = sig.groupBy("ssig").agg(count(lit(1)).as("g"))
-        .agg(coalesce(sum(col("g") * (col("g") - lit(1))), lit(0L)).as("t"))
-        .select(expr("t div 2").as("n_cand"))
+      val nSig = sigPairCount(sig, "n_cand")
       val sHit = truth
         .join(sig.select(col("doc_id").as("d1"), col("ssig").as("s1")), Seq("d1"))
         .join(sig.select(col("doc_id").as("d2"), col("ssig").as("s2")), Seq("d2"))
@@ -1781,7 +1796,7 @@ object DedupQueries {
        |                       AND c.chunk_id = g2.canon_chunk),
        |sh0 AS (SELECT DISTINCT doc_id, chunk_id, unnest(${shinglesNSql("tv", 3)}) AS sh
        |  FROM (SELECT doc_id, chunk_id, ${tokensSql("chunk")} AS tv FROM reps)),
-       |sigs AS (SELECT doc_id, chunk_id, ${minhashMinsSql(K)}
+       |sigs AS (SELECT doc_id, chunk_id, ${minhashMinsSql("sh", K)}
        |         FROM sh0 GROUP BY doc_id, chunk_id),
        |bands AS (SELECT *, ${minhashBvalCaseSql(K)} AS bval
        |          FROM sigs, (SELECT unnest(range(${K / 2})) AS band)),
@@ -1877,17 +1892,14 @@ object DedupQueries {
         |  CAST(COUNT(*) OVER (PARTITION BY md5(text)) AS BIGINT) AS n_copies
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    "dedup_minhash" -> {
-      val mins = (0 until K).map(i => s"min(md5('$i:' || w)) AS h$i").mkString(", ")
-      val sigExpr = (0 until K).map(i => s"h$i").mkString(" || '|' || ")
+    "dedup_minhash" ->
       s"""WITH sigs AS (
-         |  SELECT doc_id, md5($sigExpr) AS sig FROM (
-         |    SELECT doc_id, $mins FROM ($tokSqlRel) GROUP BY doc_id))
+         |  SELECT doc_id, ${signatureSql(K)} AS sig FROM (
+         |    SELECT doc_id, ${minhashMinsSql("w", K)} FROM ($tokSqlRel) GROUP BY doc_id))
          |SELECT doc_id, sig,
          |  MIN(doc_id) OVER (PARTITION BY sig) AS canon_id,
          |  CAST(COUNT(*) OVER (PARTITION BY sig) AS BIGINT) AS group_size
-         |FROM sigs ORDER BY doc_id""".stripMargin
-    },
+         |FROM sigs ORDER BY doc_id""".stripMargin,
 
     "dedup_minhash_lsh" -> {
       // Exploded (band, bval) form — the same buckets as Spark's
@@ -1896,7 +1908,7 @@ object DedupQueries {
       // oracle. Fragments shared with decontaminate_fuzzy's oracle via
       // the minhash*Sql builders.
       val matches = minhashMatchesSql(K)
-      s"""WITH sigs AS (SELECT doc_id, ${minhashMinsSql(K)}
+      s"""WITH sigs AS (SELECT doc_id, ${minhashMinsSql("sh", K)}
          |              FROM ($shSqlRel) GROUP BY doc_id),
          |bands AS (SELECT *, ${minhashBvalCaseSql(K)} AS bval
          |          FROM sigs, (SELECT unnest(range(${K / 2})) AS band)),
@@ -2127,7 +2139,6 @@ object DedupQueries {
     }.mkString(",\n")
     // the LSH tier's CTE doubles as the union row's pair set
     val tl = s"t${dedupRecallTiers.indexOf("dedup_minhash_lsh")}"
-    val sigConcat = (0 until K).map(i => s"h$i").mkString(" || '|' || ")
     val rows = (dedupRecallTiers.zipWithIndex.map { case (n, i) =>
       s"""SELECT '$n' AS method,
          |  CAST((SELECT COUNT(*) FROM t$i) AS BIGINT) AS n_cand,
@@ -2141,8 +2152,8 @@ object DedupQueries {
       .mkString("\nUNION ALL\n")
     s"""WITH tr AS (SELECT d1, d2 FROM (${oraclesBase("dedup_ngram_jaccard")}) x),
        |$ctes,
-       |sg AS (SELECT doc_id, md5($sigConcat) AS ssig
-       |       FROM (SELECT doc_id, ${minhashMinsSql(K)}
+       |sg AS (SELECT doc_id, ${signatureSql(K)} AS ssig
+       |       FROM (SELECT doc_id, ${minhashMinsSql("sh", K)}
        |             FROM ($shSqlRel) GROUP BY doc_id)),
        |nsp AS (SELECT CAST(COALESCE(SUM(g * (g - 1)), 0) // 2 AS BIGINT) AS n_sig
        |        FROM (SELECT count(*) AS g FROM sg GROUP BY ssig)),
@@ -2173,7 +2184,6 @@ object DedupQueries {
     // multiplicatively (measured: 10+ min single-threaded at sf0.01
     // before the hints; seconds after) — the SQL twin of the Spark
     // side's checkpoint-the-shared-frame rule.
-    val sigConcat = (0 until K).map(i => s"h$i").mkString(" || '|' || ")
     s"""WITH RECURSIVE $canonicalCtes,
        |surv AS MATERIALIZED (SELECT d.doc_id FROM d JOIN canon c USING (cluster_id)
        |         WHERE d.doc_id = c.canon_id),
@@ -2192,7 +2202,7 @@ object DedupQueries {
        |          FROM cinter JOIN csz x ON d1 = x.doc_id
        |                      JOIN csz y ON d2 = y.doc_id)
        |        WHERE inter / (n1 + n2 - inter) >= 0.2),
-       |csigs AS MATERIALIZED (SELECT doc_id, ${minhashMinsSql(K)} FROM csh0 GROUP BY doc_id),
+       |csigs AS MATERIALIZED (SELECT doc_id, ${minhashMinsSql("sh", K)} FROM csh0 GROUP BY doc_id),
        |cbands AS (SELECT *, ${minhashBvalCaseSql(K)} AS bval
        |           FROM csigs, (SELECT unnest(range(${K / 2})) AS band)),
        |chotb AS (SELECT band, bval FROM cbands GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
@@ -2205,7 +2215,7 @@ object DedupQueries {
        |  FROM ccold a JOIN ccold b
        |    ON a.doc_id < b.doc_id AND a.band = b.band AND a.bval = b.bval)
        |  WHERE est_jaccard >= $MinEstJaccard),
-       |csg AS MATERIALIZED (SELECT doc_id, md5($sigConcat) AS ssig FROM csigs),
+       |csg AS MATERIALIZED (SELECT doc_id, ${signatureSql(K)} AS ssig FROM csigs),
        |ntr AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM ctr)
        |SELECT method, n_cand, n_hit, n_true,
        |  CASE WHEN n_cand > 0

@@ -26,21 +26,18 @@ object SimilarityQueries {
   private val TopK = 3
   private val NQueries = 8   // vec_id < 8 is the benchmark query set
   // 16 sign bits → 65,536 buckets. That space is FIXED, so per-bucket
-  // membership still grows ~n/2¹⁶ with the corpus — the cap below
-  // ([[MaxBucket]], broadcast anti-join before the self-join) is what
-  // actually bounds the quadratic term; the bit width only divides its
-  // constant. Recall trade: more bits = smaller buckets = more misses for
-  // near-neighbors that straddle a hyperplane; production would run several
-  // independent 16-bit tables (multi-probe) and union candidates — same
-  // plan shape, one more posexplode.
+  // membership still grows ~n/2¹⁶ with the corpus — the hot-bucket cap
+  // ([[DedupQueries.MaxBucket]], broadcast anti-join before the
+  // self-join) is what actually bounds the quadratic term; the bit width
+  // only divides its constant. A bucket that hot is a dense cluster of
+  // near-identical vectors (the dedup_exact/dedup_embedding regime, not
+  // the search regime). Recall trade: more bits = smaller buckets = more
+  // misses for near-neighbors that straddle a hyperplane; production
+  // would run several independent 16-bit tables (multi-probe) and union
+  // candidates — same plan shape, one more posexplode.
   // private[graft]: graft.LshStats counts this query's stages and must
   // read the REAL constants, not copies that can drift.
   private[graft] val LshBits = 16
-  // A sign bucket holding more vectors than this is dropped before the
-  // self-join: such buckets are dense clusters of near-identical vectors
-  // (the dedup_exact/dedup_embedding regime, not the search regime), and
-  // uncapped they are the one quadratic door in this plan at 100×.
-  private[graft] val MaxBucket = 100
   // Independent tables for ann_lsh_multiprobe: 4 disjoint 16-dim slices
   // of the 64-dim embedding, one sign table each.
   private[graft] val Probes = 4
@@ -75,7 +72,7 @@ object SimilarityQueries {
   // which the native [[graft.expressions.ArgMinDist2]] keeps codegen'd.
   private[graft] val KmMinK = 8
   private[graft] val KmMaxK = 4096
-  private[graft] val KmCell = MaxBucket / 2
+  private[graft] val KmCell = DedupQueries.MaxBucket / 2
   private[graft] def kmeansK(nVec: Long): Int =
     math.min(KmMaxK.toLong, math.max(KmMinK.toLong,
       (nVec + KmCell - 1) / KmCell)).toInt
@@ -100,31 +97,10 @@ object SimilarityQueries {
       .filter(col("vec_id").isNotNull)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
 
-  // ===== shared cap/candidate stages (DedupQueries' rule transposed) =====
-  // The sign-bucket cap and the within-bucket candidate join are factored
-  // so the operators AND graft.LshStats' probe compose the same code —
-  // a probe with its own spelling of the count/filter/anti-join would
-  // silently desynchronize the first time the cap policy changes.
-
-  /** Per-bucket membership counts over `keys` — DedupQueries' stage
-    * verbatim (it closes over no cap constant, so ONE spelling exists).
-    */
-  private[graft] def bucketCounts(rows: DataFrame, keys: Seq[String]): DataFrame =
-    DedupQueries.bucketCounts(rows, keys)
-
-  /** Keys of buckets over THIS module's [[MaxBucket]] cap — the one
-    * stage that can't delegate (it closes over the local constant).
-    */
-  private[graft] def hotBuckets(counts: DataFrame, keys: Seq[String]): DataFrame =
-    counts.filter(col("n") > MaxBucket).select(keys.map(col): _*)
-
-  /** Rows minus hot buckets — DedupQueries' anti-join stage verbatim. */
-  private[graft] def dropHot(rows: DataFrame, hot: DataFrame, keys: Seq[String]): DataFrame =
-    DedupQueries.dropHot(rows, hot, keys)
-
-  /** The capped bucket space in one step: count, find hot, anti-join. */
-  private[graft] def capBuckets(rows: DataFrame, keys: Seq[String]): DataFrame =
-    dropHot(rows, hotBuckets(bucketCounts(rows, keys), keys), keys)
+  // ===== candidate stage =====
+  // The sign-bucket cap is DedupQueries.capBuckets (the one cap); the
+  // within-bucket candidate join is factored here so the operators AND
+  // graft.LshStats' probe compose the same code.
 
   /** The within-bucket candidate self-join on `keys` (vec_id-distinct
     * pairs), sides aliased a/b.
@@ -1071,7 +1047,7 @@ object SimilarityQueries {
     "ann_lsh" -> ((s, dir) => {
       val e0 = vecs(s, dir).withColumn("bucket", signBucket(col("v"), LshBits))
         .filter(col("bucket").isNotNull) // align with the join's inferred filter
-      val e = capBuckets(e0, Seq("bucket"))
+      val e = DedupQueries.capBuckets(e0, Seq("bucket"))
       lshCandidateJoin(e, Seq("bucket"))
         .select(col("a.vec_id").as("vec_id"), col("a.bucket").as("bucket"),
           col("b.vec_id").as("nn_id"), cosine(col("a.v"), col("b.v")).as("sim"))
@@ -1096,7 +1072,7 @@ object SimilarityQueries {
       // (the simhashPairs rationale)
       val tabs = graft.operators.Checkpoints.retire(
         graft.operators.Checkpoints.corpusScaled(signTables(vecs(s, dir))))
-      val cold = capBuckets(tabs, Seq("tbl", "bucket"))
+      val cold = DedupQueries.capBuckets(tabs, Seq("tbl", "bucket"))
       lshCandidateJoin(cold, Seq("tbl", "bucket"))
         .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nn_id"),
           cosine(col("a.v"), col("b.v")).as("sim"))
@@ -1939,7 +1915,7 @@ object SimilarityQueries {
 
     "ann_lsh" ->
       s"""WITH e0 AS (SELECT vec_id, v, ${signBucketSql("v", LshBits)} AS bucket FROM ($eSql)),
-         |hot AS (SELECT bucket FROM e0 GROUP BY 1 HAVING count(*) > $MaxBucket),
+         |hot AS (SELECT bucket FROM e0 GROUP BY 1 HAVING count(*) > ${DedupQueries.MaxBucket}),
          |e AS (SELECT * FROM e0
          |      WHERE NOT EXISTS (SELECT 1 FROM hot h WHERE h.bucket = e0.bucket)),
          |pairs AS (
@@ -1957,7 +1933,7 @@ object SimilarityQueries {
       s"""WITH e AS ($eSql),
          |tabs AS (
          |  $tabArms),
-         |hot AS (SELECT tbl, bucket FROM tabs GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
+         |hot AS (SELECT tbl, bucket FROM tabs GROUP BY 1, 2 HAVING count(*) > ${DedupQueries.MaxBucket}),
          |cold AS (SELECT * FROM tabs tb
          |         WHERE NOT EXISTS (SELECT 1 FROM hot h
          |                           WHERE h.tbl = tb.tbl AND h.bucket = tb.bucket)),

@@ -57,14 +57,6 @@ object StreamingPipelines {
       faithful: Boolean = false): DataFrame =
     graft.OperationRegistry(operation)(corpusStream(spark, dir), faithful)
 
-  /** Streaming wordcount over a corpus directory (file-arrival source). */
-  def wordCountStream(spark: SparkSession, dir: String, faithful: Boolean = false): DataFrame = {
-    val words = corpusStream(spark, dir)
-      .select(explode(tokens(col("line"))).as("word"))
-    val kept = if (faithful) words.filter(azLeading(col("word"))) else words
-    kept.groupBy("word").agg(count(lit(1)).as("count"))
-  }
-
   /** Schema of the events table as a stream source, for a given physical
     * `ts` type (readStream demands a declared schema — no inference).
     */
@@ -160,11 +152,45 @@ object StreamingPipelines {
       .select(explode(shinglesN(tokens(cleanLine(col(textCol))), n)).as("ng"))
       .distinct()
 
-  /** Documents-shaped file-stream schema (the batch table's columns). */
-  private val documentsRawSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
+  /** A parquet file stream of `documents`-shaped rows (read with
+    * [[graft.sources.CorpusReader.DocumentsSchema]]) arriving in `inDir`,
+    * running `step` on every trigger — the launch both incremental
+    * dedup streams share.
+    */
+  private def startDocumentsStream(spark: SparkSession, inDir: String,
+      checkpoint: String, step: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    spark.readStream
+      .schema(graft.sources.CorpusReader.DocumentsSchema)
+      .option("maxFilesPerTrigger", 16)
+      .parquet(inDir)
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(step)
+      .start()
+
+  /** One row per doc_id of a trigger: its files may carry the same
+    * doc_id twice (a re-crawl with an edited page) and the keyed sink's
+    * contract is <= one row per key, so pick ONE deterministically
+    * (content-max, not dropDuplicates' arbitrary row).
+    */
+  private def onePerDoc(batch: DataFrame): DataFrame =
+    batch
+      .groupBy("doc_id")
+      .agg(max(struct(col("text"), col("lang"), col("source"),
+        col("n_chars"))).as("r"))
+      .select(col("doc_id"), col("r.text"), col("r.lang"),
+        col("r.source"), col("r.n_chars"))
+
+  /** Key-SET read of a history table, None before its first merge. No
+    * newest-wins resolution: both streams' histories are insert-only by
+    * construction — every key is anti-joined against the history before
+    * it is merged in — so the key set is exact and the resolved read's
+    * per-trigger aggregation would be a corpus-scale no-op.
+    */
+  private def historyKeys(s: SparkSession, path: String): Option[DataFrame] =
+    try Some(graft.sources.Sinks.readKeyedParquetKeySet(s, path))
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Incremental dedup of arriving crawl batches against the HISTORICAL
     * corpus — the production crawl loop: batch N+1's duplicates of
@@ -214,26 +240,9 @@ object StreamingPipelines {
       s"4 x 16-bit bands guarantee recall only for Hamming <= 3 (got $hamming)")
     val step: (DataFrame, Long) => Unit = (batch, _) => {
       import graft.queries.DedupQueries
-      val s = batch.sparkSession
-      // a trigger's files may carry the same doc_id twice (a re-crawl
-      // with an edited page) — the keyed sink's contract is ≤ one row
-      // per key, so pick ONE deterministically (content-max, not
-      // dropDuplicates' arbitrary row)
-      val b1 = batch
-        .groupBy("doc_id")
-        .agg(max(struct(col("text"), col("lang"), col("source"),
-          col("n_chars"))).as("r"))
-        .select(col("doc_id"), col("r.text"), col("r.lang"),
-          col("r.source"), col("r.n_chars"))
+      val b1 = onePerDoc(batch)
       val sigs = DedupQueries.simhashOf(b1)
-      // key-SET read (no newest-wins resolution): the history is
-      // insert-only by construction — every sig is anti-joined against
-      // it before it is ever merged in — so the key set is exact and
-      // the resolved read's per-trigger aggregation would be a
-      // corpus-scale no-op
-      val history =
-        try Some(graft.sources.Sinks.readKeyedParquetKeySet(s, historyPath))
-        catch { case _: java.io.FileNotFoundException => None }
+      val history = historyKeys(batch.sparkSession, historyPath)
       // within-batch, exact: one survivor per signature
       val canon0 = sigs.groupBy("sig").agg(min(col("doc_id")).as("doc_id"))
       // within-batch, near (hamming > 0): greedy keep-min over the band
@@ -266,10 +275,8 @@ object StreamingPipelines {
       // cross-batch, near: the banded probe on top, HISTORY side capped
       val fresh0 = history match {
         case Some(h) if hamming > 0 =>
-          val hb0 = DedupQueries.simhashBandRows(h)
-          val hot = hb0.groupBy("band", "bval").agg(count(lit(1)).as("n"))
-            .filter(col("n") > DedupQueries.MaxBucket).select("band", "bval")
-          val hb = hb0.join(broadcast(hot), Seq("band", "bval"), "left_anti")
+          val hb = DedupQueries.capBuckets(DedupQueries.simhashBandRows(h),
+            Seq("band", "bval"))
           val dupIds = DedupQueries.simhashBandRows(freshExact).as("a")
             .join(hb.as("b"),
               col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
@@ -289,14 +296,7 @@ object StreamingPipelines {
       // micro-batch for its whole life
       graft.operators.Checkpoints.free(fresh)
     }
-    spark.readStream
-      .schema(documentsRawSchema)
-      .option("maxFilesPerTrigger", 16)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
+    startDocumentsStream(spark, inDir, checkpoint, step)
   }
 
   /** Incremental dedup at CHUNK granularity — [[incrementalDedupStream]]'s
@@ -347,26 +347,14 @@ object StreamingPipelines {
       chunker: DataFrame => DataFrame = graft.queries.CurationQueries.chunksOf)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val step: (DataFrame, Long) => Unit = (batch, _) => {
-      val s = batch.sparkSession
-      // same-id rows in one trigger: pick ONE deterministically
-      // (content-max — the doc-level stream's rule)
-      val b1 = batch
-        .groupBy("doc_id")
-        .agg(max(struct(col("text"), col("lang"), col("source"),
-          col("n_chars"))).as("r"))
-        .select(col("doc_id"), col("r.text"), col("r.lang"),
-          col("r.source"), col("r.n_chars"))
+      val b1 = onePerDoc(batch)
       val chunks = chunker(b1)
         .select(col("doc_id"), col("chunk_id"), md5(col("chunk")).as("ch"))
       // within-batch keep-first: one canonical owner per chunk content
       val canon = chunks.groupBy("ch")
         .agg(min(struct(col("doc_id"), col("chunk_id"))).as("k"))
-      // key-set read: the chunk-hash history is insert-only (every ch is
-      // anti-joined before merge), so resolution is unnecessary
-      val history =
-        try Some(graft.sources.Sinks.readKeyedParquetKeySet(s, chunkHistoryPath)
-          .select(col("ch")))
-        catch { case _: java.io.FileNotFoundException => None }
+      val history = historyKeys(batch.sparkSession, chunkHistoryPath)
+        .map(_.select(col("ch")))
       // novel = batch-canonical AND not historical; owned by its canon doc.
       // materialize ONCE — both writes below consume it, and without the
       // checkpoint each would re-run the history-sized probe
@@ -385,14 +373,7 @@ object StreamingPipelines {
       // consumers are actions, the checkpoint is dead after the step
       graft.operators.Checkpoints.free(novel)
     }
-    spark.readStream
-      .schema(documentsRawSchema)
-      .option("maxFilesPerTrigger", 16)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(step)
-      .start()
+    startDocumentsStream(spark, inDir, checkpoint, step)
   }
 
   /** Per-user running totals across micro-batches via explicit custom state

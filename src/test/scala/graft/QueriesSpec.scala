@@ -1195,6 +1195,22 @@ class QueriesSpec extends AnyFunSuite {
       s"below the cap the identical-signature reps must all pair; got ${cold.toSeq}")
   }
 
+  test("the hot-bucket cap keeps a bucket of exactly MaxBucket rows and drops MaxBucket + 1") {
+    import spark.implicits._
+    // the one cap every LSH consumer composes (the self-joins, the
+    // directional decontamination caps, the vector LSH queries and the
+    // incremental stream's history probe): the cases above use buckets
+    // of 110 and 120 rows, so only this pins `>` against `>=`
+    val m = graft.queries.DedupQueries.MaxBucket
+    val rows = ((1 to m).map(i => (0, "at", i.toLong)) ++
+      (1 to m + 1).map(i => (0, "over", i.toLong)) ++
+      Seq((1, "over", 0L))).toDF("band", "bval", "id")
+    val kept = graft.queries.DedupQueries.capBuckets(rows, Seq("band", "bval"))
+      .groupBy("band", "bval").count()
+      .as[(Int, String, Long)].collect().toSet
+    assert(kept == Set((0, "at", m.toLong), (1, "over", 1L)), s"got $kept")
+  }
+
   test("text_dedup_spans removes corpus-wide repeated lines, keeping the first occurrence") {
     import spark.implicits._
     // A license block (two lines) shared by docs 0, 1 and 2 — the C4/Lee

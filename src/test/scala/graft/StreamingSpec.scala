@@ -47,7 +47,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-stream")
     Files.writeString(dir.resolve("f1.txt"), "alpha beta\nalpha\n")
 
-    val q = StreamingPipelines.wordCountStream(spark, dir.toString)
+    val q = StreamingPipelines.operationStream(spark, dir.toString, "wordcount")
       .writeStream.outputMode("complete")
       .format("memory").queryName("wc_stream")
       .trigger(Trigger.ProcessingTime(200))
@@ -103,7 +103,8 @@ class StreamingSpec extends AnyFunSuite {
   test("faithful streaming mode drops digit-leading tokens (quirk Q1)") {
     val dir = Files.createTempDirectory("graft-faithful-stream")
     Files.writeString(dir.resolve("f.txt"), "1st alpha 2nd beta\n")
-    val q = StreamingPipelines.wordCountStream(spark, dir.toString, faithful = true)
+    val q = StreamingPipelines.operationStream(spark, dir.toString, "wordcount",
+      faithful = true)
       .writeStream.outputMode("complete")
       .format("memory").queryName("wc_faithful_stream")
       .trigger(Trigger.ProcessingTime(200))
