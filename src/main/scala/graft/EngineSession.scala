@@ -13,12 +13,13 @@ import org.apache.spark.sql.SparkSession
 object EngineSession {
 
   /** Confs any session using this library's table loaders must carry.
+    *
     * `nanosAsLong`: the driver-generated `events.parquet` stores
     * TIMESTAMP(NANOS), which Spark otherwise refuses to read; with this
     * conf it surfaces as nanos-since-epoch LONG and [[Tables]] rebuilds a
     * proper TimestampType column (same ns→us truncation DuckDB applies).
-    */
-  /** `ansi.enabled=false`: Spark 4 defaults to ANSI mode, where x/0 and
+    *
+    * `ansi.enabled=false`: Spark 4 defaults to ANSI mode, where x/0 and
     * out-of-bounds element_at THROW; the DuckDB oracle (and classic Spark)
     * return NULL. A tokenless document would otherwise crash text_quality
     * (0/0), a single-row group agg_variance (n-1=0), and a zero-norm

@@ -1418,11 +1418,7 @@ object CurationQueries {
          |         FROM sh0 GROUP BY doc_id, bucket),
          |bands AS (SELECT *, ${DedupQueries.minhashBvalCaseSql(FuzzyK)} AS bval
          |          FROM sigs, (SELECT unnest(range(${FuzzyK / 2})) AS band)),
-         |hot AS (SELECT band, bval FROM bands WHERE bucket >= 'cd'
-         |        GROUP BY 1, 2 HAVING count(*) > ${DedupQueries.MaxBucket}),
-         |cold AS (SELECT * FROM bands bd
-         |         WHERE NOT EXISTS (SELECT 1 FROM hot h
-         |                           WHERE h.band = bd.band AND h.bval = bd.bval)),
+         |${DedupQueries.capBucketsSql("bands", Seq("band", "bval"), "hot", "cold", where = "bucket >= 'cd'")},
          |hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near_dups FROM (
          |  SELECT DISTINCT a.doc_id, b.doc_id AS src_id
          |  FROM cold a JOIN cold b
@@ -1446,10 +1442,7 @@ object CurationQueries {
          |    v, ${signBucketSql("v", DedupQueries.CellBits)} AS bkt
          |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
          |        WHERE vec_id IS NOT NULL)),
-         |hot AS (SELECT bkt FROM e0 WHERE bucket >= 'cd'
-         |        GROUP BY 1 HAVING count(*) > ${DedupQueries.MaxBucket}),
-         |e AS (SELECT * FROM e0
-         |      WHERE NOT EXISTS (SELECT 1 FROM hot h WHERE h.bkt = e0.bkt)),
+         |${DedupQueries.capBucketsSql("e0", Seq("bkt"), "hot", "e", where = "bucket >= 'cd'")},
          |hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sem_dups FROM (
          |  SELECT DISTINCT a.vec_id AS doc_id, b.vec_id AS src_id
          |  FROM e a JOIN e b

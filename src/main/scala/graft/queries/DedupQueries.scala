@@ -95,8 +95,10 @@ object DedupQueries {
   // the program: every capped bucket space here, SimilarityQueries' sign
   // buckets, CurationQueries' directional decontamination caps, the
   // incremental-dedup stream's history probe and graft.LshStats' probes
-  // compose them. A consumer with its own count/filter/anti-join would
-  // silently desynchronize the first time the cap policy changes.
+  // compose them, and every oracle composes [[capBucketsSql]] (the
+  // MaxShingleDf shingle caps included). A consumer with its own
+  // count/filter/anti-join would silently desynchronize the first time
+  // the cap policy changes.
 
   /** Per-bucket membership counts of a band/bucket frame over `keys`. */
   private[graft] def bucketCounts(rows: DataFrame, keys: Seq[String]): DataFrame =
@@ -113,6 +115,24 @@ object DedupQueries {
   /** The capped band space in one step: count, find hot, anti-join. */
   private[graft] def capBuckets(rows: DataFrame, keys: Seq[String]): DataFrame =
     dropHot(rows, hotBuckets(bucketCounts(rows, keys), keys), keys)
+
+  /** The SQL twin of the cap, as two CTEs: `hot` (the `keys` of `rel`'s
+    * buckets with more than `bound` rows — counting only rows matching
+    * `where` when given, the directional caps' held-out count) and `cold`
+    * (`rel` minus those buckets, a NOT EXISTS anti-join; `materialized`
+    * adds DuckDB's MATERIALIZED hint to it).
+    */
+  private[queries] def capBucketsSql(rel: String, keys: Seq[String], hot: String,
+      cold: String, bound: Int = MaxBucket, where: String = "",
+      materialized: Boolean = false): String = {
+    val ks = keys.mkString(", ")
+    val filter = if (where.isEmpty) "" else s" WHERE $where"
+    val hint = if (materialized) " MATERIALIZED" else ""
+    val eq = keys.map(k => s"$hot.$k = $rel.$k").mkString(" AND ")
+    s"""$hot AS (SELECT $ks FROM $rel$filter GROUP BY $ks HAVING count(*) > $bound),
+       |$cold AS$hint (SELECT * FROM $rel
+       |  WHERE NOT EXISTS (SELECT 1 FROM $hot WHERE $eq))""".stripMargin
+  }
 
   /** The minhash LSH candidate self-join on (band, bval) under a
     * caller-supplied pair-ordering predicate (doc-level `<`, or the
@@ -324,11 +344,6 @@ object DedupQueries {
     (0 until k).map(i =>
       s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
 
-  /** [[simhashPairs]] over a pre-computed (possibly checkpointed)
-    * signature table — lets `dedup_canonical` derive both the Hamming-1..3
-    * pairs and the Hamming-0 (same-signature) star edges from ONE
-    * materialized signature aggregation instead of running it twice.
-    */
   /** One row per (doc, 16-bit simhash band) of a (doc_id, sig LONG)
     * frame — THE band geometry of the simhash family, shared by
     * [[simhashPairsFrom]] and the incremental-dedup stream's history
@@ -342,6 +357,11 @@ object DedupQueries {
           shiftright(col("sig"), 16 * (Bands - 1 - b)).bitwiseAND(lit(0xFFFFL))): _*)))
       .toDF("doc_id", "sig", "band", "bval")
 
+  /** [[simhashPairs]] over a pre-computed (possibly checkpointed)
+    * signature table — lets `dedup_canonical` derive both the Hamming-1..3
+    * pairs and the Hamming-0 (same-signature) star edges from ONE
+    * materialized signature aggregation instead of running it twice.
+    */
   private def simhashPairsFrom(sigTable: DataFrame): DataFrame = {
     val bands = capBuckets(simhashBandRows(sigTable), Seq("band", "bval"))
     bands.as("a").join(bands.as("b"),
@@ -1657,10 +1677,7 @@ object DedupQueries {
        |bands AS (
        |  SELECT doc_id, simhash, band, substr(simhash, 1 + 16 * band, 16) AS bval
        |  FROM sigs, (SELECT unnest(range($Bands)) AS band)),
-       |hot AS (SELECT band, bval FROM bands GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
-       |cold AS (SELECT * FROM bands bd
-       |         WHERE NOT EXISTS (SELECT 1 FROM hot h
-       |                           WHERE h.band = bd.band AND h.bval = bd.bval)),
+       |${capBucketsSql("bands", Seq("band", "bval"), "hot", "cold")},
        |pairs AS (
        |  SELECT d1, d2, hamming FROM (
        |    SELECT DISTINCT a.doc_id d1, b.doc_id d2, CAST($ham AS INT) AS hamming
@@ -1714,9 +1731,7 @@ object DedupQueries {
     */
   private def winnowingPairsSql: String =
     s"""WITH f AS (${TextAnalysisQueries.winnowFpsSql}),
-       |hot AS (SELECT fp FROM f GROUP BY 1 HAVING count(*) > $MaxBucket),
-       |cold AS (SELECT * FROM f
-       |         WHERE NOT EXISTS (SELECT 1 FROM hot h WHERE h.fp = f.fp)),
+       |${capBucketsSql("f", Seq("fp"), "hot", "cold")},
        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_shared
        |      FROM cold a JOIN cold b ON a.fp = b.fp AND a.doc_id < b.doc_id
        |      GROUP BY 1, 2)
@@ -1739,9 +1754,7 @@ object DedupQueries {
   private lazy val kmSemanticPairsSql: String =
     s"""WITH ${SimilarityQueries.kmeansCtes},
        |ka AS (SELECT vec_id, v, cluster FROM ${SimilarityQueries.kmFinalAsg}),
-       |hot AS (SELECT cluster FROM ka GROUP BY 1 HAVING count(*) > $MaxBucket),
-       |ke AS (SELECT * FROM ka
-       |       WHERE NOT EXISTS (SELECT 1 FROM hot h WHERE h.cluster = ka.cluster)),
+       |${capBucketsSql("ka", Seq("cluster"), "hot", "ke")},
        |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
        |        ${cosineSql("a.v", "b.v")} AS sim
        |      FROM ke a JOIN ke b
@@ -1759,9 +1772,7 @@ object DedupQueries {
 
   private def rareShinglePairStatsSql: String =
     s"""sh0 AS ($shSqlRel),
-       |hot AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) > $MaxShingleDf),
-       |sh AS (SELECT doc_id, sh FROM sh0
-       |       WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.sh = sh0.sh)),
+       |${capBucketsSql("sh0", Seq("sh"), "hot", "sh", MaxShingleDf)},
        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
        |inter AS (SELECT a.doc_id d1, b.doc_id d2, count(*) AS inter
        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -1800,10 +1811,7 @@ object DedupQueries {
        |         FROM sh0 GROUP BY doc_id, chunk_id),
        |bands AS (SELECT *, ${minhashBvalCaseSql(K)} AS bval
        |          FROM sigs, (SELECT unnest(range(${K / 2})) AS band)),
-       |hot AS (SELECT band, bval FROM bands GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
-       |cold AS (SELECT * FROM bands bd
-       |         WHERE NOT EXISTS (SELECT 1 FROM hot h
-       |                           WHERE h.band = bd.band AND h.bval = bd.bval))
+       |${capBucketsSql("bands", Seq("band", "bval"), "hot", "cold")}
        |SELECT d1, c1, d2, c2, est_jaccard FROM (
        |  SELECT DISTINCT a.doc_id d1, a.chunk_id c1, b.doc_id d2, b.chunk_id c2,
        |    (${minhashMatchesSql(K)}) / ${K.toDouble} AS est_jaccard
@@ -1819,20 +1827,16 @@ object DedupQueries {
     * unlabeled form drops the label from the bucket key and the WHERE.
     */
   private def semanticPairsSql(labeled: Boolean): String = {
-    val (selCols, whereIds, hotKeys, hotEq, cellEq) =
+    val (selCols, whereIds, cellKeys) =
       if (labeled)
-        ("vec_id, label", "vec_id IS NOT NULL AND label IS NOT NULL",
-          "label, bkt", "h.label = e0.label AND h.bkt = e0.bkt",
-          "a.label = b.label AND a.bkt = b.bkt")
+        ("vec_id, label", "vec_id IS NOT NULL AND label IS NOT NULL", Seq("label", "bkt"))
       else
-        ("vec_id", "vec_id IS NOT NULL",
-          "bkt", "h.bkt = e0.bkt", "a.bkt = b.bkt")
+        ("vec_id", "vec_id IS NOT NULL", Seq("bkt"))
+    val cellEq = cellKeys.map(k => s"a.$k = b.$k").mkString(" AND ")
     s"""WITH e0 AS (SELECT $selCols, v, ${signBucketSql("v", CellBits)} AS bkt
        |            FROM (SELECT $selCols, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |                  WHERE $whereIds)),
-       |hot AS (SELECT $hotKeys FROM e0 GROUP BY ${if (labeled) "1, 2" else "1"} HAVING count(*) > $MaxBucket),
-       |e AS (SELECT * FROM e0
-       |      WHERE NOT EXISTS (SELECT 1 FROM hot h WHERE $hotEq)),
+       |${capBucketsSql("e0", cellKeys, "hot", "e")},
        |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
        |        ${cosineSql("a.v", "b.v")} AS sim
        |      FROM e a JOIN e b
@@ -1912,10 +1916,7 @@ object DedupQueries {
          |              FROM ($shSqlRel) GROUP BY doc_id),
          |bands AS (SELECT *, ${minhashBvalCaseSql(K)} AS bval
          |          FROM sigs, (SELECT unnest(range(${K / 2})) AS band)),
-         |hot AS (SELECT band, bval FROM bands GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
-         |cold AS (SELECT * FROM bands bd
-         |         WHERE NOT EXISTS (SELECT 1 FROM hot h
-         |                           WHERE h.band = bd.band AND h.bval = bd.bval))
+         |${capBucketsSql("bands", Seq("band", "bval"), "hot", "cold")}
          |SELECT d1, d2, est_jaccard FROM (
          |  SELECT DISTINCT a.doc_id d1, b.doc_id d2,
          |    ($matches) / ${K.toDouble} AS est_jaccard
@@ -2082,10 +2083,7 @@ object DedupQueries {
       s"""WITH e0 AS (SELECT vec_id, label, v, ${signBucketSql("v", CellBits)} AS bkt
          |            FROM (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
          |                  WHERE vec_id IS NOT NULL AND label IS NOT NULL)),
-         |hot AS (SELECT label, bkt FROM e0 GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
-         |e AS (SELECT * FROM e0
-         |      WHERE NOT EXISTS (SELECT 1 FROM hot h
-         |                        WHERE h.label = e0.label AND h.bkt = e0.bkt)),
+         |${capBucketsSql("e0", Seq("label", "bkt"), "hot", "e")},
          |sims AS (
          |  SELECT a.vec_id, a.label, b.vec_id AS nn_id,
          |    ${cosineSql("a.v", "b.v")} AS sim
@@ -2190,9 +2188,7 @@ object DedupQueries {
        |cdocs AS (SELECT dd.doc_id, dd.text FROM documents dd
        |          JOIN surv USING (doc_id)),
        |csh0 AS MATERIALIZED (${shSqlRelOf("cdocs")}),
-       |chot AS (SELECT sh FROM csh0 GROUP BY sh HAVING count(*) > $MaxShingleDf),
-       |csh AS MATERIALIZED (SELECT doc_id, sh FROM csh0
-       |        WHERE NOT EXISTS (SELECT 1 FROM chot WHERE chot.sh = csh0.sh)),
+       |${capBucketsSql("csh0", Seq("sh"), "chot", "csh", MaxShingleDf, materialized = true)},
        |csz AS (SELECT doc_id, count(*) AS n FROM csh GROUP BY doc_id),
        |cinter AS (SELECT a.doc_id d1, b.doc_id d2, count(*) AS inter
        |           FROM csh a JOIN csh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -2205,10 +2201,7 @@ object DedupQueries {
        |csigs AS MATERIALIZED (SELECT doc_id, ${minhashMinsSql("sh", K)} FROM csh0 GROUP BY doc_id),
        |cbands AS (SELECT *, ${minhashBvalCaseSql(K)} AS bval
        |           FROM csigs, (SELECT unnest(range(${K / 2})) AS band)),
-       |chotb AS (SELECT band, bval FROM cbands GROUP BY 1, 2 HAVING count(*) > $MaxBucket),
-       |ccold AS MATERIALIZED (SELECT * FROM cbands bd
-       |          WHERE NOT EXISTS (SELECT 1 FROM chotb h
-       |                            WHERE h.band = bd.band AND h.bval = bd.bval)),
+       |${capBucketsSql("cbands", Seq("band", "bval"), "chotb", "ccold", materialized = true)},
        |ccand AS MATERIALIZED (SELECT d1, d2 FROM (
        |  SELECT DISTINCT a.doc_id d1, b.doc_id d2,
        |    (${minhashMatchesSql(K)}) / ${K.toDouble} AS est_jaccard

@@ -176,6 +176,13 @@ object SimilarityQueries {
   }
 
   // ===== k-means (Lloyd's algorithm, the SemDeDup clustering stage) =====
+  // ONE spelling of Lloyd's for every quantizer here: the flat tier
+  // (embedding_kmeans, SemDeDup), the two-level quantizer's super and sub
+  // tiers (knn_join's cells) and the PQ codebooks. A tier is its KEY
+  // columns — the independent centroid sets trained side by side: none
+  // for flat/super, `scell` for the sub tier, `j` (subspace) for PQ —
+  // and its POINT column (`v`, or the PQ subvector `sv`). Centroid frames
+  // are (keys…, cid, c); [[lloydSql]] is the oracle's twin.
 
   /** Deterministic init: the `k` vectors with the smallest
     * (md5(vec_id), vec_id) — a pseudo-random but reproducible sample,
@@ -191,66 +198,90 @@ object SimilarityQueries {
       .select(col("cid"), col("v").as("c"))
   }
 
-  /** One Lloyd assignment pass with ZERO shuffle on the corpus side: the
-    * K centroids collapse to a single collect_list row (bounded by
-    * [[KmMaxK]]), broadcast, and the per-row argmin is codegen'd —
-    * array_sort on struct(d2, cid) is lexicographic, so ties on exact
-    * distance break toward the smaller cluster id, mirroring the
-    * oracle's `ORDER BY d2, cid`. The alternative (crossJoin + groupBy
-    * vec_id + join v back) costs two corpus-scale exchanges PER
-    * ITERATION; this costs none.
+  /** One keyed Lloyd assignment pass with ZERO shuffle on the point side:
+    * each key's centroids collapse to one collect_list row (the whole
+    * centroid frame is design-bounded — [[KmMaxK]], Ks·Ksub, PqM·PqK),
+    * broadcast, and the per-row argmin is the codegen'd native
+    * [[graft.expressions.ArgMinDist2]] — with K corpus-derived the HOF
+    * transform's interpreted K·dim lambda fold per row would be the
+    * pass's bottleneck (VectorFunctionsSpec pins the native kernel
+    * bit-equal to the `argMinDist2Hof` spelling). Ties on exact distance
+    * break toward the smaller cid (lexicographic (d2, cid)), mirroring
+    * the oracle's `ORDER BY d2, cid`. The alternative (crossJoin +
+    * groupBy vec_id + join v back) costs two corpus-scale exchanges PER
+    * ITERATION; this costs none. Emits `pts`' columns plus (cid, d2);
+    * callers name the final cid for their tier (cluster, sid, code).
     */
-  private def kmAssign(e: DataFrame, cents: DataFrame): DataFrame = {
-    val centsRow = cents.agg(collect_list(struct(col("cid"), col("c"))).as("cents"))
-    // native codegen'd argmin (ArgMinDist2): with K corpus-derived the
-    // HOF transform's interpreted K·dim lambda fold per row would be the
-    // pass's bottleneck; VectorFunctionsSpec pins the native kernel
-    // bit-equal to the argMinDist2Hof spelling this replaced
-    e.crossJoin(broadcast(centsRow))
-      .withColumn("best",
-        graft.functions.VectorFunctions.argMinDist2(col("v"), col("cents")))
-      .select(col("vec_id"), col("v"),
-        col("best").getField("cid").as("cluster"),
-        col("best").getField("d2").as("d2"))
+  private def lloydAssign(pts: DataFrame, cents: DataFrame, keys: Seq[String],
+      pt: String): DataFrame = {
+    val byKey = broadcast(cents.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("cid"), col("c"))).as("cents")))
+    // no key: one centroid row for every point — a cross join, not an
+    // equi-join on zero columns
+    val joined = if (keys.isEmpty) pts.crossJoin(byKey) else pts.join(byKey, keys)
+    joined
+      .withColumn("best", argMinDist2(col(pt), col("cents")))
+      .select(pts.columns.toSeq.map(col) ++ Seq(
+        col("best").getField("cid").as("cid"),
+        col("best").getField("d2").as("d2")): _*)
   }
 
-  /** Centroid update with EXACT fixed-point component sums: each element
-    * is floored to a [[KmScale]]-scaled BIGINT before aggregation, so the
-    * per-(cluster, dim) sum is integer-exact and ORDER-FREE — the mean of
-    * doubles would be partitioning-dependent (float addition does not
-    * commute), which breaks both the oracle compare and run-to-run
-    * reproducibility. The (cid, pos) exchange moves at most K·dim
-    * aggregated rows after map-side partial agg; the final division back
-    * to DOUBLE is one exactly-rounded op on identical operands in both
-    * engines. A cluster that loses all members disappears (standard
-    * Lloyd's; both engines agree because the arithmetic does).
+  /** Keyed centroid update with EXACT fixed-point component sums: each
+    * element is floored to a [[KmScale]]-scaled BIGINT before
+    * aggregation, so the per-(keys, cid, dim) sum is integer-exact and
+    * ORDER-FREE — the mean of doubles would be partitioning-dependent
+    * (float addition does not associate), which breaks both the oracle
+    * compare and run-to-run reproducibility. The exchange moves at most
+    * (centroids × dim) aggregated rows after map-side partial agg; the
+    * final division back to DOUBLE is one exactly-rounded op on
+    * identical operands in both engines. A centroid that loses all
+    * members disappears (standard Lloyd's; both engines agree because
+    * the arithmetic does) — which is why every consumer of a trained
+    * frame is keyed by cid, never positional.
     */
-  private def kmUpdate(assigned: DataFrame): DataFrame =
+  private def lloydUpdate(assigned: DataFrame, keys: Seq[String], pt: String): DataFrame = {
+    val k = (keys :+ "cid").map(col)
     assigned
-      .select(col("cluster").as("cid"), posexplode(col("v")))
-      .groupBy("cid", "pos")
+      .select(k :+ posexplode(col(pt)): _*)
+      .groupBy(k :+ col("pos"): _*)
       .agg(sum(floor(col("col") * KmScale).cast("long")).as("fsum"),
         count(lit(1)).as("n"))
-      .select(col("cid"), col("pos"),
-        (col("fsum").cast("double") / (col("n").cast("double") * KmScale.toDouble)).as("cv"))
-      .groupBy("cid")
+      .select(k ++ Seq(col("pos"),
+        (col("fsum").cast("double") / (col("n").cast("double") * KmScale.toDouble)).as("cv")): _*)
+      .groupBy(k: _*)
       .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
-      .select(col("cid"), transform(col("pcs"), p => p.getField("cv")).as("c"))
+      .select(k :+ transform(col("pcs"), p => p.getField("cv")).as("c"): _*)
+  }
 
-  /** Final Lloyd assignment after [[KmIter]] update rounds — shared with
-    * dedup_semantic_kmeans (DedupQueries), which takes these clusters as
-    * its candidate cells. Total cost: KmIter+1 corpus scans, KmIter tiny
-    * (K·dim-row) exchanges, zero corpus-scale shuffles.
+  /** The training loop every tier runs: `init`, then [[KmIter]] rounds of
+    * update ∘ assign over `pts`, materialized as a fresh checkpoint (the
+    * trained frame is design-bounded, so its callers session-cache it).
+    * Cost: KmIter broadcast-argmin passes over `pts` plus KmIter tiny
+    * exchanges; the tier's final assignment is one more pass.
     */
+  private def lloydTrain(init: DataFrame, pts: DataFrame, keys: Seq[String],
+      pt: String): DataFrame = {
+    var c = init
+    for (_ <- 1 to KmIter) c = lloydUpdate(lloydAssign(pts, c, keys, pt), keys, pt)
+    graft.operators.Checkpoints.fresh(c)
+  }
+
   /** The (vec_id, v) Lloyd training/assignment corpus — ONE spelling
-    * shared by [[kmeansAssign]] and knn_join's centroid access, so the
-    * cached-centroid key and the corpus they were trained on cannot
-    * drift. The repartition rationale lives in [[kmeansAssign]].
+    * shared by [[kmeansAssign]] and the two-level quantizer
+    * ([[withKm2Cells]]), so a cached-centroid key and the corpus it was
+    * trained on cannot drift. The repartition rationale lives in
+    * [[kmeansAssign]].
     */
   private def kmCorpus(s: SparkSession, dir: String): DataFrame =
     vecs(s, dir).filter(col("v").isNotNull).select("vec_id", "v")
       .repartition(s.sparkContext.defaultParallelism)
 
+  /** Final flat Lloyd assignment (vec_id, v, cluster, d2) after
+    * [[KmIter]] update rounds — shared with dedup_semantic_kmeans
+    * (DedupQueries), which takes these clusters as its candidate cells.
+    * Total cost: KmIter+1 corpus scans, KmIter tiny (K·dim-row)
+    * exchanges, zero corpus-scale shuffles.
+    */
   private[graft] def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
     // The assignment pass is compute-AMPLIFIED: K·dim multiply-adds per
     // row, with K corpus-derived — so a compact-in-bytes embeddings table
@@ -276,25 +307,20 @@ object SimilarityQueries {
     // argmin pass. The fixed-point centroid arithmetic is deterministic,
     // so cached-vs-retrained centroids are bit-identical and the oracle's
     // CTE chain still mirrors them exactly.
-    kmAssign(e, kmeansCentroids(s, dir, e))
+    lloydAssign(e, kmeansCentroids(s, dir, e), Seq(), "v")
+      .withColumnRenamed("cid", "cluster")
   }
 
-  /** The session-cached trained centroid frame (cid, c) — factored out
-    * of [[kmeansAssign]] so knn_join's probe rule can rank cells against
-    * the SAME centroids the assignment used (a probe ranked against
-    * anything else silently breaks the own-cell ⊆ probed-cells
-    * invariant). `e` must be the same (vec_id, v) corpus the assignment
-    * passes scan.
+  /** The session-cached trained centroid frame (cid, c) of
+    * [[kmeansAssign]]. `e` must be the same (vec_id, v) corpus the
+    * assignment pass scans.
     */
   private def kmeansCentroids(s: SparkSession, dir: String, e: DataFrame): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "kmeans-centroids") {
       // K from the corpus count — one eager build-time action (the
       // dedup_clusters precedent); deterministic, and the oracle's SQL
       // derives the identical K from the identical COUNT(*)
-      val k = kmeansK(e.count())
-      var c = kmInit(e, k)
-      for (_ <- 1 to KmIter) c = kmUpdate(kmAssign(e, c))
-      graft.operators.Checkpoints.fresh(c)
+      lloydTrain(kmInit(e, kmeansK(e.count())), e, Seq(), "v")
     }
 
   // ===== two-level coarse quantizer (the kNN graph's cell structure) =====
@@ -341,66 +367,33 @@ object SimilarityQueries {
   }
 
   /** Trained super-centroids (cid, c) — [[kmeansCentroids]]' lifecycle
-    * (session-cached, Ks·dim-bounded) reusing the flat Lloyd primitives
-    * verbatim at k = Ks.
+    * (session-cached, Ks·dim-bounded): the flat tier's training at k = Ks.
     */
   private def km2SuperCentroids(s: SparkSession, dir: String, e: DataFrame,
       ks: Int): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "km2-super-centroids") {
-      var c = kmInit(e, ks)
-      for (_ <- 1 to KmIter) c = kmUpdate(kmAssign(e, c))
-      graft.operators.Checkpoints.fresh(c)
+      lloydTrain(kmInit(e, ks), e, Seq(), "v")
     }
 
-  /** Per-super-cell sub init: each super-cell's first Ksub members by
-    * (md5(vec_id), vec_id) — [[kmInit]]'s seed rule PARTITIONED BY
-    * scell. The window's partitions are super-cells (~n/Ks ≈ √(n·KmCell)
-    * rows each — sub-linear per partition, never a global frame).
+  /** Per-super-cell sub init (scell, cid, c): each super-cell's first
+    * Ksub members by (md5(vec_id), vec_id) — [[kmInit]]'s seed rule
+    * PARTITIONED BY scell. The window's partitions are super-cells
+    * (~n/Ks ≈ √(n·KmCell) rows each — sub-linear per partition, never a
+    * global frame).
     */
   private def km2SubInit(sa: DataFrame, kb: Int): DataFrame = {
     val w = Window.partitionBy(col("scell")).orderBy(col("h"), col("vec_id"))
     sa.withColumn("h", md5(col("vec_id").cast("string")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= kb)
-      .select(col("scell"), (col("rn") - 1).cast("int").as("sid"), col("v").as("c"))
+      .select(col("scell"), (col("rn") - 1).cast("int").as("cid"), col("v").as("c"))
   }
 
-  /** Keyed Lloyd assignment within each super-cell ([[pqAssign]]'s shape
-    * with scell as the key): the per-scell sub lists collapse to Ks
-    * grouped rows (total K·dim doubles — broadcastable far past any
-    * probed SF; past broadcast size the same plan is a hash join on
-    * scell), argmin codegen'd, ties (d2, sid) = the oracle's
-    * ORDER BY d2, sid.
-    */
-  private def km2SubAssign(sa: DataFrame, subs: DataFrame): DataFrame = {
-    val bySc = subs.groupBy("scell")
-      .agg(collect_list(struct(col("sid").as("cid"), col("c"))).as("subs"))
-    sa.join(broadcast(bySc), Seq("scell"))
-      .withColumn("best", argMinDist2(col("v"), col("subs")))
-      .select(col("vec_id"), col("v"), col("scell"),
-        col("best").getField("cid").as("sid"),
-        col("best").getField("d2").as("d2"))
-  }
-
-  /** [[kmUpdate]] with the (scell, sid) composite key — exact
-    * order-free fixed-point component sums; at most Ks·Ksub·dim
-    * aggregated rows cross the exchange. A sub-cell that loses all
-    * members disappears; a member-bearing super-cell always keeps ≥ 1
-    * sub (its members are assigned among its OWN subs only).
-    */
-  private def km2SubUpdate(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("scell"), col("sid"), posexplode(col("v")))
-      .groupBy("scell", "sid", "pos")
-      .agg(sum(floor(col("col") * KmScale).cast("long")).as("fsum"),
-        count(lit(1)).as("n"))
-      .select(col("scell"), col("sid"), col("pos"),
-        (col("fsum").cast("double") / (col("n").cast("double") * KmScale.toDouble)).as("cv"))
-      .groupBy("scell", "sid")
-      .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
-      .select(col("scell"), col("sid"), transform(col("pcs"), p => p.getField("cv")).as("c"))
-
-  /** Trained sub-centroids (scell, sid, c) — session-cached (Ks·Ksub·dim
+  /** Trained sub-centroids (scell, cid, c): the Lloyd loop keyed by scell
+    * — the per-scell sub lists are Ks grouped broadcast rows (total K·dim
+    * doubles; past broadcast size the same plan is a hash join on scell),
+    * and a member-bearing super-cell always keeps ≥ 1 sub, its members
+    * being assigned among its OWN subs only. Session-cached (Ks·Ksub·dim
     * ≈ K·dim doubles: 6 MB at sf30, ~1/(8·KmCell) of corpus bytes in
     * general). `sa` must be the checkpointed super FINAL assignment the
     * KmIter+1 sub passes scan.
@@ -408,26 +401,40 @@ object SimilarityQueries {
   private def km2SubCentroids(s: SparkSession, dir: String, sa: DataFrame,
       kb: Int): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "km2-sub-centroids") {
-      var b = km2SubInit(sa, kb)
-      for (_ <- 1 to KmIter) b = km2SubUpdate(km2SubAssign(sa, b))
-      graft.operators.Checkpoints.fresh(b)
+      lloydTrain(km2SubInit(sa, kb), sa, Seq("scell"), "v")
     }
 
-  /** The two-level FINAL assignment (vec_id, v, scell, cluster) with the
-    * global cell id cluster = scell·Ksub + sid (int — scell·Ksub ≤
-    * Ks·Ksub ≈ K ≤ n/KmCell). Exposed package-private for the spec's
-    * probe-containment check.
+  /** The two-level quantizer as [[withKm2Cells]] hands it out: trained
+    * super-centroids `sc` (cid, c), sub-centroids `bc` (scell, cid, c),
+    * Ksub `kb`, and the checkpointed FINAL assignment `asg` (vec_id, v,
+    * scell, cluster) with the global cell id cluster = scell·Ksub + sub
+    * cid (int — scell·Ksub ≤ Ks·Ksub ≈ K ≤ n/KmCell).
     */
-  private[graft] def km2Assign(s: SparkSession, dir: String): DataFrame = {
+  private[graft] case class Km2Cells(sc: DataFrame, bc: DataFrame, kb: Int, asg: DataFrame)
+
+  /** `use` applied to the two-level cells — the ONE build of the
+    * assignment knn_join's graph runs on (and the spec's probe-containment
+    * and invariance checks read). The super final assignment is
+    * checkpointed for the KmIter+1 sub-training scans (lazy, each sub pass
+    * re-ran the super argmin corpus pass) and freed once `asg` is
+    * materialized; `asg` is checkpointed for its consumers and freed once
+    * `use` returns, so `use` must materialize what it keeps.
+    */
+  private[graft] def withKm2Cells[T](s: SparkSession, dir: String)(use: Km2Cells => T): T = {
     val e = kmCorpus(s, dir)
     val (ks, kb) = km2K(e.count())
     val sc = km2SuperCentroids(s, dir, e, ks)
-    val sa = kmAssign(e, sc)
-      .select(col("vec_id"), col("v"), col("cluster").as("scell"))
+    val sa = graft.operators.Checkpoints.corpusScaled(
+      lloydAssign(e, sc, Seq(), "v").select(col("vec_id"), col("v"), col("cid").as("scell")))
     val bc = km2SubCentroids(s, dir, sa, kb)
-    km2SubAssign(sa, bc)
-      .select(col("vec_id"), col("v"), col("scell"),
-        (col("scell") * kb + col("sid")).cast("int").as("cluster"))
+    val asg = graft.operators.Checkpoints.corpusScaled(
+      lloydAssign(sa, bc, Seq("scell"), "v")
+        .select(col("vec_id"), col("v"), col("scell"),
+          (col("scell") * kb + col("cid")).cast("int").as("cluster")))
+    graft.operators.Checkpoints.free(sa)
+    val out = use(Km2Cells(sc, bc, kb, asg))
+    graft.operators.Checkpoints.free(asg)
+    out
   }
 
   // ===== product quantization (Jégou/Douze/Schmid, TPAMI 2011) =====
@@ -484,37 +491,12 @@ object SimilarityQueries {
       .select(col("vec_id"), col("j"),
         slice(col("v"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("sv"))
 
-  /** Keyed Lloyd assignment: per (vector, subspace) the argmin codeword
-    * of THAT subspace — the per-j codeword lists collapse to PqM rows,
-    * broadcast, argmin codegen'd (kmAssign's shape with a j key).
+  /** Encode pass (vec_id, j, sv, code, d2): per (vector, subspace) the
+    * argmin codeword of THAT subspace — the Lloyd assignment keyed by j
+    * over [[pqSub]] of `e`, one broadcast argmin scan, no corpus shuffle.
     */
-  private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame = {
-    val byJ = cents.groupBy("j")
-      .agg(collect_list(struct(col("cid"), col("c"))).as("cents"))
-    sub.join(broadcast(byJ), Seq("j"))
-      .withColumn("best", argMinDist2(col("sv"), col("cents")))
-      .select(col("vec_id"), col("j"), col("sv"),
-        col("best").getField("cid").as("code"),
-        col("best").getField("d2").as("d2"))
-  }
-
-  /** Keyed fixed-point centroid update (kmUpdate with a j key): exact
-    * order-free scaled-BIGINT component sums per (subspace, codeword,
-    * dim); at most PqM·PqK·PqDsub aggregated rows cross the exchange.
-    * A codeword that loses all members disappears (standard Lloyd's) —
-    * which is why the ADC table is keyed, not positional.
-    */
-  private def pqUpdate(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("j"), col("code").as("cid"), posexplode(col("sv")))
-      .groupBy("j", "cid", "pos")
-      .agg(sum(floor(col("col") * KmScale).cast("long")).as("fsum"),
-        count(lit(1)).as("n"))
-      .select(col("j"), col("cid"), col("pos"),
-        (col("fsum").cast("double") / (col("n").cast("double") * KmScale.toDouble)).as("cv"))
-      .groupBy("j", "cid")
-      .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
-      .select(col("j"), col("cid"), transform(col("pcs"), p => p.getField("cv")).as("c"))
+  private def pqEncode(e: DataFrame, cb: DataFrame): DataFrame =
+    lloydAssign(pqSub(e), cb, Seq("j"), "sv").withColumnRenamed("cid", "code")
 
   /** Train-once codebooks (j, cid, c) — PqM·PqK rows, design-bounded ⇒
     * SessionCache-admissible; embedding_pq_codes and ann_pq both consume
@@ -536,21 +518,17 @@ object SimilarityQueries {
   /** The keyed Lloyd training body over ANY (vec_id, v) frame — shared by
     * [[pqCodebook]] (raw vectors) and [[ivfpqCodebook]] (IVF residuals);
     * one spelling so the two codebooks' training recipes cannot drift.
+    * The seed is [[kmInit]]'s PqK vectors sliced per subspace; training
+    * is the Lloyd loop keyed by j over the subvectors.
     */
   private def trainPqCodebook(e0: DataFrame, parallelism: Int): DataFrame = {
     val e = e0.repartition(parallelism)
     val sub = graft.operators.Checkpoints.corpusScaled(pqSub(e))
-    val w = Window.orderBy(col("h"), col("vec_id"))
-    val seed = e.withColumn("h", md5(col("vec_id").cast("string")))
-      .orderBy(col("h"), col("vec_id")).limit(PqK)
-      .withColumn("cid", (row_number().over(w) - 1).cast("int"))
-      .select(col("cid"), col("v"))
-    var c = seed
-      .select(col("cid"), explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("v"))
+    val seed = kmInit(e, PqK)
+      .select(col("cid"), explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("c"))
       .select(col("j"), col("cid"),
-        slice(col("v"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("c"))
-    for (_ <- 1 to KmIter) c = pqUpdate(pqAssign(sub, c))
-    val trained = graft.operators.Checkpoints.fresh(c)
+        slice(col("c"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("c"))
+    val trained = lloydTrain(seed, sub, Seq("j"), "sv")
     graft.operators.Checkpoints.free(sub)
     trained
   }
@@ -590,12 +568,9 @@ object SimilarityQueries {
         s.sparkContext.defaultParallelism)
     }
 
-  /** Encode pass: every vector's PqM codes against the trained
-    * codebooks — one broadcast argmin scan, no corpus shuffle.
-    */
+  /** Every vector's PqM codes against the trained raw-vector codebooks. */
   private def pqCodes(s: SparkSession, dir: String): DataFrame =
-    pqAssign(
-      pqSub(vecs(s, dir).filter(col("v").isNotNull).select("vec_id", "v")),
+    pqEncode(vecs(s, dir).filter(col("v").isNotNull).select("vec_id", "v"),
       pqCodebook(s, dir))
 
   /** Per-query dense ADC table (qid, lut: ARRAY of PqM·PqK lfp slots)
@@ -738,7 +713,7 @@ object SimilarityQueries {
     // residual codes + owning cell: the label join-back is 1:1 on the
     // aggregation key, so the groupBy's vec_id partitioning is reused
     // on the left and the right moves only (vec_id, label) pairs
-    val codes = codeArrays(pqAssign(pqSub(ivfResiduals(s, dir).select("vec_id", "v")), cb))
+    val codes = codeArrays(pqEncode(ivfResiduals(s, dir).select("vec_id", "v"), cb))
       .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
     adcScan(codes, broadcast(pqLutOf(pres, cb, Seq("qid", "pcell"))),
       col("label") === col("pcell"))
@@ -819,87 +794,71 @@ object SimilarityQueries {
     * PqSpec reads its optimized plan, which knn_join's plan (rooted at
     * the checkpoint) cannot show.
     */
-  private[graft] def withKnnScan[T](s: SparkSession, dir: String)(use: DataFrame => T): T = {
-    // Two-level coarse quantizer (see the km2 block): the super FINAL
-    // assignment is checkpointed for the KmIter+1 sub-training scans
-    // (lazy, each sub pass re-ran the super argmin corpus pass), the
-    // final assignment for its four consumers (query frame, probe
-    // rule, member-cell join side, spec access); both freed/retired
-    // once the graph frame is materialized.
-    val e = kmCorpus(s, dir)
-    val (ks, kb) = km2K(e.count())
-    val sc = km2SuperCentroids(s, dir, e, ks)
-    val sa = graft.operators.Checkpoints.corpusScaled(
-      kmAssign(e, sc).select(col("vec_id"), col("v"), col("cluster").as("scell")))
-    val bc = km2SubCentroids(s, dir, sa, kb)
-    val asg = graft.operators.Checkpoints.corpusScaled(
-      km2SubAssign(sa, bc)
-        .select(col("vec_id"), col("v"), col("scell"),
-          (col("scell") * kb + col("sid")).cast("int").as("cluster")))
-    graft.operators.Checkpoints.free(sa)
-    val q = asg.select(col("vec_id").as("qid"), col("scell").as("qscell"),
-      col("cluster").as("qcell"), col("v").as("qv"))
-    // NProbe = 2 ⇒ the probe set is own cell + the nearest OTHER
-    // cell — found HIERARCHICALLY, like the assignment: one argmin
-    // over the (member-bearing) super-centroids for the nearest other
-    // super, then one argmin over own super's subs ∪ that super's
-    // subs with the own cell filtered out. (Ks + 2·Ksub)·dim per
-    // query instead of K·dim — the same √K collapse the assignment
-    // pays, and the candidate set always contains at least the
-    // runner-up super's subs, so a boundary vector still sees its
-    // across-the-border cell. ArgMinDist2 ties (d2, cid)
-    // lexicographically = the oracle's ORDER BY d2, cid; the oracle
-    // mirrors member-bearing ("has subs") supers with the same
-    // semi-filter. A corpus whose surviving supers collapse to ONE
-    // member-bearing cell has no s2 (argmin over an empty filtered
-    // list is NULL, filtered here; the oracle's rn=1 row just does
-    // not exist) — the probe set degrades to own-cell, identically
-    // in both engines.
-    require(NProbe == 2,
-      s"NProbe=$NProbe: knn_join probes own cell + ONE argmin other; " +
-        "an n-best probe rule needs a k-register ArgMinDist2 variant")
-    val scm = sc.join(
-      bc.select(col("scell").as("cid")).distinct(), Seq("cid"), "left_semi")
-    val scmRow = scm.agg(collect_list(struct(col("cid"), col("c"))).as("cents"))
-    val s2f = q.crossJoin(broadcast(scmRow))
-      .select(col("qid"), col("qscell"), col("qcell"), col("qv"),
-        graft.functions.VectorFunctions.argMinDist2(col("qv"),
-          filter(col("cents"), ct => ct.getField("cid") =!= col("qscell")))
-          .getField("cid").cast("int").as("s2"))
-      .filter(col("s2").isNotNull)
-    val bg = bc.groupBy("scell")
-      .agg(collect_list(struct((col("scell") * kb + col("sid")).cast("int").as("cid"),
-        col("c"))).as("subs"))
-    val pr2 = s2f
-      .join(broadcast(bg.select(col("scell").as("qscell"), col("subs").as("subs1"))),
-        Seq("qscell"))
-      .join(broadcast(bg.select(col("scell").as("s2"), col("subs").as("subs2"))),
-        Seq("s2"))
-      .select(col("qid"),
-        graft.functions.VectorFunctions.argMinDist2(col("qv"),
-          filter(concat(col("subs1"), col("subs2")),
-            ct => ct.getField("cid") =!= col("qcell")))
-          .getField("cid").cast("int").as("pcell"))
-      .filter(col("pcell").isNotNull)
-    val probes = pr2.union(q.select(col("qid"), col("qcell").as("pcell")))
-    val idx = pqIndexDir(s, dir)
-    val cb = s.read.parquet(s"$idx/codebook")
-    val codes = packedCodes(s, idx)
-      .join(asg.select(col("vec_id"), col("cluster")), Seq("vec_id"))
-    val plut = probes.join(pqLutOf(q.select(col("qid"), col("qv")), cb),
-      Seq("qid"))
-    val topk = udaf(new graft.functions.TopK(KnnK))
-    val out = use(
-      adcScan(codes, plut, col("cluster") === col("pcell"))
-        .groupBy("qid")
-        .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.nn_id").as("nn_id"),
-          (-col("col.sim")).cast("long").as("adc_fp")))
-    graft.operators.Checkpoints.free(asg)
-    out
-  }
+  private[graft] def withKnnScan[T](s: SparkSession, dir: String)(use: DataFrame => T): T =
+    // the two-level cells' final assignment feeds the query frame, the
+    // probe rule and the member-cell join side
+    withKm2Cells(s, dir) { case Km2Cells(sc, bc, kb, asg) =>
+      val q = asg.select(col("vec_id").as("qid"), col("scell").as("qscell"),
+        col("cluster").as("qcell"), col("v").as("qv"))
+      // NProbe = 2 ⇒ the probe set is own cell + the nearest OTHER
+      // cell — found HIERARCHICALLY, like the assignment: one argmin
+      // over the (member-bearing) super-centroids for the nearest other
+      // super, then one argmin over own super's subs ∪ that super's
+      // subs with the own cell filtered out. (Ks + 2·Ksub)·dim per
+      // query instead of K·dim — the same √K collapse the assignment
+      // pays, and the candidate set always contains at least the
+      // runner-up super's subs, so a boundary vector still sees its
+      // across-the-border cell. ArgMinDist2 ties (d2, cid)
+      // lexicographically = the oracle's ORDER BY d2, cid; the oracle
+      // mirrors member-bearing ("has subs") supers with the same
+      // semi-filter. A corpus whose surviving supers collapse to ONE
+      // member-bearing cell has no s2 (argmin over an empty filtered
+      // list is NULL, filtered here; the oracle's rn=1 row just does
+      // not exist) — the probe set degrades to own-cell, identically
+      // in both engines.
+      require(NProbe == 2,
+        s"NProbe=$NProbe: knn_join probes own cell + ONE argmin other; " +
+          "an n-best probe rule needs a k-register ArgMinDist2 variant")
+      val scm = sc.join(
+        bc.select(col("scell").as("cid")).distinct(), Seq("cid"), "left_semi")
+      val scmRow = scm.agg(collect_list(struct(col("cid"), col("c"))).as("cents"))
+      val s2f = q.crossJoin(broadcast(scmRow))
+        .select(col("qid"), col("qscell"), col("qcell"), col("qv"),
+          graft.functions.VectorFunctions.argMinDist2(col("qv"),
+            filter(col("cents"), ct => ct.getField("cid") =!= col("qscell")))
+            .getField("cid").cast("int").as("s2"))
+        .filter(col("s2").isNotNull)
+      val bg = bc.groupBy("scell")
+        .agg(collect_list(struct((col("scell") * kb + col("cid")).cast("int").as("cid"),
+          col("c"))).as("subs"))
+      val pr2 = s2f
+        .join(broadcast(bg.select(col("scell").as("qscell"), col("subs").as("subs1"))),
+          Seq("qscell"))
+        .join(broadcast(bg.select(col("scell").as("s2"), col("subs").as("subs2"))),
+          Seq("s2"))
+        .select(col("qid"),
+          graft.functions.VectorFunctions.argMinDist2(col("qv"),
+            filter(concat(col("subs1"), col("subs2")),
+              ct => ct.getField("cid") =!= col("qcell")))
+            .getField("cid").cast("int").as("pcell"))
+        .filter(col("pcell").isNotNull)
+      val probes = pr2.union(q.select(col("qid"), col("qcell").as("pcell")))
+      val idx = pqIndexDir(s, dir)
+      val cb = s.read.parquet(s"$idx/codebook")
+      val codes = packedCodes(s, idx)
+        .join(asg.select(col("vec_id"), col("cluster")), Seq("vec_id"))
+      val plut = probes.join(pqLutOf(q.select(col("qid"), col("qv")), cb),
+        Seq("qid"))
+      val topk = udaf(new graft.functions.TopK(KnnK))
+      use(
+        adcScan(codes, plut, col("cluster") === col("pcell"))
+          .groupBy("qid")
+          .agg(topk((-col("adc_fp")).cast("double"), col("nn_id")).as("top"))
+          .select(col("qid"), posexplode(col("top")))
+          .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
+            col("col.nn_id").as("nn_id"),
+            (-col("col.sim")).cast("long").as("adc_fp")))
+    }
 
   /** The mutual-kNN candidate pair frame (d1 < d2, adc_fp) — the body of
     * `knn_mutual_pairs`, factored so DedupQueries' `dedup_semantic_graph`
@@ -1482,48 +1441,81 @@ object SimilarityQueries {
 
   private val eSql = "SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings"
 
-  // ===== k-means oracle: the Lloyd loop unrolled into CTEs =====
-  // Same init rule (rn over (md5, vec_id)), same assignment tie-break
-  // (ORDER BY d2, cid — the lexicographic struct sort's mirror), same
-  // fixed-point update (floor to scaled BIGINT, exact integer sum, one
-  // double division). DuckDB's zipped unnest(v)/unnest(range(...)) is the
-  // posexplode mirror; `list(cv ORDER BY pos)` the sorted reassembly.
+  // ===== Lloyd oracle: the training loop unrolled into CTEs =====
+  // The SQL twin of kmInit/lloydAssign/lloydUpdate/lloydTrain: same init
+  // rule (rn over (md5, vec_id)), same assignment tie-break (ORDER BY d2,
+  // cid — the lexicographic struct argmin's mirror), same fixed-point
+  // update (floor to scaled BIGINT, exact integer sum, one double
+  // division). DuckDB's zipped unnest(pt)/unnest(range(...)) is the
+  // posexplode mirror; `list(cv ORDER BY pos)` the sorted reassembly. A
+  // tier is a point relation (vec_id, keys…, pt), its key columns and its
+  // point column, as on the Spark side; centroid relations are
+  // (keys…, cid, c).
 
-  private def kmAssignSql(name: String, centRel: String): String =
-    s"""$name AS (SELECT vec_id, v, cluster, d2 FROM (
-       |  SELECT vec_id, v, cid AS cluster, d2,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-       |  FROM (SELECT e.vec_id, e.v, c.cid, ${dist2Sql("e.v", "c.c")} AS d2
-       |        FROM e CROSS JOIN $centRel c)) WHERE rn = 1)""".stripMargin
+  /** [[kmInit]]'s twin: the `bound` (an SQL expression) vectors of `rel`
+    * with the smallest (md5(vec_id), vec_id), as (cid, c).
+    */
+  private def kmInitSql(name: String, rel: String, bound: String): String =
+    s"""$name AS (SELECT CAST(rn - 1 AS INTEGER) AS cid, v AS c FROM (
+       |        SELECT v, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
+       |        FROM $rel)
+       |       WHERE rn <= $bound)""".stripMargin
 
-  private def kmUpdateSql(name: String, asgRel: String): String =
-    s"""$name AS (SELECT cid, list(cv ORDER BY pos) AS c FROM (
-       |  SELECT cid, pos, CAST(fsum AS DOUBLE) / (CAST(n AS DOUBLE) * $KmScale.0) AS cv FROM (
-       |    SELECT cluster AS cid, i AS pos,
+  /** [[lloydAssign]]'s twin: each row of `pts` with its nearest
+    * same-key centroid of `cents`, that centroid's cid emitted as `id`.
+    */
+  private def lloydAssignSql(name: String, pts: String, keys: Seq[String], pt: String,
+      cents: String, id: String): String = {
+    val k = keys.map(", " + _).mkString
+    val on = if (keys.isEmpty) s"CROSS JOIN $cents c"
+      else keys.map(x => s"$pts.$x = c.$x").mkString(s"JOIN $cents c ON ", " AND ", "")
+    s"""$name AS (SELECT vec_id$k, $pt, $id, d2 FROM (
+       |  SELECT vec_id$k, $pt, cid AS $id, d2,
+       |         ROW_NUMBER() OVER (PARTITION BY vec_id$k ORDER BY d2, cid) AS rn
+       |  FROM (SELECT $pts.vec_id${keys.map(x => s", $pts.$x").mkString}, $pts.$pt, c.cid, ${dist2Sql(s"$pts.$pt", "c.c")} AS d2
+       |        FROM $pts $on)) WHERE rn = 1)""".stripMargin
+  }
+
+  /** [[lloydUpdate]]'s twin over assignment relation `asg` (cid read
+    * from its `id` column).
+    */
+  private def lloydUpdateSql(name: String, asg: String, keys: Seq[String], pt: String,
+      id: String): String = {
+    val k = keys.map(_ + ", ").mkString
+    s"""$name AS (SELECT ${k}cid, list(cv ORDER BY pos) AS c FROM (
+       |  SELECT ${k}cid, pos, CAST(fsum AS DOUBLE) / (CAST(n AS DOUBLE) * $KmScale.0) AS cv FROM (
+       |    SELECT $k$id AS cid, i AS pos,
        |           sum(CAST(floor(x * $KmScale.0) AS BIGINT)) AS fsum, count(*) AS n
-       |    FROM (SELECT cluster, unnest(v) AS x, unnest(range(1, len(v)+1)) AS i FROM $asgRel)
-       |    GROUP BY 1, 2)) GROUP BY cid)""".stripMargin
+       |    FROM (SELECT $k$id, unnest($pt) AS x, unnest(range(1, len($pt)+1)) AS i FROM $asg)
+       |    GROUP BY ${(1 to keys.size + 2).mkString(", ")})) GROUP BY ${k}cid)""".stripMargin
+  }
 
-  /** The full CTE chain `e, c0, a1, c1, …, a{KmIter+1}` — shared with
+  /** [[lloydTrain]]'s twin plus the final assignment: from the init
+    * relation `${cent}0`, the chain `${asg}1, ${cent}1, …, ${cent}KmIter,
+    * ${asg}{KmIter+1}` — trained centroids `${cent}KmIter`, final
+    * assignment `${asg}{KmIter+1}`.
+    */
+  private def lloydSql(pts: String, keys: Seq[String], pt: String, id: String,
+      cent: String, asg: String): String = {
+    val ctes = Seq.newBuilder[String]
+    for (i <- 1 to KmIter + 1) {
+      ctes += lloydAssignSql(s"$asg$i", pts, keys, pt, s"$cent${i - 1}", id)
+      if (i <= KmIter) ctes += lloydUpdateSql(s"$cent$i", s"$asg$i", keys, pt, id)
+    }
+    ctes.result().mkString(",\n")
+  }
+
+  /** The full flat chain `e, c0, a1, c1, …, a{KmIter+1}` — shared with
     * dedup_semantic_kmeans' oracle (DedupQueries), whose cells are
     * a{KmIter+1}'s clusters.
     */
-  private[queries] def kmeansCtes: String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-         |      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
-         |c0 AS (SELECT CAST(rn - 1 AS INTEGER) AS cid, v AS c FROM (
-         |        SELECT v, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-         |        FROM e)
-         |       WHERE rn <= (SELECT LEAST($KmMaxK, GREATEST($KmMinK,
-         |                      (count(*) + ${KmCell - 1}) // $KmCell)) FROM e))""".stripMargin)
-    for (i <- 1 to KmIter + 1) {
-      sb.append(",\n").append(kmAssignSql(s"a$i", s"c${i - 1}"))
-      if (i <= KmIter) sb.append(",\n").append(kmUpdateSql(s"c$i", s"a$i"))
-    }
-    sb.toString
-  }
+  private[queries] def kmeansCtes: String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
+       |""".stripMargin +
+      kmInitSql("c0", "e", s"""(SELECT LEAST($KmMaxK, GREATEST($KmMinK,
+         |                      (count(*) + ${KmCell - 1}) // $KmCell)) FROM e)""".stripMargin) +
+      ",\n" + lloydSql("e", Seq(), "v", "cluster", "c", "a")
 
   private[queries] val kmFinalAsg = s"a${KmIter + 1}"
 
@@ -1532,24 +1524,8 @@ object SimilarityQueries {
   // no nested WITH, so the chain evaluates once). Same derivations from
   // the same COUNT(*) (integer // arithmetic; CEIL∘SQRT exactly rounded
   // on an integer-valued double), same init rule per tier (rn over
-  // (md5, vec_id), PARTITIONED BY scell at the sub tier), same
-  // assignment tie-break (d2 then id), same fixed-point update.
-  // Reuses kmAssignSql/kmUpdateSql verbatim for the super tier.
-
-  private def km2SubAssignSql(name: String, subRel: String): String =
-    s"""$name AS (SELECT vec_id, v, scell, sid, d2 FROM (
-       |  SELECT vec_id, v, scell, sid, d2,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, sid) AS rn
-       |  FROM (SELECT x.vec_id, x.v, x.scell, b.sid, ${dist2Sql("x.v", "b.c")} AS d2
-       |        FROM gsa x JOIN $subRel b ON b.scell = x.scell)) WHERE rn = 1)""".stripMargin
-
-  private def km2SubUpdateSql(name: String, asgRel: String): String =
-    s"""$name AS (SELECT scell, sid, list(cv ORDER BY pos) AS c FROM (
-       |  SELECT scell, sid, pos, CAST(fsum AS DOUBLE) / (CAST(n AS DOUBLE) * $KmScale.0) AS cv FROM (
-       |    SELECT scell, sid, i AS pos,
-       |           sum(CAST(floor(x * $KmScale.0) AS BIGINT)) AS fsum, count(*) AS n
-       |    FROM (SELECT scell, sid, unnest(v) AS x, unnest(range(1, len(v)+1)) AS i FROM $asgRel)
-       |    GROUP BY 1, 2, 3)) GROUP BY scell, sid)""".stripMargin
+  // (md5, vec_id), PARTITIONED BY scell at the sub tier), and the one
+  // Lloyd chain for both tiers (keyed by scell at the sub tier).
 
   /** The full two-level chain: gkb (derived Ks/Ksub), super Lloyd
     * gs0/ga1/…/ga{KmIter+1}, sub init gb0, sub Lloyd gq1/…/gq{KmIter+1},
@@ -1557,109 +1533,66 @@ object SimilarityQueries {
     * References `e` (pqCtes' corpus relation — the same not-null filters
     * kmCorpus applies).
     */
-  private def km2Ctes: String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""gk AS (SELECT GREATEST($KmMinK, (count(*) + ${KmCell - 1}) // $KmCell) AS k FROM e),
-         |gkb AS (SELECT k, ks, (k + ks - 1) // ks AS kb FROM (
-         |        SELECT k, CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT) AS ks FROM gk)),
-         |gs0 AS (SELECT CAST(rn - 1 AS INTEGER) AS cid, v AS c FROM (
-         |        SELECT v, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-         |        FROM e)
-         |       WHERE rn <= (SELECT ks FROM gkb))""".stripMargin)
-    for (i <- 1 to KmIter + 1) {
-      sb.append(",\n").append(kmAssignSql(s"ga$i", s"gs${i - 1}"))
-      if (i <= KmIter) sb.append(",\n").append(kmUpdateSql(s"gs$i", s"ga$i"))
-    }
-    sb.append(",\n").append(
+  private def km2Ctes: String =
+    s"""gk AS (SELECT GREATEST($KmMinK, (count(*) + ${KmCell - 1}) // $KmCell) AS k FROM e),
+       |gkb AS (SELECT k, ks, (k + ks - 1) // ks AS kb FROM (
+       |        SELECT k, CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT) AS ks FROM gk)),
+       |""".stripMargin +
+      kmInitSql("gs0", "e", "(SELECT ks FROM gkb)") +
+      ",\n" + lloydSql("e", Seq(), "v", "cluster", "gs", "ga") + ",\n" +
       s"""gsa AS (SELECT vec_id, v, cluster AS scell FROM ga${KmIter + 1}),
-         |gb0 AS (SELECT scell, CAST(rn - 1 AS INTEGER) AS sid, v AS c FROM (
+         |gb0 AS (SELECT scell, CAST(rn - 1 AS INTEGER) AS cid, v AS c FROM (
          |        SELECT scell, v, ROW_NUMBER() OVER (PARTITION BY scell
          |                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
          |        FROM gsa)
-         |       WHERE rn <= (SELECT kb FROM gkb))""".stripMargin)
-    for (i <- 1 to KmIter + 1) {
-      sb.append(",\n").append(km2SubAssignSql(s"gq$i", s"gb${i - 1}"))
-      if (i <= KmIter) sb.append(",\n").append(km2SubUpdateSql(s"gb$i", s"gq$i"))
-    }
-    sb.append(",\n").append(
+         |       WHERE rn <= (SELECT kb FROM gkb)),
+         |""".stripMargin +
+      lloydSql("gsa", Seq("scell"), "v", "sid", "gb", "gq") + ",\n" +
       s"""gz AS (SELECT vec_id, v, scell,
          |         CAST(scell * (SELECT kb FROM gkb) + sid AS INTEGER) AS cluster
-         |       FROM gq${KmIter + 1})""".stripMargin)
-    sb.toString
-  }
+         |       FROM gq${KmIter + 1})""".stripMargin
 
-  // ===== PQ oracle: the keyed (per-subspace) Lloyd loop unrolled =====
-  // kmeansCtes with a j key everywhere: DuckDB's 1-based inclusive list
-  // slice v[a:b] is the `slice` mirror; the init takes the SAME seed
-  // vec_ids for every subspace (rn over (md5, vec_id), as in c0); the
-  // assignment tie-break and fixed-point update are kmAssignSql /
-  // kmUpdateSql with (vec_id, j) / (j, cid) keys.
-  private def pqAssignSql(name: String, centRel: String): String =
-    s"""$name AS (SELECT vec_id, j, sv, code, d2 FROM (
-       |  SELECT vec_id, j, sv, cid AS code, d2,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d2, cid) AS rn
-       |  FROM (SELECT s.vec_id, s.j, s.sv, c.cid, ${dist2Sql("s.sv", "c.c")} AS d2
-       |        FROM sub s JOIN $centRel c ON s.j = c.j)) WHERE rn = 1)""".stripMargin
+  // ===== PQ oracle: the keyed (per-subspace) Lloyd chain =====
+  // DuckDB's 1-based inclusive list slice v[a:b] is the `slice` mirror;
+  // the seed is kmInitSql's PqK vectors sliced per subspace (every
+  // subspace starts from the SAME seed vectors, as in trainPqCodebook);
+  // the chain is lloydSql keyed by j over the subvectors.
 
-  private def pqUpdateSql(name: String, asgRel: String): String =
-    s"""$name AS (SELECT j, cid, list(cv ORDER BY pos) AS c FROM (
-       |  SELECT j, cid, pos, CAST(fsum AS DOUBLE) / (CAST(n AS DOUBLE) * $KmScale.0) AS cv FROM (
-       |    SELECT j, code AS cid, i AS pos,
-       |           sum(CAST(floor(x * $KmScale.0) AS BIGINT)) AS fsum, count(*) AS n
-       |    FROM (SELECT j, code, unnest(sv) AS x, unnest(range(1, len(sv)+1)) AS i FROM $asgRel)
-       |    GROUP BY 1, 2, 3)) GROUP BY j, cid)""".stripMargin
+  /** [[trainPqCodebook]]'s twin over relation `rel` (vec_id, v): `sub`,
+    * the seed `p0`, the chain through codebook [[pqFinalBook]] and codes
+    * [[pqFinalAsg]].
+    */
+  private def pqTrainCtes(rel: String): String =
+    s"""sub AS (SELECT vec_id, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS sv
+       |        FROM $rel CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
+       |""".stripMargin +
+      kmInitSql("pseed", rel, s"$PqK") + ",\n" +
+      s"""p0 AS (SELECT j, cid, c[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS c
+         |       FROM pseed CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
+         |""".stripMargin +
+      lloydSql("sub", Seq("j"), "sv", "code", "p", "q")
 
-  private[queries] def pqCtes: String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-         |      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
-         |sub AS (SELECT vec_id, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS sv
-         |        FROM e CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
-         |p0 AS (SELECT s.j, d.cid, s.sv AS c FROM (
-         |        SELECT vec_id, CAST(rn - 1 AS INTEGER) AS cid FROM (
-         |          SELECT vec_id, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-         |          FROM e)
-         |        WHERE rn <= $PqK) d JOIN sub s ON s.vec_id = d.vec_id)""".stripMargin)
-    for (i <- 1 to KmIter + 1) {
-      sb.append(",\n").append(pqAssignSql(s"q$i", s"p${i - 1}"))
-      if (i <= KmIter) sb.append(",\n").append(pqUpdateSql(s"p$i", s"q$i"))
-    }
-    sb.toString
-  }
+  private[queries] def pqCtes: String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |      WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
+       |""".stripMargin + pqTrainCtes("e")
 
   private[queries] val pqFinalAsg = s"q${KmIter + 1}"
   private[queries] val pqFinalBook = s"p$KmIter"
 
-  // ===== IVF-PQ oracle: the residual chain, then the keyed Lloyd loop =====
-  // pqCtes with the training frame swapped: `r` is the residual relation
-  // (vector − its cell's min-vec_id representative, elementwise — vsubSql
-  // mirrors zip_with subtraction exactly), `sub`/`p0` are built FROM r, and
-  // the loop reuses pqAssignSql/pqUpdateSql verbatim (they reference `sub`
-  // by name). The e/rid/reps fragments are ann_ivf_nprobe's.
-  private def ivfpqCtes: String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-         |      WHERE vec_id IS NOT NULL AND label IS NOT NULL AND embedding IS NOT NULL),
-         |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
-         |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid),
-         |r AS (SELECT e.vec_id, e.label, ${vsubSql("e.v", "reps.rv")} AS v
-         |      FROM e JOIN reps ON e.label = reps.cell),
-         |sub AS (SELECT vec_id, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS sv
-         |        FROM r CROSS JOIN (SELECT unnest(range(0, $PqM)) AS j)),
-         |p0 AS (SELECT s.j, d.cid, s.sv AS c FROM (
-         |        SELECT vec_id, CAST(rn - 1 AS INTEGER) AS cid FROM (
-         |          SELECT vec_id, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-         |          FROM r)
-         |        WHERE rn <= $PqK) d JOIN sub s ON s.vec_id = d.vec_id)""".stripMargin)
-    for (i <- 1 to KmIter + 1) {
-      sb.append(",\n").append(pqAssignSql(s"q$i", s"p${i - 1}"))
-      if (i <= KmIter) sb.append(",\n").append(pqUpdateSql(s"p$i", s"q$i"))
-    }
-    sb.toString
-  }
+  // ===== IVF-PQ oracle: the residual chain, then the keyed Lloyd chain =====
+  // pqCtes with the training relation swapped: `r` is the residual
+  // relation (vector − its cell's min-vec_id representative, elementwise
+  // — vsubSql mirrors zip_with subtraction exactly). The e/rid/reps
+  // fragments are ann_ivf_nprobe's.
+  private def ivfpqCtes: String =
+    s"""e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |      WHERE vec_id IS NOT NULL AND label IS NOT NULL AND embedding IS NOT NULL),
+       |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
+       |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid),
+       |r AS (SELECT e.vec_id, e.label, ${vsubSql("e.v", "reps.rv")} AS v
+       |      FROM e JOIN reps ON e.label = reps.cell),
+       |""".stripMargin + pqTrainCtes("r")
 
   // ===== PQ serving oracle fragments: one string per shared CTE run =====
   // The flat ADC chain (qs/lut/adc over pqCtes) of ann_pq and
@@ -1737,7 +1670,7 @@ object SimilarityQueries {
        |$km2Ctes,
        |asg AS (SELECT vec_id, cluster FROM gz),
        |q AS (SELECT vec_id AS qid, scell AS qscell, cluster AS qcell, v AS qv FROM gz),
-       |gbc AS (SELECT b.scell, CAST(b.scell * g.kb + b.sid AS INTEGER) AS cid, b.c
+       |gbc AS (SELECT b.scell, CAST(b.scell * g.kb + b.cid AS INTEGER) AS cid, b.c
        |        FROM gb$KmIter b CROSS JOIN gkb g),
        |gsc AS (SELECT cid, c FROM gs$KmIter
        |        WHERE cid IN (SELECT DISTINCT scell FROM gbc)),
@@ -1915,9 +1848,7 @@ object SimilarityQueries {
 
     "ann_lsh" ->
       s"""WITH e0 AS (SELECT vec_id, v, ${signBucketSql("v", LshBits)} AS bucket FROM ($eSql)),
-         |hot AS (SELECT bucket FROM e0 GROUP BY 1 HAVING count(*) > ${DedupQueries.MaxBucket}),
-         |e AS (SELECT * FROM e0
-         |      WHERE NOT EXISTS (SELECT 1 FROM hot h WHERE h.bucket = e0.bucket)),
+         |${DedupQueries.capBucketsSql("e0", Seq("bucket"), "hot", "e")},
          |pairs AS (
          |  SELECT a.vec_id, a.bucket, b.vec_id AS nn_id, ${cosineSql("a.v", "b.v")} AS sim
          |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
@@ -1933,10 +1864,7 @@ object SimilarityQueries {
       s"""WITH e AS ($eSql),
          |tabs AS (
          |  $tabArms),
-         |hot AS (SELECT tbl, bucket FROM tabs GROUP BY 1, 2 HAVING count(*) > ${DedupQueries.MaxBucket}),
-         |cold AS (SELECT * FROM tabs tb
-         |         WHERE NOT EXISTS (SELECT 1 FROM hot h
-         |                           WHERE h.tbl = tb.tbl AND h.bucket = tb.bucket)),
+         |${DedupQueries.capBucketsSql("tabs", Seq("tbl", "bucket"), "hot", "cold")},
          |pairs AS (
          |  SELECT a.vec_id, b.vec_id AS nn_id, ${cosineSql("a.v", "b.v")} AS sim
          |  FROM cold a JOIN cold b

@@ -1544,22 +1544,33 @@ class QueriesSpec extends AnyFunSuite {
     assert(repart.exceptAll(base).count() == 0)
   }
 
-  test("embedding_kmeans separates two blobs; assignment is partitioning-invariant") {
-    import spark.implicits._
-    // two tight blobs on opposite axes. Lloyd's never MERGES two seeds
-    // that land inside one blob (each keeps its basin), so "one cluster
-    // per blob" is not a k-means property at K=8 — the separation
-    // property is that no cluster STRADDLES the blobs: every centroid
-    // ends inside one blob, so no vector can sit closer to a
-    // cross-blob centroid than to its own blob's.
+  // two tight blobs on opposite axes, 12 vectors each (label = blob)
+  private def twoBlobRows: Seq[(Long, Array[Float], Int)] = {
     def blobA(seed: Int): Array[Float] =
       Array.tabulate(8)(d => (if (d == 0) 10.0f else 0.0f) + 0.01f * (seed + d))
     def blobB(seed: Int): Array[Float] =
       Array.tabulate(8)(d => (if (d == 1) -10.0f else 0.0f) - 0.01f * (seed + d))
-    val rows = (0 until 12).map(i => (i.toLong, blobA(i), 0)) ++
+    (0 until 12).map(i => (i.toLong, blobA(i), 0)) ++
       (12 until 24).map(i => (i.toLong, blobB(i), 1))
+  }
+
+  private def twoBlobDir(): String = {
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-kmeans").toString
-    rows.toDF("vec_id", "embedding", "label").write.parquet(dir + "/embeddings.parquet")
+    twoBlobRows.toDF("vec_id", "embedding", "label").write.parquet(dir + "/embeddings.parquet")
+    dir
+  }
+
+  test("embedding_kmeans separates two blobs; assignment is partitioning-invariant") {
+    import spark.implicits._
+    import graft.queries.SimilarityQueries
+    // Lloyd's never MERGES two seeds that land inside one blob (each
+    // keeps its basin), so "one cluster per blob" is not a k-means
+    // property at K=8 — the separation property is that no cluster
+    // STRADDLES the blobs: every centroid ends inside one blob, so no
+    // vector can sit closer to a cross-blob centroid than to its own
+    // blob's.
+    val dir = twoBlobDir()
     val asg = SparkEntry.queries("embedding_kmeans")(spark, dir)
       .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
     val aClusters = (0L until 12L).map(asg).toSet
@@ -1576,6 +1587,66 @@ class QueriesSpec extends AnyFunSuite {
     val repart = SparkEntry.queries("embedding_kmeans")(spark, dir2)
     assert(base.exceptAll(repart).count() == 0 && repart.exceptAll(base).count() == 0,
       "kmeans assignment must be bit-identical under repartitioning")
+    // the keyed tiers run the same Lloyd loop: the PQ codebooks (keyed by
+    // subspace, raw and IVF-residual) and the two-level quantizer's
+    // assignment (sub tier keyed by super cell) must be bit-identical too.
+    // The 8-dim vectors fill PQ subspace j = 0 only; the later, empty
+    // subspaces' codewords lose every member in the first update.
+    Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "pqCodebook" -> (d => SimilarityQueries.pqCodebook(spark, d)),
+      "ivfpqCodebook" -> (d => SimilarityQueries.ivfpqCodebook(spark, d))
+    ).foreach { case (name, book) =>
+      val (b1, b2) = (book(dir), book(dir2))
+      assert(b1.count() > 0, s"$name trained no codewords")
+      assert(b1.exceptAll(b2).count() == 0 && b2.exceptAll(b1).count() == 0,
+        s"$name must be bit-identical under repartitioning")
+    }
+    def km2Cells(d: String) = SimilarityQueries.withKm2Cells(spark, d)(
+      _.asg.select("vec_id", "scell", "cluster").as[(Long, Int, Int)].collect().toSet)
+    val cells = km2Cells(dir)
+    assert(cells.size == 24)
+    assert(cells == km2Cells(dir2),
+      "the two-level assignment must be bit-identical under repartitioning")
+  }
+
+  test("embedding_kmeans equals a plain-Scala Lloyd recomputation on the two-blob fixture") {
+    import spark.implicits._
+    import graft.queries.SimilarityQueries.{KmIter, KmScale, kmeansK}
+    // The Lloyd arithmetic spelled out on the driver: the k smallest
+    // (md5(vec_id), vec_id) seed, the engine's left-fold dist² with ties
+    // to the smaller cid, and KmIter fixed-point updates (floor(x·KmScale)
+    // BIGINT sums, one double division; an emptied cluster disappears).
+    // Exact equality: the engine's result is order-free by construction.
+    val pts = twoBlobRows.map { case (id, v, _) => (id, v.map(_.toDouble)) }
+    val vecOf = pts.toMap
+    def md5Hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    def dist2(a: Array[Double], b: Array[Double]): Double =
+      a.indices.foldLeft(0.0) { (acc, i) => val d = a(i) - b(i); acc + d * d }
+    val byD2ThenCid = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+    def assign(cents: Seq[(Int, Array[Double])]): Seq[(Long, Int, Double)] =
+      pts.map { case (id, v) =>
+        val (d2, cid) = cents.map { case (c, cv) => (dist2(v, cv), c) }.min(byD2ThenCid)
+        (id, cid, d2)
+      }
+    def update(asg: Seq[(Long, Int, Double)]): Seq[(Int, Array[Double])] =
+      asg.groupBy(_._2).toSeq.map { case (cid, members) =>
+        val n = members.size.toDouble
+        cid -> Array.tabulate(vecOf(members.head._1).length) { p =>
+          val fsum = members.map(m => math.floor(vecOf(m._1)(p) * KmScale).toLong).sum
+          fsum.toDouble / (n * KmScale.toDouble)
+        }
+      }
+    var cents = pts.sortBy { case (id, _) => (md5Hex(id.toString), id) }
+      .take(kmeansK(pts.size.toLong))
+      .zipWithIndex.map { case ((_, v), cid) => (cid, v) }
+    for (_ <- 1 to KmIter) cents = update(assign(cents))
+    val expected = assign(cents).sortBy(_._1)
+
+    val got = SparkEntry.queries("embedding_kmeans")(spark, twoBlobDir())
+      .as[(Long, Int, Double)].collect().toSeq
+    assert(got == expected)
   }
 
   test("dedup_semantic_kmeans pairs blob near-dups and elects the quality drop side") {
@@ -2059,8 +2130,8 @@ class QueriesSpec extends AnyFunSuite {
     }
     // neighbors come from probed cells only: ≤ NProbe distinct clusters
     // per query (via the two-level quantizer assignment the graph uses)
-    val cluster = graft.queries.SimilarityQueries.km2Assign(spark, Sf0001)
-      .select("vec_id", "cluster").as[(Long, Int)].collect().toMap
+    val cluster = graft.queries.SimilarityQueries.withKm2Cells(spark, Sf0001)(
+      _.asg.select("vec_id", "cluster").as[(Long, Int)].collect().toMap)
     knn.groupBy(_._1).foreach { case (q, rows) =>
       assert(rows.map(r => cluster(r._3)).distinct.length <= 2, s"qid $q cells")
     }
