@@ -38,7 +38,8 @@ object SparkInternals {
     "org.apache.spark.sql.classic.SparkSession (cast from sql.SparkSession for ofRows/LogicalRDD)",
     "QueryExecution.toRdd / executedPlan.outputPartitioning / outputOrdering (checkpoint reconstruction)",
     "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(xxhash64, n, bits) (CurationQueries.bloomOf)",
-    "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, xxhash64) (CurationQueries.mightContain)")
+    "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, xxhash64) (CurationQueries.mightContain)",
+    "ParquetFileFormat.readSchemaFromFooter(Footer, ParquetToSparkSchemaConverter(SQLConf)) over ParquetFooterReader.readFooter(HadoopInputFile, SKIP_ROW_GROUPS), with classic.SparkSession.sessionState.conf (Tables.footerSchema)")
 
   /** Wrap a native Catalyst expression as a public Column. */
   def column(e: Expression): Column =
@@ -61,6 +62,25 @@ object SparkInternals {
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
     ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
       org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** The Spark schema of one parquet file from its footer, read on the
+    * driver and converted as schema inference converts each file (its
+    * per-file step, `readSchemaFromFooter`, under the session's SQLConf)
+    * — without inference's one-task Spark job.
+    */
+  def parquetFooterSchema(spark: SparkSession,
+      file: org.apache.hadoop.fs.FileStatus): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val meta = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        spark.sparkContext.hadoopConfiguration),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+  }
 
   /** Eager local checkpoint whose new leaf carries MEASURED statistics —
     * see [[org.apache.spark.sql.graft.CheckpointBridge]] for the driver

@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -86,6 +86,18 @@ object Checkpoints {
   def fresh(df: DataFrame): DataFrame =
     graft.bridge.SparkInternals
       .localCheckpointMeasured(df, StorageLevel.MEMORY_AND_DISK)
+
+  /** The driver-finish gate: all of `df`'s rows if it has at most `bound`
+    * of them, else None. One bounded collect, `limit(bound + 1)`, both
+    * decides and fetches, so a small frame is read once. The final stage
+    * is coalesced to one task, so the collect is one job: over several
+    * partitions, a limit scans one first and then starts a second job
+    * for the rest. A `bound` ≤ 0 never collects, which lets specs force
+    * the distributed path.
+    */
+  def collectAtMost(df: DataFrame, bound: Int): Option[Array[Row]] =
+    if (bound <= 0) None
+    else Some(df.coalesce(1).limit(bound + 1).collect()).filter(_.length <= bound)
 
   /** Unpersist the checkpoint blocks behind `df` immediately (async).
     * `df` must be the checkpointed frame itself (or a thin projection of

@@ -30,7 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frames whose session-long residence is not survivable.
   *
   * Builders must return an EAGER checkpoint ([[Checkpoints.fresh]] /
-  * [[Checkpoints.corpusScaled]]) and must NOT retire it — a retired
+  * [[Checkpoints.corpusScaled]]) or a local relation (a driver-finished
+  * small input: [[graft.queries.SimilarityQueries.lloydTrain]]) and must
+  * NOT retire it — a retired
   * frame's blocks die at the next harness drain, which is exactly what a
   * cached frame must survive. Inner intermediates of the build may (and
   * should) retire as usual: the returned frame is materialized before

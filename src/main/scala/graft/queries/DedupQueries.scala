@@ -385,21 +385,23 @@ object DedupQueries {
     * label map is jumped label → label(label) to IDEMPOTENCE (contract),
     * so labels are component-root ids entering every round and one hook
     * merges whole root trees; a fixpoint is a connected component
-    * labeled by its smallest doc_id. The driver loop runs on
-    * CHECKPOINTED iterations (localCheckpoint truncates the logical
-    * plan — without it the plan doubles per round and re-executes the
-    * whole simhash pipeline each join) and converges in O(log n) outer
-    * rounds — measured 6 rounds at sf10 where the previous
-    * single-composition spelling took 43, at the identical fixpoint sum
-    * (see the loop comment in [[clusterLabelsFromEdges]]). Labels are integers, so the fixpoint
-    * is exactly reproducible by the oracle's recursive reachability
-    * closure (no float order sensitivity).
+    * labeled by its smallest doc_id. The loop runs on CHECKPOINTED
+    * iterations (localCheckpoint truncates the logical plan — without it
+    * the plan doubles per round and re-executes the whole simhash
+    * pipeline each join) and converges in O(log n) outer rounds —
+    * measured 6 rounds at sf10 where the previous single-composition
+    * spelling took 43, at the identical fixpoint sum (see the loop
+    * comment in [[hookContractLabels]]). A pair graph of at most
+    * `driverMaxPairs` edges skips the loop: union-find on the driver
+    * reaches the same fixpoint ([[clusterLabelsFromEdges]]). Labels are
+    * integers, so the fixpoint is exactly reproducible by the oracle's
+    * recursive reachability closure (no float order sensitivity).
     */
-  private def clusterLabels(s: SparkSession, dir: String,
-      includeExact: Boolean = false): DataFrame =
+  private[graft] def clusterLabels(s: SparkSession, dir: String,
+      includeExact: Boolean = false, driverMaxPairs: Int = CcDriverMaxPairs): DataFrame =
     if (!includeExact)
       clusterLabelsFromEdges(Tables(s, dir, "documents").select(col("doc_id")),
-        simhashEdges(s, dir, includeExact = false))
+        simhashEdges(s, dir, includeExact = false), driverMaxPairs)
     else graft.operators.SessionCache.frame(s, dir, "cluster-map-exact") {
       // session-cached (doc-rows-bounded, three longs per row): the
       // KEEP/DROP-grade map is consumed by dedup_canonical AND all three
@@ -408,7 +410,7 @@ object DedupQueries {
       // (the in-session analog of publishClusterMap's snapshot)
       graft.operators.Checkpoints.corpusScaled(
         clusterLabelsFromEdges(Tables(s, dir, "documents").select(col("doc_id")),
-          simhashEdges(s, dir, includeExact = true)))
+          simhashEdges(s, dir, includeExact = true), driverMaxPairs))
     }
 
   /** The simhash near-dup pair edges (d1, d2) of [[clusterLabels]].
@@ -443,15 +445,89 @@ object DedupQueries {
         simhashPairsFrom(sigs).select("d1", "d2").union(sigDup))
     }
 
-  /** The connected-components label loop over a caller-supplied undirected
+  /** Pair-edge rows up to which [[clusterLabelsFromEdges]] labels on the
+    * driver instead of running the distributed loop. At this bound (a
+    * random graph of 65,536 edges over 131,072 ids) the driver path took
+    * 1.5-1.8 s and the loop 10.4-11.7 s on a 4-core local[4] session: the
+    * loop pays its three setup checkpoints and ~10 jobs per round.
+    */
+  private[graft] val CcDriverMaxPairs = 1 << 16
+
+  /** The connected-components labeling over a caller-supplied undirected
     * pair-edge frame (d1, d2) — the engine of [[clusterLabels]] (simhash
     * edges) and `dedup_clusters_multi` (the union of every pair relation
     * the catalog emits). Edge SOURCE is the only thing that varies; the
-    * pointer-jumping iteration, its convergence certificate, and the
-    * singleton-completion join are shared verbatim.
+    * labeling and the singleton-completion join are shared verbatim.
+    *
+    * Two paths compute the same (id, label) map, the component's minimum
+    * id per paired vertex:
+    *  - DRIVER finish: one bounded collect, `limit(driverMaxPairs + 1)`,
+    *    both gates the path and fetches the edges. If it returns at most
+    *    `driverMaxPairs` rows, union-find by minimum id labels them
+    *    ([[minIdLabels]]) and the map is a local relation: no checkpoint,
+    *    no loop. Labels are integers and the minimum of a component does
+    *    not depend on the order edges are merged in, so the map is
+    *    bit-identical to the loop's fixpoint.
+    *  - DISTRIBUTED loop ([[hookContractLabels]]) otherwise. The probe
+    *    then costs one more evaluation of `pairs0` up to the limit.
+    * `driverMaxPairs` is [[CcDriverMaxPairs]]; specs pass 0 (never the
+    * driver) to run both paths on the same inputs.
     */
   private[graft] def clusterLabelsFromEdges(docs: DataFrame,
-      pairs0: DataFrame): DataFrame = {
+      pairs0: DataFrame, driverMaxPairs: Int = CcDriverMaxPairs): DataFrame = {
+    val idType = pairs0.schema("d1").dataType
+    val labels = graft.operators.Checkpoints.collectAtMost(
+        pairs0.select(col("d1").cast("long"), col("d2").cast("long")), driverMaxPairs) match {
+      case Some(rows) => minIdLabels(docs.sparkSession, rows)
+        .select(col("id").cast(idType), col("label").cast(idType))
+      case None => hookContractLabels(pairs0)
+    }
+    // sizes come from the SMALL labels frame, not from the full docs
+    // join (which would execute the corpus-wide join twice): every doc
+    // absent from `labels` has no edge, hence cluster size 1
+    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("sz"))
+    val labeled = labels.join(sizes, "label")
+    docs.join(labeled, docs("doc_id") === labeled("id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("label"), col("doc_id")).as("cluster_id"),
+        coalesce(col("sz"), lit(1L)).as("cluster_size"))
+  }
+
+  /** The fixpoint of [[hookContractLabels]] on the driver: union-find over
+    * the collected (d1, d2) rows, always hanging the larger root under the
+    * smaller, so a vertex's root is its component's minimum id. Roots are
+    * indices into the sorted distinct ids, hence "smaller index" is
+    * "smaller id". A null endpoint joins nothing and its partner keeps its
+    * own id, which is what the loop's null-dropping joins do too.
+    * Returns (id LONG, label LONG) as a local relation.
+    */
+  private def minIdLabels(s: SparkSession, pairs: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val ids = pairs.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.getLong)).distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val n = parent(j); parent(j) = r; j = n }
+      r
+    }
+    pairs.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val a = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+        val b = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(ids.indices.map(i => org.apache.spark.sql.Row(ids(i), ids(find(i)))).asJava,
+      new org.apache.spark.sql.types.StructType().add("id", "long").add("label", "long"))
+  }
+
+  /** The distributed labeling loop of [[clusterLabelsFromEdges]]: (id,
+    * label) for every paired vertex, as a checkpoint retired to the next
+    * harness drain.
+    */
+  private def hookContractLabels(pairs0: DataFrame): DataFrame = {
     val pairs = pairs0.transform(graft.operators.Checkpoints.fresh)
     // checkpointed PRE-PARTITIONED on the per-round join key: LogicalRDD
     // preserves outputPartitioning, so the edge side of every iteration's
@@ -563,21 +639,12 @@ object DedupQueries {
       rounds += 1
     }
     require(converged, s"cluster labeling failed to converge in $rounds rounds")
-    // converged: the result below reads only the FINAL labels — the edge
-    // frame is dead (free now); the final labels back the lazy result the
-    // caller will execute later, so they are retired to the next harness
-    // drain instead of freed
+    // converged: the caller's result reads only the FINAL labels — the
+    // edge frame is dead (free now); the final labels back the lazy result
+    // the caller will execute later, so they are retired to the next
+    // harness drain instead of freed
     graft.operators.Checkpoints.free(edges)
     graft.operators.Checkpoints.retire(labels)
-    // sizes come from the SMALL checkpointed labels frame, not from the
-    // full docs join (which would execute the corpus-wide join twice):
-    // every doc absent from `labels` has no edge, hence cluster size 1
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("sz"))
-    val labeled = labels.join(sizes, "label")
-    docs.join(labeled, docs("doc_id") === labeled("id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"),
-        coalesce(col("sz"), lit(1L)).as("cluster_size"))
   }
 
   /** Publish the KEEP/DROP-grade cluster map (doc_id, cluster_id,

@@ -190,7 +190,7 @@ object SimilarityQueries {
     * row_number window that assigns cluster ids runs over the K surviving
     * rows only, so its unpartitioned frame is bounded by design.
     */
-  private def kmInit(e: DataFrame, k: Int): DataFrame = {
+  private[graft] def kmInit(e: DataFrame, k: Int): DataFrame = {
     val w = Window.orderBy(col("h"), col("vec_id"))
     e.withColumn("h", md5(col("vec_id").cast("string")))
       .orderBy(col("h"), col("vec_id")).limit(k)
@@ -253,17 +253,147 @@ object SimilarityQueries {
       .select(k :+ transform(col("pcs"), p => p.getField("cv")).as("c"): _*)
   }
 
-  /** The training loop every tier runs: `init`, then [[KmIter]] rounds of
-    * update ∘ assign over `pts`, materialized as a fresh checkpoint (the
-    * trained frame is design-bounded, so its callers session-cache it).
-    * Cost: KmIter broadcast-argmin passes over `pts` plus KmIter tiny
-    * exchanges; the tier's final assignment is one more pass.
+  /** Training rows (rows of `pts`) up to which [[lloydTrain]] runs on the
+    * driver. The flat tier sets the bound: its K grows with the corpus
+    * (n/KmCell), so its driver rounds cost n²·dim/KmCell multiply-adds on
+    * one thread. At this bound (K = 164, dim 64) the driver path trained
+    * in 1.3-1.8 s against the distributed loop's 2.2-2.6 s on a 4-core
+    * local[4] session; at twice the bound it was the slower one (5.1-5.6 s
+    * against 3.7-4.1 s). The keyed tiers' rows are far cheaper (K = PqK or Ksub
+    * per key).
     */
-  private def lloydTrain(init: DataFrame, pts: DataFrame, keys: Seq[String],
-      pt: String): DataFrame = {
-    var c = init
-    for (_ <- 1 to KmIter) c = lloydUpdate(lloydAssign(pts, c, keys, pt), keys, pt)
-    graft.operators.Checkpoints.fresh(c)
+  private[graft] val LloydDriverMaxRows = 1 << 13
+
+  /** The training loop every tier runs: `init`, then [[KmIter]] rounds of
+    * update ∘ assign over `pts`; returns the trained (keys…, cid, c) frame
+    * (design-bounded, so its callers session-cache it). `init` is, in
+    * every tier, per key the `k` points of `pts` with the smallest
+    * (md5(vec_id), vec_id), cid their rank — [[kmInit]], [[km2SubInit]]
+    * and the PQ seed are that rule's funnel-free distributed spellings.
+    *
+    * Two paths compute the same centroids:
+    *  - DRIVER finish: one bounded collect, `limit(driverMaxRows + 1)`,
+    *    both gates the path and fetches (vec_id, keys…, pt). If it returns
+    *    at most `driverMaxRows` rows, the seed rule and the rounds run in
+    *    plain Scala over those rows ([[lloydTrainLocal]]; `init` is never
+    *    run) and the result is a local relation: training reads `pts`
+    *    once.
+    *  - DISTRIBUTED otherwise: KmIter broadcast-argmin passes over `pts`
+    *    plus KmIter tiny exchanges, materialized as a fresh checkpoint.
+    *    With `spreadPts` > 0, `pts` is first round-robined over that many
+    *    partitions and checkpointed for the passes (and freed after). The
+    *    probe costs one more evaluation of `pts` up to the limit.
+    * Bit-identical because both paths use the same argmin kernel and the
+    * same integer sums, which do not depend on the order rows arrive in.
+    * `driverMaxRows` is [[LloydDriverMaxRows]]; specs pass 0 (never the
+    * driver) to run both paths on the same inputs. The tier's final
+    * assignment is one more pass either way: its output is corpus-sized.
+    */
+  private[graft] def lloydTrain(init: DataFrame, k: Int, pts: DataFrame, keys: Seq[String],
+      pt: String, driverMaxRows: Int = LloydDriverMaxRows,
+      spreadPts: Int = 0): DataFrame =
+    graft.operators.Checkpoints.collectAtMost(
+        pts.select((("vec_id" +: keys) :+ pt).map(col): _*), driverMaxRows) match {
+      case Some(rows) => lloydTrainLocal(rows, k, keys, pts.schema)
+      case None =>
+        val p =
+          if (spreadPts > 0) graft.operators.Checkpoints.corpusScaled(pts.repartition(spreadPts))
+          else pts
+        var c = init
+        for (_ <- 1 to KmIter) c = lloydUpdate(lloydAssign(p, c, keys, pt), keys, pt)
+        val trained = graft.operators.Checkpoints.fresh(c)
+        if (spreadPts > 0) graft.operators.Checkpoints.free(p)
+        trained
+    }
+
+  /** [[lloydTrain]] on the driver over the collected (vec_id, keys…, pt)
+    * rows; returns (keys…, cid, c) as a local relation. Each step
+    * restates its distributed twin:
+    *  - seed: per key the `k` rows smallest by (md5 hex of vec_id's
+    *    string, vec_id), nulls first as in ORDER BY, cid = rank.
+    *  - assign ([[lloydAssign]]): a key's centroid list goes through the
+    *    SAME kernel, [[graft.expressions.ArgMinDist2Util.argMin]] (ties to
+    *    the smaller cid). A point whose key has no centroid, or a null
+    *    key, is dropped, as by the equi-join; with no keys every point
+    *    sees the one (possibly empty) list, as by the cross join.
+    *  - update ([[lloydUpdate]]): per (keys, cid, position) the wrapping
+    *    Long sum of floor(x·KmScale) and the member count, then one
+    *    double division. A null element counts but adds nothing, an
+    *    unassigned point forms the null-cid group, and a centroid left
+    *    without members disappears, as in SQL.
+    */
+  private def lloydTrainLocal(rows: Array[org.apache.spark.sql.Row], k: Int,
+      keys: Seq[String], ptsSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+    type Vec = scala.collection.Seq[Any]
+    val nk = keys.length
+    def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = (1 to nk).map(r.get)
+    def vecOf(r: org.apache.spark.sql.Row): Vec = r.getAs[Vec](nk + 1)
+    // the kernel reads primitive doubles from an UnsafeArrayData, as it
+    // does inside the codegen'd pass; only a null element needs boxing
+    def arrayData(v: Vec): ArrayData =
+      if (v.contains(null)) new GenericArrayData(v.toArray)
+      else UnsafeArrayData.fromPrimitiveArray(v.map(_.asInstanceOf[Double]).toArray)
+    val points = rows.map { r =>
+      val v = vecOf(r)
+      (keyOf(r), v, if (v == null) null else arrayData(v))
+    }
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    val hex = java.util.HexFormat.of()
+    def seedKey(id: Any): (Option[String], Option[Long]) = (
+      Option(id).map(x => hex.formatHex(md5.digest(x.toString.getBytes("UTF-8")))),
+      Option(id).map(_.asInstanceOf[Number].longValue))
+    val seedOrder = Ordering.Tuple2(Ordering.Option(Ordering.String),
+      Ordering.Option(Ordering.Long))
+    var cents: Seq[(Seq[Any], Any, Vec)] = rows.toSeq.groupBy(keyOf).toSeq.flatMap {
+      case (key, members) =>
+        members.map(r => (seedKey(r.get(0)), r)).sortBy(_._1)(seedOrder)
+          .take(k).zipWithIndex.map { case ((_, r), cid) => (key, cid: Any, vecOf(r)) }
+    }
+    final class Sums {
+      val fsum, n = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val some = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+      def add(v: Vec): Unit = v.indices.foreach { p =>
+        if (p == n.length) { fsum += 0L; n += 0L; some += false }
+        n(p) += 1
+        if (v(p) != null) {
+          fsum(p) += math.floor(v(p).asInstanceOf[Double] * KmScale).toLong
+          some(p) = true
+        }
+      }
+      def mean: Vec = n.indices.map(p =>
+        if (some(p)) fsum(p).toDouble / (n(p).toDouble * KmScale.toDouble) else null)
+    }
+    val noCents: ArrayData = new GenericArrayData(Array.empty[Any])
+    for (_ <- 1 to KmIter) {
+      val lists: Map[Seq[Any], ArrayData] = cents.groupBy(_._1).map { case (key, cs) =>
+        key -> new GenericArrayData(cs.map { case (_, cid, c) =>
+          new GenericInternalRow(Array[Any](cid, if (c == null) null else arrayData(c)))
+        }.toArray)
+      }
+      val groups = scala.collection.mutable.LinkedHashMap.empty[(Seq[Any], Any), Sums]
+      points.foreach { case (key, raw, v) =>
+        val list =
+          if (nk == 0) Some(lists.getOrElse(key, noCents))
+          else if (key.contains(null)) None
+          else lists.get(key)
+        list.foreach { cs =>
+          val best = if (v == null) null else graft.expressions.ArgMinDist2Util.argMin(v, cs)
+          val cid: Any = if (best == null) null else best.getInt(1)
+          if (raw != null && raw.nonEmpty) groups.getOrElseUpdate((key, cid), new Sums).add(raw)
+        }
+      }
+      cents = groups.toSeq.map { case ((key, cid), g) => (key, cid, g.mean) }
+    }
+    val schema = StructType(keys.map(ptsSchema(_).copy(nullable = true)) ++ Seq(
+      StructField("cid", IntegerType, nullable = true),
+      StructField("c", ArrayType(DoubleType, containsNull = true), nullable = true)))
+    import scala.jdk.CollectionConverters._
+    org.apache.spark.sql.SparkSession.active.createDataFrame(
+      cents.map { case (key, cid, c) => org.apache.spark.sql.Row.fromSeq(key ++ Seq(cid, c)) }.asJava,
+      schema)
   }
 
   /** The (vec_id, v) Lloyd training/assignment corpus — ONE spelling
@@ -272,7 +402,7 @@ object SimilarityQueries {
     * trained on cannot drift. The repartition rationale lives in
     * [[kmeansAssign]].
     */
-  private def kmCorpus(s: SparkSession, dir: String): DataFrame =
+  private[graft] def kmCorpus(s: SparkSession, dir: String): DataFrame =
     vecs(s, dir).filter(col("v").isNotNull).select("vec_id", "v")
       .repartition(s.sparkContext.defaultParallelism)
 
@@ -313,14 +443,16 @@ object SimilarityQueries {
 
   /** The session-cached trained centroid frame (cid, c) of
     * [[kmeansAssign]]. `e` must be the same (vec_id, v) corpus the
-    * assignment pass scans.
+    * assignment pass scans; `driverMaxRows` is [[lloydTrain]]'s gate.
     */
-  private def kmeansCentroids(s: SparkSession, dir: String, e: DataFrame): DataFrame =
+  private[graft] def kmeansCentroids(s: SparkSession, dir: String, e: DataFrame,
+      driverMaxRows: Int = LloydDriverMaxRows): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "kmeans-centroids") {
       // K from the corpus count — one eager build-time action (the
       // dedup_clusters precedent); deterministic, and the oracle's SQL
       // derives the identical K from the identical COUNT(*)
-      lloydTrain(kmInit(e, kmeansK(e.count())), e, Seq(), "v")
+      val k = kmeansK(e.count())
+      lloydTrain(kmInit(e, k), k, e, Seq(), "v", driverMaxRows)
     }
 
   // ===== two-level coarse quantizer (the kNN graph's cell structure) =====
@@ -370,9 +502,9 @@ object SimilarityQueries {
     * (session-cached, Ks·dim-bounded): the flat tier's training at k = Ks.
     */
   private def km2SuperCentroids(s: SparkSession, dir: String, e: DataFrame,
-      ks: Int): DataFrame =
+      ks: Int, driverMaxRows: Int): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "km2-super-centroids") {
-      lloydTrain(kmInit(e, ks), e, Seq(), "v")
+      lloydTrain(kmInit(e, ks), ks, e, Seq(), "v", driverMaxRows)
     }
 
   /** Per-super-cell sub init (scell, cid, c): each super-cell's first
@@ -381,7 +513,7 @@ object SimilarityQueries {
     * (~n/Ks ≈ √(n·KmCell) rows each — sub-linear per partition, never a
     * global frame).
     */
-  private def km2SubInit(sa: DataFrame, kb: Int): DataFrame = {
+  private[graft] def km2SubInit(sa: DataFrame, kb: Int): DataFrame = {
     val w = Window.partitionBy(col("scell")).orderBy(col("h"), col("vec_id"))
     sa.withColumn("h", md5(col("vec_id").cast("string")))
       .withColumn("rn", row_number().over(w))
@@ -399,9 +531,9 @@ object SimilarityQueries {
     * KmIter+1 sub passes scan.
     */
   private def km2SubCentroids(s: SparkSession, dir: String, sa: DataFrame,
-      kb: Int): DataFrame =
+      kb: Int, driverMaxRows: Int): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "km2-sub-centroids") {
-      lloydTrain(km2SubInit(sa, kb), sa, Seq("scell"), "v")
+      lloydTrain(km2SubInit(sa, kb), kb, sa, Seq("scell"), "v", driverMaxRows)
     }
 
   /** The two-level quantizer as [[withKm2Cells]] hands it out: trained
@@ -419,14 +551,16 @@ object SimilarityQueries {
     * re-ran the super argmin corpus pass) and freed once `asg` is
     * materialized; `asg` is checkpointed for its consumers and freed once
     * `use` returns, so `use` must materialize what it keeps.
+    * `driverMaxRows` is both tiers' [[lloydTrain]] gate.
     */
-  private[graft] def withKm2Cells[T](s: SparkSession, dir: String)(use: Km2Cells => T): T = {
+  private[graft] def withKm2Cells[T](s: SparkSession, dir: String,
+      driverMaxRows: Int = LloydDriverMaxRows)(use: Km2Cells => T): T = {
     val e = kmCorpus(s, dir)
     val (ks, kb) = km2K(e.count())
-    val sc = km2SuperCentroids(s, dir, e, ks)
+    val sc = km2SuperCentroids(s, dir, e, ks, driverMaxRows)
     val sa = graft.operators.Checkpoints.corpusScaled(
       lloydAssign(e, sc, Seq(), "v").select(col("vec_id"), col("v"), col("cid").as("scell")))
-    val bc = km2SubCentroids(s, dir, sa, kb)
+    val bc = km2SubCentroids(s, dir, sa, kb, driverMaxRows)
     val asg = graft.operators.Checkpoints.corpusScaled(
       lloydAssign(sa, bc, Seq("scell"), "v")
         .select(col("vec_id"), col("v"), col("scell"),
@@ -504,33 +638,33 @@ object SimilarityQueries {
     * kmeans-centroids lifecycle). The init seed is the PqK smallest
     * (md5(vec_id), vec_id) vectors — every subquantizer trains from the
     * SAME seed vectors' slices, which is the published recipe (one
-    * training set, M independent subspace quantizers). The subvector
-    * table is checkpointed for the KmIter+1 training scans and freed
-    * eagerly once the codebook frame is materialized.
+    * training set, M independent subspace quantizers). `driverMaxRows`
+    * is [[lloydTrain]]'s gate.
     */
-  private[graft] def pqCodebook(s: SparkSession, dir: String): DataFrame =
+  private[graft] def pqCodebook(s: SparkSession, dir: String,
+      driverMaxRows: Int = LloydDriverMaxRows): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "pq-codebook") {
       trainPqCodebook(
         vecs(s, dir).filter(col("v").isNotNull).select("vec_id", "v"),
-        s.sparkContext.defaultParallelism)
+        s.sparkContext.defaultParallelism, driverMaxRows)
     }
 
   /** The keyed Lloyd training body over ANY (vec_id, v) frame — shared by
     * [[pqCodebook]] (raw vectors) and [[ivfpqCodebook]] (IVF residuals);
     * one spelling so the two codebooks' training recipes cannot drift.
     * The seed is [[kmInit]]'s PqK vectors sliced per subspace; training
-    * is the Lloyd loop keyed by j over the subvectors.
+    * is the Lloyd loop keyed by j over the subvectors. Only the
+    * distributed path spreads the subvector table over `parallelism`
+    * partitions and checkpoints it for the KmIter training scans; the
+    * driver path reads it once, unshuffled.
     */
-  private def trainPqCodebook(e0: DataFrame, parallelism: Int): DataFrame = {
-    val e = e0.repartition(parallelism)
-    val sub = graft.operators.Checkpoints.corpusScaled(pqSub(e))
+  private def trainPqCodebook(e: DataFrame, parallelism: Int,
+      driverMaxRows: Int): DataFrame = {
     val seed = kmInit(e, PqK)
       .select(col("cid"), explode(sequence(lit(0), lit(PqM - 1))).as("j"), col("c"))
       .select(col("j"), col("cid"),
         slice(col("c"), col("j") * lit(PqDsub) + lit(1), lit(PqDsub)).as("c"))
-    val trained = lloydTrain(seed, sub, Seq("j"), "sv")
-    graft.operators.Checkpoints.free(sub)
-    trained
+    lloydTrain(seed, PqK, pqSub(e), Seq("j"), "sv", driverMaxRows, spreadPts = parallelism)
   }
 
   // ===== IVF-PQ (IVFADC — Jégou/Douze/Schmid, TPAMI 2011 §IV) =====
@@ -562,10 +696,11 @@ object SimilarityQueries {
     * their resolution on within-cell structure instead of re-encoding
     * cell positions.
     */
-  private[graft] def ivfpqCodebook(s: SparkSession, dir: String): DataFrame =
+  private[graft] def ivfpqCodebook(s: SparkSession, dir: String,
+      driverMaxRows: Int = LloydDriverMaxRows): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "ivfpq-codebook") {
       trainPqCodebook(ivfResiduals(s, dir).select("vec_id", "v"),
-        s.sparkContext.defaultParallelism)
+        s.sparkContext.defaultParallelism, driverMaxRows)
     }
 
   /** Every vector's PqM codes against the trained raw-vector codebooks. */

@@ -74,6 +74,28 @@ class PqSpec extends AnyFunSuite {
         s"duplicate pair $k/${100 + k} diverged: ${byId(k.toLong)} vs ${byId((100 + k).toLong)}")
   }
 
+  test("both codebooks and ann_pq agree between the driver and distributed Lloyd paths") {
+    // lloydTrain's gate 0 forces the distributed loop; the default gate
+    // trains these 120·PqM subvector rows on the driver. The cache is keyed
+    // by corpus dir, so each path's codebook is built cold.
+    import graft.queries.SimilarityQueries.{ivfpqCodebook, pqCodebook, LloydDriverMaxRows}
+    def books(bound: Int) = {
+      graft.operators.SessionCache.invalidate(spark, dir)
+      def rows(cb: org.apache.spark.sql.DataFrame) =
+        cb.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSet
+      val pq = rows(pqCodebook(spark, dir, bound))
+      val ivf = rows(ivfpqCodebook(spark, dir, bound))
+      val ann = SparkEntry.queries("ann_pq")(spark, dir).collect().map(_.toString).sorted.toSeq
+      (pq, ivf, ann)
+    }
+    val (driver, loop) = (books(LloydDriverMaxRows), books(0))
+    graft.operators.SessionCache.invalidate(spark, dir)
+    assert(driver._1.nonEmpty && driver._2.nonEmpty && driver._3.nonEmpty)
+    assert(driver._1 == loop._1, "pqCodebook differs between the paths")
+    assert(driver._2 == loop._2, "ivfpqCodebook differs between the paths")
+    assert(driver._3 == loop._3, "ann_pq differs between the paths")
+  }
+
   test("ann_pq matches a driver-side ADC recomputation from the codebook") {
     import org.apache.spark.sql.functions._
     val cb = graft.queries.SimilarityQueries.pqCodebook(spark, dir)

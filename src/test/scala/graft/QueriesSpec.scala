@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions._
+import graft.queries.SimilarityQueries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -292,6 +293,11 @@ class QueriesSpec extends AnyFunSuite {
     val got = SparkEntry.queries("dedup_clusters")(spark, Sf0001)
       .select("doc_id", "cluster_id").as[(Long, Long)].collect().toMap
     assert(got == expected, "components must match an independent union-find")
+    // the same labels from the distributed loop (gate 0) as from the
+    // driver's union-find (the default gate at this size)
+    val loop = graft.queries.DedupQueries.clusterLabels(spark, Sf0001, driverMaxPairs = 0)
+      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toMap
+    assert(loop == expected, "the distributed loop must match the union-find too")
 
     // crafted transitive chain: B is within Hamming 3 of both A and C,
     // but A and C are farther apart — the cluster {A,B,C} only forms if
@@ -313,11 +319,14 @@ class QueriesSpec extends AnyFunSuite {
       es.contains((1L, 2L)) && es.contains((2L, 3L)) && !es.contains((1L, 3L))
     }
     assert(chain.nonEmpty, "no candidate token produced an A-B-C chain; widen the list")
-    val clusters = SparkEntry.queries("dedup_clusters")(spark, chain.get._1)
-      .select("doc_id", "cluster_id", "cluster_size")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(clusters == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)),
-      s"chain must collapse into one cluster via B; got $clusters")
+    for (bound <- Seq(0, graft.queries.DedupQueries.CcDriverMaxPairs)) {
+      val clusters = graft.queries.DedupQueries.clusterLabels(spark, chain.get._1,
+          driverMaxPairs = bound)
+        .select("doc_id", "cluster_id", "cluster_size")
+        .as[(Long, Long, Long)].collect().toSet
+      assert(clusters == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)),
+        s"chain must collapse into one cluster via B at gate $bound; got $clusters")
+    }
   }
 
   test("dedup_canonical folds exact dups into one class and keeps the quality argmax") {
@@ -336,9 +345,20 @@ class QueriesSpec extends AnyFunSuite {
         (9L, "the quick brown fox jumps over a lazy dog", "en", "synth", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(dir + "/documents.parquet")
-    val out = SparkEntry.queries("dedup_canonical")(spark, dir)
-      .select("doc_id", "cluster_id", "canon_id", "keep")
-      .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1)
+    // the cluster map is session-cached per dir: fill it cold at each gate
+    // (0 runs the distributed loop, the default the driver's union-find),
+    // then the query reads that map
+    def canonical(bound: Int) = {
+      graft.operators.SessionCache.invalidate(spark, dir)
+      graft.queries.DedupQueries.clusterLabels(spark, dir, includeExact = true,
+        driverMaxPairs = bound)
+      SparkEntry.queries("dedup_canonical")(spark, dir)
+        .select("doc_id", "cluster_id", "canon_id", "keep")
+        .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    }
+    val out = canonical(graft.queries.DedupQueries.CcDriverMaxPairs)
+    assert(canonical(0) == out, "the distributed loop must decide as the driver path does")
+    graft.operators.SessionCache.invalidate(spark, dir)
     assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L, 9L))
     // one class {1,2,3} labeled by its min member, one singleton {9}
     assert(out.filter(_._1 != 9L).map(_._2).toSet == Set(1L))
@@ -1644,9 +1664,61 @@ class QueriesSpec extends AnyFunSuite {
     for (_ <- 1 to KmIter) cents = update(assign(cents))
     val expected = assign(cents).sortBy(_._1)
 
-    val got = SparkEntry.queries("embedding_kmeans")(spark, twoBlobDir())
-      .as[(Long, Int, Double)].collect().toSeq
-    assert(got == expected)
+    // both Lloyd paths: the centroids are session-cached per dir, so fill
+    // them cold at each gate (0 = distributed loop, default = driver)
+    val dir = twoBlobDir()
+    for (bound <- Seq(0, SimilarityQueries.LloydDriverMaxRows)) {
+      graft.operators.SessionCache.invalidate(spark, dir)
+      SimilarityQueries.kmeansCentroids(spark, dir, SimilarityQueries.kmCorpus(spark, dir), bound)
+      val got = SparkEntry.queries("embedding_kmeans")(spark, dir)
+        .as[(Long, Int, Double)].collect().toSeq
+      assert(got == expected, s"gate $bound")
+    }
+    graft.operators.SessionCache.invalidate(spark, dir)
+  }
+
+  test("Lloyd's driver finish is bit-identical to the distributed loop on every tier") {
+    import spark.implicits._
+    import SimilarityQueries.LloydDriverMaxRows
+    // kmeansCentroids (flat), both two-level tiers through withKm2Cells'
+    // final assignment, and the raw and residual PQ codebooks, each built
+    // cold at gate 0 (distributed) and at the default gate (driver)
+    def tiers(dir: String, bound: Int) = {
+      graft.operators.SessionCache.invalidate(spark, dir)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+      val out = Seq(
+        rows(SimilarityQueries.kmeansCentroids(spark, dir, SimilarityQueries.kmCorpus(spark, dir), bound)),
+        SimilarityQueries.withKm2Cells(spark, dir, bound)(
+          c => rows(c.asg.select("vec_id", "scell", "cluster"))),
+        rows(SimilarityQueries.pqCodebook(spark, dir, bound)),
+        rows(SimilarityQueries.ivfpqCodebook(spark, dir, bound)))
+      graft.operators.SessionCache.invalidate(spark, dir)
+      out
+    }
+    for (dir <- Seq(twoBlobDir(), Sf0001)) {
+      val (driver, loop) = (tiers(dir, LloydDriverMaxRows), tiers(dir, 0))
+      Seq("kmeansCentroids", "withKm2Cells", "pqCodebook", "ivfpqCodebook").indices.foreach { i =>
+        assert(driver(i).nonEmpty && driver(i) == loop(i),
+          s"${Seq("kmeansCentroids", "withKm2Cells", "pqCodebook", "ivfpqCodebook")(i)} differs at $dir")
+      }
+    }
+    graft.operators.Checkpoints.drain()
+  }
+
+  test("table schemas read from the footer equal inference's at every scale") {
+    // Tables reads each single-file table's schema on the driver instead
+    // of running inference's one-task job; it must be the same schema,
+    // and events.ts must still come out as TimestampType
+    val testdata = new java.io.File(Sf0001).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); t <- Tables.names) {
+      val path = s"$testdata/$sf/$t.parquet"
+      assert(Tables.footerSchema(spark, path).contains(spark.read.parquet(path).schema),
+        s"$sf/$t: footer schema differs from inference")
+      assert(Tables(spark, s"$testdata/$sf", t).schema ==
+        Tables.normalized(t, spark.read.parquet(path)).schema, s"$sf/$t")
+    }
+    assert(Tables(spark, Sf0001, "events").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
   }
 
   test("dedup_semantic_kmeans pairs blob near-dups and elects the quality drop side") {

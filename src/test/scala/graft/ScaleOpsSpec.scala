@@ -1026,12 +1026,37 @@ class ScaleOpsSpec extends AnyFunSuite {
       .map(c => ((c * m + m).toLong, ((c + 1) * m + 1).toLong))
     val edges = (intra ++ bridges).toDF("d1", "d2")
     val docs = (1 to cliques * m).map(_.toLong).toDF("doc_id")
-    val labeled = queries.DedupQueries.clusterLabelsFromEdges(docs, edges)
+    // gate 0: the distributed loop, whatever the graph's size
+    val labeled = queries.DedupQueries.clusterLabelsFromEdges(docs, edges, driverMaxPairs = 0)
       .collect()
     assert(labeled.length == cliques * m)
     assert(labeled.forall(_.getLong(1) == 1L),
       "every vertex of the single chain component must label to the min id")
     assert(labeled.forall(_.getLong(2) == (cliques * m).toLong))
+    graft.operators.Checkpoints.drain()
+  }
+
+  test("the driver finishes of the CC labeling and Lloyd training run at most 2 jobs") {
+    // a small fixture on both paths: the driver path is one bounded
+    // collect (plus nothing else), so a refactor that reintroduces the
+    // distributed loop below the gate fails here, while the loop itself
+    // runs many more jobs on the same input
+    import spark.implicits._
+    import queries.{DedupQueries, SimilarityQueries}
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("d1", "d2")
+    val docs = (1L to 8L).toDF("doc_id")
+    val (_, ccDriver) = SparkTestBase.jobsIn(DedupQueries.clusterLabelsFromEdges(docs, edges))
+    val (_, ccLoop) = SparkTestBase.jobsIn(
+      DedupQueries.clusterLabelsFromEdges(docs, edges, driverMaxPairs = 0))
+    assert(ccDriver <= 2, s"CC driver path ran $ccDriver jobs")
+    assert(ccLoop > ccDriver, s"the loop ran $ccLoop jobs, the driver path $ccDriver")
+    val pts = (0 until 12).map(i => (i.toLong, Seq(i % 3 * 1.0, i / 3 * 1.0))).toDF("vec_id", "v")
+    def train(bound: Int) =
+      SimilarityQueries.lloydTrain(SimilarityQueries.kmInit(pts, 3), 3, pts, Seq(), "v", bound)
+    val (_, lloydDriver) = SparkTestBase.jobsIn(train(SimilarityQueries.LloydDriverMaxRows))
+    val (_, lloydLoop) = SparkTestBase.jobsIn(train(0))
+    assert(lloydDriver <= 2, s"Lloyd driver path ran $lloydDriver jobs")
+    assert(lloydLoop > lloydDriver, s"the loop ran $lloydLoop jobs, the driver path $lloydDriver")
     graft.operators.Checkpoints.drain()
   }
 
