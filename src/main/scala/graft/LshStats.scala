@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * Every stage COMPOSES the operators' own factored machinery —
   * `DedupQueries.{shingleTable,chunkReps,repShingles,minhashBands,
   * minhashCandidateJoin,estJaccard}`, the one hot-bucket cap
-  * `DedupQueries.{MaxBucket,bucketCounts,hotBuckets,dropHot}`, and
-  * `SimilarityQueries.{kmeansAssign,signTables,lshCandidateJoin}` —
+  * `DedupQueries.{MaxBucket,bucketCounts,hotBuckets,dropHot}`, the
+  * SemDeDup stages `DedupQueries.{withinCellPairs,semanticElection}`,
+  * and `SimilarityQueries.{kmeansAssign,signTables,lshCandidateJoin}` —
   * so the probe cannot desynchronize from the
   * operator it measures: a cap-policy or gate change lands here by
   * construction. The only local additions are the localCheckpoints
@@ -123,10 +124,11 @@ object LshStats {
       val mx = sizes.agg(coalesce(max("n"), lit(0L))).head().getLong(0)
       val mn = sizes.agg(coalesce(min("n"), lit(0L))).head().getLong(0)
       val hot = DQ.hotBuckets(sizes, Seq("cluster")).count()
-      // emitted_pairs exercises the operator end-to-end: the r9 fixed-K
-      // geometry emitted ZERO pairs at sf0.1 (all cells hot) — the
-      // derived-K claim is only proven by a non-zero count here
-      val emitted = DQ.kmeansSemanticPairs(spark, sfDir).count()
+      // emitted_pairs runs the operator's own stages over these cells:
+      // the r9 fixed-K geometry emitted ZERO pairs at sf0.1 (all cells
+      // hot) — the derived-K claim is only proven by a non-zero count here
+      val emitted = DQ.semanticElection(spark, sfDir,
+        DQ.withinCellPairs(asg.select("vec_id", "v", "cluster"), Seq("cluster"))).count()
       println(s"""{"query":"dedup_semantic_kmeans","sf":"$sfDir"""" +
         s""","vectors":${asg.count()},"clusters":${sizes.count()}""" +
         s""","max_cluster":$mx,"min_cluster":$mn,"hot_clusters":$hot""" +

@@ -747,7 +747,8 @@ object CurationQueries {
     // dedup_semantic_unlabeled's capped sign-LSH cells (SAME CellBits —
     // the label-free production cell) pointed ACROSS the train/held-out
     // split, flagging a train doc whose vector lands in a held-out
-    // vector's cell at cosine >= SemTau. The cap is DIRECTIONAL
+    // vector's cell through DedupQueries.semGate (cosine at least
+    // SemTau, never NaN). The cap is DIRECTIONAL
     // (decontaminate_fuzzy's recall lesson, spelled with DedupQueries'
     // shared hot/drop stages over the HELD-OUT rows only): a benchmark
     // rewritten into the crawl n times makes the TRAIN side of its cell
@@ -777,7 +778,7 @@ object CurationQueries {
           col("a.bkt") === col("b.bkt"))
         .select(col("a.vec_id").as("doc_id"), col("b.vec_id").as("src_id"),
           cosine(col("a.v"), col("b.v")).as("sim"))
-        .filter(col("sim") >= DedupQueries.SemTau)
+        .filter(DedupQueries.semGate(col("sim")))
         .dropDuplicates("doc_id", "src_id")
         .groupBy("doc_id").agg(count(lit(1)).as("n_sem_dups"))
       val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
@@ -1444,10 +1445,11 @@ object CurationQueries {
          |        WHERE vec_id IS NOT NULL)),
          |${DedupQueries.capBucketsSql("e0", Seq("bkt"), "hot", "e", where = "bucket >= 'cd'")},
          |hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sem_dups FROM (
-         |  SELECT DISTINCT a.vec_id AS doc_id, b.vec_id AS src_id
-         |  FROM e a JOIN e b
-         |    ON a.bkt = b.bkt AND a.bucket < 'cd' AND b.bucket >= 'cd'
-         |  WHERE ${cosineSql("a.v", "b.v")} >= ${DedupQueries.SemTau}) GROUP BY doc_id)
+         |  SELECT DISTINCT doc_id, src_id FROM (
+         |    SELECT a.vec_id AS doc_id, b.vec_id AS src_id, ${cosineSql("a.v", "b.v")} AS sim
+         |    FROM e a JOIN e b
+         |      ON a.bkt = b.bkt AND a.bucket < 'cd' AND b.bucket >= 'cd')
+         |  WHERE ${DedupQueries.semGateSql("sim")}) GROUP BY doc_id)
          |SELECT d.doc_id, COALESCE(h.n_sem_dups, 0) AS n_sem_dups,
          |       COALESCE(h.n_sem_dups, 0) > 0 AS contaminated
          |FROM documents d LEFT JOIN hits h USING (doc_id)

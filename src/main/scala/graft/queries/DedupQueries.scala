@@ -876,30 +876,7 @@ object DedupQueries {
       .select(cols :+ col("embedding").cast("array<double>").as("v"): _*)
       .withColumn("bkt", signBucket(col("v"), CellBits))
       .filter(col("bkt").isNotNull)
-    val e = capBuckets(e0, cellKeys)
-    val cellEq =
-      if (labeled) col("a.label") === col("b.label") && col("a.bkt") === col("b.bkt")
-      else col("a.bkt") === col("b.bkt")
-    val pairs = e.as("a").join(e.as("b"),
-        cellEq && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"),
-        cosine(col("a.v"), col("b.v")).as("sim"))
-      // zero-norm degrade (r9 advisory): cosine of a zero vector is 0/0
-      // = NaN, and BOTH engines evaluate NaN >= tau as TRUE (NaN sorts
-      // greatest) — a meaningless "duplicate" pair. Gate NaN out in both
-      // mirrors (cheaper than filtering norms upstream, same result).
-      .filter(col("sim") >= SemTau && !isnan(col("sim")))
-    val q = Tables(s, dir, "documents")
-      .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"),
-        coalesce(TextAnalysisQueries.qualityExpr(col("text")), lit(-1.0)).as("q"))
-    pairs
-      .join(q.select(col("doc_id").as("d1"), col("q").as("q1")), Seq("d1"))
-      .join(q.select(col("doc_id").as("d2"), col("q").as("q2")), Seq("d2"))
-      .select(col("d1"), col("d2"), col("sim"),
-        when(col("q1") < col("q2"), col("d1"))
-          .when(col("q2") < col("q1"), col("d2"))
-          .otherwise(greatest(col("d1"), col("d2"))).as("drop_id"))
+    semanticElection(s, dir, withinCellPairs(e0, cellKeys))
   }
 
   /** `dedup_semantic_kmeans`: the SemDeDup cell is the LEARNED k-means
@@ -934,21 +911,54 @@ object DedupQueries {
       graft.operators.Checkpoints.corpusScaled(
         SimilarityQueries.kmeansAssign(s, dir)
           .select(col("vec_id"), col("v"), col("cluster"))))
-    val e = capBuckets(a, Seq("cluster"))
-    val pairs = e.as("a").join(e.as("b"),
-        col("a.cluster") === col("b.cluster") && col("a.vec_id") < col("b.vec_id"))
+    semanticElection(s, dir, withinCellPairs(a, Seq("cluster")))
+  }
+
+  // ===== the SemDeDup stages =====
+  // Every semantic pair relation is a candidate stage (the capped
+  // within-cell join, or the kNN graph's mutual pairs) followed by the
+  // one gate and the one election; the oracles compose their SQL twins.
+
+  /** The one SemDeDup cosine gate: `sim` ≥ [[SemTau]] and not NaN. A
+    * zero vector's cosine is 0/0, NULL in both engines (non-ANSI Spark,
+    * DuckDB), which the comparison drops; a NaN or infinite component
+    * makes it NaN, which BOTH engines order above every threshold — a
+    * meaningless "duplicate". [[semGateSql]] is the oracle's twin.
+    */
+  private[graft] def semGate(sim: Column): Column = sim >= SemTau && !isnan(sim)
+
+  private[queries] def semGateSql(sim: String): String =
+    s"$sim >= $SemTau AND NOT isnan($sim)"
+
+  /** The capped within-cell cosine pair stage (d1 < d2, sim) over the
+    * (vec_id, v, cellKeys…) frame `pts`: the [[MaxBucket]] cap on the
+    * cell, then the cell-equi self-join. Ungated — [[semanticElection]]
+    * gates. Shared by the bucket and k-means SemDeDup tiers and
+    * graft.LshStats' probe; [[withinCellPairsSql]] is the oracle's twin.
+    */
+  private[graft] def withinCellPairs(pts: DataFrame, cellKeys: Seq[String]): DataFrame = {
+    val e = capBuckets(pts, cellKeys)
+    e.as("a").join(e.as("b"),
+        cellKeys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"),
         cosine(col("a.v"), col("b.v")).as("sim"))
-      // zero-norm degrade (r9 advisory): cosine of a zero vector is 0/0
-      // = NaN, and BOTH engines evaluate NaN >= tau as TRUE (NaN sorts
-      // greatest) — a meaningless "duplicate" pair. Gate NaN out in both
-      // mirrors (cheaper than filtering norms upstream, same result).
-      .filter(col("sim") >= SemTau && !isnan(col("sim")))
+  }
+
+  /** The cross-modal drop election over a (d1, d2, sim) candidate frame:
+    * [[semGate]], then each side joined back to `documents` for its text
+    * quality `q`, and the LOWER-quality side dropped (ties drop the
+    * larger id) — (d1, d2, sim, drop_id). vec_id and doc_id share one id
+    * domain, so ids with no text side drop out of the inner joins.
+    * [[semanticElectionSql]] is the oracle's twin.
+    */
+  private[graft] def semanticElection(s: SparkSession, dir: String,
+      pairs: DataFrame): DataFrame = {
     val q = Tables(s, dir, "documents")
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
         coalesce(TextAnalysisQueries.qualityExpr(col("text")), lit(-1.0)).as("q"))
-    pairs
+    pairs.filter(semGate(col("sim")))
       .join(q.select(col("doc_id").as("d1"), col("q").as("q1")), Seq("d1"))
       .join(q.select(col("doc_id").as("d2"), col("q").as("q2")), Seq("d2"))
       .select(col("d1"), col("d2"), col("sim"),
@@ -1688,18 +1698,7 @@ object DedupQueries {
         .join(e.select(col("vec_id").as("d1"), col("v").as("v1")), Seq("d1"))
         .join(e.select(col("vec_id").as("d2"), col("v").as("v2")), Seq("d2"))
         .select(col("d1"), col("d2"), cosine(col("v1"), col("v2")).as("sim"))
-        .filter(col("sim") >= SemTau && !isnan(col("sim")))
-      val q = Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          coalesce(TextAnalysisQueries.qualityExpr(col("text")), lit(-1.0))
-            .as("q"))
-      graft.operators.Checkpoints.fresh(scored
-        .join(q.select(col("doc_id").as("d1"), col("q").as("q1")), Seq("d1"))
-        .join(q.select(col("doc_id").as("d2"), col("q").as("q2")), Seq("d2"))
-        .select(col("d1"), col("d2"), col("sim"),
-          when(col("q1") < col("q2"), col("d1"))
-            .when(col("q2") < col("q1"), col("d2"))
-            .otherwise(greatest(col("d1"), col("d2"))).as("drop_id")))
+      graft.operators.Checkpoints.fresh(semanticElection(s, dir, scored))
     }
 
   // ===== DuckDB oracles (same md5-based hashing, same fold order) =====
@@ -1753,6 +1752,22 @@ object DedupQueries {
        |  WHERE hamming BETWEEN 1 AND 3)""".stripMargin
   }
 
+  /** [[clusterLabelsFromEdges]]' SQL twin (requires WITH RECURSIVE):
+    * `edges` (both directions of the (d1, d2) relation `pairs`), the
+    * reachability closure `reach(id, r)` from every document (UNION
+    * dedupes, so the fixpoint terminates) and `lab(doc_id, cluster_id)`,
+    * the minimum reachable id — exactly the component labels the Spark
+    * side computes.
+    */
+  private def ccLabelsSql(pairs: String): String =
+    s"""edges AS (SELECT d1 AS a, d2 AS b FROM $pairs
+       |          UNION ALL SELECT d2, d1 FROM $pairs),
+       |reach(id, r) AS (
+       |  SELECT doc_id, doc_id FROM documents
+       |  UNION
+       |  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a),
+       |lab AS (SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+
   /** CTE list (requires WITH RECURSIVE) producing `d(doc_id, cluster_id,
     * qscore)` and `canon(cluster_id, canon_id)` — the oracle mirror of
     * [[canonicalDecision]]: the dedup_clusters reachability closure over
@@ -1768,13 +1783,7 @@ object DedupQueries {
        |  FROM sigs) WHERE d1 <> d2),
        |alledges AS (SELECT d1, d2 FROM pairs
        |             UNION SELECT d1, d2 FROM sigdup),
-       |edges AS (SELECT d1 AS a, d2 AS b FROM alledges
-       |          UNION ALL SELECT d2, d1 FROM alledges),
-       |reach(id, r) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a),
-       |lab AS (SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+       |${ccLabelsSql("alledges")},
        |q AS (SELECT doc_id,
        |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS qscore
        |      FROM documents),
@@ -1821,12 +1830,25 @@ object DedupQueries {
   private lazy val kmSemanticPairsSql: String =
     s"""WITH ${SimilarityQueries.kmeansCtes},
        |ka AS (SELECT vec_id, v, cluster FROM ${SimilarityQueries.kmFinalAsg}),
-       |${capBucketsSql("ka", Seq("cluster"), "hot", "ke")},
+       |${withinCellPairsSql("ka", Seq("cluster"))},
+       |$semanticElectionSql""".stripMargin
+
+  /** [[withinCellPairs]]' twin over relation `rel`: the cap's `hot`/`ce`
+    * CTEs and `p(d1, d2, sim)`.
+    */
+  private def withinCellPairsSql(rel: String, cellKeys: Seq[String]): String =
+    s"""${capBucketsSql(rel, cellKeys, "hot", "ce")},
        |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
        |        ${cosineSql("a.v", "b.v")} AS sim
-       |      FROM ke a JOIN ke b
-       |        ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
-       |q AS (SELECT doc_id,
+       |      FROM ce a JOIN ce b
+       |        ON ${cellKeys.map(k => s"a.$k = b.$k").mkString(" AND ")}
+       |       AND a.vec_id < b.vec_id)""".stripMargin
+
+  /** [[semanticElection]]'s twin over the candidate CTE `p(d1, d2, sim)`:
+    * the quality CTE `q` and the gated, elected, ordered final SELECT.
+    */
+  private def semanticElectionSql: String =
+    s"""q AS (SELECT doc_id,
        |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS q
        |      FROM documents)
        |SELECT p.d1, p.d2, p.sim,
@@ -1834,7 +1856,7 @@ object DedupQueries {
        |       WHEN y.q < x.q THEN p.d2
        |       ELSE GREATEST(p.d1, p.d2) END AS drop_id
        |FROM p JOIN q x ON p.d1 = x.doc_id JOIN q y ON p.d2 = y.doc_id
-       |WHERE p.sim >= $SemTau AND NOT isnan(p.sim)
+       |WHERE ${semGateSql("p.sim")}
        |ORDER BY d1, d2""".stripMargin
 
   private def rareShinglePairStatsSql: String =
@@ -1899,25 +1921,11 @@ object DedupQueries {
         ("vec_id, label", "vec_id IS NOT NULL AND label IS NOT NULL", Seq("label", "bkt"))
       else
         ("vec_id", "vec_id IS NOT NULL", Seq("bkt"))
-    val cellEq = cellKeys.map(k => s"a.$k = b.$k").mkString(" AND ")
     s"""WITH e0 AS (SELECT $selCols, v, ${signBucketSql("v", CellBits)} AS bkt
        |            FROM (SELECT $selCols, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |                  WHERE $whereIds)),
-       |${capBucketsSql("e0", cellKeys, "hot", "e")},
-       |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
-       |        ${cosineSql("a.v", "b.v")} AS sim
-       |      FROM e a JOIN e b
-       |        ON $cellEq AND a.vec_id < b.vec_id),
-       |q AS (SELECT doc_id,
-       |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS q
-       |      FROM documents)
-       |SELECT p.d1, p.d2, p.sim,
-       |  CASE WHEN x.q < y.q THEN p.d1
-       |       WHEN y.q < x.q THEN p.d2
-       |       ELSE GREATEST(p.d1, p.d2) END AS drop_id
-       |FROM p JOIN q x ON p.d1 = x.doc_id JOIN q y ON p.d2 = y.doc_id
-       |WHERE p.sim >= $SemTau AND NOT isnan(p.sim)
-       |ORDER BY d1, d2""".stripMargin
+       |${withinCellPairsSql("e0", cellKeys)},
+       |$semanticElectionSql""".stripMargin
   }
 
   /** dedup_semantic_graph's oracle — knn_mutual_pairs' spliced string
@@ -1933,16 +1941,7 @@ object DedupQueries {
        |p AS (SELECT mp.d1, mp.d2, ${cosineSql("a.v", "b.v")} AS sim
        |      FROM mp JOIN e2 a ON a.vec_id = mp.d1
        |              JOIN e2 b ON b.vec_id = mp.d2),
-       |q AS (SELECT doc_id,
-       |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS q
-       |      FROM documents)
-       |SELECT p.d1, p.d2, p.sim,
-       |  CASE WHEN x.q < y.q THEN p.d1
-       |       WHEN y.q < x.q THEN p.d2
-       |       ELSE GREATEST(p.d1, p.d2) END AS drop_id
-       |FROM p JOIN q x ON p.d1 = x.doc_id JOIN q y ON p.d2 = y.doc_id
-       |WHERE p.sim >= $SemTau AND NOT isnan(p.sim)
-       |ORDER BY d1, d2""".stripMargin
+       |$semanticElectionSql""".stripMargin
 
   /** The tiers dedup_recall scores — ONE list consumed by the Spark
     * query and the spliced oracle (the recallTiers rule), so adding a
@@ -2004,19 +2003,9 @@ object DedupQueries {
          |SELECT d1, d2, hamming FROM pairs ORDER BY d1, d2""".stripMargin,
 
     "dedup_clusters" ->
-      // connected components as a recursive reachability closure: reach
-      // holds every (doc, reachable doc) over the undirected pair edges
-      // (UNION dedupes, so the fixpoint terminates); the component id is
-      // the min reachable doc — exactly the label-propagation fixpoint
-      // the Spark side iterates to.
+      // connected components of the simhash pairs ([[ccLabelsSql]])
       s"""WITH RECURSIVE $simhashPairCtes,
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs
-         |          UNION ALL SELECT d2, d1 FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a),
-         |lab AS (SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+         |${ccLabelsSql("pairs")},
          |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
          |       FROM lab GROUP BY 1)
          |SELECT lab.doc_id, lab.cluster_id, sz.cluster_size
@@ -2133,13 +2122,7 @@ object DedupQueries {
          |  UNION SELECT d1, d2 FROM econt UNION SELECT d1, d2 FROM ewin
          |  UNION SELECT d1, d2 FROM esem UNION SELECT d1, d2 FROM esemu
          |  UNION SELECT d1, d2 FROM ekm),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM alledges
-         |          UNION ALL SELECT d2, d1 FROM alledges),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a),
-         |lab AS (SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id),
+         |${ccLabelsSql("alledges")},
          |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
          |       FROM lab GROUP BY 1)
          |SELECT lab.doc_id, lab.cluster_id, sz.cluster_size

@@ -124,9 +124,10 @@ object SimilarityQueries {
   /** One deterministic representative vector per cell — the cell's
     * min-vec_id member (a medoid surrogate; a float centroid MEAN is
     * summation-order-dependent and would break engine-exactness). Shared
-    * by `ann_ivf_nprobe` (cell ranking) and `embedding_outliers`
+    * by [[boundedReps]] and `embedding_outliers`
     * (distance-to-representative scoring); the rep-id frame carries only
-    * rid, its label comes back from the vector table.
+    * rid, its label comes back from the vector table. [[cellRepsSql]] is
+    * the oracle's twin.
     */
   private def cellReps(e: DataFrame): DataFrame = {
     val repIds = e.groupBy("label").agg(min(col("vec_id")).as("rid"))
@@ -136,8 +137,10 @@ object SimilarityQueries {
   }
 
   /** The ≤ [[MaxCells]] cell-representative frame with the loud overflow
-    * check (shared by ann_ivf_nprobe, ann_filtered and [[ivfpqScan]],
-    * i.e. ann_ivfpq and ann_ivfpq_rerank): the limit makes the
+    * check (shared by [[nprobeScan]], i.e. ann_ivf_nprobe and
+    * ann_filtered, and by [[ivfpqScan]], where the one frame feeds the
+    * probe ranking, the codebook's residuals and the codes' residuals):
+    * the limit makes the
     * rep side's bound STATIC (maxRows) for the structural join audit, but
     * limit() past MaxCells rows would TRUNCATE nondeterministically and
     * silently diverge from the oracle — so overflow fails loudly first
@@ -173,6 +176,45 @@ object SimilarityQueries {
       .select(col("qid"), explode(col("cells")).as("c"))
       .select(col("qid"), col("c.nn_id").cast("int").as("pcell"))
     others.union(q.select(col("qid"), col("qcell").as("pcell")))
+  }
+
+  /** The nprobe scan (qid, sim, nn_id) of ann_ivf_nprobe and
+    * ann_filtered: each query against every vector of its probed cells.
+    * `scan` narrows the candidate side only (ann_filtered's semi-join);
+    * queries, cells and representatives stay the unfiltered index.
+    */
+  private def nprobeScan(s: SparkSession, dir: String, name: String,
+      scan: DataFrame => DataFrame = identity): DataFrame = {
+    // label.isNotNull like embedding_outliers: the cell id feeds the
+    // typed aggregator's primitive Long field — a null-label rep row
+    // would CRASH at encoding, where the equi-join queries merely
+    // drop it (results are identical either way; inner joins on label
+    // can never emit a null-label row)
+    val e = vecs(s, dir).filter(col("label").isNotNull)
+    val q = e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("qid"), col("label").as("qcell"),
+        col("v").as("qv"))
+    val probes = probedCells(q, boundedReps(name, e))
+      .join(q.select(col("qid"), col("qv")), Seq("qid"))
+    scan(e).join(broadcast(probes),
+        col("label") === col("pcell") && col("vec_id") =!= col("qid"))
+      .select(col("qid"), cosine(col("qv"), col("v")).as("sim"),
+        col("vec_id").as("nn_id"))
+  }
+
+  /** The per-query top-[[TopK]] tail of a (qid, sim, nn_id) scan as
+    * (qid, rank, nn_id): the typed [[graft.functions.TopK]] aggregator
+    * prunes to k per (qid, partition) map-side, so the exchange carries
+    * k·|queries|·partitions rows — never ann_bruteforce's Window funnel.
+    */
+  private def topKPerQuery(scored: DataFrame): DataFrame = {
+    val topk = udaf(new graft.functions.TopK(TopK))
+    scored.groupBy("qid")
+      .agg(topk(col("sim"), col("nn_id")).as("top"))
+      .select(col("qid"), posexplode(col("top")))
+      .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
+        col("col.nn_id").as("nn_id"))
+      .orderBy("qid", "rank")
   }
 
   // ===== k-means (Lloyd's algorithm, the SemDeDup clustering stage) =====
@@ -679,27 +721,37 @@ object SimilarityQueries {
   // summation-order-dependent), and the subtraction is elementwise IEEE —
   // exactly rounded, so the whole chain mirrors in DuckDB.
 
-  /** Residual relation (vec_id, label, v = vector − its cell's
-    * representative). Broadcast join against the ≤ MaxCells rep frame —
-    * one projection pass, no corpus shuffle.
+  /** The IVF-PQ corpus, [[ivfpqCtes]]' `e`: vectors with a cell and an
+    * embedding — a NULL embedding can neither represent a cell nor query.
     */
-  private def ivfResiduals(s: SparkSession, dir: String): DataFrame = {
-    val e = vecs(s, dir).filter(col("label").isNotNull && col("v").isNotNull)
-    e.join(broadcast(cellReps(e)), col("label") === col("cell"))
+  private def ivfpqCorpus(s: SparkSession, dir: String): DataFrame =
+    vecs(s, dir).filter(col("label").isNotNull && col("v").isNotNull)
+
+  /** [[boundedReps]] of [[ivfpqCorpus]] — the one rep frame an IVF-PQ scan builds. */
+  private[graft] def ivfpqReps(s: SparkSession, dir: String, name: String): DataFrame =
+    boundedReps(name, ivfpqCorpus(s, dir))
+
+  /** Residual relation (vec_id, label, v = vector − its cell's
+    * representative in `reps`). Broadcast join against the ≤ MaxCells
+    * rep frame — one projection pass, no corpus shuffle.
+    */
+  private def ivfResiduals(e: DataFrame, reps: DataFrame): DataFrame =
+    e.join(broadcast(reps), col("label") === col("cell"))
       .select(col("vec_id"), col("label"), vsub(col("v"), col("rv")).as("v"))
-  }
 
   /** Train-once RESIDUAL codebooks (j, cid, c) — [[pqCodebook]]'s
     * lifecycle (PqM·PqK rows, SessionCache-admissible) over
-    * [[ivfResiduals]]. Residual PQ is what makes the composition work:
+    * [[ivfResiduals]] against `reps` ([[ivfpqReps]]) — read only when
+    * cold, and training is eager, so the cache keeps no reference to the
+    * retired `reps`. Residual PQ is what makes the composition work:
     * residual magnitudes are small and centered, so PqK codewords spend
     * their resolution on within-cell structure instead of re-encoding
     * cell positions.
     */
-  private[graft] def ivfpqCodebook(s: SparkSession, dir: String,
+  private[graft] def ivfpqCodebook(s: SparkSession, dir: String, reps: DataFrame,
       driverMaxRows: Int = LloydDriverMaxRows): DataFrame =
     graft.operators.SessionCache.frame(s, dir, "ivfpq-codebook") {
-      trainPqCodebook(ivfResiduals(s, dir).select("vec_id", "v"),
+      trainPqCodebook(ivfResiduals(ivfpqCorpus(s, dir), reps).select("vec_id", "v"),
         s.sparkContext.defaultParallelism, driverMaxRows)
     }
 
@@ -836,11 +888,11 @@ object SimilarityQueries {
     * arithmetic.
     */
   private def ivfpqScan(s: SparkSession, dir: String, name: String): DataFrame = {
-    val e = vecs(s, dir).filter(col("label").isNotNull)
+    val e = ivfpqCorpus(s, dir)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("label").as("qcell"), col("v").as("qv"))
-    val reps = boundedReps(name, e)
-    val cb = ivfpqCodebook(s, dir)
+    val reps = ivfpqReps(s, dir, name)
+    val cb = ivfpqCodebook(s, dir, reps)
     val pres = probedCells(q, reps)
       .join(q.select(col("qid"), col("qv")), Seq("qid"))
       .join(broadcast(reps), col("pcell") === col("cell"))
@@ -848,7 +900,7 @@ object SimilarityQueries {
     // residual codes + owning cell: the label join-back is 1:1 on the
     // aggregation key, so the groupBy's vec_id partitioning is reused
     // on the left and the right moves only (vec_id, label) pairs
-    val codes = codeArrays(pqEncode(ivfResiduals(s, dir).select("vec_id", "v"), cb))
+    val codes = codeArrays(pqEncode(ivfResiduals(e, reps).select("vec_id", "v"), cb))
       .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
     adcScan(codes, broadcast(pqLutOf(pres, cb, Seq("qid", "pcell"))),
       col("label") === col("pcell"))
@@ -861,10 +913,21 @@ object SimilarityQueries {
   // than the float vectors. The SERVE side (ann_pq_indexed) reads ONLY
   // those parquet files plus the bounded query set; the raw embeddings
   // never leave the build job. Built once per (JVM, corpus dir, PqK)
-  // under the system temp dir; parquet round-trips BIGINT and
+  // under [[pqIndexRoot]]; parquet round-trips BIGINT and
   // ARRAY<DOUBLE> exactly, so index-served answers are bit-identical to
   // ann_pq's (the shared oracle string asserts exactly that).
   private val builtIndexes = scala.collection.mutable.Set[String]()
+
+  /** This JVM's own index root under the system temp dir, deleted at
+    * exit: two JVMs serving one corpus dir never share index files.
+    */
+  private[graft] lazy val pqIndexRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-pq-index-")
+    sys.addShutdownHook(scala.util.Try(java.nio.file.Files.walk(root)
+      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))))
+    root
+  }
 
   private def pqIndexDir(s: SparkSession, dir: String): String = synchronized {
     // Pack-width envelope. embedding_pq_codes (the ORACLE-compared pack)
@@ -883,8 +946,7 @@ object SimilarityQueries {
         " code word; a wider config needs a two-word layout")
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val out =
-      s"${sys.props("java.io.tmpdir")}/graft-pq-index/$key-k$PqK"
+    val out = s"$pqIndexRoot/$key-k$PqK"
     if (!builtIndexes.contains(out)) {
       pqCodebook(s, dir).write.mode("overwrite").parquet(s"$out/codebook")
       pqCodes(s, dir)
@@ -1050,19 +1112,12 @@ object SimilarityQueries {
     // k per (group, partition) in the partial aggregate, so the exchange
     // carries k·|queries|·partitions rows however large the corpus is.
     "ann_topk_agg" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopK(TopK))
       val e = vecs(s, dir)
       val q = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
-      e.join(broadcast(q), col("vec_id") =!= col("qid"))
+      topKPerQuery(e.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), cosine(col("qv"), col("v")).as("sim"),
-          col("vec_id").as("nn_id"))
-        .groupBy("qid")
-        .agg(topk(col("sim"), col("nn_id")).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.nn_id").as("nn_id"))
-        .orderBy("qid", "rank")
+          col("vec_id").as("nn_id")))
     }),
 
     // ---- contrastive hard-negative mining over the query set ----
@@ -1176,14 +1231,6 @@ object SimilarityQueries {
         .orderBy("vec_id")
     }),
 
-    // ---- IVF-style: top-k within the coarse cell, bounded query set ----
-    // Ranks via the typed [[graft.functions.TopK]] aggregator (the
-    // ann_topk_agg shape): the partial aggregate prunes to k per
-    // (qid, partition) map-side, so the exchange carries
-    // k·|queries|·partitions rows however large the probed cells are —
-    // instead of a Window over ≤ NQueries partitions concentrating every
-    // scored row into a handful of tasks (see ann_bruteforce, kept as the
-    // documented contrast).
     // ---- IVF with multi-cell probing (nprobe > 1) ----
     // Single-cell IVF (ann_ivf) misses neighbors sitting just across a
     // cell boundary — the same failure ann_lsh_multiprobe fixes for sign
@@ -1200,36 +1247,10 @@ object SimilarityQueries {
     // RECALL_sf{1,10}_r12 probes (`git show e9e7a22:RECALL_sf1_r12.json`)
     // measured 0.75 vs single-cell IVF's 1.0 on the duplicated replica
     // geometry before this pin, a structural violation of ivf ⊆ nprobe
-    // that the own-cell union restores for ANY representative. Cell ranking and the final rank
-    // both run through the TopK aggregator (partial-aggregable map-side
-    // pruning, no window funnel); the rep-scoring join is a broadcast
-    // nested-loop over |queries| × nlist rows, both factors design
-    // constants (see [[MaxCells]]).
-    "ann_ivf_nprobe" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopK(TopK))
-      // label.isNotNull like embedding_outliers: the cell id feeds the
-      // typed aggregator's primitive Long field — a null-label rep row
-      // would CRASH at encoding, where the equi-join queries merely
-      // drop it (results are identical either way; inner joins on label
-      // can never emit a null-label row)
-      val e = vecs(s, dir).filter(col("label").isNotNull)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("label").as("qcell"),
-          col("v").as("qv"))
-      val reps = boundedReps("ann_ivf_nprobe", e)
-      val probes = probedCells(q, reps)
-        .join(q.select(col("qid"), col("qv")), Seq("qid"))
-      e.join(broadcast(probes),
-          col("label") === col("pcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), cosine(col("qv"), col("v")).as("sim"),
-          col("vec_id").as("nn_id"))
-        .groupBy("qid")
-        .agg(topk(col("sim"), col("nn_id")).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.nn_id").as("nn_id"))
-        .orderBy("qid", "rank")
-    }),
+    // that the own-cell union restores for ANY representative
+    // ([[probedCells]]; the scan is [[nprobeScan]]).
+    "ann_ivf_nprobe" -> ((s, dir) =>
+      topKPerQuery(nprobeScan(s, dir, "ann_ivf_nprobe"))),
 
     // ---- metadata-predicated (filtered) ANN: search WITHIN a predicate ----
     // Every production similarity stack a training-data pipeline uses
@@ -1254,28 +1275,11 @@ object SimilarityQueries {
     // ann_ivf_nprobe's verbatim, and selectivity multiplies straight
     // through the scored-row count.
     "ann_filtered" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopK(TopK))
-      val e = vecs(s, dir).filter(col("label").isNotNull)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("label").as("qcell"),
-          col("v").as("qv"))
-      val reps = boundedReps("ann_filtered", e)
-      val probes = probedCells(q, reps)
-        .join(q.select(col("qid"), col("qv")), Seq("qid"))
       val keep = Tables(s, dir, "documents")
         .filter(col("doc_id").isNotNull && col("lang") === AnnFilterLang)
         .select(col("doc_id").as("vec_id"))
-      e.join(keep, Seq("vec_id"), "left_semi")
-        .join(broadcast(probes),
-          col("label") === col("pcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), cosine(col("qv"), col("v")).as("sim"),
-          col("vec_id").as("nn_id"))
-        .groupBy("qid")
-        .agg(topk(col("sim"), col("nn_id")).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.nn_id").as("nn_id"))
-        .orderBy("qid", "rank")
+      topKPerQuery(nprobeScan(s, dir, "ann_filtered",
+        _.join(keep, Seq("vec_id"), "left_semi")))
     }),
 
     // ---- embedding outlier flagging: distance to the cell representative ----
@@ -1305,21 +1309,15 @@ object SimilarityQueries {
         .orderBy("vec_id")
     }),
 
+    // ---- IVF-style: top-k within the query's own coarse cell ----
     "ann_ivf" -> ((s, dir) => {
-      val topk = udaf(new graft.functions.TopK(TopK))
       val e = vecs(s, dir)
       val q = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("qid"), col("label").as("qcell"), col("v").as("qv"))
-      e.join(broadcast(q),
+      topKPerQuery(e.join(broadcast(q),
           col("label") === col("qcell") && col("vec_id") =!= col("qid"))
         .select(col("qid"), cosine(col("qv"), col("v")).as("sim"),
-          col("vec_id").as("nn_id"))
-        .groupBy("qid")
-        .agg(topk(col("sim"), col("nn_id")).as("top"))
-        .select(col("qid"), posexplode(col("top")))
-        .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.nn_id").as("nn_id"))
-        .orderBy("qid", "rank")
+          col("vec_id").as("nn_id")))
     }),
 
     // ---- PQ encode: each vector as PqM subspace codes ----
@@ -1525,8 +1523,7 @@ object SimilarityQueries {
     // measured RECALL ladder shows the re-rank recovering the raw
     // 4-bit tier's misses (0.875 → 1.0 on the replica geometry).
     "ann_ivfpq_rerank" -> ((s, dir) =>
-      pqRerank(ivfpqScan(s, dir, "ann_ivfpq_rerank"),
-        vecs(s, dir).filter(col("label").isNotNull))),
+      pqRerank(ivfpqScan(s, dir, "ann_ivfpq_rerank"), ivfpqCorpus(s, dir))),
 
     // ---- measured recall: every approximate tier vs the exact answer ----
     // The evaluation harness a production ANN deployment runs before
@@ -1715,16 +1712,58 @@ object SimilarityQueries {
   private[queries] val pqFinalAsg = s"q${KmIter + 1}"
   private[queries] val pqFinalBook = s"p$KmIter"
 
+  // ===== cell-representative oracle fragments =====
+  // The SQL twins of cellReps, probedCells, nprobeScan and topKPerQuery.
+  // labeledSql mirrors the Spark side's vec_id/label isNotNull filters —
+  // without it a NULL-label vector would mint a NULL-cell representative
+  // on the oracle side only and could consume one of the probe slots.
+  private val labeledSql = "vec_id IS NOT NULL AND label IS NOT NULL"
+
+  /** [[cellReps]]' twin: `e` (the embeddings WHERE `eFilter`), `rid`
+    * (each cell's min vec_id) and `reps(cell, rv)`.
+    */
+  private def cellRepsSql(eFilter: String): String =
+    s"""e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |      WHERE $eFilter),
+       |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
+       |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid)""".stripMargin
+
+  /** [[probedCells]]' twin over `e` and `reps`: queries `q` and
+    * `probes(qid, pcell)`, cells ranked (csim DESC, cell) as TopK does.
+    */
+  private val probesSql: String =
+    s"""q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
+       |ranked AS (SELECT qid, cell,
+       |    ROW_NUMBER() OVER (PARTITION BY qid
+       |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
+       |  FROM q CROSS JOIN reps WHERE cell <> qcell),
+       |probes AS (SELECT qid, cell AS pcell FROM ranked WHERE crk <= ${NProbe - 1}
+       |           UNION ALL SELECT qid, qcell AS pcell FROM q)""".stripMargin
+
+  /** [[topKPerQuery]]'s twin over the (qid, nn_id, sim) relation `scored`. */
+  private def topKSql(scored: String): String =
+    s"""SELECT qid, rank, nn_id FROM (
+       |  SELECT qid, nn_id, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS INT) AS rank
+       |  FROM $scored) WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
+
+  /** [[nprobeScan]]'s twin, ranked; ann_filtered passes its candidate
+    * relation `scan` and `scanCte`, the CTE (with its comma) defining it.
+    */
+  private def nprobeSql(scan: String = "e", scanCte: String = ""): String =
+    s"""WITH ${cellRepsSql(labeledSql)},
+       |$probesSql,
+       |${scanCte}scored AS (SELECT p.qid, c.vec_id AS nn_id, ${cosineSql("q.qv", "c.v")} AS sim
+       |  FROM probes p JOIN q ON q.qid = p.qid
+       |               JOIN $scan c ON c.label = p.pcell AND c.vec_id <> p.qid)
+       |${topKSql("scored")}""".stripMargin
+
   // ===== IVF-PQ oracle: the residual chain, then the keyed Lloyd chain =====
   // pqCtes with the training relation swapped: `r` is the residual
   // relation (vector − its cell's min-vec_id representative, elementwise
-  // — vsubSql mirrors zip_with subtraction exactly). The e/rid/reps
-  // fragments are ann_ivf_nprobe's.
+  // — vsubSql mirrors zip_with subtraction exactly) over the corpus
+  // ivfpqCorpus reads.
   private def ivfpqCtes: String =
-    s"""e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |      WHERE vec_id IS NOT NULL AND label IS NOT NULL AND embedding IS NOT NULL),
-       |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
-       |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid),
+    s"""${cellRepsSql(s"$labeledSql AND embedding IS NOT NULL")},
        |r AS (SELECT e.vec_id, e.label, ${vsubSql("e.v", "reps.rv")} AS v
        |      FROM e JOIN reps ON e.label = reps.cell),
        |""".stripMargin + pqTrainCtes("r")
@@ -1746,20 +1785,13 @@ object SimilarityQueries {
        |        GROUP BY 1, 2)""".stripMargin
 
   // The IVFADC prefix of ann_ivfpq and ann_ivfpq_rerank, WITH through
-  // adc. Probe ranking mirrors probedCells (cosine DESC, cell — the TopK
-  // aggregator's ordering); the ADC join pins each corpus code row to
+  // adc. Probes are probesSql's; the ADC join pins each corpus code row to
   // its OWN cell's LUT via l.pcell = r.label, the (query, probed cell)
   // keying the IVFADC recipe requires. Both SUM casts are the
   // HUGEINT→BIGINT convention.
   private lazy val ivfpqAdcSql: String =
     s"""WITH $ivfpqCtes,
-       |q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
-       |ranked AS (SELECT qid, cell,
-       |    ROW_NUMBER() OVER (PARTITION BY qid
-       |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
-       |  FROM q CROSS JOIN reps WHERE cell <> qcell),
-       |probes AS (SELECT qid, cell AS pcell FROM ranked WHERE crk <= ${NProbe - 1}
-       |           UNION ALL SELECT qid, qcell AS pcell FROM q),
+       |$probesSql,
        |pres AS (SELECT p.qid, p.pcell, ${vsubSql("q.qv", "reps.rv")} AS qres
        |         FROM probes p JOIN q ON q.qid = p.qid
        |                       JOIN reps ON reps.cell = p.pcell),
@@ -1854,6 +1886,17 @@ object SimilarityQueries {
        |                 AND a.qid < a.nn_id
        |ORDER BY d1, d2""".stripMargin
 
+  /** ann_bruteforce's oracle — also ann_topk_agg's (the same answer
+    * through another physical plan) and the exact reference ann_recall
+    * scores against.
+    */
+  private lazy val bruteforceSql: String =
+    s"""WITH e AS ($eSql),
+       |scored AS (
+       |  SELECT q.vec_id AS qid, e.vec_id AS nn_id, ${cosineSql("q.v", "e.v")} AS sim
+       |  FROM e q JOIN e ON q.vec_id < $NQueries AND e.vec_id <> q.vec_id)
+       |${topKSql("scored")}""".stripMargin
+
   private lazy val oraclesBase: Map[String, String] = Map(
     "embedding_kmeans" ->
       s"""WITH $kmeansCtes
@@ -1929,23 +1972,10 @@ object SimilarityQueries {
          |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, nn_id) AS rn
          |  FROM rer WHERE NOT isnan(d2)) WHERE rn <= $KnnK ORDER BY qid, rank""".stripMargin,
 
-    "ann_bruteforce" ->
-      s"""WITH e AS ($eSql),
-         |scored AS (
-         |  SELECT q.vec_id AS qid, e.vec_id AS nn_id, ${cosineSql("q.v", "e.v")} AS sim
-         |  FROM e q JOIN e ON q.vec_id < $NQueries AND e.vec_id <> q.vec_id)
-         |SELECT qid, rank, nn_id FROM (
-         |  SELECT qid, nn_id, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS INT) AS rank
-         |  FROM scored) WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin,
+    "ann_bruteforce" -> bruteforceSql,
 
-    "ann_topk_agg" ->
-      s"""WITH e AS ($eSql),
-         |scored AS (
-         |  SELECT q.vec_id AS qid, e.vec_id AS nn_id, ${cosineSql("q.v", "e.v")} AS sim
-         |  FROM e q JOIN e ON q.vec_id < $NQueries AND e.vec_id <> q.vec_id)
-         |SELECT qid, rank, nn_id FROM (
-         |  SELECT qid, nn_id, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS INT) AS rank
-         |  FROM scored) WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin,
+    // the aggregator twin's result is ann_bruteforce's by definition
+    "ann_topk_agg" -> bruteforceSql,
 
     "mine_hard_negatives" ->
       s"""WITH e AS ($eSql),
@@ -2010,63 +2040,20 @@ object SimilarityQueries {
          |  FROM pairs) WHERE rn = 1 ORDER BY vec_id""".stripMargin
     },
 
-    "ann_ivf_nprobe" ->
-      // rep = the cell's min-vec_id vector; cell rank window mirrors the
-      // TopK aggregator's (csim DESC, cell) ordering exactly. The WHERE
-      // mirrors the Spark side's vec_id/label isNotNull filters (as in
-      // embedding_outliers): without it a NULL-label vector would mint a
-      // NULL-cell representative on the oracle side only and could
-      // consume one of the NProbe probe slots
-      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings
-         |           WHERE vec_id IS NOT NULL AND label IS NOT NULL),
-         |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
-         |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid),
-         |q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
-         |ranked AS (SELECT qid, qv, cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
-         |  FROM q CROSS JOIN reps WHERE cell <> qcell),
-         |probes AS (SELECT qid, qv, cell FROM ranked WHERE crk <= ${NProbe - 1}
-         |           UNION ALL SELECT qid, qv, qcell AS cell FROM q),
-         |scored AS (SELECT p.qid, e.vec_id AS nn_id, ${cosineSql("p.qv", "e.v")} AS sim
-         |  FROM probes p JOIN e ON e.label = p.cell AND e.vec_id <> p.qid)
-         |SELECT qid, rank, nn_id FROM (
-         |  SELECT qid, nn_id, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS INT) AS rank
-         |  FROM scored) WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin,
+    "ann_ivf_nprobe" -> nprobeSql(),
 
     // nprobe's chain with the candidate side SEMI-joined to the
     // predicate's id set before scoring (pre-filtering, never
     // post-filtering); index structure (reps, probe rule) unfiltered
-    "ann_filtered" ->
-      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings
-         |           WHERE vec_id IS NOT NULL AND label IS NOT NULL),
-         |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
-         |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid),
-         |q AS (SELECT vec_id AS qid, label AS qcell, v AS qv FROM e WHERE vec_id < $NQueries),
-         |f AS (SELECT e.* FROM e WHERE EXISTS (
+    "ann_filtered" -> nprobeSql("f",
+      s"""f AS (SELECT e.* FROM e WHERE EXISTS (
          |        SELECT 1 FROM documents d
          |        WHERE d.doc_id = e.vec_id AND d.doc_id IS NOT NULL
          |          AND d.lang = '$AnnFilterLang')),
-         |ranked AS (SELECT qid, qv, cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |                       ORDER BY ${cosineSql("qv", "rv")} DESC, cell) AS crk
-         |  FROM q CROSS JOIN reps WHERE cell <> qcell),
-         |probes AS (SELECT qid, qv, cell FROM ranked WHERE crk <= ${NProbe - 1}
-         |           UNION ALL SELECT qid, qv, qcell AS cell FROM q),
-         |scored AS (SELECT p.qid, f.vec_id AS nn_id, ${cosineSql("p.qv", "f.v")} AS sim
-         |  FROM probes p JOIN f ON f.label = p.cell AND f.vec_id <> p.qid)
-         |SELECT qid, rank, nn_id FROM (
-         |  SELECT qid, nn_id, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS INT) AS rank
-         |  FROM scored) WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin,
+         |""".stripMargin),
 
     "embedding_outliers" ->
-      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings
-         |           WHERE vec_id IS NOT NULL AND label IS NOT NULL),
-         |rid AS (SELECT label, min(vec_id) AS rid FROM e GROUP BY 1),
-         |reps AS (SELECT e.label AS cell, e.v AS rv FROM e JOIN rid ON e.vec_id = rid.rid),
+      s"""WITH ${cellRepsSql(labeledSql)},
          |scored AS (SELECT e.vec_id, e.label, ${cosineSql("e.v", "reps.rv")} AS sim_to_rep
          |           FROM e JOIN reps ON e.label = reps.cell),
          |thr AS (SELECT label, quantile_cont(sim_to_rep, 0.1) AS p10
@@ -2081,9 +2068,7 @@ object SimilarityQueries {
          |scored AS (
          |  SELECT q.vec_id AS qid, e.vec_id AS nn_id, ${cosineSql("q.v", "e.v")} AS sim
          |  FROM e q JOIN e ON q.vec_id < $NQueries AND e.label = q.label AND e.vec_id <> q.vec_id)
-         |SELECT qid, rank, nn_id FROM (
-         |  SELECT qid, nn_id, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS INT) AS rank
-         |  FROM scored) WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
+         |${topKSql("scored")}""".stripMargin
   )
 
   def oracles: Map[String, String] = oraclesBase +
@@ -2105,7 +2090,7 @@ object SimilarityQueries {
          |  CAST((SELECT COUNT(*) FROM m$i WHERE EXISTS (
          |    SELECT 1 FROM bf WHERE bf.qid = m$i.qid AND bf.nn_id = m$i.nn_id)) AS BIGINT) AS n_hits""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH bf AS (SELECT qid, nn_id FROM (${oraclesBase("ann_bruteforce")}) t),
+    s"""WITH bf AS (SELECT qid, nn_id FROM ($bruteforceSql) t),
        |$ctes
        |SELECT method, n_ret, n_hits,
        |  CAST(n_hits AS DOUBLE) / CAST(n_ret AS DOUBLE) AS hit_rate

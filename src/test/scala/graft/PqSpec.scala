@@ -78,13 +78,13 @@ class PqSpec extends AnyFunSuite {
     // lloydTrain's gate 0 forces the distributed loop; the default gate
     // trains these 120·PqM subvector rows on the driver. The cache is keyed
     // by corpus dir, so each path's codebook is built cold.
-    import graft.queries.SimilarityQueries.{ivfpqCodebook, pqCodebook, LloydDriverMaxRows}
+    import graft.queries.SimilarityQueries.{ivfpqCodebook, ivfpqReps, pqCodebook, LloydDriverMaxRows}
     def books(bound: Int) = {
       graft.operators.SessionCache.invalidate(spark, dir)
       def rows(cb: org.apache.spark.sql.DataFrame) =
         cb.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSet
       val pq = rows(pqCodebook(spark, dir, bound))
-      val ivf = rows(ivfpqCodebook(spark, dir, bound))
+      val ivf = rows(ivfpqCodebook(spark, dir, ivfpqReps(spark, dir, "ivfpqCodebook"), bound))
       val ann = SparkEntry.queries("ann_pq")(spark, dir).collect().map(_.toString).sorted.toSeq
       (pq, ivf, ann)
     }
@@ -176,7 +176,8 @@ class PqSpec extends AnyFunSuite {
       vid -> v.zip(reps(cell)).map { case (x, y) => x - y }
     }.toMap
     // independent re-encode of every residual against the trained book
-    val cb = graft.queries.SimilarityQueries.ivfpqCodebook(spark, dir)
+    val cb = graft.queries.SimilarityQueries.ivfpqCodebook(spark, dir,
+      graft.queries.SimilarityQueries.ivfpqReps(spark, dir, "ivfpqCodebook"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
     val cidsByJ = cb.keys.groupBy(_._1).map { case (j, ks) => j -> ks.map(_._2).toSeq.sorted }
     val codes = resid.map { case (vid, rv) =>
@@ -261,12 +262,55 @@ class PqSpec extends AnyFunSuite {
     }
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val idx = s"${sys.props("java.io.tmpdir")}/graft-pq-index/$key-k${graft.queries.SimilarityQueries.PqK}"
+    val idx = s"${graft.queries.SimilarityQueries.pqIndexRoot}/$key-k${graft.queries.SimilarityQueries.PqK}"
     val codesBytes = bytes(s"$idx/codes")
     val embBytes = bytes(s"$dir/embeddings.parquet")
     assert(codesBytes > 0 && embBytes > 0)
     assert(codesBytes < embBytes,
       s"index codes ($codesBytes B) must undercut the embeddings ($embBytes B)")
+  }
+
+  test("each JVM keeps its persisted PQ index in its own directory and deletes it at exit") {
+    // two JVMs serving one corpus dir side by side must not write or read
+    // each other's index files: a second JVM (PqIndexRootProbe) reports
+    // its index root, which must differ from this one's and be gone once
+    // it has exited
+    SparkEntry.queries("ann_pq_indexed")(spark, dir).count()
+    val here = graft.queries.SimilarityQueries.pqIndexRoot
+    assert(java.nio.file.Files.isDirectory(here))
+    val child = new ProcessBuilder(s"${sys.props("java.home")}/bin/java", "-Xmx128m",
+        "-cp", sys.props("java.class.path"), "graft.PqIndexRootProbe")
+      .redirectErrorStream(true).start()
+    val out = new String(child.getInputStream.readAllBytes(), "UTF-8")
+    assert(child.waitFor() == 0, out)
+    val there = java.nio.file.Paths.get(out.linesIterator.filter(_.nonEmpty).toSeq.last)
+    assert(there != here, s"both JVMs got the index root $here")
+    assert(there.getParent == here.getParent, s"$there is not under the system temp dir")
+    assert(!java.nio.file.Files.exists(there), s"the exited JVM left $there behind")
+  }
+
+  test("a NULL embedding at a cell's minimum vec_id leaves the IVF-PQ answers alone") {
+    import org.apache.spark.sql.functions._
+    // the oracle's ivfpqCtes drops the row (embedding IS NOT NULL) before
+    // it picks cell representatives, so both entries must answer as on
+    // the table without it. Vector 0 is cell 0's minimum vec_id and one
+    // of the queries.
+    val rows = spark.read.parquet(dir + "/embeddings.parquet")
+    def table(df: org.apache.spark.sql.DataFrame): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft-pq-null").toString
+      df.write.parquet(d + "/embeddings.parquet")
+      d
+    }
+    val withNull = table(rows.withColumn("embedding",
+      when(col("vec_id") =!= 0, col("embedding"))))
+    val without = table(rows.filter(col("vec_id") =!= 0))
+    for (q <- Seq("ann_ivfpq", "ann_ivfpq_rerank")) {
+      def answer(d: String) = SparkEntry.queries(q)(spark, d).collect().map(_.toString).toSet
+      val expected = answer(without)
+      assert(expected.size == 7, s"$q: ${expected.size} answers on the table without vector 0")
+      assert(answer(withNull) == expected, s"$q: the NULL embedding changed the answers")
+    }
+    Seq(withNull, without).foreach(graft.operators.SessionCache.invalidate(spark, _))
   }
 
   test("every ADC serving plan sums codes with adcSum, never an ArrayAggregate fold") {
@@ -299,4 +343,12 @@ class PqSpec extends AnyFunSuite {
       assert(err == exp, s"vec $vid: recon_err_fp $err vs recomputed $exp")
     }
   }
+}
+
+/** Prints this JVM's persisted PQ index root — the second JVM of PqSpec's
+  * index-directory case.
+  */
+object PqIndexRootProbe {
+  def main(args: Array[String]): Unit =
+    println(graft.queries.SimilarityQueries.pqIndexRoot)
 }

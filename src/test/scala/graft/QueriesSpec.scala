@@ -897,6 +897,57 @@ class QueriesSpec extends AnyFunSuite {
     assert(!exact, "the rewrite shares no 8-gram — exact must miss it")
   }
 
+  test("the SemDeDup cosine gate keeps zero and non-finite vectors out of every semantic tier") {
+    import spark.implicits._
+    // A zero vector's cosine is 0/0, NULL in both engines (non-ANSI Spark,
+    // DuckDB), so the comparison drops it; a vector with a NaN component
+    // has a NaN cosine, which both engines order above any threshold.
+    // Both hash to the all-ones sign cell (NaN >= 0 holds too), so they
+    // share that cell (and label 0) with every non-negative vector.
+    // Train docs z1, z2 (zero vectors), n (NaN component) and t (a
+    // near-parallel copy of held-out h's vector) all sit in h's cell:
+    // only t is a semantic duplicate. z1/z2 are identical, so k-means
+    // puts them in one cluster whatever the init picks.
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def prefix2(id: Long): String =
+      md.digest(id.toString.getBytes("UTF-8")).take(1).map("%02x".format(_)).mkString
+    val ids = (0L until 200L).toVector
+    val h = ids.filter(prefix2(_) >= "cd").head
+    val Vector(z1, z2, n, t) = ids.filter(prefix2(_) < "cd").take(4)
+    val vh = Array(1f, 2f, 3f, 4f, 5f, 6f, 7f, 8f)
+    val vt = Array(1.1f, 2f, 3f, 4f, 5f, 6f, 7f, 8f)
+    val vn = Float.NaN +: vh.tail
+    val zero = Array.fill(8)(0f)
+    val dir = java.nio.file.Files.createTempDirectory("graft-semzero").toString
+    Seq((z1, "an empty page rendered with no readable body text at all", "en", "synth", 0L),
+        (z2, "another blank page whose embedding came back as all zeros", "en", "synth", 0L),
+        (n, "a page whose embedding model overflowed on one dimension", "en", "synth", 0L),
+        (t, "the benchmark question rewritten into a crawled forum post", "en", "synth", 0L),
+        (h, "benchmark question about rivers mountains and their answers", "en", "synth", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(dir + "/documents.parquet")
+    Seq((z1, zero, 0), (z2, zero, 0), (n, vn, 0), (t, vt, 0), (h, vh, 0))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(dir + "/embeddings.parquet")
+    val sem = SparkEntry.queries("decontaminate_semantic")(spark, dir)
+      .select("doc_id", "n_sem_dups", "contaminated")
+      .as[(Long, Long, Boolean)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(sem(t) == (1L, true), s"the near-parallel rewrite must be flagged; got ${sem(t)}")
+    Seq(z1, z2, n).foreach { x =>
+      assert(sem(x) == (0L, false), s"vector $x has no cosine and must not be contaminated; got ${sem(x)}")
+    }
+    val th = (math.min(t, h), math.max(t, h))
+    for (tier <- Seq("dedup_semantic", "dedup_semantic_unlabeled", "dedup_semantic_kmeans")) {
+      val pairs = SparkEntry.queries(tier)(spark, dir)
+        .select("d1", "d2").as[(Long, Long)].collect().toSet
+      assert(!pairs.exists { case (a, b) => Set(a, b).exists(Set(z1, z2, n)) },
+        s"$tier emitted a pair with a zero or non-finite vector: $pairs")
+      if (tier != "dedup_semantic_kmeans")
+        assert(pairs == Set(th), s"$tier must still pair t with h; got $pairs")
+    }
+  }
+
   test("chunk dedup catches a shared boilerplate paragraph doc-level dedup misses") {
     import spark.implicits._
     // docs A and B: the same 32-token boilerplate "navbar" followed by
@@ -1614,7 +1665,8 @@ class QueriesSpec extends AnyFunSuite {
     // subspaces' codewords lose every member in the first update.
     Seq[(String, String => org.apache.spark.sql.DataFrame)](
       "pqCodebook" -> (d => SimilarityQueries.pqCodebook(spark, d)),
-      "ivfpqCodebook" -> (d => SimilarityQueries.ivfpqCodebook(spark, d))
+      "ivfpqCodebook" -> (d => SimilarityQueries.ivfpqCodebook(spark, d,
+        SimilarityQueries.ivfpqReps(spark, d, "ivfpqCodebook")))
     ).foreach { case (name, book) =>
       val (b1, b2) = (book(dir), book(dir2))
       assert(b1.count() > 0, s"$name trained no codewords")
@@ -1691,7 +1743,8 @@ class QueriesSpec extends AnyFunSuite {
         SimilarityQueries.withKm2Cells(spark, dir, bound)(
           c => rows(c.asg.select("vec_id", "scell", "cluster"))),
         rows(SimilarityQueries.pqCodebook(spark, dir, bound)),
-        rows(SimilarityQueries.ivfpqCodebook(spark, dir, bound)))
+        rows(SimilarityQueries.ivfpqCodebook(spark, dir,
+          SimilarityQueries.ivfpqReps(spark, dir, "ivfpqCodebook"), bound)))
       graft.operators.SessionCache.invalidate(spark, dir)
       out
     }
