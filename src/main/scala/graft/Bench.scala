@@ -44,8 +44,14 @@ object Bench {
     val harnessT0 = System.nanoTime()
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt)
+    // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows the chain to named queries —
+    // the single-query reproduction harness (a failed query in a 108-query
+    // chain needs a 30 s rerun, not a 30 min one).
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = SparkEntry.select(only.map(_.toSeq.sorted))
     val spark = EngineSession.local(cpus, "graft-bench")
 
     // Warm the session before timing: file listing, parquet footer reads,
@@ -98,21 +104,7 @@ object Bench {
       Rep(wallNs / 1e9, (gcMillis() - gc0) / 1e3, cpuRatio, ok)
     }
 
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows the chain to named queries —
-    // the single-query reproduction harness (a failed query in a 108-query
-    // chain needs a 30 s rerun, not a 30 min one). A typo must fail LOUDLY:
-    // a silently-empty filter would emit a JSON line indistinguishable from
-    // a (suspiciously fast) full official chain.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       val rs = (1 to reps).map(_ => once(fn, name))
       val best = rs.minBy(_.sec)
       (name, best.copy(ok = rs.forall(_.ok)), rs.map(_.sec).max)

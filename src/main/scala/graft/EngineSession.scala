@@ -61,14 +61,18 @@ object EngineSession {
     b
   }
 
+  /** The local core count a main runs with when `SPARK_GRAFT_CPUS` is
+    * unset: the host's.
+    */
+  def defaultCores: String = Runtime.getRuntime.availableProcessors().toString
+
   /** Local-mode builder with the engine's standard tuning: shuffle
     * parallelism = core count (not the 200 default — right-sized for a
     * single node; on a real cluster this scales with executor count), AQE
     * on for runtime coalescing/skew handling.
     */
   def local(cores: String, appName: String): SparkSession = {
-    val shufflePartitions =
-      if (cores == "*") Runtime.getRuntime.availableProcessors().toString else cores
+    val shufflePartitions = if (cores == "*") defaultCores else cores
     val spark = configured(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)

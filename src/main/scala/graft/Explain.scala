@@ -17,39 +17,36 @@ import org.apache.spark.sql.execution.FormattedMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = EngineSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-explain")
     // --run: execute the query first and print the FINAL adaptive plan —
     // AQE decisions (ReusedExchange, broadcast/skew rewrites) only appear
     // after execution, so the static plan under-reports exchange reuse.
     val (flags, queryArgs) = args.partition(_.startsWith("--"))
     val run = flags.contains("--run")
-    val names = if (queryArgs.nonEmpty) queryArgs.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        println(s"===== $name =====")
-        // construction is INSIDE the timing: iterative queries (e.g.
-        // dedup_clusters' label loop) execute eagerly while the DataFrame
-        // is built, so timing only the collect would under-report them
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        if (run) {
-          // collect() drives THIS DataFrame's QueryExecution (a noop write
-          // would plan a fresh one and show the pre-AQE plan); catalog
-          // results are small, so the driver-side materialization is fine.
-          val n = df.collect().length
-          val secs = (System.nanoTime() - t0) / 1e9
-          println(f"[$n rows in $secs%.2f s]")
-          println(df.queryExecution.executedPlan.toString)
-        } else
-          println(df.queryExecution.explainString(FormattedMode))
+    val selected =
+      try SparkEntry.select(Some(queryArgs.toSeq).filter(_.nonEmpty))
+      catch { case e: IllegalArgumentException =>
+        System.err.println(e.getMessage)
+        sys.exit(2)
       }
+    val spark = EngineSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores), "graft-explain")
+    selected.foreach { case (name, fn) =>
+      println(s"===== $name =====")
+      // construction is INSIDE the timing: iterative queries (e.g.
+      // dedup_clusters' label loop) execute eagerly while the DataFrame
+      // is built, so timing only the collect would under-report them
+      val t0 = System.nanoTime()
+      val df = fn(spark, sfDir)
+      if (run) {
+        // collect() drives THIS DataFrame's QueryExecution (a noop write
+        // would plan a fresh one and show the pre-AQE plan); catalog
+        // results are small, so the driver-side materialization is fine.
+        val n = df.collect().length
+        val secs = (System.nanoTime() - t0) / 1e9
+        println(f"[$n rows in $secs%.2f s]")
+        println(df.queryExecution.executedPlan.toString)
+      } else
+        println(df.queryExecution.explainString(FormattedMode))
     }
     spark.stop()
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"unknown queries: ${unknown.mkString(", ")} (known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})")
-      sys.exit(2)
-    }
   }
 }

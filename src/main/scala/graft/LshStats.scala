@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object LshStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores)
     val spark = EngineSession.local(cpus, "graft-lsh-stats")
     import graft.queries.{DedupQueries => DQ, SimilarityQueries => SQ}
     val bandKeys = Seq("band", "bval")

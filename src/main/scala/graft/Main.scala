@@ -66,7 +66,7 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = EngineSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "*"), "graft")
+    val spark = EngineSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores), "graft")
     val rc = try dispatch(spark, args.toSeq) finally spark.stop()
     if (rc != 0) sys.exit(rc)
   }

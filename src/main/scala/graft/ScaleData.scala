@@ -32,7 +32,7 @@ object ScaleData {
         System.err.println("usage: graft.ScaleData <srcSfDir> <outDir> [factor=10] [exact]")
         sys.exit(2)
     }
-    val spark = EngineSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "*"), "graft-scaledata")
+    val spark = EngineSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores), "graft-scaledata")
     try scaleUp(spark, srcDir, outDir, factor, exact) finally spark.stop()
   }
 

@@ -37,4 +37,18 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.iterator.map(_._2).reduce(_ ++ _)
+
+  /** The entries a catalog main runs: `names` in the order given, or
+    * every entry by name when None. An unknown name throws before the
+    * caller builds a session: a typo'd filter would otherwise run (or
+    * dump) nothing and read as a pass.
+    */
+  def select(names: Option[Seq[String]]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val chosen = names.getOrElse(all.keys.toSeq.sorted)
+    val unknown = chosen.filterNot(all.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown queries: ${unknown.mkString(", ")} (known: ${all.keys.toSeq.sorted.mkString(", ")})")
+    chosen.map(n => n -> all(n))
+  }
 }

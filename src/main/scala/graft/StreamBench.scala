@@ -46,7 +46,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores)
     val nBatches = math.max(2,
       sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "8").toInt)
     val spark = EngineSession.local(cpus, "graft-stream-bench")

@@ -7,21 +7,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local iteration;
-    // the driver's two-arg invocation dumps everything). Unknown names
-    // fail loudly — a typo'd filter would otherwise write no parquet and
-    // truncate oracle_sql.json without a word, so a later DuckDB compare
-    // over the outDir would "pass" on zero queries.
+    // the driver's two-arg invocation dumps everything)
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries in filter: ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val selected = SparkEntry.select(only.map(_.toSeq.sorted))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", EngineSession.defaultCores)
     val spark = EngineSession.local(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1198,7 +1198,7 @@ object CurationQueries {
       val d = Tables(s, dir, "documents")
         .filter(col("doc_id").isNotNull)
         .select(col("doc_id"),
-          coalesce(TextAnalysisQueries.qualityExpr(col("text")), lit(-1.0))
+          TextAnalysisQueries.canonScore(col("text"))
             .as("qscore"),
           // NULL-text docs cost 0 tokens on BOTH sides: without the
           // coalesce, Spark's cum (bbase + win + n_tokens) goes NULL and
@@ -1713,7 +1713,7 @@ object CurationQueries {
     // the Spark side's two-level banded form is the scale plan.
     "curation_budget" ->
       s"""WITH d AS (SELECT doc_id,
-         |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS qscore,
+         |        ${TextAnalysisQueries.canonScoreSql} AS qscore,
          |        COALESCE(CAST(len(${tokensSql("text")}) AS BIGINT), 0) AS n_tokens
          |      FROM documents WHERE doc_id IS NOT NULL),
          |c AS (SELECT doc_id, qscore, n_tokens,

@@ -3,6 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.operators.Election
+import graft.operators.Election.winnersSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -698,15 +700,14 @@ object DedupQueries {
       clusters: DataFrame): DataFrame = {
     val scored = Tables(s, dir, "documents")
       .select(col("doc_id"),
-        coalesce(TextAnalysisQueries.qualityExpr(col("text")), lit(-1.0))
+        TextAnalysisQueries.canonScore(col("text"))
           .as("qscore"))
     val d = clusters
       .select("doc_id", "cluster_id")
       .join(scored, Seq("doc_id"))
-    val canon = d.groupBy("cluster_id")
-      .agg(max(struct(col("qscore").as("q"), (-col("doc_id")).as("neg_id")))
-        .as("best"))
-      .select(col("cluster_id"), (-col("best.neg_id")).as("canon_id"))
+    val canon = Election.winners(d, Seq("cluster_id"),
+        Seq(Election.desc("qscore"), Election.asc("doc_id")), Seq("doc_id"))
+      .withColumnRenamed("doc_id", "canon_id")
     d.join(canon, Seq("cluster_id"))
       .select(col("doc_id"), col("cluster_id"), col("canon_id"),
         (col("doc_id") === col("canon_id")).as("keep"))
@@ -714,18 +715,17 @@ object DedupQueries {
 
   /** One representative row (doc_id, chunk_id, chunk) per DISTINCT chunk
     * content — the min-(doc_id, chunk_id) member of each md5 group, i.e.
-    * dedup_chunk_exact's canon. The chunk text rides the min-struct as a
-    * dead tiebreak slot ((doc_id, chunk_id) is unique, so it never
-    * compares), which makes the election ONE partial-aggregable hash
-    * group with no join-back. Shared by `dedup_chunk_minhash` (its
-    * exact-duplicate pre-filter) and graft.LshStats' chunk probe.
+    * dedup_chunk_exact's canon. The chunk text rides the election as a
+    * carried column, so it is ONE grouping with no join-back. Shared by
+    * `dedup_chunk_minhash` (its exact-duplicate pre-filter) and
+    * graft.LshStats' chunk probe.
     */
   private[graft] def chunkReps(s: SparkSession, dir: String): DataFrame =
-    CurationQueries.chunkTable(s, dir)
-      .groupBy(md5(col("chunk")).as("chunk_hash"))
-      .agg(min(struct(col("doc_id"), col("chunk_id"), col("chunk"))).as("r"))
-      .select(col("r.doc_id").as("doc_id"), col("r.chunk_id").as("chunk_id"),
-        col("r.chunk").as("chunk"))
+    Election.winners(
+        CurationQueries.chunkTable(s, dir).withColumn("chunk_hash", md5(col("chunk"))),
+        Seq("chunk_hash"), Seq(Election.asc("doc_id"), Election.asc("chunk_id")),
+        Seq("doc_id", "chunk_id", "chunk"))
+      .drop("chunk_hash")
 
   /** Distinct (doc_id, chunk_id, sh) 3-shingle rows of [[chunkReps]] —
     * the input frame of `dedup_chunk_minhash`'s signature pipeline.
@@ -957,7 +957,7 @@ object DedupQueries {
     val q = Tables(s, dir, "documents")
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
-        coalesce(TextAnalysisQueries.qualityExpr(col("text")), lit(-1.0)).as("q"))
+        TextAnalysisQueries.canonScore(col("text")).as("q"))
     pairs.filter(semGate(col("sim")))
       .join(q.select(col("doc_id").as("d1"), col("q").as("q1")), Seq("d1"))
       .join(q.select(col("doc_id").as("d2"), col("q").as("q2")), Seq("d2"))
@@ -1162,13 +1162,9 @@ object DedupQueries {
     // Classes are connected components over Hamming ≤ 3 INCLUDING 0
     // (clusterLabels(includeExact = true)): unlike dedup_clusters, a
     // keep/drop decision must fold exact duplicates into the same class,
-    // or two identical docs would each elect themselves. The pick is the
-    // partial-aggregable max(struct(qscore, -doc_id))
-    // (dedup_embedding's rank-1 shape): each task prunes to one candidate
-    // per cluster map-side — no Window funnel, and the groupBy key space
-    // is the cluster id set (≈ the corpus), so no concentration either.
-    // NULL qualities (tokenless docs) coalesce to -1.0 on BOTH engines so
-    // a cluster of unscorable docs still elects a deterministic canon.
+    // or two identical docs would each elect themselves. The pick is an
+    // Election (qscore DESC, doc_id) keyed by the cluster id set
+    // (≈ the corpus), so no key concentrates; qscore is canonScore.
     "dedup_canonical" -> ((s, dir) =>
       canonicalDecision(s, dir).orderBy("doc_id")),
 
@@ -1427,11 +1423,9 @@ object DedupQueries {
     // self-join quadratically: buckets larger than [[MaxBucket]] are
     // dropped (broadcast anti-join) before the join — a bucket that hot is
     // near-identical vectors, i.e. exact-duplicate territory. The NN pick
-    // is a partial-aggregable max(struct(sim, -nn_id)) — ordering-equal to
-    // ROW_NUMBER() ORDER BY sim DESC, nn_id — so each task prunes to one
-    // candidate per vec_id map-side instead of shuffling every scored pair
-    // into a Window sort. Vectors with no same-bucket neighbor drop out
-    // (the oracle mirrors the identical bucket assignment bit-for-bit).
+    // is an Election (sim DESC, nn_id). Vectors with no same-bucket
+    // neighbor drop out (the oracle mirrors the identical bucket
+    // assignment bit-for-bit).
     "dedup_embedding" -> ((s, dir) => {
       val e0 = Tables(s, dir, "embeddings")
         // isNotNull on BOTH join keys so the cap branch canonicalizes
@@ -1442,14 +1436,13 @@ object DedupQueries {
         .filter(col("bkt").isNotNull)
       val e = capBuckets(e0, Seq("label", "bkt"))
       val sim = cosine(col("a.v"), col("b.v"))
-      e.as("a").join(e.as("b"),
+      val pairs = e.as("a").join(e.as("b"),
           col("a.label") === col("b.label") && col("a.bkt") === col("b.bkt") &&
             col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("vec_id"), col("a.label").as("label"),
           col("b.vec_id").as("nn_id"), sim.as("sim"))
-        .groupBy("vec_id", "label")
-        .agg(max(struct(col("sim").as("sim"), (-col("nn_id")).as("neg_id"))).as("best"))
-        .select(col("vec_id"), col("label"), (-col("best.neg_id")).as("nn_id"))
+      Election.winners(pairs, Seq("vec_id", "label"),
+          Seq(Election.desc("sim"), Election.asc("nn_id")), Seq("nn_id"))
         .orderBy("vec_id")
     }),
 
@@ -1772,9 +1765,8 @@ object DedupQueries {
     * qscore)` and `canon(cluster_id, canon_id)` — the oracle mirror of
     * [[canonicalDecision]]: the dedup_clusters reachability closure over
     * pairs ∪ same-sig star edges (Hamming 0 joins the class here), then
-    * the canon pick. ROW_NUMBER ordered by (qscore DESC, doc_id) is
-    * order-equal to the Spark side's max(struct(qscore, -doc_id)) partial
-    * aggregate. Shared with CurationQueries' pipeline_curate oracle.
+    * the canon pick, [[canonicalDecisionFrom]]'s Election as
+    * `winnersSql`. Shared with CurationQueries' pipeline_curate oracle.
     */
   private[queries] def canonicalCtes: String =
     s"""$simhashPairCtes,
@@ -1785,15 +1777,11 @@ object DedupQueries {
        |             UNION SELECT d1, d2 FROM sigdup),
        |${ccLabelsSql("alledges")},
        |q AS (SELECT doc_id,
-       |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS qscore
+       |        ${TextAnalysisQueries.canonScoreSql} AS qscore
        |      FROM documents),
        |d AS (SELECT lab.doc_id, lab.cluster_id, q.qscore
        |      FROM lab JOIN q USING (doc_id)),
-       |canon AS (SELECT cluster_id, doc_id AS canon_id FROM (
-       |  SELECT cluster_id, doc_id,
-       |    ROW_NUMBER() OVER (PARTITION BY cluster_id
-       |                       ORDER BY qscore DESC, doc_id) AS rn
-       |  FROM d) WHERE rn = 1)""".stripMargin
+       |canon AS (${winnersSql("cluster_id, doc_id AS canon_id", "d", "cluster_id", "qscore DESC, doc_id")})""".stripMargin
 
   /** dedup_ngram_jaccard's oracle — ONE string, shared by its own entry
     * and (as a nested subquery) dedup_clusters_multi's edge union.
@@ -1849,7 +1837,7 @@ object DedupQueries {
     */
   private def semanticElectionSql: String =
     s"""q AS (SELECT doc_id,
-       |        COALESCE(${TextAnalysisQueries.qualitySqlExpr}, -1.0) AS q
+       |        ${TextAnalysisQueries.canonScoreSql} AS q
        |      FROM documents)
        |SELECT p.d1, p.d2, p.sim,
        |  CASE WHEN x.q < y.q THEN p.d1
@@ -2138,10 +2126,7 @@ object DedupQueries {
          |  SELECT a.vec_id, a.label, b.vec_id AS nn_id,
          |    ${cosineSql("a.v", "b.v")} AS sim
          |  FROM e a JOIN e b ON a.label = b.label AND a.bkt = b.bkt AND a.vec_id <> b.vec_id)
-         |SELECT vec_id, label, nn_id FROM (
-         |  SELECT vec_id, label, nn_id,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, nn_id) AS rn
-         |  FROM sims) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+         |${winnersSql("vec_id, label, nn_id", "sims", "vec_id", "sim DESC, nn_id")} ORDER BY vec_id""".stripMargin,
 
     "source_overlap" ->
       // the oracle's window-rank bottom-k is value-equal to the

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Election
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -64,24 +65,24 @@ object EventQueries {
     // ---- as-of join (composed, per prompt preference (a)): for each
     // purchase, the latest SAME-USER event strictly before it, looking
     // back at most 1 day. The bound keeps per-key candidate volume
-    // proportional to per-user daily activity; rank-1 via max_by over the
-    // (ts, event_id) pair — a plain aggregate, no window shuffle of the
-    // candidate set beyond the groupBy. ----
+    // proportional to per-user daily activity; rank-1 via an Election
+    // (ts DESC, event_id DESC). ----
     "event_asof" -> ((s, dir) => {
       val e = Tables(s, dir, "events")
       val p = e.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
           col("ts").as("p_ts"))
-      e.join(p,
+      val prior = e.join(p,
           col("user_id") === col("p_user") &&
             col("ts") < col("p_ts") &&
             col("ts") >= col("p_ts") - expr("INTERVAL 1 DAY"))
-        .groupBy(col("purchase_id"))
-        .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("prev"))
+      Election.winners(prior, Seq("purchase_id"),
+          Seq(Election.desc("ts"), Election.desc("event_id")),
+          Seq("event_id", "event_type", "ts"))
         .select(col("purchase_id"),
-          col("prev.event_id").as("prev_event_id"),
-          col("prev.event_type").as("prev_event_type"),
-          col("prev.ts").as("prev_ts"))
+          col("event_id").as("prev_event_id"),
+          col("event_type").as("prev_event_type"),
+          col("ts").as("prev_ts"))
         .orderBy("purchase_id")
     }),
 
@@ -234,16 +235,12 @@ object EventQueries {
         |GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
 
     "event_asof" ->
-      """SELECT p.event_id AS purchase_id,
-        |  e.event_id AS prev_event_id,
-        |  e.event_type AS prev_event_type,
-        |  e.ts AS prev_ts
-        |FROM events e JOIN events p
-        |  ON e.user_id = p.user_id AND p.event_type = 'purchase'
-        |  AND e.ts < p.ts AND e.ts >= p.ts - INTERVAL 1 DAY
-        |QUALIFY ROW_NUMBER() OVER (PARTITION BY p.event_id
-        |  ORDER BY e.ts DESC, e.event_id DESC) = 1
-        |ORDER BY purchase_id""".stripMargin,
+      (Election.winnersSql(
+        "p.event_id AS purchase_id, e.event_id AS prev_event_id, e.event_type AS prev_event_type, e.ts AS prev_ts",
+        """events e JOIN events p
+          |  ON e.user_id = p.user_id AND p.event_type = 'purchase'
+          |  AND e.ts < p.ts AND e.ts >= p.ts - INTERVAL 1 DAY""".stripMargin,
+        "p.event_id", "e.ts DESC, e.event_id DESC") + " ORDER BY purchase_id"),
 
     "event_range_join" ->
       """SELECT p.event_id AS purchase_id,

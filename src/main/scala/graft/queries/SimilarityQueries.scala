@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.Election
+import graft.operators.Election.winnersSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -844,15 +846,12 @@ object SimilarityQueries {
       .select(col("qid"), col("vec_id").as("nn_id"),
         adcSum(col("codes"), col("lut")).as("adc_fp"))
 
-  /** Rank-1 per query: the (score, nn_id)-least candidate via min(struct)
-    * — partial-aggregable, ties to the smaller nn_id.
+  /** Rank-1 per query: the (score, nn_id)-least candidate, ties to the
+    * smaller nn_id; twin [[rank1Sql]].
     */
   private def nearest(scored: DataFrame, score: String): DataFrame =
-    scored
-      .groupBy("qid")
-      .agg(min(struct(col(score), col("nn_id"))).as("b"))
-      .select(col("qid"), col("b").getField("nn_id").as("nn_id"),
-        col("b").getField(score).as(score))
+    Election.winners(scored, Seq("qid"), Seq(Election.asc(score), Election.asc("nn_id")),
+        Seq("nn_id", score))
       .orderBy("qid")
 
   /** Two-stage PQ retrieval's tail: the PqRerank best ADC candidates of
@@ -1127,11 +1126,11 @@ object SimilarityQueries {
     // (nearest different-label neighbor — the confusable the loss needs).
     // ONE scored pass (corpus ⋈ broadcast(queries), cosine computed once
     // per row) feeds both picks as conditional max(struct(sim, -nn_id))
-    // aggregates — ordering-equal to ROW_NUMBER() ... ORDER BY sim DESC,
-    // nn_id — so the partial aggregate prunes to two candidate cells per
-    // (query, partition) map-side and the exchange carries one row per
-    // query however large the corpus. A query whose label has no second
-    // member emits NULL positive fields (the oracle's LEFT JOIN mirror).
+    // aggregates — the Election shape with a per-winner condition, which
+    // Election.winners has no slot for — so the exchange carries one row
+    // per query however large the corpus. A query whose label has no
+    // second member emits NULL positive fields (the oracle's LEFT JOIN
+    // mirror).
     "mine_hard_negatives" -> ((s, dir) => {
       val e = vecs(s, dir)
       val q = e.filter(col("vec_id") < NQueries)
@@ -1175,34 +1174,29 @@ object SimilarityQueries {
           cosine(col("qv"), col("v")).as("sim"))
       val pos = scored.filter(col("same"))
         .groupBy("qid").agg(max(col("sim")).as("pos_sim"))
-      scored.filter(!col("same"))
+      val semi = scored.filter(!col("same"))
         .join(broadcast(pos), Seq("qid"))
         .filter(col("sim") < col("pos_sim"))
-        .groupBy(col("qid"), col("qlabel"), col("pos_sim"))
-        .agg(max(struct(col("sim"), (-col("nn_id")).as("nid"))).as("m"),
-          count(lit(1)).as("n_semi"))
+      Election.winners(semi, Seq("qid", "qlabel", "pos_sim"),
+          Seq(Election.desc("sim"), Election.asc("nn_id")), Seq("nn_id", "sim"),
+          also = Seq(count(lit(1)).as("n_semi")))
         .select(col("qid"), col("qlabel").as("label"), col("pos_sim"),
-          (-col("m.nid")).as("semi_id"), col("m.sim").as("semi_sim"),
-          col("n_semi"))
+          col("nn_id").as("semi_id"), col("sim").as("semi_sim"), col("n_semi"))
         .orderBy("qid")
     }),
 
     // ---- LSH: sign-bit buckets, top-1 neighbor within bucket ----
     // Hot buckets (> MaxBucket members) are dropped before the self-join;
-    // the rank-1 pick is max(struct(sim, -nn_id)) — ordering-equal to
-    // ROW_NUMBER() ORDER BY sim DESC, nn_id — so the partial aggregate
-    // prunes to one candidate per vec_id map-side instead of shuffling
-    // every scored pair into a Window sort (the ann_topk_agg plan shape).
+    // the rank-1 pick is an Election (sim DESC, nn_id).
     "ann_lsh" -> ((s, dir) => {
       val e0 = vecs(s, dir).withColumn("bucket", signBucket(col("v"), LshBits))
         .filter(col("bucket").isNotNull) // align with the join's inferred filter
       val e = DedupQueries.capBuckets(e0, Seq("bucket"))
-      lshCandidateJoin(e, Seq("bucket"))
+      val pairs = lshCandidateJoin(e, Seq("bucket"))
         .select(col("a.vec_id").as("vec_id"), col("a.bucket").as("bucket"),
           col("b.vec_id").as("nn_id"), cosine(col("a.v"), col("b.v")).as("sim"))
-        .groupBy("vec_id", "bucket")
-        .agg(max(struct(col("sim").as("sim"), (-col("nn_id")).as("neg_id"))).as("best"))
-        .select(col("vec_id"), col("bucket"), (-col("best.neg_id")).as("nn_id"))
+      Election.winners(pairs, Seq("vec_id", "bucket"),
+          Seq(Election.desc("sim"), Election.asc("nn_id")), Seq("nn_id"))
         .orderBy("vec_id")
     }),
 
@@ -1211,9 +1205,8 @@ object SimilarityQueries {
     // the single-table form's boundary misses: two near-neighbors that
     // straddle a hyperplane in one table's dimensions still collide in
     // the other three. Same scale posture as ann_lsh — hot (table,
-    // bucket) pairs capped, rank-1 via the partial-aggregable
-    // max(struct(...)); a pair colliding in several tables just feeds
-    // the same (sim, nn) candidate to the max twice. ----
+    // bucket) pairs capped, rank-1 via an Election; a pair colliding in
+    // several tables just feeds the same (sim, nn) candidate twice. ----
     "ann_lsh_multiprobe" -> ((s, dir) => {
       // one materialization of the 4-table sign projection: capBuckets'
       // count/anti-join branches and both candidate-join aliases would
@@ -1222,12 +1215,11 @@ object SimilarityQueries {
       val tabs = graft.operators.Checkpoints.retire(
         graft.operators.Checkpoints.corpusScaled(signTables(vecs(s, dir))))
       val cold = DedupQueries.capBuckets(tabs, Seq("tbl", "bucket"))
-      lshCandidateJoin(cold, Seq("tbl", "bucket"))
+      val pairs = lshCandidateJoin(cold, Seq("tbl", "bucket"))
         .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nn_id"),
           cosine(col("a.v"), col("b.v")).as("sim"))
-        .groupBy("vec_id")
-        .agg(max(struct(col("sim").as("sim"), (-col("nn_id")).as("neg_id"))).as("best"))
-        .select(col("vec_id"), (-col("best.neg_id")).as("nn_id"))
+      Election.winners(pairs, Seq("vec_id"),
+          Seq(Election.desc("sim"), Election.asc("nn_id")), Seq("nn_id"))
         .orderBy("vec_id")
     }),
 
@@ -1601,11 +1593,9 @@ object SimilarityQueries {
     val k = keys.map(", " + _).mkString
     val on = if (keys.isEmpty) s"CROSS JOIN $cents c"
       else keys.map(x => s"$pts.$x = c.$x").mkString(s"JOIN $cents c ON ", " AND ", "")
-    s"""$name AS (SELECT vec_id$k, $pt, $id, d2 FROM (
-       |  SELECT vec_id$k, $pt, cid AS $id, d2,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id$k ORDER BY d2, cid) AS rn
-       |  FROM (SELECT $pts.vec_id${keys.map(x => s", $pts.$x").mkString}, $pts.$pt, c.cid, ${dist2Sql(s"$pts.$pt", "c.c")} AS d2
-       |        FROM $pts $on)) WHERE rn = 1)""".stripMargin
+    val scored = s"""(SELECT $pts.vec_id${keys.map(x => s", $pts.$x").mkString}, $pts.$pt, c.cid, ${dist2Sql(s"$pts.$pt", "c.c")} AS d2
+       |        FROM $pts $on)""".stripMargin
+    s"$name AS (${winnersSql(s"vec_id$k, $pt, cid AS $id, d2", scored, s"vec_id$k", "d2, cid")})"
   }
 
   /** [[lloydUpdate]]'s twin over assignment relation `asg` (cid read
@@ -1815,12 +1805,9 @@ object SimilarityQueries {
        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
        |  FROM adc) WHERE rn <= $PqRerank)""".stripMargin
 
-  // The rank-1 tail: per qid the (score, nn_id)-least row of `rel`.
+  // [[nearest]]'s twin: per qid the (score, nn_id)-least row of `rel`.
   private def rank1Sql(score: String, rel: String): String =
-    s"""SELECT qid, nn_id, $score FROM (
-       |  SELECT qid, nn_id, $score,
-       |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY $score, nn_id) AS rn
-       |  FROM $rel) WHERE rn = 1 ORDER BY qid""".stripMargin
+    winnersSql(s"qid, nn_id, $score", rel, "qid", s"$score, nn_id") + " ORDER BY qid"
 
   /** The per-method oracle strings; [[oracles]] adds ann_recall, which
     * SPLICES these as sub-selects (nested WITH — DuckDB-legal inside a
@@ -1832,7 +1819,9 @@ object SimilarityQueries {
     * [[knnMutualPairsSql]] (the mutual filter, also consumed by
     * DedupQueries' dedup_semantic_graph mirror).
     */
-  private lazy val knnJoinSql: String =
+  private lazy val knnJoinSql: String = {
+    val gnpRel = """q JOIN gns ON gns.qid = q.qid
+                   |    JOIN gbc b ON (b.scell = q.qscell OR b.scell = gns.s2) AND b.cid <> q.qcell""".stripMargin
     s"""WITH $pqCtes,
        |$km2Ctes,
        |asg AS (SELECT vec_id, cluster FROM gz),
@@ -1841,18 +1830,9 @@ object SimilarityQueries {
        |        FROM gb$KmIter b CROSS JOIN gkb g),
        |gsc AS (SELECT cid, c FROM gs$KmIter
        |        WHERE cid IN (SELECT DISTINCT scell FROM gbc)),
-       |gns AS (SELECT qid, cid AS s2 FROM (
-       |    SELECT q.qid, s.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY q.qid
-       |                              ORDER BY ${dist2Sql("q.qv", "s.c")}, s.cid) AS rn
-       |    FROM q CROSS JOIN gsc s WHERE s.cid <> q.qscell) WHERE rn = 1),
-       |gnp AS (SELECT qid, cid AS pcell FROM (
-       |    SELECT q.qid, b.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY q.qid
-       |                              ORDER BY ${dist2Sql("q.qv", "b.c")}, b.cid) AS rn
-       |    FROM q JOIN gns ON gns.qid = q.qid
-       |    JOIN gbc b ON (b.scell = q.qscell OR b.scell = gns.s2) AND b.cid <> q.qcell)
-       |    WHERE rn = 1),
+       |gns AS (${winnersSql("q.qid, s.cid AS s2", "q CROSS JOIN gsc s WHERE s.cid <> q.qscell",
+                                  "q.qid", s"${dist2Sql("q.qv", "s.c")}, s.cid")}),
+       |gnp AS (${winnersSql("q.qid, b.cid AS pcell", gnpRel, "q.qid", s"${dist2Sql("q.qv", "b.c")}, b.cid")}),
        |probes AS (SELECT qid, pcell FROM gnp
        |           UNION ALL SELECT qid, qcell AS pcell FROM q),
        |qs AS (SELECT vec_id AS qid, j, v[(j*$PqDsub+1):(j*$PqDsub+$PqDsub)] AS qsv
@@ -1870,6 +1850,7 @@ object SimilarityQueries {
        |  SELECT qid, nn_id, adc_fp,
        |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_fp, nn_id) AS rn
        |  FROM adc) WHERE rn <= $KnnK ORDER BY qid, rank""".stripMargin
+  }
 
   /** knn_mutual_pairs' oracle — the mutual filter over the spliced knn
     * graph (one nested WITH — the recall-splice precedent). Shared with
@@ -1984,15 +1965,10 @@ object SimilarityQueries {
          |         e.label = q.label AS same, ${cosineSql("q.v", "e.v")} AS sim
          |  FROM e q JOIN e ON q.vec_id < $NQueries AND e.vec_id <> q.vec_id),
          |qs AS (SELECT DISTINCT qid, qlabel FROM scored),
-         |p AS (SELECT qid, nn_id AS pos_id, sim AS pos_sim,
-         |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS rn
-         |      FROM scored WHERE same),
-         |n AS (SELECT qid, nn_id AS neg_id, sim AS neg_sim,
-         |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS rn
-         |      FROM scored WHERE NOT same)
+         |p AS (${winnersSql("qid, nn_id AS pos_id, sim AS pos_sim", "scored WHERE same", "qid", "sim DESC, nn_id")}),
+         |n AS (${winnersSql("qid, nn_id AS neg_id, sim AS neg_sim", "scored WHERE NOT same", "qid", "sim DESC, nn_id")})
          |SELECT qs.qid, qs.qlabel AS label, p.pos_id, p.pos_sim, n.neg_id, n.neg_sim
-         |FROM qs LEFT JOIN (SELECT * FROM p WHERE rn = 1) p USING (qid)
-         |        LEFT JOIN (SELECT * FROM n WHERE rn = 1) n USING (qid)
+         |FROM qs LEFT JOIN p USING (qid) LEFT JOIN n USING (qid)
          |ORDER BY qs.qid""".stripMargin,
 
     "mine_semi_hard_negatives" ->
@@ -2002,14 +1978,12 @@ object SimilarityQueries {
          |         e.label = q.label AS same, ${cosineSql("q.v", "e.v")} AS sim
          |  FROM e q JOIN e ON q.vec_id < $NQueries AND e.vec_id <> q.vec_id),
          |pos AS (SELECT qid, MAX(sim) AS pos_sim FROM scored WHERE same GROUP BY 1),
-         |sh AS (SELECT s.qid, s.qlabel, s.nn_id, s.sim, p.pos_sim
+         |sh AS (SELECT s.qid, s.qlabel, s.nn_id, s.sim, p.pos_sim,
+         |         CAST(COUNT(*) OVER (PARTITION BY s.qid) AS BIGINT) AS n_semi
          |       FROM scored s JOIN pos p USING (qid)
          |       WHERE NOT s.same AND s.sim < p.pos_sim)
-         |SELECT qid, qlabel AS label, pos_sim, semi_id, semi_sim, n_semi FROM (
-         |  SELECT qid, qlabel, pos_sim, nn_id AS semi_id, sim AS semi_sim,
-         |         CAST(COUNT(*) OVER (PARTITION BY qid) AS BIGINT) AS n_semi,
-         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nn_id) AS rn
-         |  FROM sh) WHERE rn = 1 ORDER BY qid""".stripMargin,
+         |${winnersSql("qid, qlabel AS label, pos_sim, nn_id AS semi_id, sim AS semi_sim, n_semi",
+                       "sh", "qid", "sim DESC, nn_id")} ORDER BY qid""".stripMargin,
 
     "ann_lsh" ->
       s"""WITH e0 AS (SELECT vec_id, v, ${signBucketSql("v", LshBits)} AS bucket FROM ($eSql)),
@@ -2017,10 +1991,7 @@ object SimilarityQueries {
          |pairs AS (
          |  SELECT a.vec_id, a.bucket, b.vec_id AS nn_id, ${cosineSql("a.v", "b.v")} AS sim
          |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
-         |SELECT vec_id, bucket, nn_id FROM (
-         |  SELECT vec_id, bucket, nn_id,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, nn_id) AS rn
-         |  FROM pairs) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+         |${winnersSql("vec_id, bucket, nn_id", "pairs", "vec_id", "sim DESC, nn_id")} ORDER BY vec_id""".stripMargin,
 
     "ann_lsh_multiprobe" -> {
       val tabArms = (0 until Probes).map(t =>
@@ -2034,10 +2005,7 @@ object SimilarityQueries {
          |  SELECT a.vec_id, b.vec_id AS nn_id, ${cosineSql("a.v", "b.v")} AS sim
          |  FROM cold a JOIN cold b
          |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id)
-         |SELECT vec_id, nn_id FROM (
-         |  SELECT vec_id, nn_id,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, nn_id) AS rn
-         |  FROM pairs) WHERE rn = 1 ORDER BY vec_id""".stripMargin
+         |${winnersSql("vec_id, nn_id", "pairs", "vec_id", "sim DESC, nn_id")} ORDER BY vec_id""".stripMargin
     },
 
     "ann_ivf_nprobe" -> nprobeSql(),

@@ -83,31 +83,53 @@ object TextAnalysisQueries {
        |              WHERE doc_id IS NOT NULL)))""".stripMargin
   }
 
+  /** The four BIGINT counts the quality score reads off a raw text
+    * column: tokens of the cleaned line, chars, `[a-z]` chars and stop
+    * words. One type for both engines' spellings.
+    */
+  private[graft] final case class QualityParts[A](nTok: A, nChars: A, nAlpha: A, nStop: A)
+
+  private[graft] def qualityParts(text: Column): QualityParts[Column] = {
+    val toks = tokens(cleanLine(text))
+    QualityParts(size(toks).cast("long"), length(text).cast("long"),
+      length(regexp_replace(text, "[^a-z]", "")).cast("long"),
+      stopCount(toks, Stopwords.flatMap(_._2)).cast("long"))
+  }
+
+  /** DuckDB mirror of [[qualityParts]] applied to column `text`. */
+  private[queries] def qualityPartsSql(text: String): QualityParts[String] = {
+    val toks = tokensSql(cleanLineSql(text))
+    val inList = Stopwords.flatMap(_._2).map(w => s"'$w'").mkString(",")
+    QualityParts(s"CAST(len($toks) AS BIGINT)", s"CAST(length($text) AS BIGINT)",
+      s"CAST(length(regexp_replace($text, '[^a-z]', '', 'g')) AS BIGINT)",
+      s"CAST(len(list_filter($toks, x -> x IN ($inList))) AS BIGINT)")
+  }
+
   /** The text_quality score as a reusable expression over a raw text
     * column — also the ranking signal for [[CurationQueries]]. NULL for
     * tokenless docs (0/0); both consumers mirror that in their oracles.
     */
   private[graft] def qualityExpr(text: Column): Column = {
-    val toks = tokens(cleanLine(text))
-    val nTok = size(toks).cast("long")
-    val nChars = length(text).cast("long")
-    val nAlpha = length(regexp_replace(text, "[^a-z]", "")).cast("long")
-    val nStop = stopCount(toks, Stopwords.flatMap(_._2)).cast("long")
-    (nAlpha / nChars) * 0.5 + (nStop / nTok) * 0.25 +
-      least(nTok / lit(50.0), lit(1.0)) * 0.25
+    val p = qualityParts(text)
+    (p.nAlpha / p.nChars) * 0.5 + (p.nStop / p.nTok) * 0.25 +
+      least(p.nTok / lit(50.0), lit(1.0)) * 0.25
   }
 
   /** DuckDB mirror of [[qualityExpr]] applied to column `text`. */
   private[queries] def qualitySqlExpr: String = {
-    val toksClean = tokensSql(cleanLineSql("text"))
-    val inList = Stopwords.flatMap(_._2).map(w => s"'$w'").mkString(",")
-    val nStop = s"len(list_filter($toksClean, x -> x IN ($inList)))"
-    s"""(CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT)
-       |   / CAST(length(text) AS BIGINT)) * 0.5
-       | + (CAST($nStop AS BIGINT)
-       |   / CAST(len($toksClean) AS BIGINT)) * 0.25
-       | + LEAST(CAST(len($toksClean) AS BIGINT) / 50.0, 1.0) * 0.25""".stripMargin
+    val p = qualityPartsSql("text")
+    s"(${p.nAlpha} / ${p.nChars}) * 0.5 + (${p.nStop} / ${p.nTok}) * 0.25" +
+      s" + LEAST(${p.nTok} / 50.0, 1.0) * 0.25"
   }
+
+  /** The score a canonical election ranks docs by: [[qualityExpr]], a
+    * tokenless doc's NULL taken as -1.0 so a class of unscorable docs
+    * still elects a deterministic canon.
+    */
+  private[graft] def canonScore(text: Column): Column = coalesce(qualityExpr(text), lit(-1.0))
+
+  /** DuckDB mirror of [[canonScore]] applied to column `text`. */
+  private[queries] def canonScoreSql: String = s"COALESCE($qualitySqlExpr, -1.0)"
 
   /** Token-span width for [[text_dedup_token_spans]] — a plan-time
     * constant like shinglesN's widths. Lee et al. 2021 use 50-token
@@ -436,14 +458,10 @@ object TextAnalysisQueries {
     // The composite score is [[qualityExpr]] — the same expression
     // curation_topk ranks by, factored so the two can never drift.
     "text_quality" -> ((s, dir) => {
-      val toks = tokens(cleanLine(col("text")))
-      val nTok = size(toks).cast("long")
-      val nChars = length(col("text")).cast("long")
-      val nAlpha = length(regexp_replace(col("text"), "[^a-z]", "")).cast("long")
-      val nStop = stopCount(toks, Stopwords.flatMap(_._2)).cast("long")
+      val p = qualityParts(col("text"))
       Tables(s, dir, "documents")
-        .select(col("doc_id"), nTok.as("n_tokens"), nChars.as("n_chars"),
-          (nAlpha / nChars).as("alpha_ratio"), (nStop / nTok).as("stopword_ratio"),
+        .select(col("doc_id"), p.nTok.as("n_tokens"), p.nChars.as("n_chars"),
+          (p.nAlpha / p.nChars).as("alpha_ratio"), (p.nStop / p.nTok).as("stopword_ratio"),
           qualityExpr(col("text")).as("quality"))
         .orderBy("doc_id")
     }),
@@ -923,13 +941,10 @@ object TextAnalysisQueries {
     // partial-aggregable groupBy on source; count(distinct lang) expands
     // over a statically tiny language space.
     "source_stats" -> ((s, dir) => {
-      val toksC = tokens(cleanLine(col("text")))
+      val p = qualityParts(col("text"))
       Tables(s, dir, "documents")
-        .select(col("source"), col("lang"),
-          size(toksC).cast("long").as("ntok"),
-          length(col("text")).cast("long").as("nch"),
-          length(regexp_replace(col("text"), "[^a-z]", "")).cast("long").as("nal"),
-          stopCount(toksC, Stopwords.flatMap(_._2)).cast("long").as("nst"))
+        .select(col("source"), col("lang"), p.nTok.as("ntok"), p.nChars.as("nch"),
+          p.nAlpha.as("nal"), p.nStop.as("nst"))
         .groupBy("source").agg(
           count(lit(1)).as("n_docs"),
           countDistinct("lang").as("n_langs"),
@@ -1140,16 +1155,12 @@ object TextAnalysisQueries {
       },
 
       "text_quality" -> {
-        val allStop = Stopwords.flatMap(_._2)
-        // components spelled out; the composite column is the shared
-        // [[qualitySqlExpr]] (same fragment curation_topk ranks by)
+        val p = qualityPartsSql("text")
         s"""SELECT doc_id,
-           |  CAST(len($toksClean) AS BIGINT) AS n_tokens,
-           |  CAST(length(text) AS BIGINT) AS n_chars,
-           |  CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT)
-           |    / CAST(length(text) AS BIGINT) AS alpha_ratio,
-           |  CAST(${stopSql(toksClean, allStop)} AS BIGINT)
-           |    / CAST(len($toksClean) AS BIGINT) AS stopword_ratio,
+           |  ${p.nTok} AS n_tokens,
+           |  ${p.nChars} AS n_chars,
+           |  ${p.nAlpha} / ${p.nChars} AS alpha_ratio,
+           |  ${p.nStop} / ${p.nTok} AS stopword_ratio,
            |  $qualitySqlExpr AS quality
            |FROM documents
            |ORDER BY doc_id""".stripMargin
@@ -1412,12 +1423,12 @@ object TextAnalysisQueries {
       },
 
       "source_stats" -> {
-        val allStop = Stopwords.flatMap(_._2)
+        val p = qualityPartsSql("text")
         s"""WITH pd AS (SELECT source, lang,
-           |  CAST(len($toksClean) AS BIGINT) AS ntok,
-           |  CAST(length(text) AS BIGINT) AS nch,
-           |  CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT) AS nal,
-           |  CAST(${stopSql(toksClean, allStop)} AS BIGINT) AS nst
+           |  ${p.nTok} AS ntok,
+           |  ${p.nChars} AS nch,
+           |  ${p.nAlpha} AS nal,
+           |  ${p.nStop} AS nst
            |FROM documents)
            |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
            |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,

@@ -382,27 +382,33 @@ object Sinks {
       // came from is recoverable from its file path (`b<k>-g<gen>[c]`),
       // so no schema column is needed and pre-level tables read
       // unchanged through the single-level fast path above.
-      import org.apache.spark.sql.functions._
       val key = readKeyColumn(fs, path).getOrElse(throw new IllegalStateException(
         s"multi-level keyed table $path has no _graft_key sidecar — cannot " +
           "resolve upserted keys without the key column"))
-      // the generation is PROJECTED before the aggregate: input_file_name()
-      // is non-deterministic and the analyzer (correctly) rejects it inside
-      // an aggregate function — materialized as a column it is evaluated
-      // once per row in the scan projection, exactly where the file path
-      // is still known
-      // the pattern is anchored to the file's PARENT directory (the level
-      // dir is always the last path segment before the part file) — an
-      // unanchored match would read the wrong generation from a table
-      // whose own root path happens to contain a b<k>-g<n> segment
-      val withGen = df.withColumn("_graft_gen",
-        regexp_extract(input_file_name(), "b\\d+-g(\\d+)c?/[^/]+$", 1).cast("long"))
-      val others = df.columns.filterNot(_ == key)
-      withGen.groupBy(col(key))
-        .agg(max(struct(col("_graft_gen") +: others.map(col): _*)).as("_r"))
-        .select(df.columns.map(c =>
-          if (c == key) col(key) else col(s"_r.$c").as(c)).toIndexedSeq: _*)
+      resolveNewest(df.withColumn("_graft_gen", levelGen), key)
+        .select(df.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
     }
+
+  /** The generation of the level each row was read from, recovered from
+    * its file path (`b<k>-g<gen>[c]`). PROJECTED before the aggregate:
+    * input_file_name() is non-deterministic and the analyzer (correctly)
+    * rejects it inside an aggregate function — as a column it is
+    * evaluated once per row in the scan projection, where the file path
+    * is still known. Anchored to the file's PARENT directory (the level
+    * dir is always the last path segment before the part file): an
+    * unanchored match would read the wrong generation from a table whose
+    * own root path happens to contain a b<k>-g<n> segment.
+    */
+  private def levelGen: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    regexp_extract(input_file_name(), "b\\d+-g(\\d+)c?/[^/]+$", 1).cast("long")
+  }
+
+  /** One row per `key` of `df`: the newest `_graft_gen`'s, without it. */
+  private def resolveNewest(df: DataFrame, key: String): DataFrame =
+    graft.operators.Election.winners(df, Seq(key),
+      Seq(graft.operators.Election.desc("_graft_gen")),
+      df.columns.toSeq.filterNot(c => c == key || c == "_graft_gen"))
 
   /** Key-SET read of a keyed table: every level of every bucket, with NO
     * newest-wins resolution — superseded versions of an upserted key are
@@ -606,20 +612,12 @@ object Sinks {
       val tCompact0 = System.nanoTime()
       statCompactBuckets = compact.length
       statAbsorbedBytes = compact.flatMap(_._3).map(dirBytes).sum
-      val oldRows = spark.read
-        .parquet(compact.flatMap(_._3).map(d => s"$path/$d"): _*)
-        .withColumn("_graft_gen",
-          // anchored to the parent dir (readKeyedParquet's rationale)
-          regexp_extract(input_file_name(), "b\\d+-g(\\d+)c?/[^/]+$", 1).cast("long"))
-      val deltaRows = spark.read.option("basePath", delta)
-        .parquet(compact.map(p => s"$delta/_bkt=${p._1}"): _*)
-        .drop("_bkt").withColumn("_graft_gen", lit(gen))
-      val all = oldRows.unionByName(deltaRows)
-      val others = all.columns.filterNot(c => c == keyCol || c == "_graft_gen")
-      val resolved = all.groupBy(col(keyCol))
-        .agg(max(struct(col("_graft_gen") +: others.map(col): _*)).as("_r"))
-        .select((col(keyCol) +: others.map(c => col(s"_r.$c").as(c))) :+
-          keyBucket(col(keyCol), nBkt).as("_bkt"): _*)
+      val oldRows = readLevels(spark, fs, path, compact.flatMap(_._3))
+        .withColumn("_graft_gen", levelGen)
+      val deltaRows = readLevels(spark, fs, path, compact.map(p => s".delta/_bkt=${p._1}"))
+        .withColumn("_graft_gen", lit(gen))
+      val resolved = resolveNewest(oldRows.unionByName(deltaRows), keyCol)
+        .withColumn("_bkt", keyBucket(col(keyCol), nBkt))
       val stage = s"$path/.stage-g$gen"
       resolved.write.mode(SaveMode.Overwrite).partitionBy("_bkt").parquet(stage)
       val staged = stagedBuckets(stage).toSet

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextFunctions._
+import graft.operators.Election
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -174,13 +175,11 @@ object StreamingPipelines {
     * contract is <= one row per key, so pick ONE deterministically
     * (content-max, not dropDuplicates' arbitrary row).
     */
-  private def onePerDoc(batch: DataFrame): DataFrame =
-    batch
-      .groupBy("doc_id")
-      .agg(max(struct(col("text"), col("lang"), col("source"),
-        col("n_chars"))).as("r"))
-      .select(col("doc_id"), col("r.text"), col("r.lang"),
-        col("r.source"), col("r.n_chars"))
+  private def onePerDoc(batch: DataFrame): DataFrame = {
+    val content = Seq("text", "lang", "source", "n_chars")
+    Election.winners(batch, Seq("doc_id"),
+      content.map(Election.desc), content)
+  }
 
   /** Key-SET read of a history table, None before its first merge. No
     * newest-wins resolution: both streams' histories are insert-only by
@@ -351,15 +350,16 @@ object StreamingPipelines {
       val chunks = chunker(b1)
         .select(col("doc_id"), col("chunk_id"), md5(col("chunk")).as("ch"))
       // within-batch keep-first: one canonical owner per chunk content
-      val canon = chunks.groupBy("ch")
-        .agg(min(struct(col("doc_id"), col("chunk_id"))).as("k"))
+      val canon = Election.winners(chunks, Seq("ch"),
+        Seq(Election.asc("doc_id"), Election.asc("chunk_id")),
+        Seq("doc_id"))
       val history = historyKeys(batch.sparkSession, chunkHistoryPath)
         .map(_.select(col("ch")))
       // novel = batch-canonical AND not historical; owned by its canon doc.
       // materialize ONCE — both writes below consume it, and without the
       // checkpoint each would re-run the history-sized probe
       val novel = history.fold(canon)(h => canon.join(h, Seq("ch"), "left_anti"))
-        .select(col("k.doc_id").as("doc_id"), col("ch"))
+        .select(col("doc_id"), col("ch"))
         .transform(graft.operators.Checkpoints.fresh)
       val survivors = novel.groupBy("doc_id").agg(count(lit(1)).as("n_novel"))
       val nChunks = chunks.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))

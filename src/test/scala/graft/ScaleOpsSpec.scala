@@ -262,6 +262,24 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("bucket invariant violated"), e.getMessage)
   }
 
+  test("a compacting merge reads its absorbed levels and delta with the recorded schema") {
+    import graft.sources.Sinks.Manifest
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-compactjobs").toString + "/t"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Sinks.mergeIntoKeyedParquet((0 until 320).map(i => (s"key$i", 1L)).toDF("k", "n"), "k", path)
+    // rewriting every key absorbs every bucket's only level: one
+    // compaction over all of them, whose reads infer no schema (a
+    // footer-reading job each) because the first merge recorded it
+    val (_, jobs) = SparkTestBase.jobsIn(Sinks.mergeIntoKeyedParquet(
+      (0 until 320).map(i => (s"key$i", 2L)).toDF("k", "n"), "k", path))
+    val dirs = Manifest.latest(fs, path).get.dirs.values.flatten
+    assert(dirs.nonEmpty && dirs.forall(_.endsWith("c")), s"expected only compacted levels, got $dirs")
+    assert(jobs == 5, s"the compacting merge ran $jobs jobs")
+    assert(Sinks.readKeyedParquet(spark, path).filter(col("n") =!= 2L).count() == 0)
+  }
+
   test("manifest publish: a reader mid-flight across a multi-bucket merge sees one whole generation") {
     import graft.sources.Sinks.Manifest
     import spark.implicits._
